@@ -10,8 +10,8 @@ Protocol:
 1. prep (once): synthetic pages graph (seed 42) → extracted distinct edge
    table, written to parquet — the shared input for every level.
 2. per level (fresh process, fresh JVM): read edges, repartition to
-   2×cores by src, PageRank for a fixed 8 supersteps with check_every=4
-   (one Spark job per superstep), record per-superstep edges/sec.
+   2×cores by src, PageRank for a fixed 9 supersteps (tol=0, one Spark
+   job per superstep), record per-superstep edges/sec.
 3. efficiency = eps(4N) / (4 × eps(N)), warm-up supersteps discarded.
 
 Usage:
@@ -32,9 +32,6 @@ sys.path.insert(0, REPO)
 
 WARMUP = 2
 SUPERSTEPS = 9
-CHECK_EVERY = 10 ** 6  # no mid-run convergence jobs; only the final
-                       # superstep carries the delta aggregate and is
-                       # excluded from the stats below
 
 
 def _calib_work(_):
@@ -97,11 +94,11 @@ def run_worker(cores: int, edges_path: str, mode: str) -> dict:
                       extra_conf={"spark.ui.enabled": "false"})
     edges = spark.read.parquet(edges_path)
     res = pagerank(spark, edges, tol=0.0, max_iter=SUPERSTEPS, mode=mode,
-                   num_partitions=shuffle, check_every=CHECK_EVERY)
+                   num_partitions=shuffle)
     n_edges = res.metrics.supersteps[0].edges
     steps = [m.to_dict() for m in res.metrics.supersteps]
-    # drop warm-up AND the final superstep (it runs the one delta-check job,
-    # a different job shape than a steady-state superstep)
+    # drop warm-up AND the final superstep, as every earlier measurement
+    # in BENCH/BASELINE.md did, so the numbers stay comparable
     eps = [s["edges_per_sec"] for s in steps[WARMUP:-1]]
     out = {
         "cores": cores,
@@ -188,7 +185,7 @@ def main() -> None:
                   f"efficiency {eff:.2f}")
 
     with open(os.path.join(REPO, "BENCH", "scaling.json"), "w") as f:
-        json.dump({"pages": args.pages, "warmup": WARMUP, "check_every": CHECK_EVERY,
+        json.dump({"pages": args.pages, "warmup": WARMUP,
                    "supersteps": SUPERSTEPS, "machine_calibration": calib,
                    "results": results}, f, indent=2)
 
@@ -196,8 +193,8 @@ def main() -> None:
         "# BENCH/BASELINE — measured scaling evidence",
         "",
         f"Job: PageRank, {SUPERSTEPS} supersteps (first {WARMUP} discarded as "
-        f"warm-up, final delta-check superstep also excluded → one Spark job "
-        f"per timed superstep), shared pre-materialized edge table "
+        f"warm-up, final superstep also excluded; one Spark job per "
+        f"superstep), shared pre-materialized edge table "
         f"({results[0]['lo']['edges']} edges from {args.pages} synthetic pages, "
         "seed 42), shuffle partitions = 2×cores, all other config identical. "
         "Each level runs in a fresh process (fresh JVM) on the same input; "

@@ -197,12 +197,16 @@ def betweenness(
                 )
             )
             dump_plan(dd, "betweenness_backward_level")
-            # lazy (r6): level d's blocks are computed inside level d-1's
-            # materializing job (the chain stays one level deep — each
-            # lazy checkpoint's input deltas[d+1] is already materialized);
-            # the last one (deltas[1]) is computed by the scores job. All
-            # are materialized before the unpersist sweep at the end
-            # because scores is an EAGER checkpoint downstream of them.
+            # lazy: no action runs per level, so nothing is materialized
+            # here. The WHOLE delta chain (every level's dd, down to
+            # deltas[1]) is computed and cached inside the one scores job
+            # below, an EAGER checkpoint downstream of all of them; with
+            # checkpointAllMarkedAncestors off, that job truncates only the
+            # outermost marked RDD's lineage, so the intermediate deltas
+            # keep theirs. Until scores materializes, every level, `e` and
+            # every deltas[d] is still needed to compute the chain: none of
+            # them may be unpersisted before it (the unpersist sweep at the
+            # end runs after it).
             deltas[d] = dd.localCheckpoint(eager=False)
 
         if len(levels) > 1:

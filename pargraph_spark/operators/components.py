@@ -14,9 +14,12 @@ Fixpoint: the edge set stabilizes as a forest of stars (child → component
 min). Detected by (count, checksum) equality of the canonical edge set —
 a 64-bit sum of xxhash64(u,v), collision odds ~2^-64 per round.
 
-Each round materializes via eager localCheckpoint (lineage truncation —
-the analogue of the reference's ref-count release,
-/root/reference/pargraph/engine/engine.py:63-76).
+The round loop is plans/fixpoint.py. A round makes two materializing
+actions: an eager localCheckpoint of the large-star output, and the one
+signature aggregate, which materializes the round's lazily checkpointed
+edge set (lineage truncation — the analogue of the reference's ref-count
+release, engine.py:63-76). The loop keeps AQE on, so each action runs as
+one Spark job per query stage.
 
 Scale notes: both stars are a single self-shuffle on u; hub vertices
 (huge Γ(u)) are fine because min() partial-aggregates map-side, and the
@@ -25,16 +28,14 @@ subsequent join is on the grouping key (AQE skew-join splits hot keys).
 
 from __future__ import annotations
 
-import time
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pargraph_spark.plans.checkpoint import CheckpointManager
+from pargraph_spark.plans.fixpoint import run_fixpoint
+from pargraph_spark.plans.metrics import JobMetrics
 from pargraph_spark.session import size_based_partitions
-from pargraph_spark.plans.debug import dump_plan
-from pargraph_spark.plans.metrics import JobMetrics, SuperstepMetric
 
 
 @dataclass
@@ -54,7 +55,7 @@ def _large_star(e: DataFrame, dedup: bool = True) -> DataFrame:
         .select(F.col("v").alias("u"), F.col("m").alias("v"))
         .where(F.col("u") != F.col("v"))
     )
-    # dedup=False (r6, guide §2.3/§2.4): inside the fixpoint the E-scale
+    # dedup=False (guide §2.3/§2.4): inside the fixpoint the E-scale
     # distinct here bought only ~13% row reduction at the bench graph
     # (1.196M -> 1.04M) for a full extra exchange; small-star's min-agg is
     # duplicate-insensitive and its trailing distinct restores set
@@ -114,101 +115,60 @@ def connected_components(
     P = int(num_partitions or spark.conf.get("spark.sql.shuffle.partitions"))
     P = size_based_partitions(edges, P)  # guide §2.2, size-derived cap
 
-    ckpt = CheckpointManager(checkpoint_dir, "components") if checkpoint_dir else None
-    start_round = 0
-    e = None
-    if ckpt and resume:
-        m = ckpt.latest()
-        if m is not None:
-            e = (
-                ckpt.load(spark, int(m["superstep"]))
-                .repartition(P, "u")
-                .localCheckpoint(eager=False)  # materialized by the initial signature
-            )
-            start_round = int(m["superstep"])
-    if e is None:
-        # setup in ONE E-scale exchange (r6, the pagerank/scc idiom):
+    def init() -> DataFrame:
+        # setup in ONE E-scale exchange (the pagerank/scc idiom):
         # canonicalize the orientation up front (CC is undirected — the
         # stars symmetrize anyway, so connectivity and every subsequent
         # round's edge SET are unchanged), repartition on u FIRST, then
         # dedupe in place — hash(u) co-locates every (u, v) pair, so
-        # dropDuplicates adds no second exchange. The old shape
-        # (distinct, then repartition) exchanged E twice; canonical form
-        # additionally lets the initial convergence signature skip ITS
-        # canonicalizing distinct (a third E-scale exchange).
-        e = (
+        # dropDuplicates adds no second exchange. Canonical form also lets
+        # the convergence signature skip a canonicalizing distinct.
+        return (
             edges.where(F.col("src") != F.col("dst"))
             .select(F.greatest("src", "dst").alias("u"),
                     F.least("src", "dst").alias("v"))
             .repartition(P, "u")
             .dropDuplicates(["u", "v"])
-            # lazy (r6): the initial signature aggregate below is a full
-            # scan and materializes the blocks in the same job
-            .localCheckpoint(eager=False)
         )
-    metrics = JobMetrics("components")
 
-    def _signature(df: DataFrame, assume_canonical: bool = False) -> tuple[int, int]:
-        """(count, xor-of-hashes) of the canonical undirected edge SET.
-
-        assume_canonical (r6): star-round outputs are strictly u > v and
-        already distinct (large-star emits (v, m) with v > m; small-star
-        emits (x, min) with x > min; both end in .distinct()), so the
-        canonicalizing select+distinct is a provable no-op on them —
-        skipping it removes one E-scale exchange per round from the
-        convergence check and produces the IDENTICAL (count, hash). The
-        initial edge set is canonicalized at setup (and resume loads
-        star-round outputs, which are canonical), so every signature
-        call takes the cheap path."""
-        canon = df.select(
-            F.least("u", "v").alias("a"), F.greatest("u", "v").alias("b")
-        )
-        if not assume_canonical:
-            canon = canon.distinct()
-        row = canon.agg(
-            F.count("*").alias("c"),
-            # bit_xor: order-independent, overflow-free (ANSI mode) checksum;
-            # safe because the set is distinct (no pair cancellation)
-            F.coalesce(F.bit_xor(F.xxhash64("a", "b")), F.lit(0)).alias("h"),
-        ).first()
-        return int(row["c"]), int(row["h"])
-
-    converged = False
-    rounds = start_round
-    sig = _signature(e, assume_canonical=True)
-    n_edges0 = sig[0]
-    for rounds in range(start_round + 1, max_rounds + 1):
-        t0 = time.monotonic()
-        # materialize the large-star output once per round (r6, the
+    def step(e: DataFrame, prev):
+        # materialize the large-star output once per round (the
         # triangle_count idiom): small-star references it three times
         # (min-agg, neighbor probe, via_self) and only identical Exchange
         # nodes get runtime reuse — unmaterialized, the E-scale large-star
-        # join re-executed under the probe-side exchange every round
+        # join would re-execute under the probe-side exchange every round
         ls = _large_star(e, dedup=False).localCheckpoint(eager=True)
-        new_e = _small_star(ls, oriented=True)
-        dump_plan(new_e, "cc_round")
-        # lazy (r6): the signature aggregate below is a full scan — it
-        # materializes the round's blocks in the SAME job (one job per
-        # round for checkpoint+signature instead of two); ls and the
-        # superseded e are released only after that job runs
-        new_e = new_e.localCheckpoint(eager=False)
-        new_sig = _signature(new_e, assume_canonical=True)
-        ls.unpersist()
-        e.unpersist()
-        e = new_e
-        metrics.add(SuperstepMetric(rounds, (time.monotonic() - t0) * 1000.0,
-                                    n_edges0, float(abs(new_sig[0] - sig[0]))))
-        if ckpt and (rounds % checkpoint_every == 0):
-            ckpt.save(e, rounds, {"n_edges": new_sig[0], "checksum": new_sig[1]})
-        if new_sig == sig:
-            converged = True
-            break
-        sig = new_sig
-    if ckpt and converged and (rounds % checkpoint_every != 0):
-        ckpt.save(e, rounds, {"n_edges": sig[0], "checksum": sig[1],
-                              "converged": True})
+        return _small_star(ls, oriented=True), [ls]
 
-    # vertex set (r6): star rounds PRESERVE the edge set's vertex set —
+    # The round signature is (count, xor-of-hashes) of the canonical
+    # undirected edge SET. Every state is canonical and distinct already:
+    # setup canonicalizes and dedupes, large-star emits (v, m) with v > m,
+    # small-star emits (x, min) with x > min, both end in .distinct(), and
+    # resume loads star-round outputs — so no canonicalizing
+    # select+distinct (an E-scale exchange) precedes the aggregate.
+    # bit_xor: order-independent, overflow-free (ANSI mode) checksum; safe
+    # because the set is distinct (no pair cancellation).
+    signature = [
+        F.count("*").alias("c"),
+        F.coalesce(F.bit_xor(F.xxhash64(F.least("u", "v"), F.greatest("u", "v"))),
+                   F.lit(0)).alias("h"),
+    ]
+    # P=None: AQE stays on — the state is the edge set itself, orientation
+    # flips between stars defeat co-partitioning, and AQE's runtime
+    # broadcast of the star min-tables beats the static shuffle plan
+    res = run_fixpoint(
+        spark, init, step, signature,
+        lambda s, prev: (s["c"], s["h"]) == (prev["c"], prev["h"]),
+        name="components", P=None, max_iter=max_rounds, edges=lambda s0: s0["c"],
+        delta=lambda s, prev: float(abs(s["c"] - prev["c"])),
+        plan="cc_round", checkpoint_dir=checkpoint_dir, job="components",
+        checkpoint_every=checkpoint_every, resume=resume,
+        restore=lambda df: df.repartition(P, "u"),
+        manifest=lambda s: {"n_edges": s["c"], "checksum": s["h"]},
+    )
+    e, converged = res.state, res.converged
+
+    # vertex set: star rounds PRESERVE the edge set's vertex set —
     # large-star keeps every endpoint (a local-max u re-emits (v, u); any
     # other u survives as the v-side of a smaller neighbor's emission) and
     # small-star emits every u via via_self and every v via via_neighbors
@@ -234,7 +194,7 @@ def connected_components(
     if not converged:
         # mid-iteration e is NOT yet a star forest: a vertex can carry
         # several parent edges, and the join below would emit duplicate
-        # conflicting (id, component) rows (review r5). min() keeps the
+        # conflicting (id, component) rows. min() keeps the
         # one-row-per-id contract; converged runs skip the extra agg.
         parents = parents.groupBy("id").agg(F.min("c").alias("c"))
     comp = (
@@ -243,7 +203,7 @@ def connected_components(
         .localCheckpoint(eager=True)
     )
     e.unpersist()
-    return ComponentsResult(comp, rounds, converged, metrics)
+    return ComponentsResult(comp, res.iterations, converged, res.metrics)
 
 
 def connected_components_incremental(
@@ -252,8 +212,8 @@ def connected_components_incremental(
     new_edges: DataFrame,
     **kwargs,
 ) -> ComponentsResult:
-    """Cross-run warm start for CC over edge-store appends (VERDICT r4 #6
-    — the components counterpart of pagerank's warm_start).
+    """Cross-run warm start for CC over edge-store appends (the
+    components counterpart of pagerank's warm_start).
 
     prev_components: a previous run's (id, component) assignment over the
     OLD edge set. new_edges(src, dst): the appended edges only. Returns

@@ -20,15 +20,13 @@ num_map_partitions × |distinct neighbor labels| partial rows.
 
 from __future__ import annotations
 
-import time
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pargraph_spark.plans.checkpoint import CheckpointManager
-from pargraph_spark.plans.debug import dump_plan
-from pargraph_spark.plans.metrics import JobMetrics, SuperstepMetric
+from pargraph_spark.plans.fixpoint import run_fixpoint
+from pargraph_spark.plans.metrics import JobMetrics
 from pargraph_spark.session import no_aqe, size_based_partitions
 
 
@@ -38,6 +36,53 @@ class LabelPropResult:
     iterations: int
     converged: bool
     metrics: JobMetrics = field(default_factory=lambda: JobMetrics("labelprop"))
+
+
+def _sym_edges(spark: SparkSession, edges: DataFrame, P: int,
+               weight_col: str | None) -> tuple[DataFrame, int]:
+    """The symmetric vote table (u, v, w) — self-loops dropped, duplicate
+    (u, v) rows combined (max of the unit weight, or summed weights) —
+    persisted hash(u, P)-partitioned, and its row count."""
+    # weight keeps its natural type (integer weights => exact vote sums)
+    w = F.col(weight_col) if weight_col is not None else F.lit(1).cast("long")
+    fwd = edges.select(F.col("src").alias("u"), F.col("dst").alias("v"), w.alias("w"))
+    sym = (
+        fwd.unionByName(fwd.select(F.col("v").alias("u"), F.col("u").alias("v"), "w"))
+        .where(F.col("u") != F.col("v"))
+        # Partition on "u" — the key every superstep's join probes, so the
+        # edge side stays put and only the (id, label) side moves per
+        # round — and do it BEFORE the dedup/weight-combine aggregation:
+        # hash(u) co-locates every (u, v) pair, so the aggregation runs in
+        # place and setup pays ONE E-scale exchange instead of two.
+        .repartition(P, "u")
+        .groupBy("u", "v")
+        .agg((F.max("w") if weight_col is None else F.sum("w")).alias("w"))
+        .persist()
+    )
+    with no_aqe(spark, P):
+        # sym materializes here: under no-AQE the cached plan reports
+        # hash(u, P) — an AQE-wrapped aggregate-on-top plan reports Unknown
+        # and every superstep would re-exchange the E-scale cache
+        return sym, sym.count()
+
+
+def _best_label(nbr: DataFrame) -> DataFrame:
+    """(id, new_label) from votes (id, label, w): the label with the most
+    vote weight, ties broken by MIN label, in ONE min(struct(-cnt, label))
+    aggregate.
+
+    Two-level vote aggregation, deliberately: a one-exchange variant
+    (repartition raw votes hash(id, P); both aggs then run in place since
+    hash(id) satisfies both clustered distributions) measured 0.72s/iter
+    vs 1.1 locally but ships UNCOMBINED votes — a hub vertex's whole
+    in-degree lands in one task, and AQE cannot split skewed aggregations
+    (guide §2.5). The (id, label) exchange spreads a hot id across labels
+    and partial map-side aggregation bounds what moves, which is the shape
+    that survives 100 TB."""
+    counted = nbr.groupBy("id", "label").agg(F.sum("w").alias("cnt"))
+    return counted.groupBy("id").agg(
+        F.min(F.struct((-F.col("cnt")).alias("negc"), F.col("label").alias("l"))).alias("b")
+    ).select("id", F.col("b.l").alias("new_label"))
 
 
 def label_propagation(
@@ -66,118 +111,46 @@ def label_propagation(
     inherit summation-order sensitivity only at exact vote ties."""
     P = int(num_partitions or spark.conf.get("spark.sql.shuffle.partitions"))
     P = size_based_partitions(edges, P)  # guide §2.2, size-derived cap
-    # weight keeps its natural type (integer weights => exact vote sums)
-    w = F.col(weight_col) if weight_col is not None else F.lit(1).cast("long")
-    fwd = edges.select(F.col("src").alias("u"), F.col("dst").alias("v"), w.alias("w"))
-    sym = (
-        fwd.unionByName(fwd.select(F.col("v").alias("u"), F.col("u").alias("v"), "w"))
-        .where(F.col("u") != F.col("v"))
-        # Partition on "u" — the key every superstep's join probes — and
-        # do it BEFORE the dedup/weight-combine aggregation (r6): hash(u)
-        # co-locates every (u, v) pair, so the aggregation runs in place
-        # and setup pays ONE E-scale exchange instead of two. (The "u"
-        # keying itself is the VERDICT r1 fix: the edge side stays put,
-        # only the (id, label) side moves per round.)
-        .repartition(P, "u")
-        .groupBy("u", "v")
-        .agg((F.max("w") if weight_col is None else F.sum("w")).alias("w"))
-        .persist()
-    )
+    sym, n_sym = _sym_edges(spark, edges, P, weight_col)
     all_vertices = (
         vertices.select("id")
         if vertices is not None
         else edges.select(F.col("src").alias("id"))
         .unionByName(edges.select(F.col("dst").alias("id")))
         .distinct()
-    )  # single consumer (the labels init checkpoint) — no persist (r6)
+    )  # single consumer (the initial labels) — no persist
 
-    with no_aqe(spark, P):
-        # sym materializes here (first action below): under no-AQE the
-        # cached plan reports hash(u, P) — an AQE-wrapped aggregate-on-top
-        # plan reports Unknown and every superstep would re-exchange the
-        # E-scale cache
-        n_sym = sym.count()
-        ckpt = CheckpointManager(checkpoint_dir, "labelprop") if checkpoint_dir else None
-        labels = None
-        it = 0
-        if ckpt and resume:
-            m = ckpt.latest()
-            if m is not None:
-                labels = (
-                    ckpt.load(spark, int(m["superstep"]))
-                    .select("id", "label")
-                    .repartition(P, "id")
-                    .localCheckpoint(eager=True)
-                )
-                it = int(m["superstep"])
-                if m.get("converged"):
-                    sym.unpersist()
-                    return LabelPropResult(labels, it, True, JobMetrics("labelprop"))
-        if labels is None:
-            # hash(id, P) recorded at the checkpoint (no_aqe): the per-round
-            # probe join and the label-update join then run exchange-free
-            labels = (
-                all_vertices.withColumn("label", F.col("id"))
-                .repartition(P, "id")
-                .localCheckpoint(eager=True)
-            )
-        metrics = JobMetrics("labelprop")
-        converged = False
-        while it < max_iter:
-            it += 1
-            t0 = time.monotonic()
-            # message: each vertex u sends its label (vote weight w) to v
-            # shuffle_hash: build on the V-scale label side instead of sorting
-            # the persisted E-scale sym table every superstep (guide §3.1)
-            nbr = sym.join(labels.hint("shuffle_hash"),
-                           sym["u"] == labels["id"]).select(
-                sym["v"].alias("id"), F.col("label"), sym["w"]
-            )
-            # Two-level vote aggregation, deliberately (r6): a one-exchange
-            # variant (repartition raw votes hash(id, P); both aggs then run
-            # in place since hash(id) satisfies both clustered
-            # distributions) measured 0.72s/iter vs 1.1 locally but ships
-            # UNCOMBINED votes — a hub vertex's whole in-degree lands in
-            # one task, and AQE cannot split skewed aggregations (guide
-            # §2.5). The (id, label) exchange spreads a hot id across
-            # labels and partial map-side aggregation bounds what moves,
-            # which is the shape that survives 100 TB.
-            counted = nbr.groupBy("id", "label").agg(F.sum("w").alias("cnt"))
-            best = counted.groupBy("id").agg(
-                F.min(F.struct((-F.col("cnt")).alias("negc"), F.col("label").alias("l"))).alias("b")
-            ).select("id", F.col("b.l").alias("new_label"))
-            new_labels = (
-                labels.join(best.hint("shuffle_hash"), "id", "left")
-                .select(
-                    "id",
-                    F.coalesce("new_label", "label").alias("label"),
-                    (F.coalesce("new_label", "label") != F.col("label")).alias("_chg"),
-                )
-            )
-            dump_plan(new_labels, "labelprop_superstep")
-            # lazy checkpoint (r6): the changed-count aggregate below is a
-            # full V-scan and materializes the blocks in the same job —
-            # one job per superstep instead of two
-            new_labels = new_labels.localCheckpoint(eager=False)
-            changed = new_labels.agg(F.sum(F.col("_chg").cast("long"))).first()[0] or 0
-            old = labels
-            labels = new_labels.drop("_chg")
-            old.unpersist()
-            metrics.add(SuperstepMetric(it, (time.monotonic() - t0) * 1000.0, n_sym, float(changed)))
-            if ckpt and (it % checkpoint_every == 0):
-                # record convergence even when it lands ON a cadence multiple
-                # (review r5: the periodic save lacked the flag, so a resume
-                # re-ran one superstep past the fixpoint and reported a
-                # different iteration count than an uninterrupted run)
-                ckpt.save(labels, it, {"changed": int(changed),
-                                       "converged": changed == 0})
-            if changed == 0:
-                converged = True
-                break
-    if ckpt and converged and (it % checkpoint_every != 0):
-        ckpt.save(labels, it, {"changed": 0, "converged": True})
+    def step(labels: DataFrame, prev) -> DataFrame:
+        # message: each vertex u sends its label (vote weight w) to v
+        # shuffle_hash: build on the V-scale label side instead of sorting
+        # the persisted E-scale sym table every superstep (guide §3.1)
+        nbr = sym.join(labels.hint("shuffle_hash"),
+                       sym["u"] == labels["id"]).select(
+            sym["v"].alias("id"), F.col("label"), sym["w"]
+        )
+        return labels.join(_best_label(nbr).hint("shuffle_hash"), "id", "left").select(
+            "id",
+            F.coalesce("new_label", "label").alias("label"),
+            (F.coalesce("new_label", "label") != F.col("label")).alias("_chg"),
+        )
+
+    # hash(id, P) recorded at the checkpoint (no_aqe): the per-round probe
+    # join and the label-update join then run exchange-free
+    res = run_fixpoint(
+        spark,
+        lambda: all_vertices.select("id", F.col("id").alias("label"),
+                                    F.lit(True).alias("_chg")).repartition(P, "id"),
+        step, [F.count_if("_chg")], lambda s, prev: s[0] == 0,
+        name="labelprop", P=P, max_iter=max_iter, edges=n_sym,
+        plan="labelprop_superstep", checkpoint_dir=checkpoint_dir, job="labelprop",
+        checkpoint_every=checkpoint_every, resume=resume,
+        restore=lambda df: df.select("id", "label", F.lit(True).alias("_chg"))
+        .repartition(P, "id"),
+        manifest=lambda s: {"changed": int(s[0])},
+    )
     sym.unpersist()
-    return LabelPropResult(labels, it, converged, metrics)
+    return LabelPropResult(res.state.drop("_chg"), res.iterations, res.converged,
+                           res.metrics)
 
 
 def seeded_label_propagation(
@@ -208,18 +181,7 @@ def seeded_label_propagation(
     NULL for never-reached vertices."""
     P = int(num_partitions or spark.conf.get("spark.sql.shuffle.partitions"))
     P = size_based_partitions(edges, P)
-    w = F.col(weight_col) if weight_col is not None else F.lit(1).cast("long")
-    fwd = edges.select(F.col("src").alias("u"), F.col("dst").alias("v"), w.alias("w"))
-    sym = (
-        fwd.unionByName(fwd.select(F.col("v").alias("u"), F.col("u").alias("v"), "w"))
-        .where(F.col("u") != F.col("v"))
-        .repartition(P, "u")  # before the agg: one setup exchange (r6)
-        .groupBy("u", "v")
-        .agg((F.max("w") if weight_col is None else F.sum("w")).alias("w"))
-        .persist()
-    )
-    with no_aqe(spark, P):
-        n_sym = sym.count()  # static plan cached: reports hash(u, P)
+    sym, n_sym = _sym_edges(spark, edges, P, weight_col)
     all_vertices = (
         edges.select(F.col("src").alias("id"))
         .unionByName(edges.select(F.col("dst").alias("id")))
@@ -229,52 +191,35 @@ def seeded_label_propagation(
     sd = seeds.select("id", F.col("label").cast("long").alias("_seed"))
     # persist: base (V-scale, built from an E-scale union+distinct) is
     # re-joined EVERY iteration for the seed clamp — unpersisted, each
-    # superstep re-scanned the edge table twice (review r5; the
-    # label_propagation all_vertices precedent)
+    # superstep would re-scan the edge table twice
     base = all_vertices.join(sd, "id", "left").repartition(P, "id").persist()
-    with no_aqe(spark, P):
-        labels = base.select(
-            "id", F.col("_seed").alias("label")
-        ).localCheckpoint(eager=True)
-        metrics = JobMetrics("seeded_labelprop")
-        converged = False
-        it = 0
-        while it < max_iter:
-            it += 1
-            t0 = time.monotonic()
-            nbr = (
-                sym.join(labels.where(F.col("label").isNotNull())
-                         .hint("shuffle_hash"),
-                         sym["u"] == F.col("id"))
-                .select(sym["v"].alias("id"), F.col("label"), sym["w"])
+
+    def step(labels: DataFrame, prev) -> DataFrame:
+        nbr = (
+            sym.join(labels.where(F.col("label").isNotNull())
+                     .hint("shuffle_hash"),
+                     sym["u"] == F.col("id"))
+            .select(sym["v"].alias("id"), F.col("label"), sym["w"])
+        )
+        return (
+            base.join(labels.select("id", F.col("label").alias("_old"))
+                      .hint("shuffle_hash"), "id")
+            .join(_best_label(nbr).hint("shuffle_hash"), "id", "left")
+            .select(
+                "id",
+                # clamp beats vote beats carry-forward
+                F.coalesce("_seed", "new_label", "_old").alias("label"),
+                (~F.coalesce("_seed", "new_label", "_old").eqNullSafe(F.col("_old"))).alias("_chg"),
             )
-            counted = nbr.groupBy("id", "label").agg(F.sum("w").alias("cnt"))
-            best = counted.groupBy("id").agg(
-                F.min(F.struct((-F.col("cnt")).alias("negc"),
-                               F.col("label").alias("l"))).alias("b")
-            ).select("id", F.col("b.l").alias("new_label"))
-            new_labels = (
-                base.join(labels.select("id", F.col("label").alias("_old"))
-                          .hint("shuffle_hash"), "id")
-                .join(best.hint("shuffle_hash"), "id", "left")
-                .select(
-                    "id",
-                    # clamp beats vote beats carry-forward
-                    F.coalesce("_seed", "new_label", "_old").alias("label"),
-                    (~F.coalesce("_seed", "new_label", "_old").eqNullSafe(F.col("_old"))).alias("_chg"),
-                )
-                # lazy (r6): the changed-count scan materializes in-job
-                .localCheckpoint(eager=False)
-            )
-            changed = new_labels.agg(F.sum(F.col("_chg").cast("long"))).first()[0] or 0
-            old = labels
-            labels = new_labels.drop("_chg")
-            old.unpersist()
-            metrics.add(SuperstepMetric(it, (time.monotonic() - t0) * 1000.0,
-                                        n_sym, float(changed)))
-            if changed == 0:
-                converged = True
-                break
+        )
+
+    res = run_fixpoint(
+        spark,
+        lambda: base.select("id", F.col("_seed").alias("label"), F.lit(True).alias("_chg")),
+        step, [F.count_if("_chg")], lambda s, prev: s[0] == 0,
+        name="seeded_labelprop", P=P, max_iter=max_iter, edges=n_sym,
+    )
     sym.unpersist()
     base.unpersist()
-    return LabelPropResult(labels, it, converged, metrics)
+    return LabelPropResult(res.state.drop("_chg"), res.iterations, res.converged,
+                           res.metrics)

@@ -30,13 +30,16 @@ Semantics (shared with tests/oracles.py::pagerank_oracle):
     dang_t     = Σ_{outdeg(u)=0} r_t(u)
     stop when L∞(r_{t+1}-r_t) < tol   (scores allclose 1e-6 vs oracle)
 
-Driver-side loop notes (the Spark analogue of the reference's scheduling
-loop, engine.py:42-129, which Catalyst replaces per-superstep):
-- localCheckpoint(eager) each superstep truncates lineage — without it plans
-  deepen unboundedly (the analogue of pargraph's ref-count release,
-  engine.py:63-76).
-- exactly 2 jobs per superstep: materialize new ranks, then one combined
-  aggregate producing (delta of this step, dangling mass for the next).
+The superstep loop is plans/fixpoint.py (the Spark analogue of the
+reference's scheduling loop, engine.py:42-129):
+- each superstep's ranks are lazily checkpointed, truncating lineage (the
+  analogue of pargraph's ref-count release, engine.py:63-76);
+- exactly 1 Spark job per superstep: ONE aggregate over the new ranks
+  yields (L∞ delta of this superstep, dangling mass for the next) and
+  materializes the checkpoint blocks in the same job;
+- the whole loop runs under no_aqe(P), so the state keeps its recorded
+  hash(id, P) partitioning and a superstep has one Exchange, the message
+  aggregation;
 - checkpoint_every supersteps → parquet + manifest (plans/checkpoint.py);
   resume picks up from the newest committed manifest.
 """
@@ -46,7 +49,6 @@ from __future__ import annotations
 import os
 import shutil
 import tempfile
-import time
 from dataclasses import dataclass, field
 
 import pandas as pd
@@ -54,10 +56,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pargraph_spark.operators.csr import spmv_from_store, with_pid, write_csr_store
-from pargraph_spark.session import no_aqe, size_based_partitions
-from pargraph_spark.plans.debug import dump_plan
 from pargraph_spark.plans.checkpoint import CheckpointManager
-from pargraph_spark.plans.metrics import JobMetrics, SuperstepMetric
+from pargraph_spark.plans.fixpoint import run_fixpoint
+from pargraph_spark.plans.metrics import JobMetrics
+from pargraph_spark.session import no_aqe, size_based_partitions
 
 MSG_SCHEMA = "dst long, msg double"
 
@@ -117,18 +119,11 @@ def pagerank(
     checkpoint_dir: str | None = None,
     checkpoint_every: int = 5,
     resume: bool = False,
-    check_every: int = 1,
     teleport: DataFrame | None = None,
     weight_col: str | None = None,
     warm_start: DataFrame | None = None,
 ) -> PageRankResult:
-    """check_every: convergence-delta cadence. 1 (default) checks every
-    superstep (2 Spark jobs/superstep); k>1 amortizes the delta aggregate
-    (1 job/superstep otherwise) — iteration math is unchanged, only the
-    stop check happens on multiples of k, so a run may overshoot the
-    fixpoint by at most k-1 (deterministic for a given k).
-
-    teleport: optional (id, w) seed distribution → PERSONALIZED PageRank:
+    """teleport: optional (id, w) seed distribution → PERSONALIZED PageRank:
         r_0(v)     = T(v)
         r_{t+1}(v) = (1-d)·T(v) + d·(Σ_{u→v} r_t(u)/outdeg(u) + dang_t·T(v))
     where T is `w` normalized over the vertices present (vertices absent
@@ -162,7 +157,7 @@ def pagerank(
     # so AQE cannot coalesce for us)
     P = size_based_partitions(edges, int(P))
 
-    # setup in ONE E-scale exchange (r6, the scc idiom): repartition on
+    # setup in ONE E-scale exchange (the scc idiom): repartition on
     # the probe key first — hash(src) co-locates every (src, dst) pair,
     # so the dedup/weight-combine aggregation runs in place instead of
     # adding its own exchange before the repartition. Materialized under
@@ -194,15 +189,15 @@ def pagerank(
         teleport=None the weight is the CONSTANT 1/N — carried as the
         `tw` literal expression instead of a materialized column, so the
         classic-PageRank iteration state is one double narrower through
-        every exchange and checkpoint (guide §2.3, narrower shuffle rows;
-        r6). The produced ranks are bit-identical: the same 1/N double
+        every exchange and checkpoint (guide §2.3, narrower shuffle rows).
+        The produced ranks are bit-identical: the same 1/N double
         participates in the same expressions."""
         if teleport is None:
             return df
         t = teleport.select(F.col("id"), F.col("w").cast("double").alias("_w"))
         # Normalize over teleport ids PRESENT IN THE GRAPH only: weights on
         # unknown ids would otherwise shrink ΣT below 1 and leak rank mass
-        # every iteration (ADVICE r2). `base` holds the full vertex set.
+        # every iteration. `base` holds the full vertex set.
         t = t.join(base.select("id"), "id", "left_semi")
         total = float(t.agg(F.sum("_w")).first()[0] or 0.0)
         if total <= 0:
@@ -221,18 +216,15 @@ def pagerank(
 
     store_dir = None
     if mode == "csr":
-        # Materialize CSR blocks ONCE into a pid-partitioned parquet store.
-        # Round 2 cogrouped a cached blocks DataFrame against the ranks,
-        # which re-shipped the E-scale block arrays through Arrow every
-        # superstep (the measured CSR bottleneck, VERDICT r2 #2); with the
-        # store, each superstep ships only the V-scale rank vector and
-        # workers serve blocks from a process-local LRU (csr.py), falling
-        # back to a one-pid parquet read on a cache miss. The store dir is
-        # unique PER RUN (uuid suffix) so a later run in the same Spark app
-        # can never alias a prior run's worker-cache entries (ADVICE r3 —
-        # the fixed <checkpoint_dir>/csr_store path let reused Python
-        # workers serve the previous run's blocks); the store is transient
-        # (rebuilt from edges each run), so it is removed on exit either way.
+        # Materialize CSR blocks ONCE into a pid-partitioned parquet store:
+        # each superstep ships only the V-scale rank vector and workers
+        # serve blocks from a process-local LRU (csr.py), falling back to a
+        # one-pid parquet read on a cache miss — the E-scale block arrays
+        # never cross Arrow again. The store dir is unique PER RUN (uuid
+        # suffix) so a later run in the same Spark app can never alias a
+        # prior run's worker-cache entries through reused Python workers;
+        # the store is transient (rebuilt from edges each run), so it is
+        # removed on exit either way.
         import uuid
 
         if checkpoint_dir:
@@ -248,16 +240,18 @@ def pagerank(
     tw = F.lit(1.0 / n) if teleport is None else F.col("_tw")
     state_cols = ["id", "outdeg"] + (["_tw"] if teleport is not None else [])
 
-    ckpt = CheckpointManager(checkpoint_dir, "pagerank") if checkpoint_dir else None
-    start_iter = 0
-    ranks = None
-    if ckpt and resume:
-        m = ckpt.latest()
-        if m is not None:
-            ranks = ckpt.load(spark, m["superstep"]).repartition(P, "id")
-            start_iter = int(m["superstep"])
-    if ranks is None:
-        init = _with_teleport(base)
+    def _state(ranks: DataFrame) -> DataFrame:
+        """Normalize a fresh or resumed rank table to the loop state
+        (state_cols, rank, _prev), hash(id, P)-partitioned. A resumed
+        checkpoint may predate teleport or carry extra columns."""
+        if teleport is not None and "_tw" not in ranks.columns:
+            ranks = _with_teleport(ranks)
+        if "_prev" not in ranks.columns:
+            ranks = ranks.withColumn("_prev", F.lit(float("nan")))
+        return ranks.select(*state_cols, "rank", "_prev").repartition(P, "id")
+
+    def init() -> DataFrame:
+        r0 = _with_teleport(base)
         if warm_start is not None:
             # prior ranks where known; teleport init for new vertices — then
             # RENORMALIZE to total mass exactly 1: injected/lost mass would
@@ -265,161 +259,89 @@ def pagerank(
             # the iteration, Σr_{t+1} = (1-d) + d·Σr_t), which can be far
             # slower than the graph's own mixing and defeat the warm start.
             ws = warm_start.select("id", F.col("rank").cast("double").alias("_ws"))
-            init = (
-                init.join(ws, "id", "left")
+            r0 = (
+                r0.join(ws, "id", "left")
                 .withColumn("_r0", F.coalesce(F.col("_ws"), tw))
                 .drop("_ws")
             )
-            tot = init.agg(F.sum("_r0").alias("_tot"))
-            init = (
-                init.crossJoin(F.broadcast(tot))
+            tot = r0.agg(F.sum("_r0").alias("_tot"))
+            r0 = (
+                r0.crossJoin(F.broadcast(tot))
                 .withColumn("rank", F.col("_r0") / F.col("_tot"))
                 .drop("_r0", "_tot")
             )
         else:
-            init = init.withColumn("rank", tw)
-        ranks = init.withColumn("_prev", F.lit(float("nan")))
-    if teleport is not None and "_tw" not in ranks.columns:
-        # resumed from a pre-teleport checkpoint
-        ranks = _with_teleport(ranks)
-    if "_prev" not in ranks.columns:
-        ranks = ranks.withColumn("_prev", F.lit(float("nan")))
-    # a resumed/old checkpoint may carry extra columns (e.g. _tw on a
-    # classic run) — normalize to the declared state schema
-    ranks = ranks.select(*state_cols, "rank", "_prev")
-    # r6: the whole iteration runs with AQE disabled (see session.no_aqe)
-    # so every per-superstep localCheckpoint RECORDS its hash(id, P)
-    # partitioning — the next superstep's joins then probe the state in
-    # place and the measured plan drops from 3 Exchanges per superstep
-    # (ranks re-exchanged twice, V-scale each) to 1 (the message
-    # aggregation — the only shuffle PageRank fundamentally needs,
-    # guide §2.4).
-
-    metrics = JobMetrics(f"pagerank[{mode}]")
-    deltas: list[float] = []
-    converged = False
-    it = start_iter
+            r0 = r0.withColumn("rank", tw)
+        return _state(r0)
 
     def _spmv(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         return spmv_from_store(store_dir, int(key[0]), pdf)
 
-    def _delta_dang(df: DataFrame) -> tuple[float, float]:
-        """ONE V-scan producing (L∞ delta of this superstep, dangling mass
-        for the next) — the combined aggregate the module docstring
-        promises. r6: the dangling mass used to enter each superstep as a
-        broadcast 1-row subquery (its own job + broadcast exchange) and
-        the delta as a second scan job; fusing them halves the per-
-        superstep scan jobs. The scalar crosses the driver (the
-        documented scalar-aggregate exception) and re-enters the next
-        plan as a literal — the identical IEEE-64 value the broadcast
-        column carried, so ranks are bit-identical."""
-        row = df.agg(
-            F.max(F.abs(F.col("rank") - F.col("_prev"))).alias("_delta"),
-            F.coalesce(
-                F.sum(F.when(F.col("outdeg") == 0, F.col("rank"))), F.lit(0.0)
-            ).alias("_dang"),
-        ).first()
-        d = row["_delta"]
-        return (float("nan") if d is None else float(d)), float(row["_dang"])
-
-    with no_aqe(spark, P):
-        # initial state materialization under no-AQE records hash(id, P);
-        # lazy checkpoint (r6): the _delta_dang full scan right below
-        # materializes the blocks in the same job
-        ranks = ranks.repartition(P, "id").localCheckpoint(eager=False)
-
-        _, dang = _delta_dang(ranks)
-
-        while it < max_iter:
-            it += 1
-            t0 = time.monotonic()
-            if mode == "dataframe":
-                contrib = (
-                    F.col("_rw") * edges["w"] if weight_col is not None else F.col("_rw")
-                )
-                # shuffle_hash: the build side is the V-scale rank projection
-                # (V/P rows per task — bounded like any hash-agg state); SMJ
-                # would re-SORT the persisted E-scale edge table every
-                # superstep (guide §3.1: pick the strategy deliberately)
-                msgs = (
-                    edges.join(
-                        ranks.where(F.col("outdeg") > 0).select(
-                            F.col("id"), (F.col("rank") / F.col("outdeg")).alias("_rw")
-                        ).hint("shuffle_hash"),
-                        edges["src"] == F.col("id"),
-                    )
-                    .groupBy("dst")
-                    .agg(F.sum(contrib).alias("msg"))
-                )
-            else:
-                rank_g = with_pid(ranks.select("id", "rank"), "id", P)
-                msgs = (
-                    rank_g.groupBy("pid")
-                    .applyInPandas(_spmv, schema=MSG_SCHEMA)
-                    .groupBy("dst")
-                    .agg(F.sum("msg").alias("msg"))
-                )
-            new_ranks = (
-                ranks.join(msgs.hint("shuffle_hash"),
-                           ranks["id"] == msgs["dst"], "left")
-                .select(
-                    *[ranks[c] for c in state_cols],
-                    (
-                        F.lit(1.0 - damping) * tw
-                        + F.lit(damping)
-                        * (
-                            F.coalesce(F.col("msg"), F.lit(0.0))
-                            + F.lit(dang) * tw
-                        )
-                    ).alias("rank"),
-                    ranks["rank"].alias("_prev"),
-                )
+    def step(ranks: DataFrame, prev) -> DataFrame:
+        if mode == "dataframe":
+            contrib = (
+                F.col("_rw") * edges["w"] if weight_col is not None else F.col("_rw")
             )
-            dump_plan(new_ranks, "pagerank_superstep")
-            # lazy checkpoint (r6): the combined delta/dangling aggregate
-            # below is a full V-scan — it materializes the checkpoint
-            # blocks in the SAME job, so a superstep is ONE job, not two
-            # (partitioning recorded at the localCheckpoint call as
-            # before; the persist-chain variant of one-job supersteps was
-            # tried and reverted — lazy checkpoints keep lineage flat).
-            # The superseded state is released only AFTER the aggregate
-            # runs (its blocks feed the materialization), and wall_ms now
-            # covers the whole fused job so edges/s stays honest.
-            new_ranks = new_ranks.localCheckpoint(eager=False)
-            old = ranks
-            ranks = new_ranks
+            # shuffle_hash: the build side is the V-scale rank projection
+            # (V/P rows per task — bounded like any hash-agg state); SMJ
+            # would re-SORT the persisted E-scale edge table every
+            # superstep (guide §3.1: pick the strategy deliberately)
+            msgs = (
+                edges.join(
+                    ranks.where(F.col("outdeg") > 0).select(
+                        F.col("id"), (F.col("rank") / F.col("outdeg")).alias("_rw")
+                    ).hint("shuffle_hash"),
+                    edges["src"] == F.col("id"),
+                )
+                .groupBy("dst")
+                .agg(F.sum(contrib).alias("msg"))
+            )
+        else:
+            rank_g = with_pid(ranks.select("id", "rank"), "id", P)
+            msgs = (
+                rank_g.groupBy("pid")
+                .applyInPandas(_spmv, schema=MSG_SCHEMA)
+                .groupBy("dst")
+                .agg(F.sum("msg").alias("msg"))
+            )
+        # the previous state's dangling mass re-enters as a literal: the
+        # same IEEE-64 value a broadcast scalar column would carry
+        return ranks.join(msgs.hint("shuffle_hash"),
+                          ranks["id"] == msgs["dst"], "left").select(
+            *[ranks[c] for c in state_cols],
+            (
+                F.lit(1.0 - damping) * tw
+                + F.lit(damping)
+                * (F.coalesce(F.col("msg"), F.lit(0.0)) + F.lit(prev["dang"]) * tw)
+            ).alias("rank"),
+            ranks["rank"].alias("_prev"),
+        )
 
-            step_delta, dang = _delta_dang(ranks)
-            old.unpersist()
-            wall_ms = (time.monotonic() - t0) * 1000.0
-            delta = float("nan")
-            if it % check_every == 0 or it >= max_iter:
-                delta = step_delta
-                deltas.append(delta)
-            metrics.add(SuperstepMetric(it, wall_ms, n_edges, delta))
-            if ckpt and (it % checkpoint_every == 0):
-                # unmeasured deltas (check_every > 1) are NaN — json.dump would
-                # emit non-standard `NaN` that strict parsers reject (ADVICE r2)
-                ckpt.save(ranks, it, {"delta": None if delta != delta else delta,
-                                      "damping": damping,
-                                      "n_vertices": n, "n_edges": n_edges})
-            if delta == delta and delta < tol:  # NaN-safe
-                converged = True
-                break
+    def done(s, prev) -> bool:
+        d = s["delta"]
+        return d is not None and d == d and d < tol  # NaN-safe
 
-    # Skip the converged save when this superstep was already committed by
-    # the periodic save above (attempt-versioned saves are safe either way,
-    # but rewriting identical state is wasted I/O).
-    if ckpt and converged and (it % checkpoint_every != 0):
-        ckpt.save(ranks, it, {"delta": deltas[-1] if deltas else 0.0,
-                              "damping": damping, "n_vertices": n, "n_edges": n_edges,
-                              "converged": True})
-    result = ranks.select("id", "rank")
-    # ranks is localCheckpoint-materialized (independent of these lineages):
-    # release the iteration working set — the analogue of the reference's
+    res = run_fixpoint(
+        spark, init, step,
+        # ONE V-scan: the L∞ delta of this superstep and the dangling mass
+        # the next one needs
+        [F.max(F.abs(F.col("rank") - F.col("_prev"))).alias("delta"),
+         F.coalesce(F.sum(F.when(F.col("outdeg") == 0, F.col("rank"))),
+                    F.lit(0.0)).alias("dang")],
+        done,
+        name=f"pagerank[{mode}]", P=P, max_iter=max_iter, edges=n_edges,
+        plan="pagerank_superstep", checkpoint_dir=checkpoint_dir, job="pagerank",
+        checkpoint_every=checkpoint_every, resume=resume,
+        restore=lambda df: _state(df.repartition(P, "id")),
+        manifest=lambda s: {"delta": s["delta"], "damping": damping,
+                            "n_vertices": n, "n_edges": n_edges},
+    )
+    result = res.state.select("id", "rank")
+    # the state is checkpointed (independent of these lineages): release the iteration working set — the analogue of the reference's
     # ref-count release of dead intermediates (engine.py:63-76).
     edges.unpersist()
     base.unpersist()
     if store_dir:
         shutil.rmtree(store_dir, ignore_errors=True)
-    return PageRankResult(result, it, converged, metrics, deltas)
+    return PageRankResult(result, res.iterations, res.converged, res.metrics,
+                          [m.delta for m in res.metrics.supersteps])

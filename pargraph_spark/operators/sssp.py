@@ -27,8 +27,9 @@ persisted — it never moves again; per round only frontier-sized
 aggregate so hub fan-in is safe, and the V-scale dist merge is one
 outer join on the id-partitioned table. Unreached vertices are absent
 from the output (at web scale, most of the graph — materializing ∞ rows
-would dwarf the answer). Rounds localCheckpoint to truncate lineage
-(the ref-count-release analogue, reference engine.py:63-76).
+would dwarf the answer). The round loop is plans/fixpoint.py: each
+round's state is checkpointed to truncate lineage (the ref-count-release
+analogue, reference engine.py:63-76) and costs one Spark job.
 
 Determinism: distances are pure min-plus values — no tie-breaks exist;
 with integer (or exactly-representable) weights results are bit-identical
@@ -37,15 +38,14 @@ across engines and partitionings.
 
 from __future__ import annotations
 
-import time
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pargraph_spark.session import ckpt_state, ckpt_state_lazy, size_based_partitions
-
-from pargraph_spark.plans.metrics import JobMetrics, SuperstepMetric
+from pargraph_spark.plans.fixpoint import run_fixpoint
+from pargraph_spark.plans.metrics import JobMetrics
+from pargraph_spark.session import size_based_partitions
 
 
 @dataclass
@@ -93,49 +93,39 @@ def sssp(
     n_adj = adj.count()
 
     zero = F.lit(0).cast(dict(adj.dtypes)["w"])
-    dist = (
-        sources.select("id").distinct()
-        .withColumn("dist", zero)
-        .repartition(P, "id")
-        .transform(ckpt_state, P)
-    )
-    frontier = dist
-    metrics = JobMetrics("sssp")
-    rounds, exhausted = 0, False
-    for t in range(1, max_rounds + 1):
-        t0 = time.monotonic()
+
+    def step(state: DataFrame, prev) -> DataFrame:
+        # the frontier: vertices whose distance improved last round (every
+        # source in round 1)
+        frontier = state.where(F.col("_imp")).select("id", F.col("dist").alias("_fd"))
         cand = (
-            adj.join(frontier.select(F.col("id"), F.col("dist").alias("_fd")),
-                     adj["u"] == F.col("id"))
+            adj.join(frontier, adj["u"] == F.col("id"))
             .select(adj["v"].alias("id"), (F.col("_fd") + adj["w"]).alias("nd"))
             .groupBy("id")
             .agg(F.min("nd").alias("nd"))  # partial+final min: hub-safe
         )
-        merged = (
-            dist.join(cand, "id", "full_outer")
-            .select(
-                "id",
-                F.when(
-                    F.col("dist").isNull() | (F.col("nd") < F.col("dist")),
-                    F.col("nd"),
-                ).otherwise(F.col("dist")).alias("dist"),
-                (
-                    F.col("nd").isNotNull()
-                    & (F.col("dist").isNull() | (F.col("nd") < F.col("dist")))
-                ).alias("_imp"),
-            )
-            .transform(ckpt_state_lazy, P)  # materialized by the count below
+        return state.select("id", "dist").join(cand, "id", "full_outer").select(
+            "id",
+            F.when(
+                F.col("dist").isNull() | (F.col("nd") < F.col("dist")),
+                F.col("nd"),
+            ).otherwise(F.col("dist")).alias("dist"),
+            (
+                F.col("nd").isNotNull()
+                & (F.col("dist").isNull() | (F.col("nd") < F.col("dist")))
+            ).alias("_imp"),
         )
-        frontier = merged.where(F.col("_imp")).select("id", "dist")
-        n_improved = frontier.count()
-        metrics.add(SuperstepMetric(t, (time.monotonic() - t0) * 1000.0,
-                                    n_adj, float(n_improved)))
-        old = dist
-        dist = merged.select("id", "dist")
-        old.unpersist()
-        if n_improved == 0:
-            exhausted = True
-            break
-        rounds = t
+
+    res = run_fixpoint(
+        spark,
+        lambda: sources.select("id").distinct()
+        .select("id", zero.alias("dist"), F.lit(True).alias("_imp"))
+        .repartition(P, "id"),
+        step, [F.count_if("_imp")], lambda s, prev: s[0] == 0,
+        name="sssp", P=P, max_iter=max_rounds, edges=n_adj,
+    )
     adj.unpersist()
-    return SsspResult(dist, rounds, exhausted, metrics)
+    # rounds counts relaxations that improved something: the round that
+    # finds an empty frontier is not one
+    return SsspResult(res.state.select("id", "dist"),
+                      res.iterations - res.converged, res.converged, res.metrics)

@@ -1,8 +1,11 @@
 from __future__ import annotations
 
+import glob
 import json
 import math
 import os
+
+import pytest
 
 from pargraph_spark.operators.edges import build_edges
 from pargraph_spark.operators.extract_links import extract_links
@@ -122,26 +125,59 @@ def test_resave_same_superstep_never_overwrites_committed_state(spark, tmp_path)
 
 
 def test_manifest_json_strict_when_delta_unmeasured(spark, tmp_path):
-    # ADVICE r2: with check_every > 1 the periodic save lands on supersteps
-    # without a measured delta; the manifest must stay strict JSON (no NaN)
-    import glob
+    # an unmeasured delta is NaN; NaN/Inf extras are stored as null so the
+    # manifest stays strict JSON
+    ckpt = CheckpointManager(str(tmp_path), "pagerank")
+    df = spark.range(6).selectExpr("id", "cast(id as double) as rank")
+    ckpt.save(df, 3, {"delta": float("nan"), "inf": float("inf"), "damping": 0.85})
+    (path,) = glob.glob(os.path.join(ckpt.dir, "manifest_*.json"))
+    with open(path) as f:
+        text = f.read()
+    assert "NaN" not in text and "Infinity" not in text
 
-    edges = [(i, (i + 1) % 6) for i in range(6)]
-    edf = spark.createDataFrame(edges, "src long, dst long")
-    pagerank(spark, edf, num_partitions=4, max_iter=4, tol=0.0,
-             checkpoint_dir=str(tmp_path), checkpoint_every=3, check_every=4)
-    files = glob.glob(os.path.join(str(tmp_path), "pagerank", "manifest_*.json"))
-    assert files
-    for p in files:
-        with open(p) as f:
-            text = f.read()
-        assert "NaN" not in text
+    def _reject(s):
+        raise ValueError(f"non-standard JSON literal {s}")
 
-        def _reject(s):
-            raise ValueError(f"non-standard JSON literal {s}")
+    m = json.loads(text, parse_constant=_reject)
+    assert m["delta"] is None and m["inf"] is None and m["damping"] == 0.85
 
-        m = json.loads(text, parse_constant=_reject)
-        assert "delta" in m
+
+def _run_to_fixpoint(op, spark, edf, **kw):
+    """(result, its assignment dict, its superstep count) for one of the
+    checkpointable fixpoint operators."""
+    if op == "pagerank":
+        r = pagerank(spark, edf, tol=1e-6, **kw)
+        return r, {x["id"]: x["rank"] for x in r.ranks.collect()}, r.iterations
+    if op == "connected_components":
+        from pargraph_spark.operators.components import connected_components
+
+        if "max_iter" in kw:
+            kw["max_rounds"] = kw.pop("max_iter")
+        r = connected_components(spark, edf, **kw)
+        return r, {x["id"]: x["component"] for x in r.components.collect()}, r.rounds
+    from pargraph_spark.operators.labelprop import label_propagation
+
+    r = label_propagation(spark, edf, **kw)
+    return r, {x["id"]: x["label"] for x in r.labels.collect()}, r.iterations
+
+
+@pytest.mark.parametrize("op", ["pagerank", "connected_components", "label_propagation"])
+def test_resume_from_converged_manifest_returns_at_once(spark, tmp_path, op):
+    # checkpoint_every=1: convergence lands on a cadence save, so the
+    # newest manifest is the converged superstep itself
+    edf = _edges(spark)
+    ckpt_dir = str(tmp_path / op)
+    full, ref, n = _run_to_fixpoint(op, spark, edf, num_partitions=4,
+                                    checkpoint_dir=ckpt_dir, checkpoint_every=1)
+    assert full.converged
+    # a limit equal to the converged superstep: nothing is left to run
+    resumed, got, n_resumed = _run_to_fixpoint(
+        op, spark, edf, num_partitions=4, checkpoint_dir=ckpt_dir,
+        checkpoint_every=1, resume=True, max_iter=n)
+    assert got == ref
+    assert resumed.converged
+    assert n_resumed == n
+    assert resumed.metrics.supersteps == []
 
 
 def test_incremental_pagerank_warm_start_over_append(spark, tmp_path):

@@ -1,0 +1,85 @@
+"""plans/fixpoint.py — the one superstep loop of the fixpoint operators.
+
+A toy fixpoint (min-label propagation on a path) pins what the driver
+promises every operator it runs: one Spark job per superstep plus one
+setup job, and superstep metrics numbered from the resumed superstep on.
+"""
+
+from __future__ import annotations
+
+import uuid
+
+from pyspark.sql import functions as F
+
+from pargraph_spark.plans.fixpoint import run_fixpoint
+
+N = 20  # path 0-1-...-19: label 0 reaches vertex 19 after 19 supersteps
+P = 4
+
+
+def _path(spark):
+    pairs = [(i, i + 1) for i in range(N - 1)]
+    sym = (spark.createDataFrame(pairs + [(b, a) for a, b in pairs], "u long, v long")
+           .repartition(P, "u").persist())
+    sym.count()
+    return sym
+
+
+def _min_label(spark, sym, max_iter=50, **kw):
+    def step(state, prev):
+        # hints keep every join a shuffle join: a broadcast would add jobs
+        best = (
+            sym.join(state.hint("shuffle_hash"), sym["u"] == state["id"])
+            .groupBy(sym["v"].alias("id"))
+            .agg(F.min("label").alias("m"))
+        )
+        return state.join(best.hint("shuffle_hash"), "id", "left").select(
+            "id",
+            F.least("label", "m").alias("label"),
+            F.coalesce(F.col("m") < F.col("label"), F.lit(False)).alias("_chg"),
+        )
+
+    return run_fixpoint(
+        spark,
+        lambda: spark.range(N).select("id", F.col("id").alias("label"),
+                                      F.lit(True).alias("_chg")).repartition(P, "id"),
+        step, [F.count_if("_chg")], lambda s, prev: s[0] == 0,
+        name="min_label", P=P, max_iter=max_iter, edges=2 * (N - 1), **kw,
+    )
+
+
+def _labels(res):
+    return {r["id"]: r["label"] for r in res.state.collect()}
+
+
+def test_one_job_per_superstep(spark):
+    sc = spark.sparkContext
+    sym = _path(spark)
+    group = f"fixpoint-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "toy fixpoint")
+    try:
+        res = _min_label(spark, sym)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # job starts are posted async
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert res.converged and res.iterations == N
+    setup_jobs = 1  # the stats aggregate that materializes the initial state
+    assert len(jobs) == setup_jobs + res.iterations
+    assert [m.superstep for m in res.metrics.supersteps] == list(range(1, N + 1))
+    assert [m.delta for m in res.metrics.supersteps][-1] == 0.0
+    assert _labels(res) == {i: 0 for i in range(N)}
+    sym.unpersist()
+
+
+def test_resume_numbers_supersteps_from_the_manifest(spark, tmp_path):
+    sym = _path(spark)
+    ckpt = dict(checkpoint_dir=str(tmp_path), job="min_label", checkpoint_every=5)
+    part = _min_label(spark, sym, max_iter=5, **ckpt)
+    assert not part.converged and part.iterations == 5
+    res = _min_label(spark, sym, resume=True, **ckpt)
+    assert res.converged and res.iterations == N
+    assert [m.superstep for m in res.metrics.supersteps] == list(range(6, N + 1))
+    assert _labels(res) == {i: 0 for i in range(N)}
+    sym.unpersist()
