@@ -1,31 +1,39 @@
 """Breadth-first distances from a seed set (k-hop neighborhoods).
 
 The frontier-expansion pattern every link-graph engine needs (crawl-depth
-analysis, neighborhood extraction, reachability): each round joins the
+analysis, neighborhood extraction, reachability): each hop joins the
 CURRENT frontier (small) against the once-partitioned edge table and
-anti-joins the visited set — per round only frontier-sized id rows
+anti-joins the visited set — per hop only frontier-sized id rows
 shuffle, never the edge payload, and the edge side is probed in place
 (pre-partitioned on the join key, same discipline as labelprop.py).
+
+One multi-source BFS (``_bfs``) serves both this module and
+landmarks.py: its key columns are ``()`` for plain BFS and
+``("landmark",)`` for the landmark sketch, which runs one wave per key.
+The hop loop is plans/fixpoint.py: the state is the visited table
+(keys…, id, dist), each hop's state is checkpointed to truncate lineage
+(the ref-count-release analogue, reference engine.py:63-76), and a hop
+costs ONE Spark job — the aggregate of (count, max dist) that
+materializes it. The run stops when a hop adds no vertex.
 
 Unvisited vertices are absent from the output (not NULL/∞ rows): at web
 scale most of the graph is outside a k-hop ball and materializing it
 would dwarf the answer.
 
 Determinism: distances are well-defined (min hops); no tie-breaks exist.
-Rounds localCheckpoint to truncate lineage (ref-count-release analogue,
-/root/reference/pargraph/engine/engine.py:63-76).
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
+from typing import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pargraph_spark.session import ckpt_state, ckpt_state_lazy, size_based_partitions
-
-from pargraph_spark.plans.metrics import JobMetrics, SuperstepMetric
+from pargraph_spark.plans.fixpoint import run_fixpoint
+from pargraph_spark.plans.metrics import JobMetrics
+from pargraph_spark.session import size_based_partitions
 
 
 @dataclass
@@ -34,6 +42,71 @@ class BfsResult:
     hops: int             # rounds actually expanded
     exhausted: bool       # True if the frontier emptied before max_hops
     metrics: JobMetrics = field(default_factory=lambda: JobMetrics("bfs"))
+
+
+def _adjacency(edges: DataFrame, symmetric: bool, P: int) -> tuple[DataFrame, int]:
+    """The (u, v) expansion table — self-loops and duplicates dropped,
+    both directions when symmetric — persisted hash(u, P)-partitioned
+    (persist, not localCheckpoint: it must keep reporting hash(u) so
+    every hop's frontier join probes it in place), and its row count."""
+    fwd = edges.select(F.col("src").alias("u"), F.col("dst").alias("v"))
+    adj = (
+        fwd.unionByName(fwd.select(F.col("v").alias("u"), F.col("u").alias("v")))
+        if symmetric
+        else fwd
+    )
+    adj = (
+        adj.where(F.col("u") != F.col("v"))
+        .distinct()
+        .repartition(P, "u")
+        .persist()
+    )
+    return adj, adj.count()
+
+
+def _bfs(
+    spark: SparkSession,
+    adj: DataFrame,
+    n_adj: int,
+    seeds: DataFrame,
+    keys: Sequence[str],
+    max_hops: int,
+    P: int,
+    name: str,
+) -> tuple[DataFrame, int, bool, JobMetrics]:
+    """Multi-source BFS over ``adj``: seeds (keys…, id) at distance 0 →
+    (visited (keys…, id, dist), hops, exhausted, metrics). Each key value
+    runs its own wave; hops counts the hops that reached a new vertex."""
+    kid = [*keys, "id"]
+
+    def step(state: DataFrame, prev) -> DataFrame:
+        # the frontier is the last hop's vertices: max(dist) of the state
+        # (a hop only runs after the previous one grew the state)
+        hop = prev["hop"] or 0
+        frontier = state.where(F.col("dist") == hop).select(*kid)
+        # shuffle_hash: build on the frontier/visited side, never a
+        # broadcast (it would cost its own job every hop)
+        nxt = (
+            adj.join(frontier.hint("shuffle_hash"), adj["u"] == frontier["id"])
+            .select(*keys, adj["v"].alias("id"))
+            .distinct()
+            .join(state.select(*kid).hint("shuffle_hash"), kid, "left_anti")
+            .withColumn("dist", F.lit(hop + 1))
+        )
+        return state.unionByName(nxt)
+
+    res = run_fixpoint(
+        spark,
+        lambda: seeds.select(*kid).distinct().withColumn("dist", F.lit(0)),
+        step,
+        [F.count("*").alias("n"), F.max("dist").alias("hop")],
+        lambda s, prev: s["n"] == prev["n"],
+        name=name, P=P, max_iter=max_hops, edges=n_adj,
+        delta=lambda s, prev: float(s["n"] - prev["n"]),  # new vertices
+    )
+    # the hop that found nothing new is not one
+    return (res.state, res.iterations - res.converged, res.converged,
+            res.metrics)
 
 
 def bfs_distances(
@@ -48,52 +121,11 @@ def bfs_distances(
 
     symmetric=True treats edges as undirected (the link-graph default);
     False follows src→dst direction only."""
-    import time
-
     P = int(num_partitions or spark.conf.get("spark.sql.shuffle.partitions"))
     P = size_based_partitions(edges, P)  # guide §2.2, size-derived cap
-    fwd = edges.select(F.col("src").alias("u"), F.col("dst").alias("v"))
-    adj = (
-        fwd.unionByName(fwd.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        if symmetric
-        else fwd
-    )
-    adj = (
-        adj.where(F.col("u") != F.col("v"))
-        .distinct()
-        .repartition(P, "u")
-        .persist()
-    )
-    n_adj = adj.count()
-
-    dist = (
-        sources.select("id").distinct()
-        .withColumn("dist", F.lit(0))
-        .transform(ckpt_state, P)
-    )
-    frontier = dist.select("id")
-    metrics = JobMetrics("bfs")
-    hops, exhausted = 0, False
-    for h in range(1, max_hops + 1):
-        t0 = time.monotonic()
-        nxt = (
-            adj.join(frontier, adj["u"] == frontier["id"])
-            .select(adj["v"].alias("id"))
-            .distinct()
-            .join(dist, "id", "left_anti")
-            .withColumn("dist", F.lit(h))
-            .transform(ckpt_state_lazy, P)  # materialized by the count below
-        )
-        n_new = nxt.count()
-        metrics.add(SuperstepMetric(h, (time.monotonic() - t0) * 1000.0, n_adj, float(n_new)))
-        if n_new == 0:
-            exhausted = True
-            break
-        hops = h
-        old = dist
-        dist = dist.unionByName(nxt).transform(ckpt_state, P)
-        old.unpersist()
-        frontier = nxt.select("id")
+    adj, n_adj = _adjacency(edges, symmetric, P)
+    dist, hops, exhausted, metrics = _bfs(
+        spark, adj, n_adj, sources, (), max_hops, P, "bfs")
     adj.unpersist()
     return BfsResult(dist, hops, exhausted, metrics)
 
@@ -143,6 +175,7 @@ def diameter_2sweep(
         max_hops=max_hops,
         num_partitions=num_partitions,
     )
-    ecc = second.distances.agg(F.max("dist")).first()[0]
+    # the eccentricity: every counted hop reached a vertex, so the last
+    # one is the farthest distance
     n = second.distances.count()
-    return DiameterEstimate(int(ecc), int(far["id"]), n, second.distances)
+    return DiameterEstimate(second.hops, int(far["id"]), n, second.distances)

@@ -26,19 +26,23 @@ boilerplate by definition, the idf argument). The pair aggregate
 partial-combines map-side; output is pair-scale, never wedge-scale.
 Counts use BIGINT (c ≤ 2^31 shared neighbors per pair before C(c,2)
 overflows — beyond any real corpus).
+
+bitruss's peel loop is plans/fixpoint.py: the state is the surviving
+edge set with its supports, and each round costs ONE Spark job — the
+aggregate of (edges left, edges below k) that materializes the round's
+checkpoint and tells the driver whether another round would remove
+anything.
 """
 
 from __future__ import annotations
 
-import time
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from pargraph_spark.session import ckpt_state, ckpt_state_lazy
-
-from pargraph_spark.plans.metrics import JobMetrics, SuperstepMetric
+from pargraph_spark.plans.fixpoint import run_fixpoint
+from pargraph_spark.plans.metrics import JobMetrics
 
 
 @dataclass
@@ -136,7 +140,7 @@ def bitruss(
     the edge-cohesion primitive of bipartite graphs, sitting next to
     k-truss exactly as the butterfly sits next to the triangle.
 
-    Peel loop with INCREMENTAL support maintenance (the ktruss r5
+    Peel loop with INCREMENTAL support maintenance (the ktruss
     discipline, triangles.py:150-246): wedges are enumerated ONCE up
     front for the initial supports; every subsequent round enumerates
     only the butterflies its removed edges participate in (removed ⋈
@@ -153,10 +157,9 @@ def bitruss(
     the 10^8-degree-hub guard). Support is maintained exactly on the
     CURRENT surviving graph, so the recount-formulation unrolled SQL
     oracle matches bit-for-bit once its round count passes convergence
-    (rounds past it are identity). Rounds metric counts only effective
-    (removing) rounds; the terminal identity check is not a round.
-    fixed_rounds runs exactly that many removal steps with no
-    convergence jobs (oracle parity)."""
+    (rounds past it are identity). `rounds` counts only effective
+    (removing) rounds. fixed_rounds runs exactly that many rounds and
+    never stops early (oracle parity)."""
     if k < 1:
         raise ValueError(f"bitruss requires k >= 1, got {k}")
     P = int(spark.conf.get("spark.sql.shuffle.partitions"))
@@ -167,19 +170,9 @@ def bitruss(
     if hot_cap is not None:
         deg = e.groupBy("w").agg(F.count("*").alias("_d"))
         e = e.join(deg.where(F.col("_d") <= int(hot_cap)).select("w"), "w")
-    cur = (
-        _edge_supports(e.repartition(P, "w"))
-        .repartition(P, "w")
-        .transform(ckpt_state, P)
-    )
-    metrics = JobMetrics("bitruss")
-    rounds = 0
-    n_rounds = fixed_rounds if fixed_rounds is not None else max_rounds
-    for r in range(1, n_rounds + 1):
-        t0 = time.monotonic()
+
+    def step(cur: DataFrame, prev) -> DataFrame:
         removed = cur.where(F.col("sup") < k).select("u", "w")
-        if fixed_rounds is None and removed.limit(1).count() == 0:
-            break  # identity round: not counted (kcore semantics)
         survivors = cur.where(F.col("sup") >= k)
         g = cur.select("u", "w")
         # dead butterflies through each removed edge (u, w1): co-endpoint
@@ -212,19 +205,31 @@ def bitruss(
             .groupBy("u", "w")
             .agg(F.count("*").alias("_d"))
         )
-        cur = (
+        return (
             survivors.join(dec, ["u", "w"], "left")
             .select(
                 "u", "w",
                 (F.col("sup") - F.coalesce(F.col("_d"), F.lit(0))).alias("sup"),
             )
             .repartition(P, "w")
-            .transform(ckpt_state_lazy, P)  # materialized by the count below
         )
-        n_after = cur.count()
-        metrics.add(SuperstepMetric(r, (time.monotonic() - t0) * 1000.0,
-                                    n_after, float("nan")))
-        rounds = r
-        if n_after == 0:
-            break
-    return BitrussResult(cur, rounds, metrics)
+
+    # stats: edges left and edges the next round would remove; a round
+    # that leaves nothing to remove is the last
+    res = run_fixpoint(
+        spark,
+        lambda: _edge_supports(e.repartition(P, "w")).repartition(P, "w"),
+        step,
+        [F.count("*"), F.count_if(F.col("sup") < k)],
+        (lambda s, prev: False) if fixed_rounds is not None
+        else (lambda s, prev: s[1] == 0),
+        name="bitruss", P=P,
+        max_iter=fixed_rounds if fixed_rounds is not None else max_rounds,
+        edges=lambda s: s[0],
+        delta=lambda s, prev: float(prev[0] - s[0]),  # edges removed
+    )
+    # adaptive rounds count the rounds that removed an edge: with nothing
+    # to peel, the one identity round run is not one
+    rounds = (res.iterations if fixed_rounds is not None
+              else sum(m.delta > 0 for m in res.metrics.supersteps))
+    return BitrussResult(res.state, rounds, res.metrics)

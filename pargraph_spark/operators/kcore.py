@@ -8,19 +8,27 @@ what survives is exactly the k-core, independent of deletion order, so
 the result is deterministic and an unrolled round-by-round SQL oracle is
 exact (rounds past convergence are identity, the lpa_full pattern).
 
-Plan shape per round (the iterative-operator discipline shared with
-pagerank/labelprop/bfs): the symmetrized edge table lives partitioned on
-the probe key and is FILTERED each round by anti-joins against the
-round's peeled set — co-partitioned on the u side, AQE-broadcast on the
-v side once peeling localizes (after round 1 the peeled set is small);
-degrees are one partial-combined aggregate; the loop persists each
-round's surviving edge set repartitioned on u and releases the
-superseded one (persist, not localCheckpoint — an ExistingRDD scan
-reports unknown partitioning and would re-exchange E every round; the
-release is the ref-count analogue of /root/reference/pargraph/engine/
-engine.py:63-76). At 10^12 edges the peel typically converges in tens of
-rounds and every round's shuffle is bounded by the CURRENT survivor set,
-which only shrinks.
+Plan shape per peel round (kcore and score_core share one loop,
+``_peel``): the symmetrized edge table lives partitioned on the probe
+key u and is FILTERED each round by anti-joins against the round's
+peeled set — co-partitioned on the u side, AQE-broadcast on the v side
+once peeling localizes (after round 1 the peeled set is small); the
+measure (degree or strength) is one partial-combined aggregate. Each
+round persists its surviving edge set repartitioned on u and releases
+the superseded one (the ref-count analogue of the reference's
+engine.py:63-76). The peel stays OFF the plans/fixpoint.py
+driver on purpose: it needs AQE on for those runtime broadcasts, and
+the driver's AQE-on checkpoint (``P=None``) would record unknown
+partitioning, so every round would re-exchange the E-scale edge set
+that ``persist`` keeps hash(u)-partitioned. One action per round — the
+survivor count that materializes the persist — which AQE runs as one
+Spark job per query stage. At 10^12 edges the peel typically converges
+in tens of rounds and every round's shuffle is bounded by the CURRENT
+survivor set, which only shrinks.
+
+core_numbers (full decomposition) is the H-index fixpoint instead, run
+by plans/fixpoint.py: ONE Spark job per round (its changed-count
+aggregate materializes the round's checkpoint), plus setup jobs.
 """
 
 from __future__ import annotations
@@ -28,12 +36,12 @@ from __future__ import annotations
 import time
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pargraph_spark.session import ckpt_state, ckpt_state_lazy, size_based_partitions
-
+from pargraph_spark.plans.fixpoint import run_fixpoint
 from pargraph_spark.plans.metrics import JobMetrics, SuperstepMetric
+from pargraph_spark.session import ckpt_state, size_based_partitions
 
 from .edges import symmetrize
 
@@ -60,28 +68,41 @@ def kcore(
         raise ValueError(f"kcore requires k >= 1, got {k}")
     P = int(num_partitions or spark.conf.get("spark.sql.shuffle.partitions"))
     P = size_based_partitions(edges, P)  # guide §2.2, size-derived cap
-    # persist, NOT localCheckpoint (review r5): an ExistingRDD scan
-    # reports unknown partitioning, so a checkpointed edge table was
-    # re-exchanged by every round's groupBy('u')/anti-join despite the
-    # explicit repartition — the SCC trim-loop persist pattern keeps
-    # hash(u) visible across rounds
+    # persist, NOT localCheckpoint: an ExistingRDD scan reports unknown
+    # partitioning, so every round's groupBy(u)/anti-join would
+    # re-exchange a checkpointed edge table despite the repartition
     sym = symmetrize(edges).repartition(P, "u").persist()
-    metrics = JobMetrics("kcore")
-    rounds = 0
-    converged = False
-    # carried across rounds: last round's n_after IS this round's n_before
-    # (re-counting sym each round cost one extra Spark job per peel round —
-    # VERDICT r3 nit)
-    n_before = sym.count()
+    return _peel(sym, F.count("*"), k, "deg", "kcore", max_rounds, P)
+
+
+def _peel(
+    sym: DataFrame,
+    measure: Column,
+    threshold: int,
+    out_col: str,
+    name: str,
+    max_rounds: int,
+    P: int,
+) -> KCoreResult:
+    """Peel the persisted hash(u, P) edge table ``sym`` (u, v, ...) until
+    every surviving u has ``measure`` >= threshold → (id, out_col) with
+    the measure inside the result. ``sym`` is released. rounds counts
+    the rounds that removed an edge; converged=False means max_rounds
+    was hit first, and the result is then a SUPERSET of the core."""
+    metrics = JobMetrics(name)
+    rounds, converged = 0, False
+    n_before = sym.count()  # each round's survivor count is the next n_before
     for r in range(1, max_rounds + 1):
         t0 = time.monotonic()
-        deg = sym.groupBy("u").agg(F.count("*").alias("deg"))
-        peeled = deg.where(F.col("deg") < k).select("u")
-        # Drop edges touching THIS round's peeled vertices (equivalent to
-        # keeping the survivors, but the peeled set is the small side after
-        # the first round, so AQE turns the anti-joins into broadcasts; the
-        # u-side is co-partitioned for free either way — peeled inherits
-        # hash(u) from the groupBy, sym is partitioned on u).
+        peeled = (
+            sym.groupBy("u").agg(measure.alias("_m"))
+            .where(F.col("_m") < threshold)
+            .select("u")
+        )
+        # Drop edges touching THIS round's peeled vertices: the peeled set
+        # is the small side after the first round, so AQE turns the
+        # anti-joins into broadcasts; the u side is co-partitioned either
+        # way (peeled inherits hash(u) from the groupBy)
         survived = (
             sym.join(peeled, "u", "left_anti")
             .join(peeled.select(F.col("u").alias("v")), "v", "left_anti")
@@ -95,7 +116,7 @@ def kcore(
         )
         sym.unpersist()
         sym = survived
-        if n_after == n_before:
+        if n_after == n_before:  # identity round: not counted
             converged = True
             break
         rounds = r
@@ -103,11 +124,9 @@ def kcore(
         if n_after == 0:
             converged = True
             break
-    # review r5: max_rounds exhaustion used to be indistinguishable from
-    # a converged run — the returned set is then a SUPERSET of the k-core
     core = (
         sym.groupBy(F.col("u").alias("id"))
-        .agg(F.count("*").alias("deg"))
+        .agg(measure.alias(out_col))
         .transform(ckpt_state, P)
     )
     sym.unpersist()
@@ -131,7 +150,7 @@ def core_numbers(
 ) -> CoreNumbersResult:
     """Full k-core decomposition: every vertex's core number (the largest
     k such that it belongs to the k-core) — the query a link-graph analyst
-    wants after fixed-k membership (VERDICT r3 #6).
+    wants after fixed-k membership.
 
     Algorithm: the distributed H-index fixpoint (Lü et al. 2016, "The
     H-index of a network node and its relation to degree and coreness";
@@ -143,33 +162,41 @@ def core_numbers(
     lpa_full pattern), and any correct engine agrees bit-for-bit (all
     integer arithmetic).
 
-    Plan shape per round (skew-proof, ZERO E-scale exchanges): the only
-    E-scale operation is sym ⋈ estimates on v — co-partitioned (sym is
-    pre-partitioned on v, estimates on id), so no exchange — feeding a
-    groupBy(u, value) histogram whose map-side partial combine shrinks
-    rows to |distinct values per u| BEFORE its shuffle. Neighbor values
-    are then CLAMPED at the vertex's own current estimate (valid because
-    H_{t+1}(u) ≤ c_t(u), by monotonicity) via a histogram-scale join and
-    re-combined, so the per-vertex window that extracts the h-index runs
-    over at most c_t(u)+1 rows — bounded by CORENESS, not degree. A
-    10^8-degree hub contributes its adjacency only to the map-side
-    combine; nothing downstream sees more rows per vertex than the
-    graph's degeneracy (~hundreds on web graphs). The alternative
-    row_number-over-raw-neighbors formulation serializes a hub's entire
-    adjacency through one task — the 100-TB trap this plan avoids.
+    Plan shape per round (skew-proof): the E-scale operation is sym ⋈
+    estimates on v — co-partitioned (sym is pre-partitioned on v,
+    estimates on id), so a full round has ZERO E-scale exchanges —
+    feeding a groupBy(u, value) histogram whose map-side partial combine
+    shrinks rows to the distinct neighbor estimates per u BEFORE its
+    shuffle; the per-vertex window that extracts the h-index runs over
+    those rows. A 10^8-degree hub contributes its adjacency only to the
+    map-side combine; downstream it is one row per distinct neighbor
+    estimate, and a graph with E edges has O(sqrt(E)) distinct
+    estimates (each is at most the degree of a distinct vertex). The
+    alternative row_number-over-raw-neighbors formulation serializes a
+    hub's entire adjacency through one task — the 100-TB trap this plan
+    avoids. The clamp at the vertex's own estimate is applied to h
+    itself: H(min(values, c)) = min(H(values), c). Delta rounds filter
+    sym to the candidates' edges in place (on hash(v)) and move only
+    those for the estimate join.
 
-    fixed_rounds: run exactly that many rounds with no convergence jobs
-    (for oracle parity; the result's `converged` flag stays False because
-    nothing checked it); otherwise iterate with DELTA rounds (see below)
-    until the changed set empties.
+    fixed_rounds: run exactly that many rounds and never stop early (for
+    oracle parity: rounds past the fixpoint are identity; the result's
+    `converged` stays False because nothing stopped on it); otherwise
+    iterate until no estimate changes. Both modes run the same delta
+    rounds (see `step`), one Spark job each: the plans/fixpoint.py
+    driver's count of changed estimates materializes the round.
 
     Round-count honesty: the H-index fixpoint's iteration count is
     graph-dependent and can be LONG — 19 rounds on the sf0.01 co-graph,
-    but 400+ on sf0.1's denser one (measured; the tail is a shrinking
-    set of vertices decrementing by 1 per round — the known worst case
-    of this iteration). If max_rounds is hit first, the returned
-    estimates are still a well-defined MONOTONE UPPER BOUND on coreness
-    (estimates only decrease toward the true value) with
+    38 on sf0.1's denser one (measured on 4 vCPUs, 121 s), whose tail
+    is a few dozen vertices decrementing by 1 per round for 20 rounds
+    before a last cascade — the known worst case of this iteration.
+    Because each round's state is a union and an aggregate of the last
+    one, never a join with it, the checkpoint's size estimate grows
+    linearly with the round count; a join would square it every round
+    and planning would slow exponentially. If max_rounds is hit first,
+    the returned estimates are still a well-defined MONOTONE UPPER BOUND
+    on coreness (estimates only decrease toward the true value) with
     converged=False. For a bounded-round exact answer at a specific k,
     use kcore()'s peel instead; for full decomposition on graphs with a
     long tail, raise max_rounds — delta rounds make tail rounds
@@ -193,112 +220,82 @@ def core_numbers(
         .persist()
     )
     sym.count()
-    est = (
-        sym.groupBy(F.col("u").alias("id")).agg(F.count("*").alias("c"))
-        .repartition(P, "id")
-        .transform(ckpt_state, P)
-    )
-    metrics = JobMetrics("core_numbers")
-    converged = False
-    rounds = 0
-    n_rounds = fixed_rounds if fixed_rounds is not None else max_rounds
     w = Window.partitionBy("u").orderBy(F.col("x").desc())
-    def _hindex(sym_side: DataFrame, cur: DataFrame) -> DataFrame:
-        """One H-index update over sym_side's (u) vertices: histogram of
-        neighbor estimates (map-side partial combine eats the edge scale),
-        clamp at own estimate AFTER histogramming (commutes), h via the
-        coreness-bounded window."""
-        cv = cur.select(F.col("id").alias("v"), F.col("c").alias("_cv"))
-        cu = cur.select(F.col("id").alias("u"), F.col("c").alias("_cu"))
-        raw = (
-            sym_side.join(cv, "v")  # co-partitioned on v: no exchange
-            .groupBy("u", F.col("_cv").alias("xv"))
-            .agg(F.count("*").alias("cnt"))
-        )
-        hist = (
-            raw.join(cu, "u")
-            .select("u", F.least("xv", "_cu").alias("x"), "cnt")
-            .groupBy("u", "x")
-            .agg(F.sum("cnt").alias("cnt"))
-        )
-        return (
-            hist.withColumn("cum", F.sum("cnt").over(w))
-            .groupBy(F.col("u").alias("id"))
-            .agg(F.max(F.least(F.col("cum"), F.col("x"))).alias("c"))
-        )
 
-    if fixed_rounds is not None:
-        # lean full-recompute loop: every round is one E-scale pass, no
-        # delta bookkeeping — the right trade when rounds are few and
-        # bounded (the oracle queries), and trivially identity past the
-        # fixpoint
-        for r in range(1, n_rounds + 1):
-            t0 = time.monotonic()
-            new_est = (
-                _hindex(sym, est)
-                .repartition(P, "id")
-                .transform(ckpt_state, P)
-            )
-            old = est
-            est = new_est
-            old.unpersist()
-            rounds = r
-            metrics.add(SuperstepMetric(r, (time.monotonic() - t0) * 1000.0,
-                                        0, float("nan")))
-    else:
-        # Delta rounds (the long-tail accelerator): h(u) can only change
-        # if a neighbor's estimate changed OR u's own did (the clamp uses
-        # it), so each round recomputes ONLY cand = changed ∪
-        # neighbors(changed) and carries everyone else forward. Values are
-        # IDENTICAL to the full recompute (an untouched vertex's histogram
-        # is unchanged). The h-index fixpoint's round count is
-        # graph-dependent (19 at sf0.01, 100+ on sf0.1's denser co-graph)
-        # with a long tail where a handful of vertices ping for tens of
-        # rounds — the delta form makes those rounds cand-scale, not
-        # E-scale, and convergence detection is changed == ∅ (no Σ job).
-        changed = est.select("id")  # round 1: everything
-        for r in range(1, n_rounds + 1):
-            t0 = time.monotonic()
+    def step(state: DataFrame, prev) -> DataFrame:
+        # Delta round: h(u) can only change if a neighbor's estimate
+        # changed OR u's own did (the clamp uses it), so a round
+        # recomputes ONLY cand = changed ∪ neighbors(changed) and carries
+        # everyone else forward — values IDENTICAL to a full recompute (an
+        # untouched vertex's histogram is unchanged), and the long tail's
+        # rounds are cand-scale, not E-scale.
+        if prev["changed"] == prev["n"]:
+            # everything changed (round 1): every vertex is a candidate,
+            # and sym is joined on v in place — no E-scale exchange
+            sym_side = sym
+        else:
+            changed = state.where(F.col("_chg")).select(F.col("id").alias("v"))
             cand = (
-                changed.select(F.col("id").alias("v"))
-                .join(sym, "v")
-                .select(F.col("u").alias("id"))
+                sym.join(changed.hint("shuffle_hash"), "v", "left_semi")
+                .select(F.col("u").alias("v"))
                 .unionByName(changed)
                 .distinct()
             )
-            sym_f = sym.join(
-                cand.select(F.col("id").alias("u")), "u", "left_semi"
+            # the candidates' edges, read from their v side (sym is
+            # symmetric) so the filter runs in place on hash(v); only
+            # these candidate-scale rows move for the estimate join
+            sym_side = sym.join(cand.hint("shuffle_hash"), "v", "left_semi").select(
+                F.col("v").alias("u"), F.col("u").alias("v"))
+        # histogram of neighbor estimates: the map-side partial combine eats
+        # the edge scale; shuffle_hash builds on the V-scale estimate side
+        # and rules out a broadcast, which would cost its own job
+        hist = (
+            sym_side.join(
+                state.select(F.col("id").alias("v"), F.col("c").alias("_cv"))
+                .hint("shuffle_hash"), "v")
+            .groupBy("u", F.col("_cv").alias("x"))
+            .agg(F.count("*").alias("cnt"))
+        )
+        h = (
+            hist.withColumn("cum", F.sum("cnt").over(w))
+            .groupBy(F.col("u").alias("id"))
+            .agg(F.max(F.least(F.col("cum"), F.col("x"))).alias("_h"))
+        )
+        # Combine by union + aggregate, not a join: a join's size estimate
+        # is the product of its sides', the checkpoint carries it into the
+        # next round, and a second state join per round would square it
+        # every round. The clamp at the own estimate comes last:
+        # H(min(values, c)) = min(H(values), c).
+        none = F.lit(None).cast("long")
+        return (
+            state.select("id", "c", none.alias("_h"))
+            .unionByName(h.select("id", none.alias("c"), "_h"))
+            .groupBy("id")
+            .agg(F.max("c").alias("c"), F.max("_h").alias("_h"))
+            .select(
+                "id",
+                F.least(F.coalesce("_h", "c"), F.col("c")).alias("c"),
+                F.coalesce(F.col("_h") < F.col("c"), F.lit(False)).alias("_chg"),
             )
-            h_new = _hindex(sym_f, est)
-            rest = est.join(cand, "id", "left_anti")
-            new_est = (
-                rest.unionByName(h_new)
-                .repartition(P, "id")
-                .transform(ckpt_state, P)
-            )
-            new_changed = (
-                h_new.join(est.select("id", F.col("c").alias("_old")), "id")
-                .where(F.col("c") != F.col("_old"))
-                .select("id")
-                # lazy (r6): the count below materializes in the same job;
-                # it must run before the superseded est is released (est is
-                # in new_changed's lineage), hence the reordering
-                .transform(ckpt_state_lazy, P)
-            )
-            n_changed = new_changed.count()
-            old = est
-            est = new_est
-            old.unpersist()
-            changed = new_changed
-            rounds = r
-            metrics.add(SuperstepMetric(r, (time.monotonic() - t0) * 1000.0,
-                                        0, float(n_changed)))
-            if n_changed == 0:
-                converged = True
-                break
-    out = est.select("id", F.col("c").alias("core"))
-    sym.unpersist()  # est is localCheckpoint-materialized, lineage-free
-    return CoreNumbersResult(out, rounds, converged, metrics)
+        )
+
+    # fixed_rounds: never done, stop at N (identity past the fixpoint)
+    res = run_fixpoint(
+        spark,
+        lambda: sym.groupBy(F.col("u").alias("id")).agg(F.count("*").alias("c"))
+        .select("id", "c", F.lit(True).alias("_chg"))
+        .repartition(P, "id"),
+        step,
+        [F.count_if("_chg").alias("changed"), F.count("*").alias("n")],
+        (lambda s, prev: False) if fixed_rounds is not None
+        else (lambda s, prev: s["changed"] == 0),
+        name="core_numbers", P=P,
+        max_iter=fixed_rounds if fixed_rounds is not None else max_rounds,
+        edges=0,
+    )
+    out = res.state.select("id", F.col("c").alias("core"))
+    sym.unpersist()  # the state is checkpoint-materialized, lineage-free
+    return CoreNumbersResult(out, res.iterations, res.converged, res.metrics)
 
 
 def score_core(
@@ -315,10 +312,8 @@ def score_core(
 
     wedges: (src, dst, w) with integer weights (exact cross-engine sums);
     treated undirected, self-loops dropped, parallel edges keep max w
-    (deterministic symmetrization). Same plan discipline as kcore: one
-    partial-combined strength aggregate + two anti-joins per round
-    (peeled side broadcasts once peeling localizes), per-round persist
-    keeps the u-partitioning visible (review r5); result vertices carry their in-core
+    (deterministic symmetrization). The same peel loop as kcore, with
+    strength as the measure; result vertices carry their in-core
     strength."""
     if s < 1:
         raise ValueError(f"score_core requires s >= 1, got {s}")
@@ -334,39 +329,4 @@ def score_core(
         .repartition(P, "u")
         .persist()  # persist keeps hash(u) visible per round (see kcore)
     )
-    metrics = JobMetrics("score_core")
-    rounds = 0
-    converged = False
-    n_before = sym.count()
-    for r in range(1, max_rounds + 1):
-        t0 = time.monotonic()
-        strength = sym.groupBy("u").agg(F.sum("w").alias("strength"))
-        peeled = strength.where(F.col("strength") < s).select("u")
-        survived = (
-            sym.join(peeled, "u", "left_anti")
-            .join(peeled.select(F.col("u").alias("v")), "v", "left_anti")
-            .repartition(P, "u")
-            .persist()
-        )
-        n_after = survived.count()
-        metrics.add(
-            SuperstepMetric(r, (time.monotonic() - t0) * 1000.0, n_before,
-                            float(n_before - n_after))
-        )
-        sym.unpersist()
-        sym = survived
-        if n_after == n_before:
-            converged = True
-            break
-        rounds = r
-        n_before = n_after
-        if n_after == 0:
-            converged = True
-            break
-    core = (
-        sym.groupBy(F.col("u").alias("id"))
-        .agg(F.sum("w").alias("strength"))
-        .transform(ckpt_state, P)
-    )
-    sym.unpersist()
-    return KCoreResult(core, rounds, converged, metrics)
+    return _peel(sym, F.sum("w"), s, "strength", "score_core", max_rounds, P)

@@ -15,30 +15,31 @@ mis.py priority discipline), and BFS distances are min-hop, so the
 whole sketch is a pure function of (graph, salt, L) with an exact
 integer DuckDB oracle (recursive CTE seeded at the same landmarks).
 
-Scale shape: the edge table is persisted once, hash-partitioned on the
-source key, and every hop probes it IN PLACE with a frontier of
+Scale shape: the wave is bfs.py's multi-source BFS keyed on the
+landmark column — the edge table is persisted once, hash-partitioned on
+the source key, and every hop probes it IN PLACE with a frontier of
 (landmark, id) id-pairs — L× the rows of a single BFS but still id-only,
 never edge payload. Visited state is keyed (landmark, id), bounded by
-L·V, and the per-hop anti-join against it is partial-combine friendly.
-Landmark selection is a vertex-scale TakeOrdered (top-L by hash), not a
-sort of V.
+L·V, and each hop costs ONE Spark job (the plans/fixpoint.py driver's
+stats aggregate). Landmark selection is a vertex-scale TakeOrdered
+(top-L by hash), not a sort of V.
 
 Reference frame: pargraph has no distance-oracle operator; this extends
-the BFS family (bfs.py — whose frontier discipline it reuses) with the
-sketch that makes pairwise distance queries O(L) at answer time.
+the BFS family (bfs.py) with the sketch that makes pairwise distance
+queries O(L) at answer time.
 """
 
 from __future__ import annotations
 
-import time
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pargraph_spark.session import ckpt_state, ckpt_state_lazy, size_based_partitions
+from pargraph_spark.plans.metrics import JobMetrics
+from pargraph_spark.session import ckpt_state, size_based_partitions
 
-from pargraph_spark.plans.metrics import JobMetrics, SuperstepMetric
+from .bfs import _adjacency, _bfs
 
 
 @dataclass
@@ -73,22 +74,7 @@ def landmark_distances(
     output hold only REACHED (landmark, id) pairs."""
     P = int(num_partitions or spark.conf.get("spark.sql.shuffle.partitions"))
     P = size_based_partitions(edges, P)  # guide §2.2, size-derived cap
-    fwd = edges.select(F.col("src").alias("u"), F.col("dst").alias("v"))
-    adj = (
-        fwd.unionByName(fwd.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        if symmetric
-        else fwd
-    )
-    # persist, NOT localCheckpoint: the static edge table must retain its
-    # hash(u) outputPartitioning so every hop's frontier join probes it in
-    # place (kcore.py:166-175 discipline).
-    adj = (
-        adj.where(F.col("u") != F.col("v"))
-        .distinct()
-        .repartition(P, "u")
-        .persist()
-    )
-    n_adj = adj.count()
+    adj, n_adj = _adjacency(edges, symmetric, P)
     verts = adj.select(F.col("u").alias("id")).distinct()
     lms = (
         verts.orderBy(_lm_priority(F.col("id"), salt).asc(), F.col("id").asc())
@@ -96,41 +82,11 @@ def landmark_distances(
         .select("id")
         .transform(ckpt_state, P)
     )
-    dist = (
-        lms.select(
-            F.col("id").alias("landmark"), F.col("id"), F.lit(0).alias("dist")
-        )
-        .transform(ckpt_state, P)
-    )
-    frontier = dist.select("landmark", "id")
-    metrics = JobMetrics("landmarks")
-    hops, exhausted = 0, False
-    for h in range(1, max_hops + 1):
-        t0 = time.monotonic()
-        nxt = (
-            adj.join(frontier, adj["u"] == frontier["id"])
-            .select("landmark", adj["v"].alias("id"))
-            .distinct()
-            .join(dist, ["landmark", "id"], "left_anti")
-            .withColumn("dist", F.lit(h))
-            .transform(ckpt_state_lazy, P)  # materialized by the count below
-        )
-        n_new = nxt.count()
-        metrics.add(
-            SuperstepMetric(h, (time.monotonic() - t0) * 1000.0, n_adj, float(n_new))
-        )
-        if n_new == 0:
-            exhausted = True
-            break
-        hops = h
-        old = dist
-        dist = dist.unionByName(nxt).transform(ckpt_state, P)
-        old.unpersist()
-        frontier = nxt.select("landmark", "id")
+    dist, hops, exhausted, metrics = _bfs(
+        spark, adj, n_adj, lms.select(F.col("id").alias("landmark"), "id"),
+        ("landmark",), max_hops, P, "landmarks")
     adj.unpersist()
-    return LandmarkResult(
-        dist.select("landmark", "id", "dist"), lms, hops, exhausted, metrics
-    )
+    return LandmarkResult(dist, lms, hops, exhausted, metrics)
 
 
 def estimate_distances(

@@ -33,20 +33,25 @@ Everything is integers + md5 — bit-identical in any engine with md5
 (DuckDB oracle: the same conv/substr/md5 expressions; reference
 pargraph has no graph-algorithm library — engine extension).
 
-Scale shape per round: neighbor hash-sums probe a dst-partitioned
-persisted edge copy in place (the r4 persist-not-localCheckpoint rule,
-kcore.py:166); only the V-scale color table shuffles. One E-scale
-exchange total, at build.
+Scale shape per round: neighbor hash-sums probe a u-partitioned
+persisted edge copy in place (persist, not localCheckpoint, so the copy
+keeps reporting its partitioning); only the V-scale color table
+shuffles. One E-scale exchange total, at build. The round loop is
+plans/fixpoint.py: each round costs ONE Spark job, the distinct-color
+count that materializes the round's checkpoint and stops the run when
+a round splits nothing.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from pargraph_spark.session import ckpt_state, ckpt_state_lazy, size_based_partitions
+from pargraph_spark.plans.fixpoint import run_fixpoint
+from pargraph_spark.plans.metrics import JobMetrics
+from pargraph_spark.session import size_based_partitions
 
 from .edges import symmetrize
 
@@ -74,6 +79,7 @@ class WLResult:
     rounds: int
     n_colors: int  # distinct colors at the final round
     converged: bool  # True iff the last round split nothing
+    metrics: JobMetrics = field(default_factory=lambda: JobMetrics("wl"))
 
 
 def wl_colors(
@@ -81,16 +87,15 @@ def wl_colors(
     rounds: int,
     init: DataFrame | None = None,
     num_partitions: int | None = None,
-    check_convergence: bool = True,
 ) -> WLResult:
-    """Run `rounds` rounds of 1-WL color refinement over the undirected
-    view of `edges`; `init` is an optional (id, color) seed labeling
-    (string or integer colors — attributes, degrees, page types),
-    default all-equal. Returns 60-bit integer colors; equal color ==
-    equal t-hop neighborhood tree (up to md5 multiset collision).
-
-    check_convergence=False skips the per-round distinct-count job
-    (oracle parity mode: rounds past stabilization are identity).
+    """Run up to `rounds` rounds of 1-WL color refinement over the
+    undirected view of `edges`, stopping early at the first round that
+    splits no color class (rounds past it are identity: colors rehash,
+    the partition stays); `init` is an optional (id, color) seed
+    labeling (string or integer colors — attributes, degrees, page
+    types), default all-equal. Returns 60-bit integer colors; equal
+    color == equal t-hop neighborhood tree (up to md5 multiset
+    collision).
     """
     if rounds < 0:
         raise ValueError(f"rounds must be >= 0, got {rounds}")
@@ -99,8 +104,8 @@ def wl_colors(
     P = size_based_partitions(edges, P)  # guide §2.2, size-derived cap
 
     # partitioned on the JOIN key u — the per-round colors join probes
-    # the persisted copy in place (the core_numbers/r4 discipline; a
-    # v-partitioned copy would re-exchange the E-scale table every round)
+    # the persisted copy in place (a v-partitioned copy would re-exchange
+    # the E-scale table every round)
     sym = symmetrize(edges).repartition(P, "u").persist()
     verts = sym.select(F.col("u").alias("id")).distinct()
     if init is not None:
@@ -112,23 +117,12 @@ def wl_colors(
         )
     else:
         colors = verts.select("id", _h60(F.lit("_")).alias("color"))
-    # V-scale state: localCheckpoint per round (the labelprop idiom) —
-    # colors feeds TWO consumers per round (the neighbor-sum join and the
-    # rehash join), so un-truncated lineage doubles every round and the
-    # driver OOMs just printing the plan by round ~10
-    # with convergence checking on, the distinct-count that follows each
-    # checkpoint is a full scan — lazy fuses materialization into it (r6);
-    # without it no action follows, so the checkpoint must stay eager
-    _ck = ckpt_state_lazy if check_convergence else ckpt_state
-    colors = colors.transform(_ck, P)
-    n_colors = colors.select("color").distinct().count() if check_convergence else -1
 
-    r, converged = 0, False
-    for t in range(1, rounds + 1):
-        # neighbor multiset hash-sum: probe the dst(v)-partitioned edges
-        # in place, partial-combine the modular sum map-side
+    def step(colors: DataFrame, prev) -> DataFrame:
+        # neighbor multiset hash-sum: probe the u-partitioned edges in
+        # place, partial-combine the modular sum map-side
         nbr = (
-            sym.join(colors.withColumnRenamed("id", "u"), "u")
+            sym.join(colors.withColumnRenamed("id", "u").hint("shuffle_hash"), "u")
             .groupBy(F.col("v").alias("id"))
             .agg(
                 (F.sum(_h60(F.col("color")).cast("decimal(38,0)")) % _M)
@@ -136,32 +130,27 @@ def wl_colors(
                 .alias("_ns")
             )
         )
-        new = (
-            colors.join(nbr, "id", "left")
-            .select(
-                "id",
-                _h60(
-                    F.concat_ws(
-                        "|",
-                        F.col("color").cast("string"),
-                        F.coalesce(F.col("_ns"), F.lit(-1)).cast("string"),
-                    )
-                ).alias("color"),
-            )
-            .transform(_ck, P)
+        return colors.join(nbr.hint("shuffle_hash"), "id", "left").select(
+            "id",
+            _h60(
+                F.concat_ws(
+                    "|",
+                    F.col("color").cast("string"),
+                    F.coalesce(F.col("_ns"), F.lit(-1)).cast("string"),
+                )
+            ).alias("color"),
         )
-        colors, r = new, t
-        if check_convergence:
-            nc = colors.select("color").distinct().count()
-            if nc == n_colors:
-                converged = True
-                n_colors = nc
-                break
-            n_colors = nc
-    if not check_convergence:
-        n_colors = colors.select("color").distinct().count()
+
+    # refinement only splits classes, so an unchanged class count means
+    # the partition is stable
+    res = run_fixpoint(
+        spark, lambda: colors, step, [F.count_distinct("color")],
+        lambda s, prev: s[0] == prev[0],
+        name="wl", P=P, max_iter=rounds, edges=0,
+    )
     sym.unpersist()
-    return WLResult(colors, r, n_colors, converged)
+    return WLResult(res.state, res.iterations, int(res.stats[0]), res.converged,
+                    res.metrics)
 
 
 def wl_histogram(res: WLResult) -> DataFrame:

@@ -27,12 +27,17 @@ Invariants, held by construction:
 - **One Spark job per superstep.** The stats aggregate scans every
   partition of the lazily checkpointed state, so it materializes the
   checkpoint blocks in its own job; the state before the loop is
-  materialized the same way by one setup job. This is the
-  ``ckpt_state_lazy`` contract (the full-scan action runs before any
-  input is released, and no ``limit``/``isEmpty`` runs first), and it
-  holds because this module is the only code in the operators it drives
-  that makes a lazy checkpoint. Anything else a step materializes costs
-  its own jobs.
+  materialized the same way by one setup job. This is the lazy-checkpoint
+  contract: the action that follows a lazy checkpoint scans every
+  partition (a ``limit``/``isEmpty`` first would write some blocks in a
+  partial job and break localCheckpoint's truncate-on-first-job
+  semantics), and it runs before any input of the checkpointed plan is
+  released. The partitioning the checkpoint records is fixed when it is
+  planned (under ``no_aqe(P)`` above), not when its blocks are written.
+  This module is the only code in the operators it drives that makes a
+  lazy checkpoint, so none of them can break the contract. Anything else
+  a step materializes (a broadcast, an eager checkpoint) costs its own
+  jobs.
 - **Resume.** With ``resume`` the newest committed manifest under
   ``<checkpoint_dir>/<job>`` is loaded and passed through ``restore``.
   A manifest with ``converged=True`` returns at once: ``converged=True``,
@@ -66,6 +71,7 @@ class FixpointResult:
     iterations: int
     converged: bool
     metrics: JobMetrics
+    stats: Row | None = None  # the final state's stats (None: restored converged)
 
 
 def _first_stat(stats: Row, prev: Row) -> float:
@@ -142,4 +148,4 @@ def run_fixpoint(
                 break
     if ckpt and converged and it % checkpoint_every != 0:
         ckpt.save(state, it, {**manifest(prev), "converged": True})
-    return FixpointResult(state, it, converged, metrics)
+    return FixpointResult(state, it, converged, metrics, prev)

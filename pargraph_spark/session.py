@@ -96,24 +96,6 @@ def ckpt_state(df, P: int):
         return df.localCheckpoint(eager=True)
 
 
-def ckpt_state_lazy(df, P: int):
-    """``ckpt_state`` with a LAZY checkpoint: for call sites that run
-    a full-scan action (count / aggregate over every partition) on the
-    result immediately afterwards — that action materializes the blocks in
-    the SAME Spark job, halving the per-round job count. The partitioning
-    is recorded at this call exactly as in ``ckpt_state`` (the physical
-    plan is fixed here, not at materialization). Caller contract: the
-    follow-up action must scan every partition (no limit/isEmpty — a
-    partial first job breaks localCheckpoint's truncate-on-first-job
-    semantics) and must run BEFORE any input of ``df`` is unpersisted.
-
-    New superstep loops use ``plans/fixpoint.py``, which keeps this
-    contract by construction. Remaining callers, not yet migrated:
-    operators/bfs.py, kcore.py, landmarks.py, butterflies.py and wl.py."""
-    with no_aqe(df.sparkSession, P):
-        return df.localCheckpoint(eager=False)
-
-
 def default_cores() -> int:
     try:
         return int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or (os.cpu_count() or 4)

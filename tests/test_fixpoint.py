@@ -3,12 +3,15 @@
 A toy fixpoint (min-label propagation on a path) pins what the driver
 promises every operator it runs: one Spark job per superstep plus one
 setup job, and superstep metrics numbered from the resumed superstep on.
+The operators on the driver keep that promise on the same path: their
+own fixed setup jobs, then one job per superstep.
 """
 
 from __future__ import annotations
 
 import uuid
 
+import pytest
 from pyspark.sql import functions as F
 
 from pargraph_spark.plans.fixpoint import run_fixpoint
@@ -52,25 +55,76 @@ def _labels(res):
     return {r["id"]: r["label"] for r in res.state.collect()}
 
 
-def test_one_job_per_superstep(spark):
+def _jobs(spark, fn):
+    """(fn(), the number of Spark jobs fn ran)."""
     sc = spark.sparkContext
-    sym = _path(spark)
     group = f"fixpoint-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "toy fixpoint")
+    sc.setJobGroup(group, "fixpoint job count")
     try:
-        res = _min_label(spark, sym)
+        res = fn()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     sc._jsc.sc().listenerBus().waitUntilEmpty()  # job starts are posted async
-    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    return res, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_one_job_per_superstep(spark):
+    sym = _path(spark)
+    res, jobs = _jobs(spark, lambda: _min_label(spark, sym))
     assert res.converged and res.iterations == N
     setup_jobs = 1  # the stats aggregate that materializes the initial state
-    assert len(jobs) == setup_jobs + res.iterations
+    assert jobs == setup_jobs + res.iterations
     assert [m.superstep for m in res.metrics.supersteps] == list(range(1, N + 1))
     assert [m.delta for m in res.metrics.supersteps][-1] == 0.0
     assert _labels(res) == {i: 0 for i in range(N)}
     sym.unpersist()
+
+
+def _bfs(spark, e):
+    from pargraph_spark.operators.bfs import bfs_distances
+
+    seeds = spark.createDataFrame([(0,)], "id long")
+    return bfs_distances(spark, e, seeds, max_hops=2 * N, num_partitions=P)
+
+
+def _landmarks(spark, e):
+    from pargraph_spark.operators.landmarks import landmark_distances
+
+    return landmark_distances(spark, e, num_landmarks=2, max_hops=2 * N,
+                              num_partitions=P)
+
+
+def _core_numbers(spark, e):
+    from pargraph_spark.operators.kcore import core_numbers
+
+    return core_numbers(spark, e, num_partitions=P)
+
+
+def _bitruss(spark, e):
+    from pargraph_spark.operators.butterflies import bitruss
+
+    return bitruss(spark, e, k=1, fixed_rounds=3)
+
+
+def _wl(spark, e):
+    from pargraph_spark.operators.wl import wl_colors
+
+    return wl_colors(e, rounds=N, num_partitions=P)
+
+
+# Setup jobs each operator runs before its first superstep: persisting its
+# edge table (AQE runs one job per query stage), landmark selection, and
+# the driver's stats job that materializes the initial state.
+@pytest.mark.parametrize("op,setup_jobs", [
+    (_bfs, 6), (_landmarks, 7), (_core_numbers, 6), (_bitruss, 1), (_wl, 3),
+], ids=["bfs", "landmarks", "core_numbers", "bitruss", "wl"])
+def test_operator_runs_one_job_per_superstep(spark, op, setup_jobs):
+    e = spark.createDataFrame([(i, i + 1) for i in range(N - 1)], "src long, dst long")
+    res, jobs = _jobs(spark, lambda: op(spark, e))
+    supersteps = len(res.metrics.supersteps)
+    assert supersteps > 1
+    assert jobs == setup_jobs + supersteps
 
 
 def test_resume_numbers_supersteps_from_the_manifest(spark, tmp_path):

@@ -9,7 +9,8 @@ superstep:
 
 1. ``ckpt_state`` / ``no_aqe``: a checkpoint materialized under no-AQE
    records its hash partitioning, so a downstream co-partitioned join
-   needs NO shuffle Exchange; under AQE the same plan needs two.
+   needs NO shuffle Exchange; under AQE the same plan needs two. The
+   same holds for the lazy checkpoint plans/fixpoint.py returns.
 2. ``size_based_partitions``: clamp semantics (floor = default
    parallelism, cap = caller's P, unusable estimate -> cap).
 3. The PageRank superstep plan itself: state scanned in place, exactly
@@ -134,17 +135,24 @@ def test_pagerank_superstep_one_exchange(spark):
     assert n_ex == 1, top
 
 
-def test_ckpt_state_lazy_records_partitioning_and_caches_on_first_scan(spark):
-    """r6 job fusion: a LAZY checkpoint records its partitioning at the
-    call (co-partitioned joins need no exchange) and a full-scan action
-    materializes the blocks — afterwards the data survives recomputation
-    of its inputs being impossible (lineage truncated to the cached RDD)."""
-    from pargraph_spark.session import ckpt_state_lazy
+def test_fixpoint_state_records_partitioning_and_caches_on_first_scan(spark):
+    """The state run_fixpoint returns is a LAZY checkpoint: it records its
+    partitioning when planned (co-partitioned joins need no exchange),
+    and the driver's full-scan stats job materializes its blocks — so it
+    survives the release of every input (lineage truncated to the cached
+    blocks)."""
+    from pargraph_spark.plans.fixpoint import run_fixpoint
 
     P = 4
-    a = (spark.range(200).select(F.col("id"), (F.col("id") * 3).alias("v"))
-         .repartition(P, "id").transform(ckpt_state_lazy, P))
-    assert a.count() == 200  # the materializing full-scan action
+    src = (spark.range(200).select(F.col("id"), (F.col("id") * 3).alias("v"))
+           .repartition(P, "id").persist())
+    res = run_fixpoint(
+        spark, lambda: src,
+        lambda s, prev: s.select("id", (F.col("v") + 1).alias("v")),
+        [F.count("*")], lambda s, prev: True,
+        name="toy", P=P, max_iter=1, edges=0,
+    )
+    a = res.state
     with no_aqe(spark, P):
         b = (spark.range(200).select(F.col("id"), (F.col("id") + 7).alias("w"))
              .repartition(P, "id").transform(ckpt_state, P))
@@ -152,10 +160,12 @@ def test_ckpt_state_lazy_records_partitioning_and_caches_on_first_scan(spark):
         # both sides recorded hash(id, P): zero shuffle exchanges
         assert _shuffles(j) == 0, _plan(j)
         assert j.count() == 200
-    # repeat action reads the cached blocks (localCheckpoint contract);
-    # correctness re-pinned rather than probing storage internals (the
-    # Python-side .rdd wraps a fresh javaToPython RDD, level NONE)
+    # the driver already released the initial state; release the source
+    # too — a re-scan must read the cached blocks (a lost block cannot be
+    # recomputed past the truncated lineage)
+    src.unpersist()
     assert a.count() == 200
+    assert a.agg(F.sum("v")).first()[0] == sum(3 * i + 1 for i in range(200))
 
 
 def test_cc_round_set_semantics_invariant(spark):

@@ -51,10 +51,10 @@ CAT = [(1, 2), (2, 3), (3, 4), (2, 5), (2, 6)]
 
 def test_wl_matches_python_hash_exact(spark):
     e = spark.createDataFrame(CAT, "src long, dst long")
-    res = wl_colors(e, rounds=3, check_convergence=False)
+    res = wl_colors(e, rounds=3)
     got = {r["id"]: r["color"] for r in res.colors.collect()}
+    assert res.rounds == 3  # CAT splits in rounds 1 and 2
     assert got == _py_wl(CAT, 3)
-    assert res.rounds == 3
 
 
 def test_wl_partition_equals_classic_wl(spark):
@@ -99,10 +99,11 @@ def test_wl_convergence_and_identity_rounds(spark):
     e = spark.createDataFrame(CAT, "src long, dst long")
     res = wl_colors(e, rounds=10)
     assert res.converged and res.rounds < 10
-    # rounds past stabilization keep the partition (colors rehash, but
-    # class count is stable): n_colors monotone, equal at rounds 4 and 8
-    a = wl_colors(e, rounds=4, check_convergence=False)
-    b = wl_colors(e, rounds=8, check_convergence=False)
+    assert [m.superstep for m in res.metrics.supersteps] == list(range(1, res.rounds + 1))
+    # rounds past stabilization keep the partition: any cap at or above
+    # the convergence round gives the same class count
+    a = wl_colors(e, rounds=res.rounds)
+    b = wl_colors(e, rounds=res.rounds + 4)
     assert a.n_colors == b.n_colors == res.n_colors
 
 
@@ -114,10 +115,10 @@ def test_wl_seeded_init(spark):
     plain = {r["id"]: r["color"] for r in wl_colors(e, 2).colors.collect()}
     assert plain[1] == plain[3]
     init = spark.createDataFrame([(1, "A"), (3, "B")], "id long, color string")
-    seeded = wl_colors(e, rounds=2, init=init, check_convergence=False)
+    seeded = wl_colors(e, rounds=2, init=init)
     got = {r["id"]: r["color"] for r in seeded.colors.collect()}
     assert got[1] != got[3]
-    assert got == _py_wl(path, 2, init={1: "A", 3: "B"})
+    assert got == _py_wl(path, seeded.rounds, init={1: "A", 3: "B"})
 
 
 def test_wl_plan_shape(spark):
