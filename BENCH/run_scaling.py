@@ -85,7 +85,7 @@ def prep_edges(pages: int, path: str, cores: int) -> None:
     spark.stop()
 
 
-def run_worker(cores: int, edges_path: str, mode: str) -> dict:
+def run_worker(cores: int, edges_path: str) -> dict:
     from pargraph_spark.operators.pagerank import pagerank
     from pargraph_spark.session import get_spark
 
@@ -93,7 +93,7 @@ def run_worker(cores: int, edges_path: str, mode: str) -> dict:
     spark = get_spark(f"scaling-{cores}", cores=cores, shuffle_partitions=shuffle,
                       extra_conf={"spark.ui.enabled": "false"})
     edges = spark.read.parquet(edges_path)
-    res = pagerank(spark, edges, tol=0.0, max_iter=SUPERSTEPS, mode=mode,
+    res = pagerank(spark, edges, tol=0.0, max_iter=SUPERSTEPS,
                    num_partitions=shuffle)
     n_edges = res.metrics.supersteps[0].edges
     steps = [m.to_dict() for m in res.metrics.supersteps]
@@ -102,7 +102,6 @@ def run_worker(cores: int, edges_path: str, mode: str) -> dict:
     eps = [s["edges_per_sec"] for s in steps[WARMUP:-1]]
     out = {
         "cores": cores,
-        "mode": mode,
         "edges": n_edges,
         "shuffle_partitions": shuffle,
         "supersteps": steps,
@@ -112,11 +111,11 @@ def run_worker(cores: int, edges_path: str, mode: str) -> dict:
     return out
 
 
-def spawn(cores: int, edges_path: str, mode: str) -> dict:
+def spawn(cores: int, edges_path: str) -> dict:
     env = dict(os.environ, PYTHONPATH=REPO, PYTHONUNBUFFERED="1")
     proc = subprocess.run(
         [sys.executable, os.path.abspath(__file__), "--worker",
-         "--cores", str(cores), "--edges-path", edges_path, "--mode", mode],
+         "--cores", str(cores), "--edges-path", edges_path],
         capture_output=True, text=True, env=env, cwd=REPO, timeout=3600,
     )
     if proc.returncode != 0:
@@ -130,12 +129,10 @@ def main() -> None:
     ap.add_argument("--cores", type=int, default=8)
     ap.add_argument("--pages", type=int, default=1_500_000)
     ap.add_argument("--edges-path", default="/tmp/pargraph_scaling_edges.parquet")
-    ap.add_argument("--mode", default="dataframe")
-    ap.add_argument("--modes", nargs="*", default=["dataframe", "csr"])
     ap.add_argument("--pairs", nargs="*", default=["8:32"],
                     help="N:4N core pairs, e.g. 8:32 2:8")
     ap.add_argument("--trials", type=int, default=3,
-                    help="fresh-process trials per (mode, level); per-superstep "
+                    help="fresh-process trials per level; per-superstep "
                          "samples pool across trials and the MEDIAN is the "
                          "estimator (this sandbox's vCPU steal makes single "
                          "runs unreliable)")
@@ -143,7 +140,7 @@ def main() -> None:
     args = ap.parse_args()
 
     if args.worker:
-        print(json.dumps(run_worker(args.cores, args.edges_path, args.mode)))
+        print(json.dumps(run_worker(args.cores, args.edges_path)))
         return
 
     if args.force_prep or not os.path.exists(args.edges_path):
@@ -158,31 +155,30 @@ def main() -> None:
     import statistics
 
     results = []
-    for mode in args.modes:
-        for pair in args.pairs:
-            n, n4 = (int(x) for x in pair.split(":"))
-            lo_samples, hi_samples = [], []
-            lo = hi = None
-            # interleave levels across trials so slow machine-level drift
-            # (vCPU steal epochs) hits both levels alike
-            for trial in range(args.trials):
-                lo = spawn(n, args.edges_path, mode)
-                hi = spawn(n4, args.edges_path, mode)
-                lo_samples += lo["samples"]
-                hi_samples += hi["samples"]
-                print(f"  [{mode}] trial {trial + 1}/{args.trials}: "
-                      f"{statistics.median(lo['samples']):.0f} -> "
-                      f"{statistics.median(hi['samples']):.0f} edges/s (median)")
-            lo_med = statistics.median(lo_samples)
-            hi_med = statistics.median(hi_samples)
-            eff = hi_med / ((n4 / n) * lo_med)
-            lo = dict(lo, edges_per_sec={"median": lo_med, "samples": lo_samples})
-            hi = dict(hi, edges_per_sec={"median": hi_med, "samples": hi_samples})
-            results.append({"mode": mode, "n": n, "n4": n4, "lo": lo, "hi": hi,
-                            "trials": args.trials, "efficiency": eff})
-            print(f"[{mode}] {n}->{n4} cores: {lo_med:.0f} -> {hi_med:.0f} "
-                  f"edges/s (median of {len(lo_samples)} supersteps), "
-                  f"efficiency {eff:.2f}")
+    for pair in args.pairs:
+        n, n4 = (int(x) for x in pair.split(":"))
+        lo_samples, hi_samples = [], []
+        lo = hi = None
+        # interleave levels across trials so slow machine-level drift
+        # (vCPU steal epochs) hits both levels alike
+        for trial in range(args.trials):
+            lo = spawn(n, args.edges_path)
+            hi = spawn(n4, args.edges_path)
+            lo_samples += lo["samples"]
+            hi_samples += hi["samples"]
+            print(f"  trial {trial + 1}/{args.trials}: "
+                  f"{statistics.median(lo['samples']):.0f} -> "
+                  f"{statistics.median(hi['samples']):.0f} edges/s (median)")
+        lo_med = statistics.median(lo_samples)
+        hi_med = statistics.median(hi_samples)
+        eff = hi_med / ((n4 / n) * lo_med)
+        lo = dict(lo, edges_per_sec={"median": lo_med, "samples": lo_samples})
+        hi = dict(hi, edges_per_sec={"median": hi_med, "samples": hi_samples})
+        results.append({"n": n, "n4": n4, "lo": lo, "hi": hi,
+                        "trials": args.trials, "efficiency": eff})
+        print(f"{n}->{n4} cores: {lo_med:.0f} -> {hi_med:.0f} "
+              f"edges/s (median of {len(lo_samples)} supersteps), "
+              f"efficiency {eff:.2f}")
 
     with open(os.path.join(REPO, "BENCH", "scaling.json"), "w") as f:
         json.dump({"pages": args.pages, "warmup": WARMUP,
@@ -202,13 +198,13 @@ def main() -> None:
         "median of pooled per-superstep edges/s (single runs are unreliable "
         "under this sandbox's vCPU steal).",
         "",
-        "| mode | cores N | cores 4N | edges/s @N (median) | edges/s @4N (median) | efficiency T4N/(4·TN) | machine ceiling (pure-CPU) | normalized |",
-        "|---|---|---|---|---|---|---|---|",
+        "| cores N | cores 4N | edges/s @N (median) | edges/s @4N (median) | efficiency T4N/(4·TN) | machine ceiling (pure-CPU) | normalized |",
+        "|---|---|---|---|---|---|---|",
     ]
     for r in results:
         ceil = calib["efficiency"].get(f"{r['n']}:{r['n4']}", float("nan"))
         lines.append(
-            f"| {r['mode']} | {r['n']} | {r['n4']} | "
+            f"| {r['n']} | {r['n4']} | "
             f"{r['lo']['edges_per_sec']['median']:.0f} | "
             f"{r['hi']['edges_per_sec']['median']:.0f} | {r['efficiency']:.2f} | "
             f"{ceil:.2f} | {r['efficiency'] / ceil:.2f} |"

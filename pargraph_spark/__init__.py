@@ -5,8 +5,9 @@ Re-expresses the mission of the reference task-graph library (Citi/pargraph,
 (reference: pargraph/engine/engine.py:42-129) we declare DataFrame plans and
 let Catalyst/AQE schedule; instead of GraphBLAS boolean SpMV for frontier
 extraction (reference: pargraph/utility/graphlib_graphblas.py:136-167) we run
-partition-local CSR SpMV kernels in Arrow UDFs followed by hash-shuffle
-message aggregation.
+the SpMV as a plan shape: a join against the hash(src)-co-partitioned edge
+table, partial (partition-local) aggregation of the messages, then a
+hash-shuffle sum by dst.
 
 Layout:
   session    — SparkSession factory (Arrow, AQE, shuffle partitioning)

@@ -49,7 +49,6 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--cores", type=int)
     ap.add_argument("--damping", type=float, default=0.85)
     ap.add_argument("--tol", type=float, default=1e-9)
-    ap.add_argument("--mode", default="dataframe", choices=["dataframe", "csr"])
     args = ap.parse_args(argv)
 
     spark = get_spark("pargraph-spark-cli", cores=args.cores,
@@ -70,7 +69,6 @@ def main(argv: list[str] | None = None) -> int:
     results = run_all(
         spark, graph, damping=args.damping, tol=args.tol,
         checkpoint_dir=args.checkpoint_dir, num_partitions=args.partitions,
-        pagerank_mode=args.mode,
     ) if args.job == "all" else None
 
     if args.job in ("pagerank", "all"):
@@ -79,7 +77,7 @@ def main(argv: list[str] | None = None) -> int:
             from pargraph_spark.operators.pagerank import pagerank
 
             pr = pagerank(spark, graph.edges, graph.vertices.select("id"),
-                          damping=args.damping, tol=args.tol, mode=args.mode,
+                          damping=args.damping, tol=args.tol,
                           checkpoint_dir=args.checkpoint_dir,
                           num_partitions=args.partitions)
         pr.ranks.write.mode("overwrite").parquet(f"{args.output}/pagerank.parquet")
@@ -423,7 +421,7 @@ def main(argv: list[str] | None = None) -> int:
     JobSpec(
         job=args.job,
         operator="linkgraph." + args.job,
-        params={"damping": args.damping, "tol": args.tol, "mode": args.mode,
+        params={"damping": args.damping, "tol": args.tol,
                 "partitions": args.partitions},
         inputs={"pages": args.pages or f"synth:{args.synth_pages}:seed=42"},
         outputs={"dir": args.output, "summary": summary},

@@ -23,16 +23,16 @@ on its own probe key — `e_src` (hash(src)) for the forward half-step,
 `e_dst` (hash(dst)) for the backward one — + one broadcast 1-row
 normalizer each. Holding TWO cached copies of the edge table (2× memory,
 spill-safe) buys ZERO E-scale exchanges inside the loop: a single copy
-partitioned on src would re-shuffle the full edge table on every
-backward half-step (iterations × E-scale, on the skewed dst key — the
-dominant cost at 100 TB; VERDICT r4 #1, the core_numbers discipline of
-kcore.py:166-175 applied here). No driver collect in the loop,
-localCheckpoint truncates the V-scale score lineage per superstep (same
-discipline as pagerank.py).
+partitioned on src would re-shuffle the full edge table, on the skewed
+dst key, on every backward half-step. No driver collect in the loop;
+each half-step's scores are checkpointed (`ckpt_state`), truncating the
+V-scale lineage. hits() and salsa() share that loop, `_hub_authority`;
+they differ only in the edge annotation and the two per-edge terms.
 """
 
 from __future__ import annotations
 
+from collections.abc import Callable
 from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -49,8 +49,7 @@ def quantize(c: Column) -> Column:
 
 def _norm_quant(df: DataFrame, col: str) -> DataFrame:
     """L1-normalize `col` over the frame (broadcast 1-row total) and
-    quantize — shared by hits() and salsa() (the two copies had started
-    from identical text; one helper keeps them from diverging)."""
+    quantize."""
     tot = df.agg(F.coalesce(F.sum(col), F.lit(0.0)).alias("_t"))
     return (
         df.crossJoin(F.broadcast(tot))
@@ -63,24 +62,28 @@ def _norm_quant(df: DataFrame, col: str) -> DataFrame:
     )
 
 
-@dataclass
-class HitsResult:
-    scores: DataFrame  # (id, hub double, authority double)
-    iterations: int
-
-
-def hits(
+def _hub_authority(
     spark: SparkSession,
+    name: str,
     edges: DataFrame,
-    vertices: DataFrame | None = None,
-    iterations: int = 5,
-    num_partitions: int | None = None,
-) -> HitsResult:
+    vertices: DataFrame | None,
+    iterations: int,
+    num_partitions: int | None,
+    auth_term: Column,
+    hub_term: Column,
+    annotate: Callable[[DataFrame], DataFrame] = lambda e: e,
+) -> tuple[DataFrame, int]:
+    """The alternating power iteration behind hits() and salsa(). The
+    distinct non-loop edge table goes through `annotate` (extra per-edge
+    columns the terms read); each iteration sums `auth_term` (over the
+    `hub` column) into authorities by dst, then `hub_term` (over
+    `authority`) into hubs by src, L1-normalizing and quantizing after
+    each half-step. Returns ((id, hub, authority), iterations)."""
     if iterations < 1:
-        raise ValueError(f"hits requires iterations >= 1, got {iterations}")
+        raise ValueError(f"{name} requires iterations >= 1, got {iterations}")
     P = int(num_partitions or spark.conf.get("spark.sql.shuffle.partitions"))
     P = size_based_partitions(edges, P)  # guide §2.2, size-derived cap
-    e0 = (
+    e0 = annotate(
         edges.where(F.col("src") != F.col("dst"))
         .select("src", "dst")
         .distinct()
@@ -102,12 +105,11 @@ def hits(
     n = verts.count()
     if n == 0:
         # empty graph: return the empty frame, don't ZeroDivisionError on
-        # the uniform init (the pagerank guard; review r5)
+        # the uniform init
         verts.unpersist()
         e_src.unpersist()
         e_dst.unpersist()
-        empty = spark.createDataFrame([], "id long, hub double, authority double")
-        return HitsResult(empty, 0)
+        return spark.createDataFrame([], "id long, hub double, authority double"), 0
 
     h = verts.withColumn("hub", quantize(F.lit(1.0 / n))).transform(ckpt_state, P)
     a = None
@@ -116,7 +118,7 @@ def hits(
         a_raw = (
             e_src.join(h, e_src["src"] == h["id"])
             .groupBy(e_src["dst"].alias("vid"))
-            .agg(F.sum("hub").alias("authority"))
+            .agg(F.sum(auth_term).alias("authority"))
         )
         a = _norm_quant(
             verts.join(a_raw, verts["id"] == a_raw["vid"], "left")
@@ -126,7 +128,7 @@ def hits(
         h_raw = (
             e_dst.join(a, e_dst["dst"] == a["id"])
             .groupBy(e_dst["src"].alias("vid"))
-            .agg(F.sum("authority").alias("hub"))
+            .agg(F.sum(hub_term).alias("hub"))
         )
         new_h = _norm_quant(
             verts.join(h_raw, verts["id"] == h_raw["vid"], "left")
@@ -135,14 +137,33 @@ def hits(
         ).transform(ckpt_state, P)
         h.unpersist()
         if prev_a is not None:
-            prev_a.unpersist()  # superseded authority snapshot (review r5)
+            prev_a.unpersist()  # superseded authority snapshot
         prev_a = a
         h = new_h
     out = h.join(a, "id").select("id", "hub", "authority")
     e_src.unpersist()
     e_dst.unpersist()
     verts.unpersist()
-    return HitsResult(out, iterations)
+    return out, iterations
+
+
+@dataclass
+class HitsResult:
+    scores: DataFrame  # (id, hub double, authority double)
+    iterations: int
+
+
+def hits(
+    spark: SparkSession,
+    edges: DataFrame,
+    vertices: DataFrame | None = None,
+    iterations: int = 5,
+    num_partitions: int | None = None,
+) -> HitsResult:
+    return HitsResult(*_hub_authority(
+        spark, "hits", edges, vertices, iterations, num_partitions,
+        F.col("hub"), F.col("authority"),
+    ))
 
 
 @dataclass
@@ -172,79 +193,17 @@ def salsa(
     before summing — grid multiples with total mass ≤ 1 sum EXACTLY in
     IEEE doubles (fixed-point in disguise), so the aggregate is
     order-independent and the unrolled SQL oracle matches bit-for-bit.
-    Same plan discipline as hits(): degree columns joined into the edge
-    table once, then DUAL persisted copies partitioned on src and on dst
-    so each half-step probes its co-partitioned copy with zero E-scale
-    exchanges in the loop (VERDICT r4 #1); two partial-combined
-    aggregates + one broadcast normalizer per iteration, localCheckpoint
-    per half-step."""
-    if iterations < 1:
-        raise ValueError(f"salsa requires iterations >= 1, got {iterations}")
-    P = int(num_partitions or spark.conf.get("spark.sql.shuffle.partitions"))
-    P = size_based_partitions(edges, P)  # guide §2.2, size-derived cap
-    e0 = (
-        edges.where(F.col("src") != F.col("dst"))
-        .select("src", "dst")
-        .distinct()
-    )
-    od = e0.groupBy("src").agg(F.count("*").alias("_od"))
-    idg = e0.groupBy("dst").agg(F.count("*").alias("_id"))
-    e_deg = e0.join(od, "src").join(idg, "dst")
-    # Dual co-partitioned copies of the degree-annotated edge table: each
-    # half-step probes the copy partitioned on its own join key — zero
-    # E-scale exchanges inside the loop (VERDICT r4 #1).
-    e_src = e_deg.repartition(P, "src").persist()
-    e_dst = e_deg.repartition(P, "dst").persist()
-    e_src.count()
-    e_dst.count()
-    verts = (
-        vertices.select("id")
-        if vertices is not None
-        else e_src.select(F.col("src").alias("id"))
-        .unionByName(e_src.select(F.col("dst").alias("id")))
-        .distinct()
-    ).repartition(P, "id").persist()
-    n = verts.count()
-    if n == 0:
-        # empty graph: return the empty frame, don't ZeroDivisionError on
-        # the uniform init (the pagerank guard; review r5)
-        verts.unpersist()
-        e_src.unpersist()
-        e_dst.unpersist()
-        empty = spark.createDataFrame([], "id long, hub double, authority double")
-        return SalsaResult(empty, 0)
+    Same plan as hits(): the degree columns are joined into the edge
+    table once, before its two co-partitioned copies are persisted."""
 
-    h = verts.withColumn("hub", quantize(F.lit(1.0 / n))).transform(ckpt_state, P)
-    a = None
-    prev_a = None
-    for _ in range(iterations):
-        a_raw = (
-            e_src.join(h, e_src["src"] == h["id"])
-            .groupBy(e_src["dst"].alias("vid"))
-            .agg(F.sum(quantize(F.col("hub") / F.col("_od"))).alias("authority"))
-        )
-        a = _norm_quant(
-            verts.join(a_raw, verts["id"] == a_raw["vid"], "left")
-            .select("id", F.coalesce("authority", F.lit(0.0)).alias("authority")),
-            "authority",
-        ).transform(ckpt_state, P)
-        h_raw = (
-            e_dst.join(a, e_dst["dst"] == a["id"])
-            .groupBy(e_dst["src"].alias("vid"))
-            .agg(F.sum(quantize(F.col("authority") / F.col("_id"))).alias("hub"))
-        )
-        new_h = _norm_quant(
-            verts.join(h_raw, verts["id"] == h_raw["vid"], "left")
-            .select("id", F.coalesce("hub", F.lit(0.0)).alias("hub")),
-            "hub",
-        ).transform(ckpt_state, P)
-        h.unpersist()
-        if prev_a is not None:
-            prev_a.unpersist()  # superseded authority snapshot (review r5)
-        prev_a = a
-        h = new_h
-    out = h.join(a, "id").select("id", "hub", "authority")
-    e_src.unpersist()
-    e_dst.unpersist()
-    verts.unpersist()
-    return SalsaResult(out, iterations)
+    def with_degrees(e0: DataFrame) -> DataFrame:
+        od = e0.groupBy("src").agg(F.count("*").alias("_od"))
+        idg = e0.groupBy("dst").agg(F.count("*").alias("_id"))
+        return e0.join(od, "src").join(idg, "dst")
+
+    return SalsaResult(*_hub_authority(
+        spark, "salsa", edges, vertices, iterations, num_partitions,
+        quantize(F.col("hub") / F.col("_od")),
+        quantize(F.col("authority") / F.col("_id")),
+        annotate=with_degrees,
+    ))

@@ -1,28 +1,11 @@
 """O6 — iterative PageRank with dangling-mass redistribution (SURVEY.md §2.3).
 
-Two physical strategies behind one API:
-
-- mode="dataframe": the pure-Catalyst plan — ranks ⋈ edges on src, then
-  groupBy(dst).sum. Whole-stage-codegen JVM end to end; partial (map-side)
-  aggregation absorbs hub-dst skew in the sum. The simple, always-correct
-  baseline.
-
-- mode="csr": the explicit-SpMV DOCUMENTED-REFERENCE path (round-3
-  verdict, BENCH/BASELINE.md: after the block-store rearchitecture it
-  wins the low-parallelism regime — +34% absolute edges/s at 2 cores —
-  but the dataframe plan scales with cores better and leads at ≥8, so
-  csr is opt-in and NOT the bench headline). Edges are packed ONCE into
-  per-partition CSR blocks persisted as a pid-partitioned parquet store
-  (operators/csr.py); each superstep groups the rank vector by pid and
-  runs a partition-local numpy SpMV in an Arrow UDF against the worker's
-  LRU-cached prepped block (degrees + dst inverse-index precomputed, so
-  the in-block combine is one linear bincount), emitting messages
-  pre-combined per block; a hash-shuffle sum keyed by dst finishes the
-  superstep. Per iteration only the V-scale rank vector crosses Arrow;
-  the E-row block arrays never move after the store write. This is the
-  distributed re-expression of the reference's GraphBLAS semiring SpMV
-  frontier kernel
-  (/root/reference/pargraph/utility/graphlib_graphblas.py:156-167).
+One superstep plan, the reference's GraphBLAS SpMV frontier kernel
+(graphlib_graphblas.py:156-167) written as a join-aggregate query: the
+rank vector joins the hash(src)-co-partitioned edge table in place,
+each task partially aggregates its messages by dst (the partition-local
+SpMV; map-side combining also absorbs hub-dst skew), and one hash
+shuffle sums them by dst. Whole-stage-codegen JVM end to end.
 
 Semantics (shared with tests/oracles.py::pagerank_oracle):
     r_0(v)     = 1/N
@@ -46,22 +29,15 @@ reference's scheduling loop, engine.py:42-129):
 
 from __future__ import annotations
 
-import os
-import shutil
-import tempfile
 from dataclasses import dataclass, field
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pargraph_spark.operators.csr import spmv_from_store, with_pid, write_csr_store
 from pargraph_spark.plans.checkpoint import CheckpointManager
 from pargraph_spark.plans.fixpoint import run_fixpoint
 from pargraph_spark.plans.metrics import JobMetrics
 from pargraph_spark.session import no_aqe, size_based_partitions
-
-MSG_SCHEMA = "dst long, msg double"
 
 
 @dataclass
@@ -123,7 +99,10 @@ def pagerank(
     weight_col: str | None = None,
     warm_start: DataFrame | None = None,
 ) -> PageRankResult:
-    """teleport: optional (id, w) seed distribution → PERSONALIZED PageRank:
+    """mode: "dataframe" is the only value. The keyword remains because
+    existing callers pass it; anything else raises ValueError.
+
+    teleport: optional (id, w) seed distribution → PERSONALIZED PageRank:
         r_0(v)     = T(v)
         r_{t+1}(v) = (1-d)·T(v) + d·(Σ_{u→v} r_t(u)/outdeg(u) + dang_t·T(v))
     where T is `w` normalized over the vertices present (vertices absent
@@ -134,7 +113,6 @@ def pagerank(
     weight_col: optional edge-weight column → WEIGHTED PageRank: a source
     splits its rank proportionally to edge weight, r(u)·w(u,v)/W(u) with
     W(u) = Σ_out w (duplicate (src,dst) rows combine by summing weights).
-    dataframe mode only (csr packs unweighted adjacency).
 
     warm_start: optional (id, rank) prior — e.g. the converged ranks of a
     previous run loaded via load_latest_ranks — for INCREMENTAL PageRank
@@ -146,10 +124,8 @@ def pagerank(
     supersteps when the drop is small relative to the graph. Ignored when
     `resume` finds a committed checkpoint of THIS run (mid-run state beats
     a cross-run prior)."""
-    if mode not in ("dataframe", "csr"):
-        raise ValueError(f"unknown mode {mode!r}")
-    if weight_col is not None and mode == "csr":
-        raise NotImplementedError("weighted PageRank: use mode='dataframe'")
+    if mode != "dataframe":
+        raise ValueError(f"unknown mode {mode!r}; only 'dataframe' exists")
     P = num_partitions or spark.conf.get("spark.sql.shuffle.partitions")
     # scale-adaptive: treat the caller's count as a cap and size the
     # edge/state partitioning from the input's estimated bytes (guide
@@ -214,27 +190,6 @@ def pagerank(
         empty = spark.createDataFrame([], "id long, rank double")
         return PageRankResult(empty, 0, True, JobMetrics("pagerank"))
 
-    store_dir = None
-    if mode == "csr":
-        # Materialize CSR blocks ONCE into a pid-partitioned parquet store:
-        # each superstep ships only the V-scale rank vector and workers
-        # serve blocks from a process-local LRU (csr.py), falling back to a
-        # one-pid parquet read on a cache miss — the E-scale block arrays
-        # never cross Arrow again. The store dir is unique PER RUN (uuid
-        # suffix) so a later run in the same Spark app can never alias a
-        # prior run's worker-cache entries through reused Python workers;
-        # the store is transient (rebuilt from edges each run), so it is
-        # removed on exit either way.
-        import uuid
-
-        if checkpoint_dir:
-            store_dir = os.path.join(
-                checkpoint_dir, f"csr_store_{uuid.uuid4().hex[:12]}"
-            )
-        else:
-            store_dir = tempfile.mkdtemp(prefix="pargraph_csr_")
-        write_csr_store(edges, P, store_dir)
-
     # teleport weight as an expression: a literal for classic PageRank
     # (state stays narrow), the materialized _tw column for personalized
     tw = F.lit(1.0 / n) if teleport is None else F.col("_tw")
@@ -274,36 +229,24 @@ def pagerank(
             r0 = r0.withColumn("rank", tw)
         return _state(r0)
 
-    def _spmv(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        return spmv_from_store(store_dir, int(key[0]), pdf)
-
     def step(ranks: DataFrame, prev) -> DataFrame:
-        if mode == "dataframe":
-            contrib = (
-                F.col("_rw") * edges["w"] if weight_col is not None else F.col("_rw")
+        contrib = (
+            F.col("_rw") * edges["w"] if weight_col is not None else F.col("_rw")
+        )
+        # shuffle_hash: the build side is the V-scale rank projection
+        # (V/P rows per task — bounded like any hash-agg state); SMJ
+        # would re-SORT the persisted E-scale edge table every
+        # superstep (guide §3.1: pick the strategy deliberately)
+        msgs = (
+            edges.join(
+                ranks.where(F.col("outdeg") > 0).select(
+                    F.col("id"), (F.col("rank") / F.col("outdeg")).alias("_rw")
+                ).hint("shuffle_hash"),
+                edges["src"] == F.col("id"),
             )
-            # shuffle_hash: the build side is the V-scale rank projection
-            # (V/P rows per task — bounded like any hash-agg state); SMJ
-            # would re-SORT the persisted E-scale edge table every
-            # superstep (guide §3.1: pick the strategy deliberately)
-            msgs = (
-                edges.join(
-                    ranks.where(F.col("outdeg") > 0).select(
-                        F.col("id"), (F.col("rank") / F.col("outdeg")).alias("_rw")
-                    ).hint("shuffle_hash"),
-                    edges["src"] == F.col("id"),
-                )
-                .groupBy("dst")
-                .agg(F.sum(contrib).alias("msg"))
-            )
-        else:
-            rank_g = with_pid(ranks.select("id", "rank"), "id", P)
-            msgs = (
-                rank_g.groupBy("pid")
-                .applyInPandas(_spmv, schema=MSG_SCHEMA)
-                .groupBy("dst")
-                .agg(F.sum("msg").alias("msg"))
-            )
+            .groupBy("dst")
+            .agg(F.sum(contrib).alias("msg"))
+        )
         # the previous state's dangling mass re-enters as a literal: the
         # same IEEE-64 value a broadcast scalar column would carry
         return ranks.join(msgs.hint("shuffle_hash"),
@@ -329,7 +272,7 @@ def pagerank(
          F.coalesce(F.sum(F.when(F.col("outdeg") == 0, F.col("rank"))),
                     F.lit(0.0)).alias("dang")],
         done,
-        name=f"pagerank[{mode}]", P=P, max_iter=max_iter, edges=n_edges,
+        name="pagerank[dataframe]", P=P, max_iter=max_iter, edges=n_edges,
         plan="pagerank_superstep", checkpoint_dir=checkpoint_dir, job="pagerank",
         checkpoint_every=checkpoint_every, resume=resume,
         restore=lambda df: _state(df.repartition(P, "id")),
@@ -341,7 +284,5 @@ def pagerank(
     # ref-count release of dead intermediates (engine.py:63-76).
     edges.unpersist()
     base.unpersist()
-    if store_dir:
-        shutil.rmtree(store_dir, ignore_errors=True)
     return PageRankResult(result, res.iterations, res.converged, res.metrics,
                           [m.delta for m in res.metrics.supersteps])

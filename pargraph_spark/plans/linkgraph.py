@@ -60,12 +60,11 @@ def run_all(
     tol: float = 1e-9,
     checkpoint_dir: str | None = None,
     num_partitions: int | None = None,
-    pagerank_mode: str = "dataframe",
 ) -> dict:
     """Run the four algorithms; returns {name: DataFrame | result}."""
     ids = graph.vertices.select("id")
     pr = pagerank(spark, graph.edges, ids, damping=damping, tol=tol,
-                  mode=pagerank_mode, checkpoint_dir=checkpoint_dir,
+                  checkpoint_dir=checkpoint_dir,
                   num_partitions=num_partitions)
     cc = connected_components(spark, graph.edges, ids, num_partitions=num_partitions)
     lp = label_propagation(spark, graph.edges, ids, num_partitions=num_partitions)

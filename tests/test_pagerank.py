@@ -15,18 +15,18 @@ from .oracles import pagerank_oracle
 EDGE_SCHEMA = "src long, dst long"
 
 
-def _run(spark, edges, vertices=None, mode="dataframe", **kw):
+def _run(spark, edges, vertices=None, **kw):
     vdf = (
         spark.createDataFrame([(v,) for v in vertices], "id long")
         if vertices is not None
         else None
     )
     edf = spark.createDataFrame(edges, EDGE_SCHEMA)
-    res = pagerank(spark, edf, vdf, mode=mode, num_partitions=4, **kw)
+    res = pagerank(spark, edf, vdf, num_partitions=4, **kw)
     return {r["id"]: r["rank"] for r in res.ranks.collect()}, res
 
 
-@pytest.mark.parametrize("mode", ["dataframe", "csr"])
+@pytest.mark.parametrize("mode", ["dataframe"])
 def test_ring_uniform(spark, mode):
     n = 10
     edges = [(i, (i + 1) % n) for i in range(n)]
@@ -37,7 +37,7 @@ def test_ring_uniform(spark, mode):
     assert abs(sum(got.values()) - 1.0) < 1e-9
 
 
-@pytest.mark.parametrize("mode", ["dataframe", "csr"])
+@pytest.mark.parametrize("mode", ["dataframe"])
 def test_star_matches_oracle(spark, mode):
     n = 11
     edges = [(i, 0) for i in range(1, n)]  # spokes -> hub; hub is dangling
@@ -48,7 +48,7 @@ def test_star_matches_oracle(spark, mode):
     assert abs(sum(got.values()) - 1.0) < 1e-6
 
 
-@pytest.mark.parametrize("mode", ["dataframe", "csr"])
+@pytest.mark.parametrize("mode", ["dataframe"])
 def test_synth_graph_matches_oracle(spark, mode):
     pages = pages_df_local(spark, 300)
     ext = extract_links(latest_pages(pages))
@@ -65,17 +65,12 @@ def test_synth_graph_matches_oracle(spark, mode):
     assert res.metrics.supersteps[0].edges == len(edges)
 
 
-def test_modes_agree(spark):
-    pages = pages_df_local(spark, 150)
-    ext = extract_links(latest_pages(pages))
-    edf = build_edges(ext).cache()
-    r1 = pagerank(spark, edf, mode="dataframe", num_partitions=4, tol=1e-8)
-    r2 = pagerank(spark, edf, mode="csr", num_partitions=4, tol=1e-8)
-    g1 = {r["id"]: r["rank"] for r in r1.ranks.collect()}
-    g2 = {r["id"]: r["rank"] for r in r2.ranks.collect()}
-    assert set(g1) == set(g2)
-    for v in g1:
-        assert math.isclose(g1[v], g2[v], abs_tol=1e-9), v
+def test_unknown_mode_raises(spark):
+    # "dataframe" is the only superstep plan; any other mode is rejected
+    edf = spark.createDataFrame([(1, 2)], EDGE_SCHEMA)
+    for mode in ("csr", "graphblas"):
+        with pytest.raises(ValueError, match=mode):
+            pagerank(spark, edf, mode=mode, num_partitions=2)
 
 
 def test_partition_count_invariance(spark):
@@ -200,124 +195,3 @@ def test_ppr_unknown_teleport_id_keeps_mass(spark):
     got2 = {r["id"]: r["rank"] for r in res2.ranks.collect()}
     for v in got:
         assert math.isclose(got[v], got2[v], abs_tol=1e-9), v
-
-
-def _write_fake_csr_store(root, blocks_by_pid):
-    """Hand-build the pid-partitioned parquet layout spmv_from_store reads
-    (store/pid=K/part.parquet + _SUCCESS), no Spark needed."""
-    import os
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    for pid, rows in blocks_by_pid.items():
-        d = os.path.join(root, f"pid={pid}")
-        os.makedirs(d, exist_ok=True)
-        t = pa.table(
-            {
-                "srcs": pa.array([r[0] for r in rows], pa.list_(pa.int64())),
-                "indptr": pa.array([r[1] for r in rows], pa.list_(pa.int64())),
-                "dsts": pa.array([r[2] for r in rows], pa.list_(pa.int64())),
-            }
-        )
-        pq.write_table(t, os.path.join(d, "part-0.parquet"))
-    open(os.path.join(root, "_SUCCESS"), "w").close()
-
-
-def test_spmv_from_store_all_masked_srcs_returns_empty(tmp_path):
-    # ADVICE r2 (ported from the deleted spmv_messages kernel): a pid whose
-    # every block src is absent from the rank vector must yield an empty
-    # frame, not crash np.concatenate([])
-    import pandas as pd
-
-    from pargraph_spark.operators.csr import spmv_from_store
-
-    store = str(tmp_path / "store")
-    _write_fake_csr_store(store, {0: [([1, 2], [0, 1, 2], [3, 4])]})
-    ranks = pd.DataFrame({"id": [7, 8], "rank": [0.5, 0.5]})
-    out = spmv_from_store(store, 0, ranks)
-    assert out.empty
-    assert list(out.columns) == ["dst", "msg"]
-
-
-def test_spmv_from_store_messages_and_partial_mask(tmp_path):
-    # kernel values: msg[dst] = sum rank[src]/outdeg[src]; src 2 masked out
-    import pandas as pd
-
-    from pargraph_spark.operators.csr import spmv_from_store
-
-    store = str(tmp_path / "store")
-    # src 1 -> {3,4} (deg 2), src 2 -> {3} (deg 1)
-    _write_fake_csr_store(store, {0: [([1, 2], [0, 2, 3], [3, 4, 3])]})
-    ranks = pd.DataFrame({"id": [1], "rank": [0.6]})  # src 2 absent
-    out = spmv_from_store(store, 0, ranks).sort_values("dst")
-    got = dict(zip(out["dst"], out["msg"]))
-    assert got == {3: 0.3, 4: 0.3}
-
-
-def test_spmv_from_store_missing_store_raises(tmp_path):
-    # ADVICE r3: an invisible/half-written store must FAIL loudly, not
-    # cache an empty block list and converge to the teleport vector
-    import pandas as pd
-    import pytest
-
-    from pargraph_spark.operators.csr import spmv_from_store
-
-    ranks = pd.DataFrame({"id": [1], "rank": [1.0]})
-    with pytest.raises(FileNotFoundError, match="_SUCCESS"):
-        spmv_from_store(str(tmp_path / "nope"), 0, ranks)
-
-
-def test_spmv_from_store_rewrite_busts_worker_cache(tmp_path):
-    # ADVICE r3: rewriting a store at the SAME path must not serve the old
-    # blocks from the worker LRU — the generation (_SUCCESS mtime) keys it
-    import os
-    import shutil
-    import time
-
-    import pandas as pd
-
-    from pargraph_spark.operators.csr import spmv_from_store
-
-    store = str(tmp_path / "store")
-    _write_fake_csr_store(store, {0: [([1], [0, 1], [3])]})
-    ranks = pd.DataFrame({"id": [1], "rank": [1.0]})
-    out1 = spmv_from_store(store, 0, ranks)
-    assert dict(zip(out1["dst"], out1["msg"])) == {3: 1.0}
-
-    shutil.rmtree(store)
-    time.sleep(0.01)  # ensure a distinct _SUCCESS mtime_ns
-    _write_fake_csr_store(store, {0: [([1], [0, 1], [9])]})
-    out2 = spmv_from_store(store, 0, ranks)
-    # same path, new generation: messages reflect the NEW edge 1->9
-    assert dict(zip(out2["dst"], out2["msg"])) == {9: 1.0}
-
-
-def test_csr_store_rejects_remote_uri(spark):
-    import pytest
-
-    from pargraph_spark.operators.csr import write_csr_store
-
-    edf = spark.createDataFrame([(1, 2)], EDGE_SCHEMA)
-    with pytest.raises(ValueError, match="POSIX"):
-        write_csr_store(edf, 2, "s3a://bucket/store")
-
-
-def test_csr_store_file_uri_normalizes(spark, tmp_path):
-    # ADVICE r4: a 'file:'-scheme path used to pass validation, write via
-    # Spark, then fail every executor read with a misleading
-    # missing-_SUCCESS error. Now both writer and reader normalize it.
-    import pytest
-
-    from pargraph_spark.operators.csr import _check_local_store_path
-
-    assert _check_local_store_path("/tmp/x") == "/tmp/x"
-    assert _check_local_store_path("file:/tmp/x") == "/tmp/x"
-    assert _check_local_store_path("file:///tmp/x") == "/tmp/x"
-    assert _check_local_store_path("file://localhost/tmp/x") == "/tmp/x"
-    with pytest.raises(ValueError, match="remote host"):
-        _check_local_store_path("file://otherhost/tmp/x")
-    with pytest.raises(ValueError, match="non-local URI scheme"):
-        _check_local_store_path("hdfs://nn/tmp/x")
-    with pytest.raises(ValueError, match="not absolute"):
-        _check_local_store_path("file:tmp/x")
