@@ -113,15 +113,13 @@ def _edge_supports(e: DataFrame) -> DataFrame:
     contrib = wedges.join(c, ["a", "b"]).select(
         "w", "a", "b", (F.col("c") - 1).alias("_g")
     )
-    sup = (
+    # every edge contributes a 0 row, so edges in no butterfly get sup = 0
+    return (
         contrib.select(F.col("a").alias("u"), "w", "_g")
         .unionByName(contrib.select(F.col("b").alias("u"), "w", "_g"))
+        .unionByName(e.select("u", "w", F.lit(0).cast("long").alias("_g")))
         .groupBy("u", "w")
-        .agg(F.sum("_g").alias("sup"))
-    )
-    return (
-        e.join(sup, ["u", "w"], "left")
-        .select("u", "w", F.coalesce("sup", F.lit(0)).cast("long").alias("sup"))
+        .agg(F.sum("_g").cast("long").alias("sup"))
     )
 
 
@@ -171,24 +169,36 @@ def bitruss(
         deg = e.groupBy("w").agg(F.count("*").alias("_d"))
         e = e.join(deg.where(F.col("_d") <= int(hot_cap)).select("w"), "w")
 
+    e = e.repartition(P, "w").persist()
+
     def step(cur: DataFrame, prev) -> DataFrame:
         removed = cur.where(F.col("sup") < k).select("u", "w")
         survivors = cur.where(F.col("sup") >= k)
-        g = cur.select("u", "w")
+
+        def g(u: str, w: str) -> DataFrame:
+            return cur.select(F.col("u").alias(u), F.col("w").alias(w)).hint(
+                "shuffle_hash")
+
+        def e_(u: str, w: str) -> DataFrame:
+            return e.select(F.col("u").alias(u), F.col("w").alias(w)).hint(
+                "shuffle_hash")
+
         # dead butterflies through each removed edge (u, w1): co-endpoint
         # b ∈ Γ(w1)\{u}, second right w2 ∈ (Γ(u)∩Γ(b))\{w1}; canonical
-        # quadruple dedupe handles butterflies holding 2-4 removed edges
+        # quadruple dedupe handles butterflies holding 2-4 removed edges.
+        # Inner joins read the static e, the state enters by semi joins:
+        # Spark estimates an inner join as a product and a semi join as
+        # its left side, and the checkpoint carries the estimate on.
         dead = (
-            removed.withColumnRenamed("w", "w1")
-            .join(g.select(F.col("u").alias("b"), F.col("w").alias("w1")), "w1")
+            e.join(removed.hint("shuffle_hash"), ["u", "w"], "left_semi")
+            .withColumnRenamed("w", "w1")
+            .join(e_("b", "w1"), "w1")
             .where(F.col("b") != F.col("u"))
-            .join(g.select("u", F.col("w").alias("w2")), "u")
+            .join(g("b", "w1"), ["b", "w1"], "left_semi")
+            .join(e_("u", "w2"), "u")
             .where(F.col("w2") != F.col("w1"))
-            .join(
-                g.select(F.col("u").alias("b"), F.col("w").alias("w2")),
-                ["b", "w2"],
-                "leftsemi",
-            )
+            .join(g("u", "w2"), ["u", "w2"], "left_semi")
+            .join(g("b", "w2"), ["b", "w2"], "left_semi")
             .select(
                 F.least("u", "b").alias("a"),
                 F.greatest("u", "b").alias("b"),
@@ -205,12 +215,16 @@ def bitruss(
             .groupBy("u", "w")
             .agg(F.count("*").alias("_d"))
         )
+        # union + aggregate, not a join, for the same reason; a group
+        # survives if it holds a survivor row
         return (
-            survivors.join(dec, ["u", "w"], "left")
-            .select(
-                "u", "w",
-                (F.col("sup") - F.coalesce(F.col("_d"), F.lit(0))).alias("sup"),
-            )
+            survivors.select("u", "w", "sup", F.lit(1).alias("_s"))
+            .unionByName(dec.select("u", "w", (-F.col("_d")).alias("sup"),
+                                    F.lit(0).alias("_s")))
+            .groupBy("u", "w")
+            .agg(F.sum("sup").alias("sup"), F.max("_s").alias("_s"))
+            .where(F.col("_s") == 1)
+            .select("u", "w", "sup")
             .repartition(P, "w")
         )
 
@@ -218,7 +232,7 @@ def bitruss(
     # that leaves nothing to remove is the last
     res = run_fixpoint(
         spark,
-        lambda: _edge_supports(e.repartition(P, "w")).repartition(P, "w"),
+        lambda: _edge_supports(e).repartition(P, "w"),
         step,
         [F.count("*"), F.count_if(F.col("sup") < k)],
         (lambda s, prev: False) if fixed_rounds is not None
@@ -232,4 +246,5 @@ def bitruss(
     # to peel, the one identity round run is not one
     rounds = (res.iterations if fixed_rounds is not None
               else sum(m.delta > 0 for m in res.metrics.supersteps))
+    e.unpersist()
     return BitrussResult(res.state, rounds, res.metrics)

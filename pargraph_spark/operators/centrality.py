@@ -10,11 +10,14 @@ deterministic for any α (the usual α < 1/λ_max convergence condition only
 matters for the infinite sum), which is what makes the unrolled SQL
 oracle exact to float-rounding noise.
 
-Plan shape per superstep (the pagerank discipline, pagerank.py:270-300):
-the edge table is persisted partitioned on src and probed in place by the
-V-scale score vector; messages partial-combine map-side before the
-dst-keyed shuffle; the score vector localCheckpoints each round (lineage
-truncation). Zero E-scale exchanges per iteration.
+The superstep loop is plans/fixpoint.py, run for exactly `iters`
+supersteps. The state is one table, (id, xs) on the exact path or (id,
+katz) on the float path; one step serves both and only the per-vertex
+term differs. The edge table is persisted partitioned on src and probed
+in place by the state; the messages and every vertex's own row meet in
+one union + aggregate keyed by id (map-side partial combine before the
+shuffle). Zero E-scale exchanges and one Spark job per superstep, the
+driver's stats job.
 """
 
 from __future__ import annotations
@@ -24,9 +27,9 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pargraph_spark.session import ckpt_state, size_based_partitions
-
+from pargraph_spark.plans.fixpoint import run_fixpoint
 from pargraph_spark.plans.metrics import JobMetrics
+from pargraph_spark.session import size_based_partitions
 
 
 @dataclass
@@ -70,7 +73,7 @@ def katz_centrality(
         .repartition(P, "src")
         .persist()
     )
-    e.count()
+    n_edges = e.count()
     verts = (
         e.select(F.col("src").alias("id"))
         .unionByName(e.select(F.col("dst").alias("id")))
@@ -79,59 +82,50 @@ def katz_centrality(
     )
     if exact_denominator is not None:
         D = int(exact_denominator)
-        x = verts.withColumn(
-            "xs", F.lit(1).cast("decimal(38,0)")
-        ).transform(ckpt_state, P)
-        for t in range(1, iters + 1):
-            msgs = (
-                e.join(x.select(F.col("id").alias("src"), "xs"), "src")
-                .groupBy(F.col("dst").alias("id"))
-                .agg(F.sum("xs").alias("_s"))
-            )
-            x = (
-                x.select("id")
-                .join(msgs, "id", "left")
-                .select(
-                    "id",
-                    # the coalesce covers "no in-edges" NULLs from the
-                    # left join ONLY. Decimal-sum overflow past 38 digits
-                    # THROWS under ANSI (this repo's default config) —
-                    # never runs far enough to be masked here; a non-ANSI
-                    # session would null-and-mask it, so exact-mode Katz
-                    # requires ANSI on (review r5)
-                    (
-                        F.lit(D ** t).cast("decimal(38,0)")
-                        + F.coalesce(
-                            "_s", F.lit(0).cast("decimal(38,0)")
-                        )
-                    ).cast("decimal(38,0)").alias("xs"),
-                )
-                .repartition(P, "id")
-                .transform(ckpt_state, P)
-            )
+        col, typ = "xs", "decimal(38,0)"
+
+        def term(t: int, s):
+            # Decimal-sum overflow past 38 digits THROWS under ANSI (this
+            # repo's default config); a non-ANSI session would turn it
+            # into a null, so exact-mode Katz requires ANSI on
+            return (F.lit(D ** t).cast(typ)
+                    + F.coalesce(s, F.lit(0).cast(typ))).cast(typ)
+    else:
+        col, typ = "katz", "double"
+
+        def term(t: int, s):
+            return F.lit(float(beta)) + F.lit(float(alpha)) * F.coalesce(s, F.lit(0.0))
+
+    t = 0
+
+    def step(x: DataFrame, prev) -> DataFrame:
+        nonlocal t
+        t += 1
+        # every vertex's own null row keeps vertices without in-edges;
+        # union + aggregate, not a join: Spark estimates a join as a
+        # product, and the checkpoint carries the estimate on
+        msgs = e.join(
+            x.select(F.col("id").alias("src"), F.col(col).alias("_s"))
+            .hint("shuffle_hash"), "src",
+        ).select(F.col("dst").alias("id"), "_s")
+        return (
+            x.select("id", F.lit(None).cast(typ).alias("_s"))
+            .unionByName(msgs)
+            .groupBy("id")
+            .agg(F.sum("_s").alias("_s"))
+            .select("id", term(t, F.col("_s")).alias(col))
+        )
+
+    res = run_fixpoint(
+        spark, lambda: verts.select("id", term(0, F.lit(None)).alias(col)), step,
+        [F.count("*")], lambda s, prev: False,
+        name="katz", P=P, max_iter=iters, edges=n_edges,
+        delta=lambda s, prev: float("nan"),
+    )
+    e.unpersist()
+    x = res.state
+    if exact_denominator is not None:
         x = x.select(
             "id", (F.col("xs").cast("double") / F.lit(float(D ** iters))).alias("katz")
         )
-    else:
-        x = verts.withColumn("katz", F.lit(float(beta))).transform(ckpt_state, P)
-        for _ in range(iters):
-            msgs = (
-                e.join(x.select(F.col("id").alias("src"), "katz"), "src")
-                .groupBy(F.col("dst").alias("id"))
-                .agg(F.sum("katz").alias("_s"))
-            )
-            x = (
-                x.select("id")
-                .join(msgs, "id", "left")
-                .select(
-                    "id",
-                    (
-                        F.lit(float(beta))
-                        + F.lit(float(alpha)) * F.coalesce("_s", F.lit(0.0))
-                    ).alias("katz"),
-                )
-                .repartition(P, "id")
-                .transform(ckpt_state, P)
-            )
-    e.unpersist()
-    return KatzResult(x, iters)
+    return KatzResult(x, res.iterations, res.metrics)

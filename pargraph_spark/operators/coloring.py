@@ -20,31 +20,32 @@ Link-graph uses: conflict-free scheduling of vertex-local updates
 allocation-style partitioning of overlay maintenance, symmetry breaking
 for parallel greedy heuristics.
 
-Plan shape per round: the local-minima test is one aggregate over the
-CURRENT uncolored subgraph (min neighbor priority, map-side partial
-combine; the subgraph shrinks every round and is probed in place — it
-stays partitioned on the aggregate key); the color choice joins winners
-against the STATIC symmetric edge table (persisted once, partitioned on
-the probe key) and the colored table, then takes the mex of a
-collect_set bounded by the number of colors used so far (≤ rounds ≤
-Δ+1), never by raw degree — a hub's adjacency reduces map-side to its
-distinct neighbor colors. All JVM expressions; the mex is an
-F.aggregate fold over the sorted distinct-color array.
+The round loop is plans/fixpoint.py. The state is one table (id,
+color), color null while the vertex is uncolored, read against ONE
+static symmetric edge table persisted on hash(v). A round is one join of
+that table with the state: each vertex sends its neighbors its priority
+while uncolored and its color once colored. One union + aggregate with
+the vertices' own rows then takes the local-minima test (min neighbor
+priority) and the neighbor color set, a collect_set bounded by the
+number of colors used so far (≤ rounds ≤ Δ+1), never by raw degree — a
+hub's adjacency reduces map-side to its distinct neighbor colors. A
+winner takes the mex, an F.aggregate fold over the sorted color array.
+Nothing is materialized inside a round: it costs one Spark job, the
+driver's stats job (uncolored count).
 """
 
 from __future__ import annotations
 
-import time
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pargraph_spark.session import ckpt_state, size_based_partitions
-
 from pargraph_spark.operators.edges import symmetrize
 from pargraph_spark.operators.mis import _priority
-from pargraph_spark.plans.metrics import JobMetrics, SuperstepMetric
+from pargraph_spark.plans.fixpoint import run_fixpoint
+from pargraph_spark.plans.metrics import JobMetrics
+from pargraph_spark.session import size_based_partitions
 
 
 @dataclass
@@ -76,96 +77,56 @@ def greedy_coloring(
 
     Converged output is proper (no edge monochromatic), uses ≤ Δ+1
     colors, and equals the sequential greedy coloring in ascending
-    md5-priority order. fixed_rounds runs exactly that many rounds with
-    no convergence jobs (oracle parity): vertices still uncolored are
+    md5-priority order. fixed_rounds runs exactly that many rounds and
+    never stops early (oracle parity): vertices still uncolored are
     simply absent from `colors`."""
     P = int(num_partitions or spark.conf.get("spark.sql.shuffle.partitions"))
     P = size_based_partitions(edges, P)  # guide §2.2, size-derived cap
-    # static full adjacency for the color-lookup join: persist partitioned
-    # on u (probe side keyed by winner id) — retained outputPartitioning,
-    # kcore.py:166-175 discipline
-    sym_all = symmetrize(edges).repartition(P, "u").persist()
-    sym_all.count()
-    # shrinking uncolored subgraph for the local-minima test
-    usym = sym_all.repartition(P, "v").persist()
-    und = (
-        sym_all.select(F.col("u").alias("id")).distinct()
-        .transform(ckpt_state, P)
-    )
-    colored: DataFrame | None = None
-    metrics = JobMetrics("coloring")
-    converged = False
-    rounds = 0
-    n_rounds = fixed_rounds if fixed_rounds is not None else max_rounds
-    for r in range(1, n_rounds + 1):
-        t0 = time.monotonic()
-        pk = und.select("id", _priority(F.col("id"), 0, salt).alias("pk"))
-        nbrmin = (
-            usym.join(
-                pk.select(F.col("id").alias("v"), F.col("pk").alias("_pv")), "v"
-            )
-            .groupBy(F.col("u").alias("id"))
-            .agg(F.min("_pv").alias("_nmin"))
-        )
-        winners = (
-            pk.join(nbrmin, "id", "left")
-            .where(F.col("_nmin").isNull() | (F.col("pk") < F.col("_nmin")))
-            .select("id")
-        )
-        if colored is None:
-            wcol = winners.withColumn("color", F.lit(0))
-        else:
-            ncol = (
-                sym_all.join(winners.select(F.col("id").alias("u")), "u")
-                .join(
-                    colored.select(
-                        F.col("id").alias("v"), F.col("color").alias("_nc")
-                    ),
-                    "v",
-                )
-                .groupBy(F.col("u").alias("id"))
-                .agg(F.array_sort(F.collect_set("_nc")).alias("_ncs"))
-            )
-            wcol = winners.join(ncol, "id", "left").select(
+    sym = symmetrize(edges).repartition(P, "v").persist()
+    n_edges = sym.count()
+
+    def step(state: DataFrame, prev) -> DataFrame:
+        # every vertex sends its neighbors its priority while uncolored,
+        # its color once colored; each vertex's own row carries its own
+        pk = F.when(F.col("color").isNull(), _priority(F.col("id"), 0, salt))
+        no_pk, no_color = F.lit(None).cast("string"), F.lit(None).cast("int")
+        msgs = sym.join(
+            state.select(F.col("id").alias("v"), pk.alias("_n"),
+                         F.col("color").alias("_nc")).hint("shuffle_hash"), "v",
+        ).select(F.col("u").alias("id"), no_pk.alias("pk"), "_n",
+                 no_color.alias("color"), "_nc")
+        own = state.select("id", pk.alias("pk"), no_pk.alias("_n"), "color",
+                           no_color.alias("_nc"))
+        # an uncolored vertex whose priority beats every uncolored
+        # neighbor's takes the smallest color its neighbors do not hold;
+        # the color set is bounded by the colors used so far, not by the
+        # degree
+        return (
+            own.unionByName(msgs)
+            .groupBy("id")
+            .agg(F.min("pk").alias("pk"), F.min("_n").alias("_n"),
+                 F.max("color").alias("color"),
+                 F.array_sort(F.collect_set("_nc")).alias("_ncs"))
+            .select(
                 "id",
-                F.coalesce(_mex(F.col("_ncs")), F.lit(0)).alias("color"),
+                F.when(F.col("color").isNotNull(), F.col("color"))
+                .when(F.col("_n").isNull() | (F.col("pk") < F.col("_n")),
+                      _mex(F.col("_ncs")))
+                .alias("color"),
             )
-        wcol = wcol.transform(ckpt_state, P)
-        if colored is None:
-            colored = wcol
-        else:
-            old_colored = colored
-            colored = colored.unionByName(wcol).transform(ckpt_state, P)
-            # release the superseded union checkpoint (the landmarks.py
-            # growing-union discipline) — review r5: O(V) blocks per
-            # round accumulated for the session lifetime otherwise
-            old_colored.unpersist()
-        new_und = und.join(wcol.select("id"), "id", "left_anti").localCheckpoint(
-            eager=True
         )
-        wu = wcol.select(F.col("id").alias("u"))
-        wv = wcol.select(F.col("id").alias("v"))
-        new_usym = (
-            usym.join(wu, "u", "left_anti")
-            .join(wv, "v", "left_anti")
-            .transform(ckpt_state, P)
-        )
-        und.unpersist()
-        usym.unpersist()
-        und, usym = new_und, new_usym
-        rounds = r
-        metrics.add(
-            SuperstepMetric(r, (time.monotonic() - t0) * 1000.0, 0, float("nan"))
-        )
-        if fixed_rounds is None and und.limit(1).count() == 0:
-            converged = True
-            break
-    sym_all.unpersist()
-    if colored is None:
-        colored = spark.createDataFrame([], "id long, color int")
-    return ColoringResult(
-        colored.select("id", F.col("color").cast("int").alias("color")),
-        rounds,
-        converged,
-        metrics,
+
+    res = run_fixpoint(
+        spark,
+        lambda: sym.select(F.col("u").alias("id")).distinct()
+        .select("id", F.lit(None).cast("int").alias("color")),
+        step, [F.count_if(F.col("color").isNull())],
+        (lambda s, prev: False) if fixed_rounds is not None
+        else (lambda s, prev: s[0] == 0),
+        name="coloring", P=P,
+        max_iter=fixed_rounds if fixed_rounds is not None else max_rounds,
+        edges=n_edges,
     )
+    sym.unpersist()
+    colors = res.state.where(F.col("color").isNotNull()).select("id", "color")
+    return ColoringResult(colors, res.iterations, res.converged, res.metrics)

@@ -24,9 +24,15 @@ on its own probe key — `e_src` (hash(src)) for the forward half-step,
 normalizer each. Holding TWO cached copies of the edge table (2× memory,
 spill-safe) buys ZERO E-scale exchanges inside the loop: a single copy
 partitioned on src would re-shuffle the full edge table, on the skewed
-dst key, on every backward half-step. No driver collect in the loop;
-each half-step's scores are checkpointed (`ckpt_state`), truncating the
-V-scale lineage. hits() and salsa() share that loop, `_hub_authority`;
+dst key, on every backward half-step. No driver collect in the loop.
+
+The loop is plans/fixpoint.py, run for exactly `iterations` supersteps;
+one superstep is both half-steps. The state is one table (id, hub,
+authority). The authority half-step feeds the hub half-step and the next
+state, so the step materializes it (a checkpoint job and its
+normalizer's broadcast job) and the driver releases it; the hub
+normalizer's broadcast and the driver's stats job make four Spark jobs
+per superstep. hits() and salsa() share that loop, `_hub_authority`;
 they differ only in the edge annotation and the two per-edge terms.
 """
 
@@ -38,7 +44,8 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pargraph_spark.session import ckpt_state, size_based_partitions
+from pargraph_spark.plans.fixpoint import run_fixpoint
+from pargraph_spark.session import size_based_partitions
 
 GRID = float(1 << 30)  # quantization grid 2^-30 (~1e-9)
 
@@ -93,7 +100,7 @@ def _hub_authority(
     # inside the iteration loop (2x cache for iterations x shuffle saved).
     e_src = e0.repartition(P, "src").persist()
     e_dst = e0.repartition(P, "dst").persist()
-    e_src.count()
+    n_edges = e_src.count()
     e_dst.count()
     verts = (
         vertices.select("id")
@@ -111,40 +118,48 @@ def _hub_authority(
         e_dst.unpersist()
         return spark.createDataFrame([], "id long, hub double, authority double"), 0
 
-    h = verts.withColumn("hub", quantize(F.lit(1.0 / n))).transform(ckpt_state, P)
-    a = None
-    prev_a = None
-    for _ in range(iterations):
-        a_raw = (
-            e_src.join(h, e_src["src"] == h["id"])
-            .groupBy(e_src["dst"].alias("vid"))
-            .agg(F.sum(auth_term).alias("authority"))
+    def half(e: DataFrame, key: str, out: str, scores: DataFrame, term: Column,
+             col: str) -> DataFrame:
+        """Sum `term` over e's edges, whose `key` end carries `scores`,
+        into `col` of their `out` end; normalized and quantized."""
+        raw = (
+            e.join(scores.withColumnRenamed("id", key).hint("shuffle_hash"), key)
+            .groupBy(F.col(out).alias("id"))
+            .agg(F.sum(term).alias(col))
         )
-        a = _norm_quant(
-            verts.join(a_raw, verts["id"] == a_raw["vid"], "left")
-            .select("id", F.coalesce("authority", F.lit(0.0)).alias("authority")),
-            "authority",
-        ).transform(ckpt_state, P)
-        h_raw = (
-            e_dst.join(a, e_dst["dst"] == a["id"])
-            .groupBy(e_dst["src"].alias("vid"))
-            .agg(F.sum(hub_term).alias("hub"))
+        return _norm_quant(
+            verts.join(raw.hint("shuffle_hash"), "id", "left")
+            .select("id", F.coalesce(col, F.lit(0.0)).alias(col)),
+            col,
         )
-        new_h = _norm_quant(
-            verts.join(h_raw, verts["id"] == h_raw["vid"], "left")
-            .select("id", F.coalesce("hub", F.lit(0.0)).alias("hub")),
-            "hub",
-        ).transform(ckpt_state, P)
-        h.unpersist()
-        if prev_a is not None:
-            prev_a.unpersist()  # superseded authority snapshot
-        prev_a = a
-        h = new_h
-    out = h.join(a, "id").select("id", "hub", "authority")
+
+    def step(state: DataFrame, prev) -> tuple[DataFrame, list[DataFrame]]:
+        # the authorities feed the hub half-step and the next state, so
+        # they are materialized once
+        a = half(e_src, "src", "dst", state.select("id", "hub"), auth_term,
+                 "authority").localCheckpoint()
+        h = half(e_dst, "dst", "src", a, hub_term, "hub")
+        # union + aggregate, not a join: Spark estimates a join as a
+        # product, and the checkpoint carries the estimate on
+        none = F.lit(None).cast("double")
+        return (
+            h.select("id", "hub", none.alias("authority"))
+            .unionByName(a.select("id", none.alias("hub"), "authority"))
+            .groupBy("id")
+            .agg(F.max("hub").alias("hub"), F.max("authority").alias("authority"))
+        ), [a]
+
+    res = run_fixpoint(
+        spark,
+        lambda: verts.select("id", quantize(F.lit(1.0 / n)).alias("hub"),
+                             F.lit(0.0).alias("authority")),
+        step, [F.count("*")], lambda s, prev: False,
+        name=name, P=P, max_iter=iterations, edges=n_edges,
+    )
     e_src.unpersist()
     e_dst.unpersist()
     verts.unpersist()
-    return out, iterations
+    return res.state, res.iterations
 
 
 @dataclass

@@ -15,15 +15,18 @@ pipelines): contract each matched pair into a super-vertex and recurse
 on the ~half-size graph. `coarsen_graph` performs one contraction level
 (super-vertex id = min of the pair, the engine-wide canonical-id rule).
 
-Plan shape per round: priorities are pure JVM expressions over the
-surviving edge set; the per-vertex minimum is ONE partial-combined
+The round loop is plans/fixpoint.py. The state is one table (u, v, m):
+the matched edges (m) and the still active ones; an edge that loses an
+endpoint to a match is dropped. Priorities are pure JVM expressions over
+the active edges; the per-vertex minimum is ONE partial-combined
 aggregate over the 2|E| incident list (min(struct) — the labelprop
 tie-break discipline, hub-safe because partial aggregation caps map
-output at one row per vertex per map task); the both-endpoints check is
-two co-partitioned joins at matched-candidate scale; survivors shrink
-geometrically (each round removes >= the matched vertex set). The edge
-set is re-persisted partitioned on u each round at survivor scale, and
-lineage is truncated per round.
+output at one row per vertex per map task); an edge chosen by both
+endpoints is matched, a vertex-scale count. The round's matches feed
+the removal of their endpoints' edges and the next state, so the step
+materializes them (one job) and the driver releases them; the driver's
+stats job (active and matched counts) is the second. Two Spark jobs
+per round.
 """
 
 from __future__ import annotations
@@ -33,7 +36,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pargraph_spark.plans.metrics import JobMetrics, SuperstepMetric
+from pargraph_spark.plans.fixpoint import run_fixpoint
+from pargraph_spark.plans.metrics import JobMetrics
 
 
 @dataclass
@@ -53,96 +57,77 @@ def maximal_matching(
 ) -> MatchingResult:
     """edges(src, dst) treated undirected → deterministic greedy maximal
     matching (u, v). Every vertex appears in at most one output pair."""
-    import time
-
     P = int(num_partitions or spark.conf.get("spark.sql.shuffle.partitions"))
-    active = (
-        edges.select(
-            F.least("src", "dst").alias("u"), F.greatest("src", "dst").alias("v")
-        )
-        .where(F.col("u") != F.col("v"))
-        .distinct()
-        .repartition(P, "u")
-        .localCheckpoint(eager=True)
-    )
-    matches: DataFrame | None = None
-    new_ms: list[DataFrame] = []  # per-round checkpoints, released at end
-    metrics = JobMetrics("matching")
-    rounds, converged = 0, False
-    for r in range(1, max_rounds + 1):
-        t0 = time.monotonic()
-        n_act = active.count()
-        if n_act == 0:
-            converged = True
-            break
-        pri = active.select(
+    rnd = 0
+
+    def step(state: DataFrame, prev) -> tuple[DataFrame, list[DataFrame]]:
+        nonlocal rnd
+        rnd += 1
+        act = state.where(~F.col("m"))
+        pri = act.select(
             "u", "v",
             F.md5(
                 F.concat_ws(
-                    "|", F.lit(salt), F.lit(str(r)),
+                    "|", F.lit(salt), F.lit(str(rnd)),
                     F.col("u").cast("string"), F.col("v").cast("string"),
                 ).cast("binary")
             ).alias("p"),
         )
-        inc = pri.select(F.col("u").alias("x"), "p", "u", "v").unionByName(
-            pri.select(F.col("v").alias("x"), "p", "u", "v")
-        )
+        # each vertex picks its minimum-priority incident edge; an edge
+        # picked by both of its endpoints is matched. The round's matches
+        # feed both removals and the next state, so they are materialized
         best = (
-            inc.groupBy("x")
+            pri.select(F.col("u").alias("x"), "p", "u", "v")
+            .unionByName(pri.select(F.col("v").alias("x"), "p", "u", "v"))
+            .groupBy("x")
             .agg(F.min(F.struct("p", "u", "v")).alias("b"))
-            .select("x", F.col("b.p").alias("bp"),
-                    F.col("b.u").alias("bu"), F.col("b.v").alias("bv"))
         )
-        bu = best.select(F.col("x").alias("u"), F.col("bp").alias("_pu"),
-                         F.col("bu").alias("_uu"), F.col("bv").alias("_uv"))
-        bv = best.select(F.col("x").alias("v"), F.col("bp").alias("_pv"),
-                         F.col("bu").alias("_vu"), F.col("bv").alias("_vv"))
         new_m = (
-            pri.join(bu, "u").join(bv, "v")
-            .where(
-                (F.col("p") == F.col("_pu")) & (F.col("u") == F.col("_uu"))
-                & (F.col("v") == F.col("_uv"))
-                & (F.col("p") == F.col("_pv")) & (F.col("u") == F.col("_vu"))
-                & (F.col("v") == F.col("_vv"))
-            )
+            best.groupBy(F.col("b.u").alias("u"), F.col("b.v").alias("v"))
+            .count()
+            .where(F.col("count") == 2)
             .select("u", "v")
-            # lazy (r6): the count below materializes in the same job
-            .localCheckpoint(eager=False)
+            .localCheckpoint()
         )
-        n_new = new_m.count()
-        matched_verts = (
-            new_m.select(F.col("u").alias("id"))
-            .unionByName(new_m.select(F.col("v").alias("id")))
+        matched = new_m.select(F.col("u").alias("x")).unionByName(
+            new_m.select(F.col("v").alias("x")))
+        rest = (
+            act.join(matched.withColumnRenamed("x", "u").hint("shuffle_hash"),
+                     "u", "left_anti")
+            .join(matched.withColumnRenamed("x", "v").hint("shuffle_hash"),
+                  "v", "left_anti")
         )
-        new_active = (
-            active.join(matched_verts.withColumnRenamed("id", "u"), "u", "left_anti")
-            .join(matched_verts.withColumnRenamed("id", "v"), "v", "left_anti")
-            .select("u", "v")
+        # repartitioned: a union concatenates its inputs' partitions, and
+        # the next round's first anti join then probes on u in place
+        return (
+            state.where(F.col("m"))
+            .unionByName(new_m.withColumn("m", F.lit(True)))
+            .unionByName(rest.select("u", "v", F.lit(False).alias("m")))
             .repartition(P, "u")
-            .localCheckpoint(eager=True)
+        ), [new_m]
+
+    res = run_fixpoint(
+        spark,
+        lambda: edges.select(
+            F.least("src", "dst").alias("u"), F.greatest("src", "dst").alias("v")
         )
-        matches = new_m if matches is None else matches.unionByName(new_m)
-        new_ms.append(new_m)
-        # the superseded E-scale active checkpoint is never probed again —
-        # release it now (ADVICE r5: a max_rounds=50 run otherwise pinned
-        # up to ~100 cached tables for the session; the mis.py/kcore idiom)
-        active.unpersist()
-        active = new_active
-        rounds = r
-        # engine convention (metrics.py): edges = rows processed this
-        # superstep, delta = new rows — review r5 found these swapped,
-        # which skewed cross-operator edges_per_sec comparisons
-        metrics.add(SuperstepMetric(r, (time.monotonic() - t0) * 1000.0,
-                                    n_act, float(n_new)))
-    if matches is None:
-        matches = spark.createDataFrame([], "u long, v long")
-    out = matches.localCheckpoint(eager=True)
-    # the final checkpoint copied every per-round new_m — release them and
-    # the last (possibly empty) active table (ADVICE r5)
-    active.unpersist()
-    for df in new_ms:
-        df.unpersist()
-    return MatchingResult(out, rounds, converged, metrics)
+        .where(F.col("u") != F.col("v"))
+        .distinct()
+        .select("u", "v", F.lit(False).alias("m"))
+        .repartition(P, "u"),
+        step,
+        [F.count_if(~F.col("m")).alias("active"),
+         F.count_if(F.col("m")).alias("matched")],
+        lambda s, prev: s["active"] == 0,
+        name="matching", P=P, max_iter=max_rounds,
+        edges=lambda s: s["active"],
+        delta=lambda s, prev: float(s["matched"] - prev["matched"]),
+    )
+    # every round with an active edge matches one (the globally minimum
+    # edge); an edgeless graph runs one round that matches none
+    rounds = sum(m.delta > 0 for m in res.metrics.supersteps)
+    return MatchingResult(res.state.where(F.col("m")).select("u", "v"), rounds,
+                          res.converged, res.metrics)
 
 
 def coarsen_graph(edges: DataFrame, matches: DataFrame) -> DataFrame:

@@ -15,27 +15,29 @@ Link-graph uses: IS extraction is the standard symmetry-breaking
 primitive — seed selection for sparsification, landmark placement,
 parallel scheduling of vertex-local updates without neighbor conflicts.
 
-Plan shape per round: one priority projection (pure exprs), one
-min-aggregate over edges keyed by u (partial combine — a hub's
-neighborhood min reduces map-side), one left join for the win test, two
-anti-joins to remove winners + their neighbors (AQE broadcasts the
-winner set once rounds localize), localCheckpoint truncating lineage.
-Everything is JVM-side; per-round shuffle is bounded by the CURRENT
-undecided subgraph, which shrinks geometrically.
+The round loop is plans/fixpoint.py. The state is one table (id, st),
+st = 0 undecided, 1 member; a member's neighbors are dropped. It is
+read against ONE static symmetric edge table persisted on hash(v):
+joined with the undecided priorities it yields exactly the edges
+between undecided vertices. The neighbor priority minimum (map-side
+partial combine, hub-safe) and the own priority meet in one union +
+aggregate, the win test. The winners feed their neighbors' removal and
+the next state, so the step materializes them (one job; the driver
+releases them); with the driver's stats job (undecided count) a round
+costs two Spark jobs.
 """
 
 from __future__ import annotations
 
-import time
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pargraph_spark.session import ckpt_state, size_based_partitions
-
 from pargraph_spark.operators.edges import symmetrize
-from pargraph_spark.plans.metrics import JobMetrics, SuperstepMetric
+from pargraph_spark.plans.fixpoint import run_fixpoint
+from pargraph_spark.plans.metrics import JobMetrics
+from pargraph_spark.session import size_based_partitions
 
 
 @dataclass
@@ -73,61 +75,64 @@ def maximal_independent_set(
     member ids; guaranteed independent (no two adjacent) and maximal
     (every non-member has a member neighbor) once converged — both
     properties are pytest-pinned. fixed_rounds runs exactly that many
-    rounds with no convergence jobs (oracle parity; rounds past
+    rounds and never stops early (oracle parity; rounds past
     exhaustion are identity and `converged` stays False)."""
     P = int(num_partitions or spark.conf.get("spark.sql.shuffle.partitions"))
     P = size_based_partitions(edges, P)  # guide §2.2, size-derived cap
-    # Round 1's E-scale probe is sym ⋈ priorities on v — persist (NOT
-    # localCheckpoint, which loses outputPartitioning) partitioned on v so
-    # the first, largest round probes in place (VERDICT r4 nit). Later
-    # rounds' shrinking sym stays localCheckpoint'ed: lineage truncation
-    # matters more once the undecided subgraph is small.
     sym = symmetrize(edges).repartition(P, "v").persist()
-    sym.count()
-    und = sym.select(F.col("u").alias("id")).distinct().transform(ckpt_state, P)
-    members: DataFrame | None = None
-    metrics = JobMetrics("mis")
-    converged = False
-    rounds = 0
-    n_rounds = fixed_rounds if fixed_rounds is not None else max_rounds
-    for r in range(1, n_rounds + 1):
-        t0 = time.monotonic()
-        pk = und.select("id", _priority(F.col("id"), r, salt).alias("pk"))
-        nbrmin = (
-            sym.join(pk.select(F.col("id").alias("v"), F.col("pk").alias("_pv")), "v")
-            .groupBy(F.col("u").alias("id"))
-            .agg(F.min("_pv").alias("_nmin"))
-        )
-        # materialize winners FIRST: removed/new_und/new_sym/members all
-        # consume it, and un-materialized it re-ran the priority-min join
-        # once per consumer (~4x the round's dominant cost, review r5)
-        got = (
-            pk.join(nbrmin, "id", "left")
-            .where(F.col("_nmin").isNull() | (F.col("pk") < F.col("_nmin")))
+    n_edges = sym.count()
+    rnd = 0
+
+    def step(state: DataFrame, prev) -> tuple[DataFrame, list[DataFrame]]:
+        nonlocal rnd
+        rnd += 1
+        pk = state.where(F.col("st") == 0).select(
+            "id", _priority(F.col("id"), rnd, salt).alias("pk"))
+        nbr = sym.join(
+            pk.select(F.col("id").alias("v"), F.col("pk").alias("_n"))
+            .hint("shuffle_hash"), "v",
+        ).select(F.col("u").alias("id"), "_n")
+        # materialized: otherwise each consumer reruns the E-scale join
+        none = F.lit(None).cast("string")
+        winners = (
+            pk.select("id", "pk", none.alias("_n"))
+            .unionByName(nbr.select("id", none.alias("pk"), "_n"))
+            .groupBy("id")
+            .agg(F.min("pk").alias("pk"), F.min("_n").alias("_n"))
+            .where(F.col("pk").isNotNull()
+                   & (F.col("_n").isNull() | (F.col("pk") < F.col("_n"))))
             .select("id")
-            .transform(ckpt_state, P)
+            .localCheckpoint()
         )
-        winners = got
-        removed = winners.unionByName(
-            sym.join(winners.select(F.col("id").alias("u")), "u")
-            .select(F.col("v").alias("id"))
-        ).distinct().transform(ckpt_state, P)
-        new_und = und.join(removed, "id", "left_anti").transform(ckpt_state, P)
-        new_sym = (
-            sym.join(removed.select(F.col("id").alias("u")), "u", "left_anti")
-            .join(removed.select(F.col("id").alias("v")), "v", "left_anti")
-            .transform(ckpt_state, P)
-        )
-        members = got if members is None else members.unionByName(got).transform(ckpt_state, P)
-        und.unpersist()
-        sym.unpersist()
-        und, sym = new_und, new_sym
-        rounds = r
-        metrics.add(SuperstepMetric(r, (time.monotonic() - t0) * 1000.0, 0, float("nan")))
-        if fixed_rounds is None:
-            if und.limit(1).count() == 0:
-                converged = True
-                break
-    if members is None:
-        members = spark.createDataFrame([], "id long")
-    return MISResult(members.select("id"), rounds, converged, metrics)
+        # sym is symmetric: the winners' v side lists their neighbors
+        gone = sym.join(
+            winners.select(F.col("id").alias("v")).hint("shuffle_hash"), "v"
+        ).select(F.col("u").alias("id"), F.lit(None).cast("int").alias("st"),
+                 F.lit(1).alias("_g"))
+        # st is null only on rows for vertices no longer in the state;
+        # winners join the set, their undecided neighbors leave it
+        return (
+            state.select("id", "st", F.lit(0).alias("_g"))
+            .unionByName(winners.select("id", F.lit(1).alias("st"),
+                                        F.lit(0).alias("_g")))
+            .unionByName(gone)
+            .groupBy("id")
+            .agg(F.max("st").alias("st"), F.max("_g").alias("_g"))
+            .where((F.col("st") == 1) | (F.col("_g") == 0))
+            .select("id", "st")
+        ), [winners]
+
+    res = run_fixpoint(
+        spark,
+        lambda: sym.select(F.col("u").alias("id")).distinct()
+        .select("id", F.lit(0).alias("st")),
+        step, [F.count_if(F.col("st") == 0)],
+        (lambda s, prev: False) if fixed_rounds is not None
+        else (lambda s, prev: s[0] == 0),
+        name="mis", P=P,
+        max_iter=fixed_rounds if fixed_rounds is not None else max_rounds,
+        edges=n_edges,
+    )
+    sym.unpersist()
+    members = res.state.where(F.col("st") == 1).select("id")
+    return MISResult(members, res.iterations, res.converged, res.metrics)

@@ -24,22 +24,23 @@ the DuckDB oracle (unrolled relaxation rounds) matches bit-for-bit.
 Scale shape per round: ONE equi-hash join — the temporal edge table is
 persisted once, hash-partitioned on src, and probed in place by the
 current arrival table; the time guard t >= arr(u) is a post-join FILTER
-on the equi-join row (no range-join machinery, no theta join), followed
-by a min-aggregate keyed dst with map-side partial combine. State is
-one (id, arr) row per reached vertex. Edges never re-exchange.
+on the equi-join row (no range-join machinery, no theta join), then one
+min-aggregate keyed by vertex over the relaxed arrivals and the old
+ones (map-side partial combine). Edges never re-exchange. The round loop
+is plans/fixpoint.py: the state is one table (id, arr, _chg), one row
+per reached vertex, _chg marking an arrival the round lowered; a round
+costs one Spark job, the driver's stats job (changed count).
 """
 
 from __future__ import annotations
 
-import time
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pargraph_spark.session import ckpt_state
-
-from pargraph_spark.plans.metrics import JobMetrics, SuperstepMetric
+from pargraph_spark.plans.fixpoint import run_fixpoint
+from pargraph_spark.plans.metrics import JobMetrics
 
 
 @dataclass
@@ -64,8 +65,8 @@ def earliest_arrival(
     (kept raw: no epoch cast, so no session-timezone reinterpretation).
     A seed without an `arr` column is active from time 0 (numeric t only).
     Unreached vertices are absent from the output (bfs.py convention).
-    fixed_rounds runs exactly that many relaxation rounds with no
-    convergence jobs (oracle parity; identity past the fixpoint).
+    fixed_rounds runs exactly that many relaxation rounds and never
+    stops early (oracle parity; identity past the fixpoint).
 
     Incremental warm start (the pagerank/cc_incremental discipline): on
     an edge append E → E ∪ ΔE, pass the previous run's arrivals unioned
@@ -76,49 +77,48 @@ def earliest_arrival(
     the whole graph's (test_temporal.py pins warm == cold)."""
     P = int(num_partitions or spark.conf.get("spark.sql.shuffle.partitions"))
     te = tedges.select("src", "dst", "t").repartition(P, "src").persist()
-    te.count()
+    n_edges = te.count()
     if "arr" in seeds.columns:
         arr = seeds.select("id", "arr")
     else:
         arr = seeds.select("id", F.lit(0).cast("long").alias("arr"))
-    arr = arr.groupBy("id").agg(F.min("arr").alias("arr")).transform(ckpt_state, P)
-    metrics = JobMetrics("temporal_reach")
-    rounds, converged = 0, False
-    n_rounds = fixed_rounds if fixed_rounds is not None else max_rounds
-    for r in range(1, n_rounds + 1):
-        t0 = time.monotonic()
+
+    def step(state: DataFrame, prev) -> DataFrame:
         relax = (
-            te.join(arr.withColumnRenamed("id", "src"), "src")
+            te.join(state.select(F.col("id").alias("src"), "arr").hint("shuffle_hash"),
+                    "src")
             .where(F.col("t") >= F.col("arr"))
-            .groupBy(F.col("dst").alias("id"))
-            .agg(F.min("t").alias("arr"))
+            .select(F.col("dst").alias("id"), F.col("t").alias("arr"))
         )
-        new_arr = (
-            arr.unionByName(relax)
+        # union + aggregate, not a join: Spark estimates a join as a
+        # product, and the checkpoint carries the estimate on
+        return (
+            state.select("id", "arr", F.lit(True).alias("_own"))
+            .unionByName(relax.withColumn("_own", F.lit(False)))
             .groupBy("id")
-            .agg(F.min("arr").alias("arr"))
-            .transform(ckpt_state, P)
+            .agg(F.min("arr").alias("arr"),
+                 F.min(F.when(F.col("_own"), F.col("arr"))).alias("_old"))
+            .select("id", "arr",
+                    F.coalesce(F.col("arr") < F.col("_old"),
+                               F.col("_old").isNull()).alias("_chg"))
         )
-        if fixed_rounds is None:
-            n_changed = (
-                new_arr.join(
-                    arr.select("id", F.col("arr").alias("_old")), "id", "left"
-                )
-                .where(F.col("_old").isNull() | (F.col("arr") < F.col("_old")))
-                .count()
-            )
-        else:
-            n_changed = float("nan")
-        arr.unpersist()
-        arr = new_arr
-        metrics.add(SuperstepMetric(r, (time.monotonic() - t0) * 1000.0,
-                                    0, float(n_changed)))
-        if fixed_rounds is None and n_changed == 0:
-            converged = True
-            break  # identity round: not counted (kcore semantics)
-        rounds = r
+
+    res = run_fixpoint(
+        spark,
+        lambda: arr.groupBy("id").agg(F.min("arr").alias("arr"))
+        .withColumn("_chg", F.lit(True)),
+        step, [F.count_if("_chg")],
+        (lambda s, prev: False) if fixed_rounds is not None
+        else (lambda s, prev: s[0] == 0),
+        name="temporal_reach", P=P,
+        max_iter=fixed_rounds if fixed_rounds is not None else max_rounds,
+        edges=n_edges,
+    )
     te.unpersist()
-    return TemporalReachResult(arr.select("id", "arr"), rounds, converged, metrics)
+    # the round that changed nothing is not one
+    return TemporalReachResult(res.state.select("id", "arr"),
+                               res.iterations - res.converged, res.converged,
+                               res.metrics)
 
 
 def handoff_edges(
@@ -184,8 +184,8 @@ def temporal_motifs(
     wedge side), src (e2's), and the closing pair key — so every join
     probes its copy in place and only wedge-scale intermediates ever
     shuffle (the hits/salsa dual-copy discipline, extended to the
-    three-role triple join; r5 review fix — a single src-partitioned
-    copy re-exchanged E twice per call).
+    three-role triple join; a single src-partitioned copy would
+    re-exchange E twice per call).
 
     Cites reference behavior only as absent: the reference engine has no
     temporal operators; this extends the same events surface that

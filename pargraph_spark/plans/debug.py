@@ -17,6 +17,8 @@ import os
 
 from pyspark.sql import DataFrame
 
+from pargraph_spark.session import _query_execution
+
 
 def dump_plan(df: DataFrame, name: str) -> None:
     out_dir = os.environ.get("SPARK_GRAFT_PLAN_DUMP")
@@ -28,6 +30,6 @@ def dump_plan(df: DataFrame, name: str) -> None:
         return
     jvm = df.sparkSession._jvm
     mode = jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-    text = df._jdf.queryExecution().explainString(mode)
+    text = _query_execution(df).explainString(mode)
     with open(path, "w") as fh:
         fh.write(text)

@@ -21,6 +21,8 @@ from typing import Any
 
 from pyspark.sql import DataFrame
 
+from pargraph_spark.session import _query_execution
+
 SPEC_VERSION = 1
 
 
@@ -73,7 +75,7 @@ class JobSpec:
 # --------------------------------------------------------------------------
 
 def _jplan(df: DataFrame, which: str):
-    qe = df._jdf.queryExecution()
+    qe = _query_execution(df)
     if which == "optimized":
         return qe.optimizedPlan()
     if which == "analyzed":

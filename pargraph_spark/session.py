@@ -8,10 +8,22 @@ culling, fusion) is Catalyst's job.
 
 from __future__ import annotations
 
+import logging
+import math
 import os
 from contextlib import contextmanager
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+
+log = logging.getLogger(__name__)
+
+ADVISORY_BYTES = 64 << 20  # bytes per partition, the AQE default
+
+
+def _query_execution(df: DataFrame):
+    """The JVM ``QueryExecution`` of ``df``: the one use of the private
+    ``DataFrame._jdf`` handle (checked against PySpark 4.1.2)."""
+    return df._jdf.queryExecution()
 
 
 @contextmanager
@@ -56,7 +68,7 @@ def size_based_partitions(df, cap: int) -> int:
     """Scale-adaptive partition count for an operator's edge/state tables
     (guide §2.2) — the AQE partition-coalescing rule applied manually,
     because the fixpoint loops run under ``no_aqe`` and pin one P for
-    every co-partitioned probe: enough partitions for ~advisory bytes
+    every co-partitioned probe: enough partitions for ``ADVISORY_BYTES``
     each, floored at the session's default parallelism (AQE's
     parallelismFirst semantics — never idle cores to make partitions
     bigger), capped at the caller's ``num_partitions``.
@@ -64,22 +76,20 @@ def size_based_partitions(df, cap: int) -> int:
     The size comes from the optimizer's estimate of the INPUT relation
     (parquet file sizes, cache statistics) — no extra job. When the
     estimate is unusable (join-cardinality guesses, LogicalRDD default
-    of 2^63) the caller's cap is returned unchanged, so this can only
-    REDUCE task-count overhead, never mis-partition real volume.
-    Advisory bytes: $SPARK_GRAFT_ADVISORY_BYTES (default 64 MiB, the AQE
-    default)."""
-    import math
-
+    of 2^63, or an estimate the JVM bridge cannot convert) the caller's
+    cap is returned unchanged, so this can only REDUCE task-count
+    overhead, never mis-partition real volume."""
     spark = df.sparkSession
-    adv = int(os.environ.get("SPARK_GRAFT_ADVISORY_BYTES", str(64 << 20)))
     floor = max(1, min(cap, spark.sparkContext.defaultParallelism))
     try:
-        size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+        size = int(_query_execution(df).optimizedPlan().stats().sizeInBytes())
     except Exception:
+        log.debug("no usable size estimate; keeping %d partitions", cap,
+                  exc_info=True)
         return cap
     if size <= 0 or size >= (1 << 60):  # unknown/unusable estimate
         return cap
-    return max(floor, min(cap, math.ceil(size / adv)))
+    return max(floor, min(cap, math.ceil(size / ADVISORY_BYTES)))
 
 
 def ckpt_state(df, P: int):

@@ -141,3 +141,18 @@ def test_bitruss_fixed_rounds_identity(spark):
     fixed = {(r["u"], r["w"]): r["sup"] for r in
              bitruss(spark, df, k=2, fixed_rounds=8).edges.collect()}
     assert free == fixed
+
+
+def test_bitruss_size_estimate_stays_bounded(spark):
+    # each round's checkpoint carries its plan's size estimate into the
+    # next round; a join with the state multiplies it (Spark estimates a
+    # join as a product), which grew it to ~250,000 digits in 8 rounds
+    from pargraph_spark.session import _query_execution
+
+    rng = random.Random(3)
+    edges = sorted({(rng.randrange(12), 100 + rng.randrange(10))
+                    for _ in range(60)})
+    res = bitruss(spark, spark.createDataFrame(edges, EDGE_SCHEMA), k=2,
+                  fixed_rounds=8)
+    size = _query_execution(res.edges).optimizedPlan().stats().sizeInBytes()
+    assert len(str(size)) < 40

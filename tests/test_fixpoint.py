@@ -4,7 +4,8 @@ A toy fixpoint (min-label propagation on a path) pins what the driver
 promises every operator it runs: one Spark job per superstep plus one
 setup job, and superstep metrics numbered from the resumed superstep on.
 The operators on the driver keep that promise on the same path: their
-own fixed setup jobs, then one job per superstep.
+own fixed setup jobs, then one job per superstep plus the jobs of what a
+step materializes itself.
 """
 
 from __future__ import annotations
@@ -113,18 +114,55 @@ def _wl(spark, e):
     return wl_colors(e, rounds=N, num_partitions=P)
 
 
+def _katz(spark, e):
+    from pargraph_spark.operators.centrality import katz_centrality
+
+    return katz_centrality(spark, e, iters=5, num_partitions=P)
+
+
+def _temporal(spark, e):
+    from pargraph_spark.operators.temporal import earliest_arrival
+
+    seeds = spark.createDataFrame([(0,)], "id long")
+    return earliest_arrival(spark, e.withColumn("t", F.col("src")), seeds,
+                            num_partitions=P)
+
+
+def _mis(spark, e):
+    from pargraph_spark.operators.mis import maximal_independent_set
+
+    return maximal_independent_set(spark, e, num_partitions=P)
+
+
+def _coloring(spark, e):
+    from pargraph_spark.operators.coloring import greedy_coloring
+
+    return greedy_coloring(spark, e, num_partitions=P)
+
+
+def _matching(spark, e):
+    from pargraph_spark.operators.matching import maximal_matching
+
+    return maximal_matching(spark, e, num_partitions=P)
+
+
 # Setup jobs each operator runs before its first superstep: persisting its
-# edge table (AQE runs one job per query stage), landmark selection, and
-# the driver's stats job that materializes the initial state.
-@pytest.mark.parametrize("op,setup_jobs", [
-    (_bfs, 6), (_landmarks, 7), (_core_numbers, 6), (_bitruss, 1), (_wl, 3),
-], ids=["bfs", "landmarks", "core_numbers", "bitruss", "wl"])
-def test_operator_runs_one_job_per_superstep(spark, op, setup_jobs):
+# edge tables (AQE runs one job per query stage), landmark selection, and
+# the driver's stats job that materializes the initial state. Then k jobs
+# per superstep: the stats job, plus what the step materializes itself —
+# the winners of a MIS round, matching's round matches.
+@pytest.mark.parametrize("op,setup_jobs,k", [
+    (_bfs, 6, 1), (_landmarks, 7, 1), (_core_numbers, 6, 1), (_bitruss, 3, 1),
+    (_wl, 3, 1), (_katz, 6, 1), (_temporal, 5, 1), (_mis, 6, 2),
+    (_coloring, 6, 1), (_matching, 1, 2),
+], ids=["bfs", "landmarks", "core_numbers", "bitruss", "wl", "katz",
+        "temporal", "mis", "coloring", "matching"])
+def test_operator_runs_one_job_per_superstep(spark, op, setup_jobs, k):
     e = spark.createDataFrame([(i, i + 1) for i in range(N - 1)], "src long, dst long")
     res, jobs = _jobs(spark, lambda: op(spark, e))
     supersteps = len(res.metrics.supersteps)
     assert supersteps > 1
-    assert jobs == setup_jobs + supersteps
+    assert jobs == setup_jobs + k * supersteps
 
 
 def test_resume_numbers_supersteps_from_the_manifest(spark, tmp_path):

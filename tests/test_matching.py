@@ -50,6 +50,22 @@ def test_matching_matches_oracle(spark):
     assert all(u in mv or v in mv for u, v in und)
 
 
+def test_matching_converged_when_last_round_is_max_rounds(spark):
+    # the last active edge is matched in round max_rounds itself
+    rng = random.Random(7)
+    edges = [(a, b) for a, b in {(rng.randrange(40), rng.randrange(40))
+                                 for _ in range(110)} if a != b]
+    want, rounds, conv = _match_oracle(edges)
+    assert conv and rounds > 1
+    res = maximal_matching(
+        spark, spark.createDataFrame(edges, EDGE_SCHEMA), max_rounds=rounds,
+        num_partitions=4,
+    )
+    assert {(r["u"], r["v"]) for r in res.matches.collect()} == want
+    assert res.rounds == rounds
+    assert res.converged == conv
+
+
 def test_coarsen_graph(spark):
     # path 0-1-2-3-4-5; match {(0,1),(2,3),(4,5)} -> contracted path 0-2-4
     edges = [(i, i + 1) for i in range(5)]
