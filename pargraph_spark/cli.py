@@ -17,6 +17,8 @@ import argparse
 import json
 import sys
 
+from pyspark.sql import SparkSession
+
 from pargraph_spark.plans.linkgraph import build_linkgraph, run_all
 from pargraph_spark.session import get_spark
 from pargraph_spark.synth import generate_pages_spark
@@ -51,6 +53,9 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--tol", type=float, default=1e-9)
     args = ap.parse_args(argv)
 
+    # stop the session only if this call starts it: an in-process caller
+    # (a notebook, the test suite) keeps its own
+    owned = SparkSession.getActiveSession() is None
     spark = get_spark("pargraph-spark-cli", cores=args.cores,
                       shuffle_partitions=args.partitions)
     if args.synth_pages is not None and args.synth_pages < 1:
@@ -428,7 +433,8 @@ def main(argv: list[str] | None = None) -> int:
     ).save(f"{args.output}/jobspec.json")
 
     print(json.dumps(summary))
-    spark.stop()
+    if owned:
+        spark.stop()
     return 0
 
 

@@ -138,12 +138,11 @@ def bitruss(
     the edge-cohesion primitive of bipartite graphs, sitting next to
     k-truss exactly as the butterfly sits next to the triangle.
 
-    Peel loop with INCREMENTAL support maintenance (the ktruss
-    discipline, triangles.py:150-246): wedges are enumerated ONCE up
-    front for the initial supports; every subsequent round enumerates
-    only the butterflies its removed edges participate in (removed ⋈
-    right-adjacency for the co-endpoint b, ⋈ left-adjacency for the
-    second right w2, semi-checked against the round-start graph),
+    Peel loop with INCREMENTAL support maintenance: wedges are
+    enumerated ONCE up front for the initial supports; every subsequent
+    round enumerates only the butterflies its removed edges participate
+    in (removed ⋈ right-adjacency for the co-endpoint b, ⋈ left-adjacency
+    for the second right w2, semi-checked against the round-start graph),
     deduplicated per canonical butterfly quadruple so a butterfly losing
     2+ edges in one round still decrements each survivor exactly once.
     Round cost is proportional to removed-edge butterflies, not a full

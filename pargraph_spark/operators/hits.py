@@ -20,31 +20,37 @@ Vertices without in-edges get authority 0; without out-edges, hub 0.
 Plan shape per iteration: two partial-combined aggregations (groupBy dst
 sum, groupBy src sum), each probing a persisted edge copy CO-PARTITIONED
 on its own probe key — `e_src` (hash(src)) for the forward half-step,
-`e_dst` (hash(dst)) for the backward one — + one broadcast 1-row
-normalizer each. Holding TWO cached copies of the edge table (2× memory,
-spill-safe) buys ZERO E-scale exchanges inside the loop: a single copy
-partitioned on src would re-shuffle the full edge table, on the skewed
-dst key, on every backward half-step. No driver collect in the loop.
+`e_dst` (hash(dst)) for the backward one. Holding TWO cached copies of
+the edge table (2× memory, spill-safe) buys ZERO E-scale exchanges
+inside the loop: a single copy partitioned on src would re-shuffle the
+full edge table, on the skewed dst key, on every backward half-step.
 
 The loop is plans/fixpoint.py, run for exactly `iterations` supersteps;
 one superstep is both half-steps. The state is one table (id, hub,
-authority). The authority half-step feeds the hub half-step and the next
-state, so the step materializes it (a checkpoint job and its
-normalizer's broadcast job) and the driver releases it; the hub
-normalizer's broadcast and the driver's stats job make four Spark jobs
-per superstep. hits() and salsa() share that loop, `_hub_authority`;
-they differ only in the edge annotation and the two per-edge terms.
+authority) whose hub column holds the RAW (unnormalized) hub sums: the
+driver's stats aggregate totals them, and the next superstep (or the
+final output) normalizes with that total as a literal. The authority
+half-step feeds the hub half-step and the next state, so the step
+checkpoints its raw sums and collects their total from the checkpoint.
+Each normalizer thus reads something already materialized, and each
+half-step's E-scale join runs once per superstep: three Spark jobs per
+superstep (the authority checkpoint, its V-scale total, the stats job).
+Raw sums of 2^-30 grid multiples are exact, so a total does not depend
+on the order it is summed in. hits() and salsa() share that loop,
+`_hub_authority`; they differ only in the edge annotation and the two
+per-edge terms.
 """
 
 from __future__ import annotations
 
 from collections.abc import Callable
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pargraph_spark.plans.fixpoint import run_fixpoint
+from pargraph_spark.plans.metrics import JobMetrics
 from pargraph_spark.session import size_based_partitions
 
 GRID = float(1 << 30)  # quantization grid 2^-30 (~1e-9)
@@ -54,19 +60,10 @@ def quantize(c: Column) -> Column:
     return F.round(c * F.lit(GRID)) / F.lit(GRID)
 
 
-def _norm_quant(df: DataFrame, col: str) -> DataFrame:
-    """L1-normalize `col` over the frame (broadcast 1-row total) and
-    quantize."""
-    tot = df.agg(F.coalesce(F.sum(col), F.lit(0.0)).alias("_t"))
-    return (
-        df.crossJoin(F.broadcast(tot))
-        .select(
-            "id",
-            quantize(
-                F.when(F.col("_t") > 0, F.col(col) / F.col("_t")).otherwise(F.lit(0.0))
-            ).alias(col),
-        )
-    )
+def _norm_quant(df: DataFrame, col: str, total: float) -> DataFrame:
+    """L1-normalize `col` by its precomputed `total` and quantize."""
+    return df.withColumn(
+        col, quantize(F.col(col) / F.lit(total) if total > 0 else F.lit(0.0)))
 
 
 def _hub_authority(
@@ -85,7 +82,7 @@ def _hub_authority(
     columns the terms read); each iteration sums `auth_term` (over the
     `hub` column) into authorities by dst, then `hub_term` (over
     `authority`) into hubs by src, L1-normalizing and quantizing after
-    each half-step. Returns ((id, hub, authority), iterations)."""
+    each half-step. Returns ((id, hub, authority), iterations, metrics)."""
     if iterations < 1:
         raise ValueError(f"{name} requires iterations >= 1, got {iterations}")
     P = int(num_partitions or spark.conf.get("spark.sql.shuffle.partitions"))
@@ -111,33 +108,32 @@ def _hub_authority(
     ).repartition(P, "id").persist()
     n = verts.count()
     if n == 0:
-        # empty graph: return the empty frame, don't ZeroDivisionError on
-        # the uniform init
+        # empty graph: return the empty frame (an empty hub total is null)
         verts.unpersist()
         e_src.unpersist()
         e_dst.unpersist()
-        return spark.createDataFrame([], "id long, hub double, authority double"), 0
+        return (spark.createDataFrame([], "id long, hub double, authority double"),
+                0, JobMetrics(name))
 
     def half(e: DataFrame, key: str, out: str, scores: DataFrame, term: Column,
              col: str) -> DataFrame:
         """Sum `term` over e's edges, whose `key` end carries `scores`,
-        into `col` of their `out` end; normalized and quantized."""
+        into `col` of their `out` end, 0 for a vertex with no such edge;
+        not normalized."""
         raw = (
             e.join(scores.withColumnRenamed("id", key).hint("shuffle_hash"), key)
             .groupBy(F.col(out).alias("id"))
             .agg(F.sum(term).alias(col))
         )
-        return _norm_quant(
-            verts.join(raw.hint("shuffle_hash"), "id", "left")
-            .select("id", F.coalesce(col, F.lit(0.0)).alias(col)),
-            col,
-        )
+        return verts.join(raw.hint("shuffle_hash"), "id", "left").select(
+            "id", F.coalesce(col, F.lit(0.0)).alias(col))
 
     def step(state: DataFrame, prev) -> tuple[DataFrame, list[DataFrame]]:
+        hub = _norm_quant(state.select("id", "hub"), "hub", prev["_th"])
         # the authorities feed the hub half-step and the next state, so
-        # they are materialized once
-        a = half(e_src, "src", "dst", state.select("id", "hub"), auth_term,
-                 "authority").localCheckpoint()
+        # their raw sums are materialized once and normalized from there
+        a_raw = half(e_src, "src", "dst", hub, auth_term, "authority").localCheckpoint()
+        a = _norm_quant(a_raw, "authority", a_raw.agg(F.sum("authority")).first()[0])
         h = half(e_dst, "dst", "src", a, hub_term, "hub")
         # union + aggregate, not a join: Spark estimates a join as a
         # product, and the checkpoint carries the estimate on
@@ -147,25 +143,30 @@ def _hub_authority(
             .unionByName(a.select("id", none.alias("hub"), "authority"))
             .groupBy("id")
             .agg(F.max("hub").alias("hub"), F.max("authority").alias("authority"))
-        ), [a]
+        ), [a_raw]
 
+    # raw hub 1.0 everywhere: its total is n, so the first superstep
+    # starts from the uniform quantize(1/n)
     res = run_fixpoint(
         spark,
-        lambda: verts.select("id", quantize(F.lit(1.0 / n)).alias("hub"),
+        lambda: verts.select("id", F.lit(1.0).alias("hub"),
                              F.lit(0.0).alias("authority")),
-        step, [F.count("*")], lambda s, prev: False,
+        step, [F.count("*"), F.sum("hub").alias("_th")], lambda s, prev: False,
         name=name, P=P, max_iter=iterations, edges=n_edges,
+        plan=f"{name}_superstep",
     )
+    scores = _norm_quant(res.state, "hub", res.stats["_th"])
     e_src.unpersist()
     e_dst.unpersist()
     verts.unpersist()
-    return res.state, res.iterations
+    return scores, res.iterations, res.metrics
 
 
 @dataclass
 class HitsResult:
     scores: DataFrame  # (id, hub double, authority double)
     iterations: int
+    metrics: JobMetrics = field(default_factory=lambda: JobMetrics("hits"))
 
 
 def hits(
@@ -185,6 +186,7 @@ def hits(
 class SalsaResult:
     scores: DataFrame  # (id, hub double, authority double)
     iterations: int
+    metrics: JobMetrics = field(default_factory=lambda: JobMetrics("salsa"))
 
 
 def salsa(

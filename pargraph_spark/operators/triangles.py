@@ -9,19 +9,25 @@ hub-heavy (Zipf) web graphs tractable: a degree-10^6 hub is never an apex.
 
 Plan shape: two shuffles (wedge self-join on apex, closing semi-join on
 (lo,hi)), then pure aggregation. Everything JVM-side, no UDFs.
+
+Trusses: truss_numbers is the support h-index fixpoint, run by
+plans/fixpoint.py over one state table (a, b, c, _chg) on hash(a, b),
+ONE Spark job per round (its changed-count aggregate materializes the
+round's checkpoint) plus setup jobs; the triangles are enumerated once,
+up front. ktruss(k) is a filter of it (the edges with trussness ≥ k)
+plus one support count on the kept subgraph.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-import time
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pargraph_spark.operators.edges import canonical_undirected
-from pargraph_spark.plans.metrics import JobMetrics, SuperstepMetric
+from pargraph_spark.plans.fixpoint import run_fixpoint
+from pargraph_spark.plans.metrics import JobMetrics
 
 
 @dataclass
@@ -55,7 +61,7 @@ def _oriented(edges: DataFrame) -> DataFrame:
 def triangle_triples(edges: DataFrame) -> DataFrame:
     """(s, x, y) — every triangle exactly once, vertices in (deg,id) order.
 
-    r6: the oriented edge list is materialized ONCE (eager localCheckpoint)
+    The oriented edge list is materialized ONCE (eager localCheckpoint)
     — it feeds three consumers (both wedge sides and the closing probe),
     and as a plain subtree the whole orientation pipeline (distinct +
     degree aggregate + two joins, ~5 exchanges) re-executed for each; only
@@ -124,151 +130,29 @@ def triangle_count(spark: SparkSession, edges: DataFrame) -> TriangleResult:
     tris = triangle_triples(edges).persist()
     total = tris.count()
     # materialize per_vertex so the E^1.5-scale triples cache can be
-    # RELEASED before return (review r5: it leaked for the session) —
+    # RELEASED before return (else it stays cached for the session) —
     # and reuse triangles_per_vertex's aggregation instead of a copy
     per_vertex = _per_vertex_from_triples(tris).localCheckpoint(eager=True)
     tris.unpersist()
     return TriangleResult(total, per_vertex)
 
 
-@dataclass
-class TrussResult:
-    edges: DataFrame  # (a, b, support) — surviving canonical edges
-    rounds: int
-    metrics: JobMetrics = field(default_factory=lambda: JobMetrics("ktruss"))
-
-
-def ktruss(
-    spark,
-    edges: DataFrame,
-    k: int,
-    max_rounds: int = 100,
-    num_partitions: int | None = None,
-    fixed_rounds: int | None = None,
-) -> TrussResult:
-    """k-truss decomposition (Cohen 2008): the maximal subgraph where
-    every EDGE participates in ≥ k−2 triangles — the edge-cohesion
-    primitive next to the vertex-level k-core (trusses are the standard
-    community-core filter on web/social graphs; every k-truss sits inside
-    the (k−1)-core but is strictly denser).
-
-    Peel loop with INCREMENTAL support maintenance (VERDICT r4 #4):
-    triangles are enumerated exactly ONCE, up front, with the
-    degree-ordered orientation (each triangle at its lowest-degree apex —
-    the triangles_global skew discipline). Every subsequent round only
-    touches the edges it removes: the triangles a removed edge (u,v)
-    participated in are its common neighbors in the round-start graph (a
-    wedge join of the removed set against the current adjacency),
-    deduplicated per triangle, and each dead triangle decrements its
-    surviving edges' support by one. Round cost is therefore
-    proportional to removed-edge wedges, not to re-enumerating the whole
-    graph's triangles — at 100 TB the peel tail (few removals per round)
-    costs near zero instead of a full enumeration per round.
-
-    The removal sequence is identical to recount-and-drop simultaneous
-    peeling (support is maintained exactly, round by round), and the
-    reported support is always measured on the CURRENT surviving graph —
-    at convergence exactly the fixpoint-graph support the recount
-    formulation's terminal identity round produced, so the unrolled
-    recount SQL oracle matches bit-for-bit whenever its round count
-    reaches convergence (rounds past it are identity). Support counts
-    are enumeration-order-invariant, so the oracle's a<b<c enumeration
-    agrees with the degree-ordered one.
-
-    Rounds metric counts only EFFECTIVE rounds (ones that removed an
-    edge); the terminal identity check is not a round — kcore /
-    score_core semantics (ADVICE r4). fixed_rounds runs exactly that
-    many removal steps with no convergence jobs (oracle parity; rounds
-    past exhaustion are identity).
-    """
-    if k < 3:
-        raise ValueError(f"ktruss requires k >= 3, got {k}")
-    P = int(num_partitions or spark.conf.get("spark.sql.shuffle.partitions"))
-    thresh = k - 2
-    und = canonical_undirected(edges)
-    tri = triangle_triples(und.select(F.col("a").alias("src"),
-                                      F.col("b").alias("dst")))
-    sup0 = (
-        tri.select(F.least("s", "x").alias("a"), F.greatest("s", "x").alias("b"))
-        .unionByName(tri.select(F.least("s", "y").alias("a"),
-                                F.greatest("s", "y").alias("b")))
-        .unionByName(tri.select(F.least("x", "y").alias("a"),
-                                F.greatest("x", "y").alias("b")))
-        .groupBy("a", "b")
-        .agg(F.count("*").alias("support"))
+def _triangle_edges(tris: DataFrame) -> DataFrame:
+    """(t, a, b): every triangle of ``tris`` once per edge (a < b), with t
+    its sorted vertex triple."""
+    t = F.array_sort(F.array("s", "x", "y"))
+    return tris.select(t.alias("t")).select(
+        "t",
+        F.inline(F.array(*(
+            F.struct(F.col("t")[i].alias("a"), F.col("t")[j].alias("b"))
+            for i, j in ((0, 1), (0, 2), (1, 2))
+        ))),
     )
-    # (a, b, support) over ALL edges — triangle-less edges carry 0 and
-    # fall in round 1 (thresh = k-2 >= 1)
-    cur = (
-        und.join(sup0, ["a", "b"], "left")
-        .select("a", "b", F.coalesce("support", F.lit(0)).cast("long").alias("support"))
-        .repartition(P, "a")
-        .localCheckpoint(eager=True)
-    )
-    metrics = JobMetrics("ktruss")
-    rounds = 0
-    kept = cur
-    n_rounds = fixed_rounds if fixed_rounds is not None else max_rounds
-    for r in range(1, n_rounds + 1):
-        t0 = time.monotonic()
-        removed = cur.where(F.col("support") < thresh).select("a", "b")
-        if fixed_rounds is None and removed.limit(1).count() == 0:
-            break  # identity round: not counted (kcore semantics)
-        survivors = cur.where(F.col("support") >= thresh)
-        # dead triangles = common neighbors of each removed edge in the
-        # ROUND-START graph; a triangle holding 2-3 removed edges is
-        # enumerated once per removed edge, so dedupe on the sorted triple
-        sym = cur.select(F.col("a").alias("u"), F.col("b").alias("w")).unionByName(
-            cur.select(F.col("b").alias("u"), F.col("a").alias("w"))
-        )
-        # fan out from each removed edge's LOWER-DEGREE endpoint, not its
-        # min-ID one (review r5): a removed edge on a hub otherwise
-        # enumerates hub-degree wedge candidates — the skew the initial
-        # pass's degree orientation exists to avoid. One degree aggregate
-        # over the (shrinking) round-start graph buys the bound.
-        deg = sym.groupBy("u").agg(F.count("*").alias("_dg"))
-        rem = (
-            removed
-            .join(deg.select(F.col("u").alias("a"), F.col("_dg").alias("_da")), "a")
-            .join(deg.select(F.col("u").alias("b"), F.col("_dg").alias("_db")), "b")
-            .select(
-                F.when(F.col("_da") <= F.col("_db"), F.col("a"))
-                .otherwise(F.col("b")).alias("p"),
-                F.when(F.col("_da") <= F.col("_db"), F.col("b"))
-                .otherwise(F.col("a")).alias("q"),
-            )
-        )
-        dead = (
-            rem
-            .join(sym.select(F.col("u").alias("p"), "w"), "p")
-            .join(sym.select(F.col("u").alias("q"), "w"), ["q", "w"])
-            .select(F.array_sort(F.array("p", "q", "w")).alias("t"))
-            .distinct()
-        )
-        dec = (
-            dead.select(F.col("t")[0].alias("a"), F.col("t")[1].alias("b"))
-            .unionByName(dead.select(F.col("t")[0].alias("a"), F.col("t")[2].alias("b")))
-            .unionByName(dead.select(F.col("t")[1].alias("a"), F.col("t")[2].alias("b")))
-            .groupBy("a", "b")
-            .agg(F.count("*").alias("_d"))
-        )
-        cur = (
-            survivors.join(dec, ["a", "b"], "left")
-            .select(
-                "a", "b",
-                (F.col("support") - F.coalesce(F.col("_d"), F.lit(0))).alias("support"),
-            )
-            # lazy (r6): the count below materializes in the same job
-            .localCheckpoint(eager=False)
-        )
-        kept = cur
-        n_after = cur.count()
-        metrics.add(SuperstepMetric(r, (time.monotonic() - t0) * 1000.0,
-                                    n_after, float("nan")))
-        rounds = r
-        if n_after == 0:
-            break
-    return TrussResult(kept, rounds, metrics)
+
+
+def _edge_support(tri_edges: DataFrame) -> DataFrame:
+    """(a, b, support): the number of triangles on each edge in one."""
+    return tri_edges.groupBy("a", "b").agg(F.count("*").alias("support"))
 
 
 @dataclass
@@ -288,34 +172,49 @@ def truss_numbers(
 ) -> TrussNumbersResult:
     """Full truss decomposition: every edge's truss number (the largest k
     such that the edge survives in the k-truss) — the EDGE analogue of
-    core_numbers, answering all of `ktruss(k)` for every k in one job.
+    core_numbers, answering `ktruss(k)` for every k in one fixpoint.
 
     Algorithm: the h-index fixpoint on triangle supports (the edge-level
     counterpart of the Lü et al. coreness H-iteration used by
     core_numbers): initialize t0(e) = support(e); each round, an edge
     looks at every triangle it belongs to, takes v = min of the OTHER
-    two edges' current estimates, and updates to the h-index of its v
-    multiset (largest h with ≥ h triangles of value ≥ h). Estimates are
-    pointwise non-increasing and converge to exactly trussness − 2 (the
-    peel-consistency argument mirrors the vertex case: a fixpoint value
-    t certifies ≥ t triangles whose supporting edges all certify ≥ t);
-    the pytest oracle cross-checks against a direct peel mirror.
-    Triangle-less edges have trussness 2 by convention (every edge is in
-    the 2-truss).
+    two edges' current estimates, and updates to min(H(v multiset),
+    t(e)), H the h-index (largest h with ≥ h triangles of value ≥ h).
+    Estimates are pointwise non-increasing and converge to exactly
+    trussness − 2 (the peel-consistency argument mirrors the vertex
+    case: a fixpoint value t certifies ≥ t triangles whose supporting
+    edges all certify ≥ t); the pytest oracle cross-checks against a
+    direct peel mirror. Triangle-less edges have trussness 2 by
+    convention (every edge is in the 2-truss).
 
-    Plan shape per round (single static triangle table, never
-    re-enumerated): triangles are melted ONCE into (triple, edge) rows
-    persisted partitioned on the edge key, so the per-round estimate
-    join probes in place; the per-triangle gather exchanges 3-row groups
-    keyed by the triple; the h-index uses core_numbers' two-level
-    histogram — neighbor values CLAMP at the edge's own estimate before
-    the (edge, value) combine, so the per-edge window runs over at most
-    t(e)+1 rows, bounded by trussness, never by triangle count (a
-    10^5-triangle edge contributes its triangles only to the map-side
-    combine). Convergence detection = changed-estimate count; rounds
-    counts only rounds that changed something. core_numbers' delta-round
-    tail accelerator would port here verbatim if a long-tail graph needs
-    it.
+    The loop is plans/fixpoint.py. Triangles are enumerated ONCE and
+    melted into (t, a, b) rows persisted on hash(a, b). The state is one
+    table (a, b, c, _chg) on hash(a, b): the estimate of every edge in a
+    triangle and whether the last round lowered it. A superstep
+    materializes only the next state, in ONE Spark job — the driver's
+    count of changed estimates. Inside it:
+
+    - each melted row takes its edge's estimate by a union with the
+      state and a max over the edge key (a window, in place on
+      hash(a, b)), not by a join: Spark estimates a join as the product
+      of its sides, and the checkpoint would carry that estimate into
+      the next round;
+    - the per-triangle gather exchanges 3-row groups keyed by t;
+    - the h-index is core_numbers' two-level histogram: a map-side
+      combine on (edge, value), then a window per edge over its distinct
+      values — a 10^5-triangle edge contributes its triangles only to
+      the combine. The clamp at the edge's own estimate is applied to h
+      itself, H(min(values, c)) = min(H(values), c), so the window is no
+      longer bounded by t(e) + 1 rows, only by the edge's distinct
+      values;
+    - the new estimates combine with the state by union + aggregate.
+
+    fixed_rounds: run exactly that many rounds and never stop early (for
+    oracle parity: rounds past the fixpoint are identity; `converged`
+    stays False because nothing stopped on it). `rounds` counts only
+    rounds that changed an estimate. If max_rounds is hit first, the
+    estimates are a monotone UPPER BOUND on trussness − 2, with
+    converged=False.
     """
     from pyspark.sql import Window
 
@@ -323,39 +222,20 @@ def truss_numbers(
     und = canonical_undirected(edges)
     tri = triangle_triples(und.select(F.col("a").alias("src"),
                                       F.col("b").alias("dst")))
-    t3 = tri.select(F.array_sort(F.array("s", "x", "y")).alias("t"))
-    melt = (
-        t3.select(
-            "t",
-            F.explode(
-                F.array(
-                    F.struct(F.col("t")[0].alias("a"), F.col("t")[1].alias("b")),
-                    F.struct(F.col("t")[0].alias("a"), F.col("t")[2].alias("b")),
-                    F.struct(F.col("t")[1].alias("a"), F.col("t")[2].alias("b")),
-                )
-            ).alias("e"),
-        )
-        .select("t", F.col("e.a").alias("a"), F.col("e.b").alias("b"))
-        .repartition(P, "a", "b")
-        .persist()
-    )
+    # persist, not localCheckpoint: the scan keeps the hash(a, b)
+    # partitioning, so every round reads the melted triangles in place
+    melt = _triangle_edges(tri).repartition(P, "a", "b").persist()
     melt.count()
-    est = (
-        melt.groupBy("a", "b").agg(F.count("*").cast("long").alias("c"))
-        .repartition(P, "a", "b")
-        .localCheckpoint(eager=True)
-    )
-    metrics = JobMetrics("truss_numbers")
-    w = Window.partitionBy("a", "b").orderBy(F.col("x").desc())
-    rounds = 0
-    converged = False
-    # fixed_rounds: exactly that many rounds, no convergence jobs (oracle
-    # parity — identity past the fixpoint, the core_numbers discipline)
-    n_rounds = fixed_rounds if fixed_rounds is not None else max_rounds
-    for r in range(1, n_rounds + 1):
-        t0 = time.monotonic()
-        j = melt.join(est, ["a", "b"])  # co-partitioned: no melt exchange
-        g = j.groupBy("t").agg(
+    edge = Window.partitionBy("a", "b")
+    w = edge.orderBy(F.col("x").desc())
+
+    def step(state: DataFrame, prev) -> DataFrame:
+        est = (
+            melt.unionByName(state.select("a", "b", "c"), allowMissingColumns=True)
+            .withColumn("c", F.max("c").over(edge))
+            .where(F.col("t").isNotNull())
+        )
+        g = est.groupBy("t").agg(
             F.array_sort(F.collect_list(F.struct("a", "b", "c"))).alias("es")
         )
         vals = None
@@ -364,45 +244,88 @@ def truss_numbers(
             part = g.select(
                 F.col("es")[i]["a"].alias("a"),
                 F.col("es")[i]["b"].alias("b"),
-                F.least(F.col("es")[o1]["c"], F.col("es")[o2]["c"]).alias("v"),
+                F.least(F.col("es")[o1]["c"], F.col("es")[o2]["c"]).alias("x"),
             )
             vals = part if vals is None else vals.unionByName(part)
-        hist = (
-            vals.join(est, ["a", "b"])
-            .select("a", "b", F.least("v", "c").alias("x"))
-            .groupBy("a", "b", "x")
-            .agg(F.count("*").alias("cnt"))
-        )
-        new_est = (
-            hist.withColumn("cum", F.sum("cnt").over(w))
+        h = (
+            vals.groupBy("a", "b", "x").agg(F.count("*").alias("cnt"))
+            .withColumn("cum", F.sum("cnt").over(w))
             .groupBy("a", "b")
-            .agg(F.max(F.least(F.col("cum"), F.col("x"))).cast("long").alias("c"))
-            .repartition(P, "a", "b")
-            .localCheckpoint(eager=True)
+            .agg(F.max(F.least(F.col("cum"), F.col("x"))).alias("_h"))
         )
-        if fixed_rounds is None:
-            n_changed = (
-                new_est.join(est.select("a", "b", F.col("c").alias("_old")),
-                             ["a", "b"])
-                .where(F.col("c") != F.col("_old"))
-                .count()
+        return (
+            state.select("a", "b", "c")
+            .unionByName(h, allowMissingColumns=True)
+            .groupBy("a", "b")
+            .agg(F.max("c").alias("c"), F.max("_h").alias("_h"))
+            .select(
+                "a", "b",
+                F.least(F.col("_h"), F.col("c")).alias("c"),
+                (F.col("_h") < F.col("c")).alias("_chg"),
             )
-        else:
-            n_changed = float("nan")
-        est.unpersist()
-        est = new_est
-        metrics.add(SuperstepMetric(r, (time.monotonic() - t0) * 1000.0,
-                                    0, float(n_changed)))
-        if fixed_rounds is None and n_changed == 0:
-            converged = True
-            break  # identity round: not counted (kcore semantics)
-        rounds = r
+        )
+
+    # fixed_rounds: never done, stop at N (identity past the fixpoint)
+    res = run_fixpoint(
+        spark,
+        lambda: _edge_support(melt).select(
+            "a", "b", F.col("support").alias("c"), F.lit(True).alias("_chg")),
+        step,
+        [F.count_if("_chg").alias("changed")],
+        (lambda s, prev: False) if fixed_rounds is not None
+        else (lambda s, prev: s["changed"] == 0),
+        name="truss_numbers", P=P,
+        max_iter=fixed_rounds if fixed_rounds is not None else max_rounds,
+        edges=0,
+    )
     out = (
-        und.join(est, ["a", "b"], "left")
+        und.join(res.state, ["a", "b"], "left")
         .select("a", "b", (F.coalesce(F.col("c"), F.lit(0)) + F.lit(2)).alias("truss"))
     )
-    melt.unpersist()
-    return TrussNumbersResult(out, rounds, converged, metrics)
+    melt.unpersist()  # the state is checkpoint-materialized, lineage-free
+    return TrussNumbersResult(out, res.iterations - res.converged, res.converged,
+                              res.metrics)
+
+
+@dataclass
+class TrussResult:
+    edges: DataFrame  # (a, b, support) — the k-truss, support counted in it
+    rounds: int  # the decomposition's rounds (truss_numbers)
+    converged: bool  # False: the decomposition stopped at max_rounds
+    metrics: JobMetrics = field(default_factory=lambda: JobMetrics("ktruss"))
+
+
+def ktruss(
+    spark,
+    edges: DataFrame,
+    k: int,
+    max_rounds: int = 100,
+    num_partitions: int | None = None,
+) -> TrussResult:
+    """k-truss (Cohen 2008): the maximal subgraph where every EDGE
+    participates in ≥ k−2 triangles — the edge-cohesion primitive next to
+    the vertex-level k-core (trusses are the standard community-core
+    filter on web/social graphs; every k-truss sits inside the (k−1)-core
+    but is strictly denser).
+
+    The k-truss is exactly the edges with trussness ≥ k, so this is a
+    filter of truss_numbers() plus one support count on the kept
+    subgraph: a triangle is in the k-truss iff all three of its edges
+    are, so the subgraph's own triangles give each edge's support in it.
+    `rounds` and `converged` are the decomposition's. A decomposition
+    cut by max_rounds gives upper bounds, so the filter then returns a
+    superset of the k-truss, flagged by converged=False.
+    """
+    if k < 3:
+        raise ValueError(f"ktruss requires k >= 3, got {k}")
+    tn = truss_numbers(spark, edges, max_rounds=max_rounds,
+                       num_partitions=num_partitions)
+    kept = tn.trussness.where(F.col("truss") >= k).select("a", "b")
+    sup = _edge_support(_triangle_edges(triangle_triples(
+        kept.select(F.col("a").alias("src"), F.col("b").alias("dst")))))
+    out = kept.join(sup, ["a", "b"], "left").select(
+        "a", "b", F.coalesce("support", F.lit(0)).cast("long").alias("support"))
+    return TrussResult(out, tn.rounds, tn.converged, tn.metrics)
 
 
 def edge_neighborhood_jaccard(edges: DataFrame) -> DataFrame:
@@ -423,14 +346,8 @@ def edge_neighborhood_jaccard(edges: DataFrame) -> DataFrame:
     und = canonical_undirected(edges).select(
         F.col("a").alias("u"), F.col("b").alias("v")
     )
-    tris = triangle_triples(edges)
-    pairs = (
-        tris.select(F.col("s").alias("a"), F.col("x").alias("b"))
-        .unionByName(tris.select(F.col("s").alias("a"), F.col("y").alias("b")))
-        .unionByName(tris.select(F.col("x").alias("a"), F.col("y").alias("b")))
-        .select(F.least("a", "b").alias("u"), F.greatest("a", "b").alias("v"))
-    )
-    supp = pairs.groupBy("u", "v").agg(F.count("*").alias("common"))
+    supp = _edge_support(_triangle_edges(triangle_triples(edges))).select(
+        F.col("a").alias("u"), F.col("b").alias("v"), F.col("support").alias("common"))
     sym = und.unionByName(und.select(F.col("v").alias("u"), F.col("u").alias("v")))
     deg = sym.groupBy(F.col("u").alias("id")).agg(F.count("*").alias("deg"))
     return (

@@ -4,16 +4,17 @@ The reference runs every graph through one scheduling loop (its
 engine.py:42-129); this is the Spark counterpart for the fixpoint
 operators: pagerank, label_propagation and seeded_label_propagation,
 connected_components, sssp, bfs_distances and landmark_distances,
-core_numbers, bitruss, wl_colors, katz_centrality, earliest_arrival,
-hits and salsa, maximal_independent_set, greedy_coloring and
-maximal_matching. Each keeps its state in ONE table. An operator keeps
+core_numbers, truss_numbers (so also ktruss), bitruss, wl_colors,
+katz_centrality, earliest_arrival, hits and salsa,
+maximal_independent_set, greedy_coloring and maximal_matching. Each
+keeps its state in ONE table. An operator keeps
 its own setup (edge repartition/persist, vertex base, warm start) and
 hands ``run_fixpoint`` three pieces:
 
 - ``step(state, prev_stats)``: the next state as a LAZY plan. It may
   return ``(plan, intermediates)`` when it materialized something of its
   own (connected components' eager large-star output, matching's round
-  matches, the HITS authority half-step); the driver releases those with
+  matches, the raw HITS authorities); the driver releases those with
   the superseded state.
 - ``stats``: aggregate ``Column``s over the state (delta, changed count,
   edge-set signature, ... plus extra scalars the next step needs, such as

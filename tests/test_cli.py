@@ -1,6 +1,8 @@
 from __future__ import annotations
 
+import json
 import math
+import os
 
 from pargraph_spark.operators.extract_links import extract_links
 from pargraph_spark.operators.edges import build_edges
@@ -9,6 +11,8 @@ from pargraph_spark.sources.pages import latest_pages
 from pargraph_spark.synth import pages_df_local
 
 from .oracles import pagerank_oracle
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def test_linkgraph_pipeline_end_to_end(spark, tmp_path):
@@ -64,161 +68,83 @@ def test_plan_dot_and_json(spark):
     assert "HashAggregate" in dot and "Range" in dot
 
 
-def test_cli_kcore_and_hosts_jobs(tmp_path):
-    import json
-    import subprocess
-    import sys
+def _run_job(spark, capsys, job, out, *extra):
+    """Run one CLI job in this process, on the shared session (the cli
+    stops only a session it started); returns its printed summary."""
+    from pargraph_spark.cli import main
 
+    capsys.readouterr()
+    shuffle = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        assert main([job, "--synth-pages", "300", "--output", out,
+                     "--cores", "2", "--partitions", "4", *extra]) == 0
+    finally:
+        # the cli's get_spark pins --partitions on the shared session; the
+        # tests after this one must not inherit it
+        spark.conf.set("spark.sql.shuffle.partitions", shuffle)
+    summary = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert job in summary, summary
+    return summary
+
+
+def test_cli_kcore_and_hosts_jobs(spark, capsys, tmp_path):
     for job, extra in (("kcore", ["--k", "2"]), ("hosts", [])):
-        out = str(tmp_path / job)
-        proc = subprocess.run(
-            [sys.executable, "-m", "pargraph_spark.cli", job,
-             "--synth-pages", "300", "--output", out,
-             "--cores", "2", "--partitions", "4", *extra],
-            capture_output=True, text=True, cwd="/root/repo", timeout=420,
-        )
-        assert proc.returncode == 0, proc.stderr[-2000:]
-        summary = json.loads(proc.stdout.strip().splitlines()[-1])
-        assert job in summary, summary
+        _run_job(spark, capsys, job, str(tmp_path / job), *extra)
     # artifacts exist
-    import os
-
     assert os.path.isdir(str(tmp_path / "kcore" / "kcore.parquet"))
     assert os.path.isdir(str(tmp_path / "hosts" / "host_ranks.parquet"))
 
 
-def test_cli_corenums_reach_stats_jobs(tmp_path):
-    import json
-    import os
-    import subprocess
-    import sys
-
+def test_cli_corenums_reach_stats_jobs(spark, capsys, tmp_path):
     for job, extra in (("corenums", []), ("reach", ["--hops", "2", "--k", "8"]),
                        ("stats", [])):
-        out = str(tmp_path / job)
-        proc = subprocess.run(
-            [sys.executable, "-m", "pargraph_spark.cli", job,
-             "--synth-pages", "300", "--output", out,
-             "--cores", "2", "--partitions", "4", *extra],
-            capture_output=True, text=True, cwd="/root/repo", timeout=420,
-        )
-        assert proc.returncode == 0, proc.stderr[-2000:]
-        summary = json.loads(proc.stdout.strip().splitlines()[-1])
-        assert job in summary, summary
+        _run_job(spark, capsys, job, str(tmp_path / job), *extra)
     assert os.path.isdir(str(tmp_path / "corenums" / "core_numbers.parquet"))
     assert os.path.isdir(str(tmp_path / "reach" / "reach.parquet"))
     assert os.path.isdir(str(tmp_path / "stats" / "knn_profile.parquet"))
 
 
-def test_cli_truss_jobs(tmp_path):
-    import json
-    import os
-    import subprocess
-    import sys
-
+def test_cli_truss_jobs(spark, capsys, tmp_path):
     for job, extra in (("truss", ["--k", "3"]), ("trussnums", [])):
-        out = str(tmp_path / job)
-        proc = subprocess.run(
-            [sys.executable, "-m", "pargraph_spark.cli", job,
-             "--synth-pages", "300", "--output", out,
-             "--cores", "2", "--partitions", "4", *extra],
-            capture_output=True, text=True, cwd="/root/repo", timeout=420,
-        )
-        assert proc.returncode == 0, proc.stderr[-2000:]
-        summary = json.loads(proc.stdout.strip().splitlines()[-1])
-        assert job in summary, summary
+        _run_job(spark, capsys, job, str(tmp_path / job), *extra)
     assert os.path.isdir(str(tmp_path / "truss" / "ktruss.parquet"))
     assert os.path.isdir(str(tmp_path / "trussnums" / "truss_numbers.parquet"))
 
 
-def test_cli_scc_bowtie_katz_communities_jobs(tmp_path):
-    import json
-    import os
-    import subprocess
-    import sys
-
+def test_cli_scc_bowtie_katz_communities_jobs(spark, capsys, tmp_path):
     for job in ("scc", "bowtie", "katz", "communities"):
-        out = str(tmp_path / job)
-        proc = subprocess.run(
-            [sys.executable, "-m", "pargraph_spark.cli", job,
-             "--synth-pages", "300", "--output", out,
-             "--cores", "2", "--partitions", "4"],
-            capture_output=True, text=True, cwd="/root/repo", timeout=420,
-        )
-        assert proc.returncode == 0, proc.stderr[-2000:]
-        summary = json.loads(proc.stdout.strip().splitlines()[-1])
-        assert job in summary, summary
+        _run_job(spark, capsys, job, str(tmp_path / job))
     assert os.path.isdir(str(tmp_path / "scc" / "scc.parquet"))
     assert os.path.isdir(str(tmp_path / "bowtie" / "bowtie.parquet"))
     assert os.path.isdir(str(tmp_path / "katz" / "katz.parquet"))
     assert os.path.isdir(str(tmp_path / "communities" / "labels.parquet"))
 
 
-def test_cli_betweenness_spammass_densest_jobs(tmp_path):
-    import json
-    import os
-    import subprocess
-    import sys
-
+def test_cli_betweenness_spammass_densest_jobs(spark, capsys, tmp_path):
     for job, extra in (("betweenness", ["--k", "5", "--hops", "2"]),
                        ("spammass", ["--k", "7", "--hops", "1"]),
                        ("densest", [])):
-        out = str(tmp_path / job)
-        proc = subprocess.run(
-            [sys.executable, "-m", "pargraph_spark.cli", job,
-             "--synth-pages", "300", "--output", out,
-             "--cores", "2", "--partitions", "4", *extra],
-            capture_output=True, text=True, cwd="/root/repo", timeout=420,
-        )
-        assert proc.returncode == 0, proc.stderr[-2000:]
-        summary = json.loads(proc.stdout.strip().splitlines()[-1])
-        assert job in summary, summary
+        _run_job(spark, capsys, job, str(tmp_path / job), *extra)
     assert os.path.isdir(str(tmp_path / "betweenness" / "betweenness.parquet"))
     assert os.path.isdir(str(tmp_path / "spammass" / "spam_mass.parquet"))
     assert os.path.isdir(str(tmp_path / "densest" / "densest_vertices.parquet"))
 
 
-def test_cli_temporalreach_job(tmp_path):
-    import json
-    import os
-    import subprocess
-    import sys
-
+def test_cli_temporalreach_job(spark, capsys, tmp_path):
     out = str(tmp_path / "tr")
-    proc = subprocess.run(
-        [sys.executable, "-m", "pargraph_spark.cli", "temporalreach",
-         "--synth-pages", "300", "--output", out,
-         "--cores", "2", "--partitions", "4", "--hops", "3"],
-        capture_output=True, text=True, cwd="/root/repo", timeout=420,
-    )
-    assert proc.returncode == 0, proc.stderr[-2000:]
-    summary = json.loads(proc.stdout.strip().splitlines()[-1])
+    summary = _run_job(spark, capsys, "temporalreach", out, "--hops", "3")
     assert summary["temporalreach"]["reached"] > 0, summary
     assert os.path.isdir(os.path.join(out, "temporal_reach.parquet"))
 
 
-def test_cli_wl_localcluster_textrank_effdiam_jobs(tmp_path):
-    import json
-    import os
-    import subprocess
-    import sys
-
+def test_cli_wl_localcluster_textrank_effdiam_jobs(spark, capsys, tmp_path):
     for job, extra in (
         ("wlroles", ["--hops", "3"]),
         ("localcluster", ["--k", "2"]),
         ("textrank", ["--k", "5", "--hops", "4"]),
         ("effdiam", ["--hops", "3", "--k", "8"]),
     ):
-        out = str(tmp_path / job)
-        proc = subprocess.run(
-            [sys.executable, "-m", "pargraph_spark.cli", job,
-             "--synth-pages", "300", "--output", out,
-             "--cores", "2", "--partitions", "4", *extra],
-            capture_output=True, text=True, cwd="/root/repo", timeout=420,
-        )
-        assert proc.returncode == 0, proc.stderr[-2000:]
-        summary = json.loads(proc.stdout.strip().splitlines()[-1])
-        assert job in summary, summary
+        summary = _run_job(spark, capsys, job, str(tmp_path / job), *extra)
         if job == "textrank":
             # the pages contract leaves raw `text` NULL — the job must
             # run over graph.extracted and actually find keywords
@@ -229,16 +155,13 @@ def test_cli_wl_localcluster_textrank_effdiam_jobs(tmp_path):
     assert os.path.isdir(str(tmp_path / "textrank" / "keywords.parquet"))
 
 
-def test_cli_curate_job_funnel(tmp_path):
+def test_cli_curate_job_funnel(spark, tmp_path):
+    # the spark-submit smoke test: the one job run as `python -m` in its
+    # own JVM, with --cores
     import datetime
-    import json
-    import os
     import subprocess
     import sys
 
-    from pargraph_spark.session import get_spark
-
-    spark = get_spark(cores=2, shuffle_partitions=4)
     t = datetime.datetime(2026, 3, 1)
 
     def page(url, body):
@@ -266,7 +189,7 @@ def test_cli_curate_job_funnel(tmp_path):
         [sys.executable, "-m", "pargraph_spark.cli", "curate",
          "--pages", src, "--output", out, "--cores", "2",
          "--partitions", "4"],
-        capture_output=True, text=True, cwd="/root/repo", timeout=420,
+        capture_output=True, text=True, cwd=REPO, timeout=420,
     )
     assert proc.returncode == 0, proc.stderr[-2000:]
     summary = json.loads(proc.stdout.strip().splitlines()[-1])["curate"]

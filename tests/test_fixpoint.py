@@ -114,6 +114,20 @@ def _wl(spark, e):
     return wl_colors(e, rounds=N, num_partitions=P)
 
 
+def _truss_numbers(spark, e):
+    # the path has no triangles: a random graph whose decomposition
+    # cascades for 8 rounds
+    import random
+
+    from pargraph_spark.operators.triangles import truss_numbers
+
+    rng = random.Random(11)
+    edges = {(rng.randrange(25), rng.randrange(25)) for _ in range(140)}
+    return truss_numbers(
+        spark, spark.createDataFrame([(s, d) for s, d in edges if s != d], e.schema),
+        num_partitions=P)
+
+
 def _katz(spark, e):
     from pargraph_spark.operators.centrality import katz_centrality
 
@@ -126,6 +140,12 @@ def _temporal(spark, e):
     seeds = spark.createDataFrame([(0,)], "id long")
     return earliest_arrival(spark, e.withColumn("t", F.col("src")), seeds,
                             num_partitions=P)
+
+
+def _hits(spark, e):
+    from pargraph_spark.operators.hits import hits
+
+    return hits(spark, e, iterations=5, num_partitions=P)
 
 
 def _mis(spark, e):
@@ -150,19 +170,26 @@ def _matching(spark, e):
 # edge tables (AQE runs one job per query stage), landmark selection, and
 # the driver's stats job that materializes the initial state. Then k jobs
 # per superstep: the stats job, plus what the step materializes itself —
-# the winners of a MIS round, matching's round matches.
+# the winners of a MIS round, matching's round matches, the raw HITS
+# authorities and their total. truss_numbers' setup enumerates triangles,
+# whose eager checkpoint of the oriented edges runs under AQE with runtime
+# broadcasts; it took 15 or 16 jobs from one call to the next on the same
+# graph in one session, so its setup is pinned to that pair (its 9
+# supersteps still tell k = 1 from k = 2 apart).
 @pytest.mark.parametrize("op,setup_jobs,k", [
     (_bfs, 6, 1), (_landmarks, 7, 1), (_core_numbers, 6, 1), (_bitruss, 3, 1),
-    (_wl, 3, 1), (_katz, 6, 1), (_temporal, 5, 1), (_mis, 6, 2),
-    (_coloring, 6, 1), (_matching, 1, 2),
-], ids=["bfs", "landmarks", "core_numbers", "bitruss", "wl", "katz",
-        "temporal", "mis", "coloring", "matching"])
+    (_wl, 3, 1), (_truss_numbers, (15, 16), 1), (_katz, 6, 1),
+    (_temporal, 5, 1), (_hits, 16, 3), (_mis, 6, 2), (_coloring, 6, 1),
+    (_matching, 1, 2),
+], ids=["bfs", "landmarks", "core_numbers", "bitruss", "wl", "truss_numbers",
+        "katz", "temporal", "hits", "mis", "coloring", "matching"])
 def test_operator_runs_one_job_per_superstep(spark, op, setup_jobs, k):
     e = spark.createDataFrame([(i, i + 1) for i in range(N - 1)], "src long, dst long")
     res, jobs = _jobs(spark, lambda: op(spark, e))
     supersteps = len(res.metrics.supersteps)
     assert supersteps > 1
-    assert jobs == setup_jobs + k * supersteps
+    setups = setup_jobs if isinstance(setup_jobs, tuple) else (setup_jobs,)
+    assert jobs - k * supersteps in setups, (jobs, supersteps)
 
 
 def test_resume_numbers_supersteps_from_the_manifest(spark, tmp_path):
