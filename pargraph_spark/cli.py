@@ -52,14 +52,33 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--damping", type=float, default=0.85)
     ap.add_argument("--tol", type=float, default=1e-9)
     args = ap.parse_args(argv)
-
-    # stop the session only if this call starts it: an in-process caller
-    # (a notebook, the test suite) keeps its own
-    owned = SparkSession.getActiveSession() is None
-    spark = get_spark("pargraph-spark-cli", cores=args.cores,
-                      shuffle_partitions=args.partitions)
     if args.synth_pages is not None and args.synth_pages < 1:
         ap.error("--synth-pages must be >= 1")
+
+    # an in-process caller (a notebook, the test suite) keeps its session:
+    # stop the session only if this call starts it, else restore the conf
+    # that get_spark set on it (--partitions, AQE, ...)
+    active = SparkSession.getActiveSession()
+    conf = active and active.conf.getAll
+    spark = get_spark("pargraph-spark-cli", cores=args.cores,
+                      shuffle_partitions=args.partitions)
+    try:
+        _run(spark, args)
+    finally:
+        if active is None:
+            spark.stop()
+        else:
+            # getOrCreate records every builder option in the SQL conf,
+            # ignored ones (spark.master) too, which spark.conf refuses
+            jconf = spark._jsparkSession.sessionState().conf()
+            for key in set(spark.conf.getAll) - set(conf):
+                jconf.unsetConf(key)
+            for key, value in conf.items():
+                jconf.setConfString(key, value)
+    return 0
+
+
+def _run(spark: SparkSession, args: argparse.Namespace) -> None:
     pages = (
         generate_pages_spark(spark, args.synth_pages, seed=42)
         if args.synth_pages is not None
@@ -433,9 +452,6 @@ def main(argv: list[str] | None = None) -> int:
     ).save(f"{args.output}/jobspec.json")
 
     print(json.dumps(summary))
-    if owned:
-        spark.stop()
-    return 0
 
 
 if __name__ == "__main__":

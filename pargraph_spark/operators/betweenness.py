@@ -22,26 +22,32 @@ sum EXACTLY in doubles (fixed-point in disguise), so level sums, source
 sums, and the final BC are order-independent — the engine and the oracle
 agree to the bit with no output rounding at all.
 
-Plan shape: the edge table is persisted ONCE partitioned on src and
-probed in place by every forward and backward level (both phases join on
-e.src — forward expands v→dst, backward enumerates v's successors), so
-the loop performs ZERO E-scale exchanges (the pagerank/core_numbers
-discipline). All per-level state is (source, vertex)-scale: frontier
-rows (s, v, σ) forward, (s, v, σ, δ) backward; with |S| sampled sources
-the state is |S|·V, the knob that makes the operator budgetable at
-100 TB. Frontiers and the visited set are eagerly localCheckpointed
-(lineage truncation — see the forward-loop comment); levels are retained
-for the backward pass (h is small by design).
+Plan shape: the forward pass is plans/fixpoint.py over ONE state table
+(s, v, sigma, dist) on hash(s, v): every (source, vertex) pair reached
+so far, with its path count and distance. A level costs ONE Spark job,
+the driver's (count, max dist, sources) aggregate. Its step takes the
+frontier (dist = the last level), joins it against the persisted
+hash(src) adjacency in place (bfs._adjacency: no E-scale exchange), sums
+the path counts per (s, v), anti-joins the state in place and unions the
+new level into it — so neither the edge table nor the visited set is
+re-shuffled per level; only the frontier and its messages move, at
+(s, v) scale. The pass stops when a level adds no pair. The backward
+pass reads level d as the state's dist = d rows and probes the same
+adjacency; its delta levels are lazily checkpointed and materialized by
+the one eager scores checkpoint. With |S| sampled sources the state is
+|S|·V, the knob that makes the operator budgetable at 100 TB.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pargraph_spark.operators.bfs import _adjacency
 from pargraph_spark.plans.debug import dump_plan
+from pargraph_spark.plans.fixpoint import _release, run_fixpoint
 from pargraph_spark.plans.metrics import JobMetrics
 from pargraph_spark.session import no_aqe, size_based_partitions
 
@@ -57,7 +63,7 @@ class BetweennessResult:
     scores: DataFrame  # (id, bc double) — bounded-distance betweenness
     max_depth: int
     n_sources: int
-    metrics: JobMetrics = field(default_factory=lambda: JobMetrics("betweenness"))
+    metrics: JobMetrics  # the forward pass's superstep metrics
 
 
 def betweenness(
@@ -85,25 +91,10 @@ def betweenness(
         raise ValueError(f"betweenness requires max_depth >= 1, got {max_depth}")
     P = int(num_partitions or spark.conf.get("spark.sql.shuffle.partitions"))
     P = size_based_partitions(edges, P)  # guide §2.2, size-derived cap
-    base = edges.where(F.col("src") != F.col("dst")).select("src", "dst")
-    if directed:
-        # one E-scale setup exchange (r6, the scc idiom): partition on the
-        # probe key, dedupe in place
-        e = base.repartition(P, "src").dropDuplicates(["src", "dst"]).persist()
-    else:
-        und = (
-            base.select(F.least("src", "dst").alias("src"),
-                        F.greatest("src", "dst").alias("dst"))
-            .distinct()
-        )
-        e = (
-            und.unionByName(
-                und.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-            )
-            .repartition(P, "src")
-            .persist()
-        )
-    e.count()
+    adj, n_adj = _adjacency(edges, not directed, P)
+    # the same hash(u) table under the backward chain's names (a renaming
+    # projection keeps the partitioning)
+    e = adj.select(F.col("u").alias("src"), F.col("v").alias("dst"))
     verts = (
         e.select(F.col("src").alias("id"))
         .unionByName(e.select(F.col("dst").alias("id")))
@@ -112,60 +103,45 @@ def betweenness(
         .persist()
     )
     # duplicate seed ids would silently double sigma and every delta
-    # contribution (ADVICE r5) — dedup here instead of documenting a
-    # uniqueness precondition (all in-repo callers already pass distinct
-    # sets, so results are unchanged)
+    # contribution — dedup here instead of documenting a uniqueness
+    # precondition
     srcs = (sources.select("id").distinct() if sources is not None else verts)
 
     # ---- forward: level-synchronous multi-source BFS with path counts ----
-    # Frontier/visited state is (source, vertex)-scale; each level is
-    # eagerly localCheckpointed to truncate lineage (the anti-join over a
-    # growing visited union otherwise compounds the logical plan
-    # exponentially — observed as a driver OOM merely STRINGIFYING the
-    # plan at depth 4). e keeps its src partitioning; the checkpointed
-    # frontier re-shuffles at its own (small) scale per level.
-    with no_aqe(spark, P):
-        cur = srcs.select(
-            F.col("id").alias("s"), F.col("id").alias("v"),
-            F.lit(1).cast("long").alias("sigma"),
-        ).repartition(P, "v").localCheckpoint(eager=False)
-        n_sources = cur.count()  # materializes the lazy checkpoint (one job)
-        visited = (
-            cur.select("s", "v").repartition(P, "s", "v").localCheckpoint(eager=True)
+    def step(state: DataFrame, prev) -> DataFrame:
+        hop = prev["hop"] or 0  # None: no sources, nothing to expand
+        frontier = state.where(F.col("dist") == hop)
+        # path counts sum per (s, v); the aggregate leaves hash(s, v), so
+        # the anti-join probes the state in place
+        nxt = (
+            e.join(frontier.hint("shuffle_hash"), e["src"] == frontier["v"])
+            .groupBy(frontier["s"].alias("s"), e["dst"].alias("v"))
+            .agg(F.sum("sigma").alias("sigma"))
+            .join(state.select("s", "v").hint("shuffle_hash"), ["s", "v"], "left_anti")
+            .withColumn("dist", F.lit(hop + 1))
         )
-        levels: list[DataFrame] = [cur]
-        dead_frontiers: list[DataFrame] = []  # empty nxt checkpoints, released at end
-        for _d in range(1, max_depth + 1):
-            prev = levels[-1]
-            msg = (
-                e.join(prev.hint("shuffle_hash"), e["src"] == prev["v"])
-                .groupBy(prev["s"].alias("s"), e["dst"].alias("v"))
-                .agg(F.sum("sigma").alias("sigma"))
-            )
-            # msg (aggregate output) and visited (checkpointed) are both
-            # hash(s, v, P): the anti-join needs no exchange under no_aqe
-            nxt = (
-                msg.join(visited.hint("shuffle_hash"), ["s", "v"], "left_anti")
-                .repartition(P, "v")
-            )
-            dump_plan(nxt, "betweenness_forward_level")
-            # lazy (r6): the emptiness count below materializes the level
-            # in the same job — one job per forward level instead of two
-            nxt = nxt.localCheckpoint(eager=False)
-            if nxt.count() == 0:
-                dead_frontiers.append(nxt)
-                break
-            old_visited = visited
-            visited = (
-                visited.unionByName(nxt.select("s", "v"))
-                .repartition(P, "s", "v")
-                .localCheckpoint(eager=True)
-            )
-            # only the latest visited union is ever probed again — release the
-            # superseded (|S|·V)-scale copy immediately (ADVICE r5 leak class)
-            old_visited.unpersist()
-            levels.append(nxt)
+        return state.unionByName(nxt)
 
+    res = run_fixpoint(
+        spark,
+        lambda: srcs.select(
+            F.col("id").alias("s"), F.col("id").alias("v"),
+            F.lit(1).cast("long").alias("sigma"), F.lit(0).alias("dist"),
+        ).repartition(P, "s", "v"),
+        step,
+        [F.count("*").alias("n"), F.max("dist").alias("hop"),
+         F.count_if(F.col("dist") == 0).alias("n_src")],
+        lambda s, prev: s["n"] == prev["n"],
+        name="betweenness", P=P, max_iter=max_depth, edges=n_adj,
+        delta=lambda s, prev: float(s["n"] - prev["n"]),  # new pairs
+        plan="betweenness_forward_level",
+    )
+    levels = [
+        res.state.where(F.col("dist") == d).select("s", "v", "sigma")
+        for d in range((res.stats["hop"] or 0) + 1)
+    ]
+
+    with no_aqe(spark, P):
         # ---- backward: dependency accumulation, deepest level first ----
         # delta[d] carries (s, v, sigma, delta); the deepest level has δ = 0.
         deltas: list[DataFrame | None] = [None] * len(levels)
@@ -197,16 +173,12 @@ def betweenness(
                 )
             )
             dump_plan(dd, "betweenness_backward_level")
-            # lazy: no action runs per level, so nothing is materialized
-            # here. The WHOLE delta chain (every level's dd, down to
-            # deltas[1]) is computed and cached inside the one scores job
-            # below, an EAGER checkpoint downstream of all of them; with
+            # lazy: the WHOLE delta chain is computed and cached inside
+            # the one eager scores job below; with
             # checkpointAllMarkedAncestors off, that job truncates only the
-            # outermost marked RDD's lineage, so the intermediate deltas
-            # keep theirs. Until scores materializes, every level, `e` and
-            # every deltas[d] is still needed to compute the chain: none of
-            # them may be unpersisted before it (the unpersist sweep at the
-            # end runs after it).
+            # outermost marked RDD's lineage. Until scores materializes,
+            # the state, `e` and every deltas[d] are still needed: the
+            # release at the end runs after it.
             deltas[d] = dd.localCheckpoint(eager=False)
 
         if len(levels) > 1:
@@ -221,19 +193,10 @@ def betweenness(
             .select("id", F.coalesce("bc", F.lit(0.0)).alias("bc"))
         )
         scores = scores.localCheckpoint(eager=True)
-    # scores is materialized and independent — release EVERY iteration
-    # cache: forward levels, backward deltas, the final visited union and
-    # any empty terminal frontier ((|S|·V)-scale each, ~3(h+1) tables; the
-    # ADVICE r5 leak — they pinned block-manager memory for the session
-    # and pressured every subsequent job in the app)
-    e.unpersist()
+    # scores is materialized and independent: free the adjacency, the
+    # vertex set, the forward state and the backward delta levels
+    adj.unpersist()
     verts.unpersist()
-    visited.unpersist()
-    for df in levels:
-        df.unpersist()
-    for df in deltas:
-        if df is not None:
-            df.unpersist()
-    for df in dead_frontiers:
-        df.unpersist()
-    return BetweennessResult(scores, max_depth, n_sources)
+    for df in (res.state, *deltas[1:]):
+        _release(df)
+    return BetweennessResult(scores, max_depth, res.stats["n_src"], res.metrics)

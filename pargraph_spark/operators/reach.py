@@ -18,13 +18,15 @@ gate), which register-based HLL can never do cross-engine. Accuracy is
 the standard KMV bound (relative s.d. ≈ 1/√(k−2)); balls smaller than k
 are EXACT (the sketch holds the whole ball).
 
-Scale shape per round: sketch rows (v, h) live hash-partitioned; the
-propagation join sym⋈rows is one co-partitionable exchange; the
-(v, h)-keyed distinct partial-combines map-side; the per-vertex top-k
-compiles to WindowGroupLimit, whose Partial stage bounds what a
-10^8-degree hub ships to k rows per map task BEFORE the exchange to v.
-State per vertex is ≤ k rows × 16 B — 10^12 vertices × k=8 ≈ the size
-of one rank vector, not of the graph.
+Plan shape: the hop loop is plans/fixpoint.py over ONE state table
+(t, v, h) on hash(v), one Spark job per hop. The propagation join probes
+the persisted hash(u) adjacency (bfs._adjacency, shared with hll_reach)
+in place; the (v, h)-keyed distinct partial-combines map-side; the
+per-vertex top-k compiles to WindowGroupLimit, whose Partial stage
+bounds what a 10^8-degree hub ships to k rows per map task. kmv_reach
+keeps only the last hop; harmonic centrality and the effective diameter
+read every hop t from the same table. State per vertex and hop is ≤ k
+rows × 16 B — 10^12 vertices × k=8 ≈ the size of one rank vector.
 """
 
 from __future__ import annotations
@@ -32,86 +34,79 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pargraph_spark.operators.edges import symmetrize
-from pargraph_spark.plans.debug import dump_plan
-from pargraph_spark.session import no_aqe, size_based_partitions
+from pargraph_spark.operators.bfs import _adjacency
+from pargraph_spark.plans.fixpoint import _release, run_fixpoint
+from pargraph_spark.session import size_based_partitions
 
 _HEX_BITS = 60  # 15 hex chars of md5 — fits BIGINT exactly in both engines
 
 
-def _h15(col):
-    """15-hex-char md5 prefix: fixed-width lowercase hex, so LEXICOGRAPHIC
-    order == numeric order (sketches sort as strings; only the final
-    estimator parses the k-th value to an integer)."""
-    return F.substring(F.md5(col.cast("string").cast("binary")), 1, 15)
-
-
 def _h60(col):
-    """The same 60-bit hash as a BIGINT. r6 (guide §2.3, narrower types):
-    sketch rows used to carry the 15-char hex STRING through every
-    propagation exchange (~23 B + offsets per value); as a long they are
-    8 B and compare as integers. Fixed-width lowercase hex sorts
-    lexicographically exactly as the integer sorts numerically, so min/
-    max/top-k over the long sketch select the SAME values and the final
-    estimator sees identical operands — outputs are bit-identical."""
-    return F.conv(_h15(col), 16, 10).cast("bigint")
+    """The 15-hex-char md5 prefix of ``col`` as a 60-bit BIGINT (guide
+    §2.3, narrower types: 8 B per sketch value in every exchange, not a
+    ~23 B string). Fixed-width hex sorts as its integer does, so min/max/
+    top-k select the same values as over the hex strings the DuckDB
+    oracle uses, and the estimator sees identical operands."""
+    return F.conv(F.substring(F.md5(col.cast("string").cast("binary")), 1, 15),
+                  16, 10).cast("bigint")
 
 
-def _propagate(spark, edges, hops: int, k: int, P: int,
-               keep_all: bool = False):
-    """Run the KMV sketch-propagation loop; returns the final sketch rows
-    (v, h), or a list [rows_0 .. rows_hops] when keep_all (each
-    localCheckpoint-materialized — intermediate hops stay valid)."""
+def _propagate(spark, edges, hops: int, k: int, num_partitions: int | None,
+               keep_all: bool = False) -> DataFrame:
+    """Run the KMV sketch-propagation loop; returns the checkpointed
+    sketch rows (t, v, h) of the last hop (t = hops), or of every hop
+    0..hops when keep_all."""
     from pyspark.sql import Window
 
+    P = int(num_partitions or spark.conf.get("spark.sql.shuffle.partitions"))
     P = size_based_partitions(edges, P)  # guide §2.2, size-derived cap
-    # persist retains hash(u) outputPartitioning across hops; a
-    # localCheckpoint scan under AQE would report unknown partitioning and
-    # force an E-scale exchange of sym every hop (the core_numbers r4 fix)
-    sym = symmetrize(edges).repartition(P, "u").persist()
-    sym.count()
-    with no_aqe(spark, P):
-        verts = sym.select(F.col("u").alias("v")).distinct()
-        rows = verts.select("v", _h60(F.col("v")).alias("h")).repartition(P, "v")
-        rows = rows.localCheckpoint(eager=True)
-        all_rows = [rows]
-        w = Window.partitionBy("v").orderBy("h")
-        for _ in range(hops):
-            # rows is checkpointed hash(v, P); renamed to u it co-partitions
-            # with sym, so the propagation join runs in place (shuffle_hash:
-            # build the V·k sketch side, never sort the E-scale sym table)
-            msgs = sym.join(rows.withColumnRenamed("v", "u").withColumnRenamed(
-                "h", "_h").hint("shuffle_hash"), "u").select(
-                "v", F.col("_h").alias("h"))
-            merged = (
-                rows.unionByName(msgs)
-                .distinct()  # (v,h)-keyed: partial-combines map-side
-                .withColumn("_rn", F.row_number().over(w))
-                .where(F.col("_rn") <= k)
-                .drop("_rn")
-                # no trailing repartition: the window's exchange already
-                # leaves hash(v, P), which the checkpoint records (no_aqe)
-            )
-            old = rows
-            dump_plan(merged, "kmv_reach_hop")
-            rows = merged.localCheckpoint(eager=True)
-            if not keep_all:
-                old.unpersist()
-            all_rows.append(rows)
-    sym.unpersist()  # sketch rows are localCheckpoint-materialized
-    return all_rows if keep_all else rows
+    adj, n_adj = _adjacency(edges, True, P)
+    w = Window.partitionBy("v").orderBy("h")
+
+    def step(state: DataFrame, prev) -> DataFrame:
+        t = prev["t"] or 0  # None: an empty graph
+        rows = state.where(F.col("t") == t).select("v", "h")
+        # rows is hash(v); renamed to u it co-partitions with adj, so the
+        # propagation join runs in place (shuffle_hash: build the V·k
+        # sketch side, never sort the E-scale adjacency)
+        msgs = adj.join(rows.withColumnRenamed("v", "u").withColumnRenamed(
+            "h", "_h").hint("shuffle_hash"), "u").select(
+            "v", F.col("_h").alias("h"))
+        nxt = (
+            rows.unionByName(msgs)
+            .distinct()  # (v,h)-keyed: partial-combines map-side
+            .withColumn("_rn", F.row_number().over(w))
+            .where(F.col("_rn") <= k)
+            # the window's exchange leaves hash(v), the state's partitioning
+            .select(F.lit(t + 1).alias("t"), "v", "h")
+        )
+        return state.unionByName(nxt) if keep_all else nxt
+
+    res = run_fixpoint(
+        spark,
+        lambda: adj.select(F.col("u").alias("v")).distinct()
+        .select(F.lit(0).alias("t"), "v", _h60(F.col("v")).alias("h"))
+        .repartition(P, "v"),
+        step,
+        [F.count("*").alias("n"), F.max("t").alias("t")],
+        lambda s, prev: False,
+        name="kmv_reach", P=P, max_iter=hops, edges=n_adj, plan="kmv_reach_hop",
+    )
+    adj.unpersist()  # the state is checkpoint-materialized
+    return res.state
 
 
-def _estimate(rows: DataFrame, k: int) -> DataFrame:
-    """(id, sketch_n, est) from sketch rows: exact count below k, else
-    the KMV estimator (k−1)·2^60 / h_(k) — a single division of exactly-
-    derived operands, bit-identical across engines."""
+def _estimate(rows: DataFrame, k: int, *by: str) -> DataFrame:
+    """(*by, id, sketch_n, est) from sketch rows: exact count below k,
+    else the KMV estimator (k−1)·2^60 / h_(k) — a single division of
+    exactly-derived operands, bit-identical across engines."""
     num = float((k - 1) << _HEX_BITS)  # exact: (k-1) * 2^60 is a binary value
-    agg = rows.groupBy(F.col("v").alias("id")).agg(
+    agg = rows.groupBy(*by, F.col("v").alias("id")).agg(
         F.count("*").alias("sketch_n"), F.max("h").alias("_hk")
     )
     hk = F.col("_hk").cast("double")  # h is already the 60-bit BIGINT
     return agg.select(
+        *by,
         "id",
         "sketch_n",
         F.when(F.col("sketch_n") < k, F.col("sketch_n").cast("double"))
@@ -135,8 +130,7 @@ def kmv_reach(
     ops), which is what makes the DuckDB oracle exact."""
     if hops < 0 or k < 2:
         raise ValueError(f"need hops >= 0 and k >= 2, got {hops=}, {k=}")
-    P = int(num_partitions or spark.conf.get("spark.sql.shuffle.partitions"))
-    return _estimate(_propagate(spark, edges, hops, k, P), k)
+    return _estimate(_propagate(spark, edges, hops, k, num_partitions), k)
 
 
 def harmonic_centrality_kmv(
@@ -161,26 +155,20 @@ def harmonic_centrality_kmv(
     and on small-diameter web graphs T≈6 captures nearly all mass."""
     if max_hops < 1 or k < 2:
         raise ValueError(f"need max_hops >= 1 and k >= 2, got {max_hops=}, {k=}")
-    P = int(num_partitions or spark.conf.get("spark.sql.shuffle.partitions"))
-    hop_rows = _propagate(spark, edges, max_hops, k, P, keep_all=True)
-    ests = [_estimate(r, k) for r in hop_rows]
-    out = ests[0].select("id", F.col("est").alias("e0"))
-    for t in range(1, max_hops + 1):
-        out = out.join(
-            ests[t].select("id", F.col("est").alias(f"e{t}")), "id"
-        )
+    rows = _propagate(spark, edges, max_hops, k, num_partitions, keep_all=True)
+    est = _estimate(rows, k, "t")
+    out = est.groupBy("id").agg(*(
+        F.max(F.when(F.col("t") == t, F.col("est"))).alias(f"e{t}")
+        for t in range(max_hops + 1)
+    ))
     # fixed left-assoc chain: ((e1-e0)/1 + (e2-e1)/2) + ... — mirrored
     # exactly in the oracle SQL so every float op sees identical operands
     cent = (F.col("e1") - F.col("e0")) / F.lit(1.0)
     for t in range(2, max_hops + 1):
         cent = cent + (F.col(f"e{t}") - F.col(f"e{t-1}")) / F.lit(float(t))
-    # materialize the V-scale result, then release the max_hops+1 per-hop
-    # sketch tables keep_all left pinned (review r5: a lazy return kept
-    # (T+1)·V·k rows alive for the session — the effective_diameter
-    # release, applied here)
+    # materialize the V-scale result, then free the (T+1)·V·k sketch rows
     res = out.select("id", cent.alias("cent")).localCheckpoint(eager=True)
-    for r in hop_rows:
-        r.unpersist()
+    _release(rows)
     return res
 
 
@@ -200,13 +188,7 @@ def neighborhood_function(reach: DataFrame) -> DataFrame:
 # ---- HyperBall tier: HLL registers (Boldi & Vigna 2011) -------------------
 
 def _hll_alpha(m: int) -> float:
-    if m == 16:
-        return 0.673
-    if m == 32:
-        return 0.697
-    if m == 64:
-        return 0.709
-    return 0.7213 / (1.0 + 1.079 / m)
+    return {16: 0.673, 32: 0.697, 64: 0.709}.get(m, 0.7213 / (1.0 + 1.079 / m))
 
 
 def hll_reach(
@@ -235,20 +217,19 @@ def hll_reach(
     array), so the merge is a groupBy(v) of m max() aggregates — fully
     partial-combined map-side, meaning a 10^8-degree hub reduces to one
     m-register row per map task before the exchange; no explode, no
-    UDF, no per-row Python. The symmetric edge table is persisted
-    partitioned on the probe key and reused every hop.
+    UDF, no per-row Python. The hop loop is plans/fixpoint.py over ONE
+    state table (v, r0..r{m-1}) on hash(v), one Spark job per hop, and
+    it probes the same persisted adjacency as the KMV loop in place.
     """
     if hops < 0 or not (2 <= b <= 12):
         raise ValueError(f"need hops >= 0 and 2 <= b <= 12, got {hops=}, {b=}")
     m = 1 << b
     rem_bits = _HEX_BITS - b
     P = int(num_partitions or spark.conf.get("spark.sql.shuffle.partitions"))
+    P = size_based_partitions(edges, P)  # guide §2.2, size-derived cap
+    adj, n_adj = _adjacency(edges, True, P)
     regs_cols = [f"r{i}" for i in range(m)]
-
-    sym = symmetrize(edges).repartition(P, "u").persist()
-    sym.count()
-    verts = sym.select(F.col("u").alias("v")).distinct()
-    h = F.conv(_h15(F.col("v")), 16, 10).cast("bigint")
+    h = _h60(F.col("v"))
     bucket = F.shiftright(h, rem_bits)
     rem = h - F.shiftleft(bucket, rem_bits)
     # rank = leading zeros in the remaining bits + 1, via integer
@@ -257,27 +238,33 @@ def hll_reach(
     rank = F.when(rem == 0, F.lit(rem_bits + 1)).otherwise(
         F.lit(rem_bits) - F.length(F.bin(rem)) + 1
     )
-    regs = verts.select(
-        "v",
-        *[
-            F.when(bucket == i, rank).otherwise(F.lit(0)).cast("int").alias(c)
-            for i, c in enumerate(regs_cols)
-        ],
-    ).repartition(P, "v").localCheckpoint(eager=True)
-    for _ in range(hops):
-        msgs = sym.join(regs.withColumnRenamed("v", "u"), "u").select(
-            "v", *regs_cols
-        )
-        merged = (
+
+    def step(regs: DataFrame, prev) -> DataFrame:
+        msgs = adj.join(regs.withColumnRenamed("v", "u").hint("shuffle_hash"),
+                        "u").select("v", *regs_cols)
+        # the max aggregate leaves hash(v), the state's partitioning
+        return (
             regs.unionByName(msgs)
             .groupBy("v")
             .agg(*[F.max(c).alias(c) for c in regs_cols])
-            .repartition(P, "v")
         )
-        old = regs
-        regs = merged.localCheckpoint(eager=True)
-        old.unpersist()
-    sym.unpersist()
+
+    res = run_fixpoint(
+        spark,
+        lambda: adj.select(F.col("u").alias("v")).distinct().select(
+            "v",
+            *[
+                F.when(bucket == i, rank).otherwise(F.lit(0)).cast("int").alias(c)
+                for i, c in enumerate(regs_cols)
+            ],
+        ).repartition(P, "v"),
+        step,
+        [F.count("*").alias("n")],
+        lambda s, prev: False,
+        name="hll_reach", P=P, max_iter=hops, edges=n_adj,
+    )
+    adj.unpersist()  # the state is checkpoint-materialized
+    regs = res.state
     alpha = _hll_alpha(m)
     inv_sum = sum(
         (F.pow(F.lit(2.0), -F.col(c)) for c in regs_cols[1:]),
@@ -320,28 +307,21 @@ def effective_diameter(
     SUMMARY convenience like neighborhood_function, deliberately not an
     oracled query (pytest tolerance only).
 
-    Scale shape: one propagation run reusing _propagate(keep_all=True)
-    — per-hop sketch tables are localCheckpoint-materialized (<= k
-    rows/vertex), per-hop totals are 1-row aggregates; the driver holds
-    max_hops+1 scalars.
+    Scale shape: one propagation run, _propagate(keep_all=True), whose
+    one state table holds every hop's sketch rows (<= k rows/vertex per
+    hop); N(0..max_hops) is one aggregate grouped by hop, so the driver
+    collects max_hops+1 scalars in one query.
     """
     if max_hops < 1:
         raise ValueError(f"max_hops must be >= 1, got {max_hops}")
     if not 0.0 < q < 1.0:
         raise ValueError(f"q must be in (0, 1), got {q}")
-    P = int(num_partitions or spark.conf.get("spark.sql.shuffle.partitions"))
-    per_hop = _propagate(spark, edges, max_hops, k, P, keep_all=True)
-    nf = [
-        float(
-            _estimate(rows, k).agg(F.sum("est")).collect()[0][0] or 0.0
-        )
-        for rows in per_hop
-    ]
-    # only scalars leave this function: release the max_hops+1
-    # materialized per-hop sketch tables (keep_all skips the loop's own
-    # unpersist) so a long session doesn't hold V*k rows per hop forever
-    for rows in per_hop:
-        rows.unpersist()
+    rows = _propagate(spark, edges, max_hops, k, num_partitions, keep_all=True)
+    totals = dict(
+        _estimate(rows, k, "t").groupBy("t").agg(F.sum("est")).collect()
+    )
+    _release(rows)  # only scalars leave this function
+    nf = [float(totals.get(t) or 0.0) for t in range(max_hops + 1)]
     target = q * nf[-1]
     saturated = nf[-1] - nf[-2] <= 0.001 * nf[-1]
     eff = float(max_hops)

@@ -216,6 +216,19 @@ def truss_numbers(
     estimates are a monotone UPPER BOUND on trussness − 2, with
     converged=False.
     """
+    return _truss(spark, edges, max_rounds, num_partitions, fixed_rounds)[0]
+
+
+def _truss(
+    spark: SparkSession,
+    edges: DataFrame,
+    max_rounds: int,
+    num_partitions: int | None,
+    fixed_rounds: int | None = None,
+    k: int | None = None,
+) -> tuple[TrussNumbersResult, DataFrame | None]:
+    """truss_numbers, and with ``k`` the k-truss support (a, b, count):
+    a triangle is in the k-truss iff its least estimate is ≥ k − 2."""
     from pyspark.sql import Window
 
     P = int(num_partitions or spark.conf.get("spark.sql.shuffle.partitions"))
@@ -282,9 +295,15 @@ def truss_numbers(
         und.join(res.state, ["a", "b"], "left")
         .select("a", "b", (F.coalesce(F.col("c"), F.lit(0)) + F.lit(2)).alias("truss"))
     )
+    # counted from the melted triangles, before they are released
+    sup = None if k is None else (
+        melt.join(res.state, ["a", "b"])
+        .withColumn("m", F.min("c").over(Window.partitionBy("t")))
+        .where(F.col("m") >= k - 2).groupBy("a", "b").count()
+        .localCheckpoint(eager=True))
     melt.unpersist()  # the state is checkpoint-materialized, lineage-free
     return TrussNumbersResult(out, res.iterations - res.converged, res.converged,
-                              res.metrics)
+                              res.metrics), sup
 
 
 @dataclass
@@ -311,20 +330,18 @@ def ktruss(
     The k-truss is exactly the edges with trussness ≥ k, so this is a
     filter of truss_numbers() plus one support count on the kept
     subgraph: a triangle is in the k-truss iff all three of its edges
-    are, so the subgraph's own triangles give each edge's support in it.
+    are, so the decomposition's own triangles, kept when all three edges
+    are, give each edge's support in it (no second enumeration).
     `rounds` and `converged` are the decomposition's. A decomposition
     cut by max_rounds gives upper bounds, so the filter then returns a
     superset of the k-truss, flagged by converged=False.
     """
     if k < 3:
         raise ValueError(f"ktruss requires k >= 3, got {k}")
-    tn = truss_numbers(spark, edges, max_rounds=max_rounds,
-                       num_partitions=num_partitions)
+    tn, sup = _truss(spark, edges, max_rounds, num_partitions, k=k)
     kept = tn.trussness.where(F.col("truss") >= k).select("a", "b")
-    sup = _edge_support(_triangle_edges(triangle_triples(
-        kept.select(F.col("a").alias("src"), F.col("b").alias("dst")))))
     out = kept.join(sup, ["a", "b"], "left").select(
-        "a", "b", F.coalesce("support", F.lit(0)).cast("long").alias("support"))
+        "a", "b", F.coalesce("count", F.lit(0)).cast("long").alias("support"))
     return TrussResult(out, tn.rounds, tn.converged, tn.metrics)
 
 

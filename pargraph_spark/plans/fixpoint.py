@@ -6,16 +6,17 @@ operators: pagerank, label_propagation and seeded_label_propagation,
 connected_components, sssp, bfs_distances and landmark_distances,
 core_numbers, truss_numbers (so also ktruss), bitruss, wl_colors,
 katz_centrality, earliest_arrival, hits and salsa,
-maximal_independent_set, greedy_coloring and maximal_matching. Each
-keeps its state in ONE table. An operator keeps
-its own setup (edge repartition/persist, vertex base, warm start) and
-hands ``run_fixpoint`` three pieces:
+maximal_independent_set, greedy_coloring, maximal_matching,
+betweenness (its forward levels), kmv_reach, harmonic_centrality_kmv,
+effective_diameter and hll_reach. Each keeps its state in ONE table.
+An operator keeps its own setup (edge repartition/persist, vertex base,
+warm start) and hands ``run_fixpoint`` three pieces:
 
 - ``step(state, prev_stats)``: the next state as a LAZY plan. It may
   return ``(plan, intermediates)`` when it materialized something of its
   own (connected components' eager large-star output, matching's round
-  matches, the raw HITS authorities); the driver releases those with
-  the superseded state.
+  matches, the raw HITS authorities); the driver frees those with the
+  superseded state.
 - ``stats``: aggregate ``Column``s over the state (delta, changed count,
   edge-set signature, ... plus extra scalars the next step needs, such as
   PageRank's dangling mass). The driver evaluates them in ONE
@@ -24,10 +25,15 @@ hands ``run_fixpoint`` three pieces:
 
 Per superstep the driver runs step → lazy ``localCheckpoint`` → the one
 stats aggregate → release the superseded state and the step's
-intermediates → ``SuperstepMetric`` → cadence save → ``done``. The whole
-loop runs under ``no_aqe(P)`` so every checkpoint records the state's
-hash partitioning (``P=None`` keeps AQE on: connected components, whose
-state is the edge set itself, is faster with AQE's runtime broadcasts).
+intermediates → ``SuperstepMetric`` → cadence save → ``done``. Release
+frees the blocks at once (the reference's ref-count release,
+engine.py:63-76): ``_release`` also unpersists a checkpoint's own RDD,
+which ``DataFrame.unpersist`` leaves cached. The new state's blocks are
+written by then, so nothing reads a freed block (such a read fails
+loudly, ``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND``). The whole loop runs
+under ``no_aqe(P)`` so every checkpoint records the state's hash
+partitioning (``P=None`` keeps AQE on: connected components, whose state
+is the edge set itself, is faster with AQE's runtime broadcasts).
 
 Invariants, held by construction:
 
@@ -67,7 +73,7 @@ from pyspark.sql import Column, DataFrame, Row, SparkSession
 from pargraph_spark.plans.checkpoint import CheckpointManager
 from pargraph_spark.plans.debug import dump_plan
 from pargraph_spark.plans.metrics import JobMetrics, SuperstepMetric
-from pargraph_spark.session import no_aqe
+from pargraph_spark.session import _query_execution, no_aqe
 
 StepOut = Union[DataFrame, tuple[DataFrame, Sequence[DataFrame]]]
 
@@ -79,6 +85,15 @@ class FixpointResult:
     converged: bool
     metrics: JobMetrics
     stats: Row | None = None  # the final state's stats (None: restored converged)
+
+
+def _release(df: DataFrame) -> None:
+    """Unpersist ``df`` and, when it is a checkpoint (its logical plan a
+    ``LogicalRDD``), the checkpoint's own RDD."""
+    df.unpersist()
+    plan = _query_execution(df).logical()
+    if plan.getClass().getSimpleName() == "LogicalRDD":
+        plan.rdd().unpersist(False)
 
 
 def _first_stat(stats: Row, prev: Row) -> float:
@@ -143,7 +158,7 @@ def run_fixpoint(
             new = new.localCheckpoint(eager=False)
             s = new.agg(*stats).first()  # the superstep's one job
             for df in (state, *scratch):
-                df.unpersist()
+                _release(df)
             state = new
             metrics.add(SuperstepMetric(it, (time.monotonic() - t0) * 1000.0,
                                         n_edges, delta(s, prev)))

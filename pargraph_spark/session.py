@@ -139,9 +139,9 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
         .config("spark.sql.session.timeZone", "UTC")
-        # localCheckpoint blocks are reclaimed by ContextCleaner only after a
-        # JVM GC notices the dropped references; default periodicGC is 30min,
-        # far too lazy for iterative jobs that retire a state DF per superstep
+        # run_fixpoint frees what it supersedes; a localCheckpoint made
+        # outside it waits for a ContextCleaner GC to notice the dropped
+        # reference, and the default periodicGC (30min) is far too lazy
         .config("spark.cleaner.periodicGC.interval", "45s")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))

@@ -74,17 +74,20 @@ def _run_job(spark, capsys, job, out, *extra):
     from pargraph_spark.cli import main
 
     capsys.readouterr()
-    shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        assert main([job, "--synth-pages", "300", "--output", out,
-                     "--cores", "2", "--partitions", "4", *extra]) == 0
-    finally:
-        # the cli's get_spark pins --partitions on the shared session; the
-        # tests after this one must not inherit it
-        spark.conf.set("spark.sql.shuffle.partitions", shuffle)
+    assert main([job, "--synth-pages", "300", "--output", out,
+                 "--cores", "2", "--partitions", "4", *extra]) == 0
     summary = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert job in summary, summary
     return summary
+
+
+def test_cli_restores_the_callers_conf(spark, capsys, tmp_path):
+    # main's get_spark sets --partitions (and the rest of its conf) on
+    # the caller's session; main must leave that session as it found it
+    before = spark.conf.getAll
+    assert before["spark.sql.shuffle.partitions"] != "4"
+    _run_job(spark, capsys, "stats", str(tmp_path / "stats"))
+    assert spark.conf.getAll == before
 
 
 def test_cli_kcore_and_hosts_jobs(spark, capsys, tmp_path):

@@ -2,7 +2,8 @@
 
 A toy fixpoint (min-label propagation on a path) pins what the driver
 promises every operator it runs: one Spark job per superstep plus one
-setup job, and superstep metrics numbered from the resumed superstep on.
+setup job, superstep metrics numbered from the resumed superstep on, and
+every superseded state freed (only the final state stays cached).
 The operators on the driver keep that promise on the same path: their
 own fixed setup jobs, then one job per superstep plus the jobs of what a
 step materializes itself.
@@ -78,6 +79,23 @@ def test_one_job_per_superstep(spark):
     assert jobs == setup_jobs + res.iterations
     assert [m.superstep for m in res.metrics.supersteps] == list(range(1, N + 1))
     assert [m.delta for m in res.metrics.supersteps][-1] == 0.0
+    assert _labels(res) == {i: 0 for i in range(N)}
+    sym.unpersist()
+
+
+def test_release_frees_every_superseded_state(spark):
+    # the run adds ONE persistent RDD, the final state's checkpoint: the
+    # driver frees each superseded checkpoint's own RDD, not just the
+    # DataFrame (whose unpersist leaves checkpoint blocks cached)
+    from pargraph_spark.session import _query_execution
+
+    sym = _path(spark)
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keys())
+    res = _min_label(spark, sym)
+    added = set(jsc.getPersistentRDDs().keys()) - before
+    assert res.iterations >= 10
+    assert added == {_query_execution(res.state).logical().rdd().id()}
     assert _labels(res) == {i: 0 for i in range(N)}
     sym.unpersist()
 
@@ -160,6 +178,13 @@ def _coloring(spark, e):
     return greedy_coloring(spark, e, num_partitions=P)
 
 
+def _betweenness(spark, e):
+    from pargraph_spark.operators.betweenness import betweenness
+
+    seeds = spark.createDataFrame([(0,), (5,)], "id long")
+    return betweenness(spark, e, seeds, max_depth=2 * N, num_partitions=P)
+
+
 def _matching(spark, e):
     from pargraph_spark.operators.matching import maximal_matching
 
@@ -168,7 +193,8 @@ def _matching(spark, e):
 
 # Setup jobs each operator runs before its first superstep: persisting its
 # edge tables (AQE runs one job per query stage), landmark selection, and
-# the driver's stats job that materializes the initial state. Then k jobs
+# the driver's stats job that materializes the initial state (for
+# betweenness also the backward pass and its one eager scores job). Then k jobs
 # per superstep: the stats job, plus what the step materializes itself —
 # the winners of a MIS round, matching's round matches, the raw HITS
 # authorities and their total. truss_numbers' setup enumerates triangles,
@@ -180,9 +206,10 @@ def _matching(spark, e):
     (_bfs, 6, 1), (_landmarks, 7, 1), (_core_numbers, 6, 1), (_bitruss, 3, 1),
     (_wl, 3, 1), (_truss_numbers, (15, 16), 1), (_katz, 6, 1),
     (_temporal, 5, 1), (_hits, 16, 3), (_mis, 6, 2), (_coloring, 6, 1),
-    (_matching, 1, 2),
+    (_matching, 1, 2), (_betweenness, 9, 1),
 ], ids=["bfs", "landmarks", "core_numbers", "bitruss", "wl", "truss_numbers",
-        "katz", "temporal", "hits", "mis", "coloring", "matching"])
+        "katz", "temporal", "hits", "mis", "coloring", "matching",
+        "betweenness"])
 def test_operator_runs_one_job_per_superstep(spark, op, setup_jobs, k):
     e = spark.createDataFrame([(i, i + 1) for i in range(N - 1)], "src long, dst long")
     res, jobs = _jobs(spark, lambda: op(spark, e))
@@ -190,6 +217,19 @@ def test_operator_runs_one_job_per_superstep(spark, op, setup_jobs, k):
     assert supersteps > 1
     setups = setup_jobs if isinstance(setup_jobs, tuple) else (setup_jobs,)
     assert jobs - k * supersteps in setups, (jobs, supersteps)
+
+
+@pytest.mark.parametrize("op", ["kmv_reach", "hll_reach", "effective_diameter"])
+def test_sketch_hop_runs_one_job(spark, op):
+    # the sketch operators return DataFrames or scalars, not metrics: one
+    # more hop must cost exactly one more job, the driver's stats job
+    # (effective_diameter's N(t) is one aggregate, not a collect per hop)
+    from pargraph_spark.operators import reach
+
+    e = spark.createDataFrame([(i, i + 1) for i in range(N - 1)], "src long, dst long")
+    fn = getattr(reach, op)
+    jobs = [_jobs(spark, lambda: fn(spark, e, h, num_partitions=P))[1] for h in (2, 3)]
+    assert jobs[1] == jobs[0] + 1, jobs
 
 
 def test_resume_numbers_supersteps_from_the_manifest(spark, tmp_path):
