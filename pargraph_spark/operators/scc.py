@@ -55,6 +55,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pargraph_spark.plans.debug import dump_plan
+from pargraph_spark.plans.fixpoint import release
 from pargraph_spark.plans.metrics import JobMetrics, SuperstepMetric
 from pargraph_spark.session import no_aqe, size_based_partitions
 
@@ -374,16 +375,16 @@ def _closure_from(
             f"BFS rounds — raise max_inner"
         )
     # return ONE materialized table and release every per-hop checkpoint
-    # (ADVICE r5: 4 closures × rounds × V-scale tables leaked otherwise);
-    # the result must be materialized BEFORE the final visited is dropped —
-    # a lazy anti-join over an unpersisted LogicalRDD is unrecoverable
+    # (4 closures × rounds × V-scale tables leak otherwise); the result
+    # must be materialized BEFORE the final visited is released — a lazy
+    # anti-join over a released LogicalRDD is unrecoverable
     out = (
         visited.join(seed.select("id"), "id", "left_anti")
         .localCheckpoint(eager=True)
     )
     retired.append(visited)
     for df in retired:
-        df.unpersist()
+        release(df)
     return out
 
 
@@ -469,9 +470,11 @@ def bowtie_classify(
         # E-scale copies + five V-scale sets pinned for the app lifetime)
         .localCheckpoint(eager=True)
     )
-    for cached in (scc, core, e_src, e_dst, out_set, in_set,
-                   fwd_from_in, bwd_from_out, tubes):
+    for cached in (scc, core, e_src, e_dst, tubes):
         cached.unpersist()
+    # the four closures are this function's own checkpoints
+    for closure in (out_set, in_set, fwd_from_in, bwd_from_out):
+        release(closure)
     return out
 
 

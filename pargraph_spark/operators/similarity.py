@@ -81,7 +81,7 @@ def cosine(a: Column, b: Column) -> Column:
     # zero-norm clamp (the _assign_df discipline): an all-zeros vector
     # otherwise scores 0/0 = NaN, which Spark's desc-sort ranks ABOVE 1.0
     # while the pandas partial top-k sorts it last — partition-dependent
-    # top-k output (review r5). The clamp is a no-op for any real vector
+    # top-k output. The clamp is a no-op for any real vector
     # (norms are either 0 or >> 1e-300), so oracled values are unchanged.
     return _dot(a, b) / F.greatest(_norm(a) * _norm(b), F.lit(1e-300))
 
@@ -90,7 +90,7 @@ def _partial_topk(scored: DataFrame, k: int) -> DataFrame:
     """Map-side partial top-k per query_id (narrow — no shuffle): each Arrow
     batch keeps at most k rows per query by (cos DESC, neighbor_id ASC), so
     the subsequent global row_number window shuffles O(batches·|Q|·k) rows
-    instead of |Q|·|C| (VERDICT r1 What's-wrong #6). Every global top-k row
+    instead of |Q|·|C|. Every global top-k row
     survives its own batch's filter, so the final result is byte-identical;
     cos values pass through Arrow as float64 unchanged."""
     schema = scored.schema
@@ -265,14 +265,14 @@ def cosine_near_dup_bucketed(
     """
     # persist: the signature pass (full-corpus Arrow matmul) feeds BOTH
     # self-join sides with different projections — unpersisted it runs
-    # twice (review r5). Lazy persist; backing cache released with the
+    # twice. Lazy persist; backing cache released with the
     # session (the winnow_pairs/hits convention for result-backing caches).
     sigs = hyperplane_signatures(
         corpus, dim, num_tables, planes_per_table, id_col, vec_col, out_id="_sid"
     ).persist()
     if max_bucket is not None:
         # declared hot-bucket cap (the dedup.py _drop_hot_buckets
-        # discipline, review r5): a dense (t, sig) bucket — duplicated
+        # discipline): a dense (t, sig) bucket — duplicated
         # boilerplate embeddings, or low r on a big corpus — grows the
         # self-join quadratically in its size; members of buckets over
         # the cap pair through their OTHER tables only. At r=2 defaults
@@ -334,8 +334,8 @@ def lsh_ann_topk(
     )
     if multiprobe_bits >= 1:
         # probe the query's own bucket plus every bucket within Hamming
-        # distance <= multiprobe_bits (review r5: bits >= 2 used to
-        # silently degrade to 1 — the recall knob did nothing)
+        # distance <= multiprobe_bits (every radius up to bits, not just
+        # radius 1, or the recall knob does nothing)
         from itertools import combinations
 
         masks = [0] + [
@@ -388,9 +388,9 @@ def _assign_cells(
 
     ZERO-shuffle assignment: the centroid model (C×d, model-sized) rides
     into a mapInPandas closure and each Arrow batch does one normalized
-    matmul + argmax/stable-argsort — the clustering._assign_df pattern
-    (VERDICT r2 #1: the previous crossJoin+row_number form shuffled
-    |corpus|·C rows through a Window just to take an argmax). Similarities
+    matmul + argmax/stable-argsort — the clustering._assign_df pattern (a
+    crossJoin+row_number form would shuffle |corpus|·C rows through a
+    Window just to take an argmax). Similarities
     are quantized to IVF_QUANT decimals before ranking so ~1e-15 cross-
     engine summation noise can never flip a cell (same policy as k-means);
     cent_ids is ascending, so numpy's first-max / stable sort == the

@@ -27,7 +27,7 @@ Per superstep the driver runs step → lazy ``localCheckpoint`` → the one
 stats aggregate → release the superseded state and the step's
 intermediates → ``SuperstepMetric`` → cadence save → ``done``. Release
 frees the blocks at once (the reference's ref-count release,
-engine.py:63-76): ``_release`` also unpersists a checkpoint's own RDD,
+engine.py:63-76): ``release`` also unpersists a checkpoint's own RDD,
 which ``DataFrame.unpersist`` leaves cached. The new state's blocks are
 written by then, so nothing reads a freed block (such a read fails
 loudly, ``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND``). The whole loop runs
@@ -87,9 +87,11 @@ class FixpointResult:
     stats: Row | None = None  # the final state's stats (None: restored converged)
 
 
-def _release(df: DataFrame) -> None:
+def release(df: DataFrame) -> None:
     """Unpersist ``df`` and, when it is a checkpoint (its logical plan a
-    ``LogicalRDD``), the checkpoint's own RDD."""
+    ``LogicalRDD``), the checkpoint's own RDD, whose blocks
+    ``DataFrame.unpersist`` leaves cached. Call it only on a frame the
+    caller owns, once every plan that reads it has been materialized."""
     df.unpersist()
     plan = _query_execution(df).logical()
     if plan.getClass().getSimpleName() == "LogicalRDD":
@@ -158,7 +160,7 @@ def run_fixpoint(
             new = new.localCheckpoint(eager=False)
             s = new.agg(*stats).first()  # the superstep's one job
             for df in (state, *scratch):
-                _release(df)
+                release(df)
             state = new
             metrics.add(SuperstepMetric(it, (time.monotonic() - t0) * 1000.0,
                                         n_edges, delta(s, prev)))

@@ -110,3 +110,22 @@ def test_incremental_cc_warm_start_over_append(spark):
     assert gw == gc
     # the old structure is pre-collapsed: strictly fewer rounds than cold
     assert warm.rounds < cold.rounds, (warm.rounds, cold.rounds)
+
+
+def test_cc_leaves_only_its_result_cached(spark):
+    # the call adds ONE persistent RDD, the result's checkpoint: the final
+    # star-forest state is freed with its checkpoint RDD, not just
+    # unpersisted as a DataFrame (which leaves checkpoint blocks cached)
+    from pargraph_spark.session import _query_execution
+
+    edges = [(i, i + 1) for i in range(30)] + [(100 + i, 101 + i) for i in range(10)]
+    edf = spark.createDataFrame(edges, EDGE_SCHEMA)
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keys())
+    res = connected_components(spark, edf, num_partitions=4)
+    added = set(jsc.getPersistentRDDs().keys()) - before
+    assert res.converged
+    assert added == {_query_execution(res.components).logical().rdd().id()}
+    verts = sorted({v for e in edges for v in e})
+    got = {r["id"]: r["component"] for r in res.components.collect()}
+    assert got == components_oracle(edges, verts)
