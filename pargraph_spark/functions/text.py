@@ -129,7 +129,7 @@ def shingles(c: Column, size: int = 3) -> Column:
     """Distinct word n-gram shingles; 1..size-1 tokens → single joined
     shingle; zero tokens (empty/NULL/whitespace text) → EMPTY array, so
     empty docs get no minhash signature and never pair in LSH/jaccard
-    (mirrors the oracle's unnest-yields-no-rows behavior, ADVICE r1)."""
+    (mirrors the oracle's unnest-yields-no-rows behavior)."""
     t = tokens(c)
     n = F.size(t)
     grams = F.transform(

@@ -24,6 +24,11 @@ one Spark job per query stage.
 Scale notes: both stars are a single self-shuffle on u; hub vertices
 (huge Γ(u)) are fine because min() partial-aggregates map-side, and the
 subsequent join is on the grouping key (AQE skew-join splits hot keys).
+While the round's edge side is under the broadcast threshold, each star
+broadcasts its min table explicitly: left to AQE, both sides of the join
+are broadcastable and the build side was whichever stage finished first,
+so the same graph got a different plan (and new generated classes) from
+one call to the next.
 """
 
 from __future__ import annotations
@@ -35,7 +40,7 @@ from pyspark.sql import functions as F
 
 from pargraph_spark.plans.fixpoint import release, run_fixpoint
 from pargraph_spark.plans.metrics import JobMetrics
-from pargraph_spark.session import size_based_partitions
+from pargraph_spark.session import broadcast_threshold, size_based_partitions
 
 
 @dataclass
@@ -46,11 +51,12 @@ class ComponentsResult:
     metrics: JobMetrics = field(default_factory=lambda: JobMetrics("components"))
 
 
-def _large_star(e: DataFrame, dedup: bool = True) -> DataFrame:
+def _large_star(e: DataFrame, dedup: bool = True,
+                broadcast_mins: bool = False) -> DataFrame:
     sym = e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
     mins = sym.groupBy("u").agg(F.least(F.min("v"), F.first("u")).alias("m"))
     out = (
-        sym.join(mins, "u")
+        sym.join(F.broadcast(mins) if broadcast_mins else mins, "u")
         .where(F.col("v") > F.col("u"))
         .select(F.col("v").alias("u"), F.col("m").alias("v"))
         .where(F.col("u") != F.col("v"))
@@ -63,7 +69,8 @@ def _large_star(e: DataFrame, dedup: bool = True) -> DataFrame:
     return out.distinct() if dedup else out
 
 
-def _small_star(e: DataFrame, oriented: bool = False) -> DataFrame:
+def _small_star(e: DataFrame, oriented: bool = False,
+                broadcast_mins: bool = False) -> DataFrame:
     # orient every edge (bigger -> smaller); large-star output is already
     # strictly u > v (it emits (v, m) with m <= u < v), so the fixpoint
     # passes oriented=True and skips the re-orientation projection
@@ -72,7 +79,7 @@ def _small_star(e: DataFrame, oriented: bool = False) -> DataFrame:
     ).where(F.col("u") != F.col("v"))
     mins = o.groupBy("u").agg(F.min("v").alias("m"))
     via_neighbors = (
-        o.join(mins, "u")
+        o.join(F.broadcast(mins) if broadcast_mins else mins, "u")
         .select(F.col("v").alias("u"), F.col("m").alias("v"))
     )
     via_self = mins.select(F.col("u"), F.col("m").alias("v"))
@@ -81,19 +88,6 @@ def _small_star(e: DataFrame, oriented: bool = False) -> DataFrame:
         .where(F.col("u") != F.col("v"))
         .distinct()
     )
-
-
-def large_star_round(edges: DataFrame) -> DataFrame:
-    """One public large-star round over edges(src,dst) → (u, v) edge set.
-
-    Exposed for per-round conformance checks (SQL-expressible, unlike the
-    full fixpoint)."""
-    e = (
-        edges.where(F.col("src") != F.col("dst"))
-        .select(F.col("src").alias("u"), F.col("dst").alias("v"))
-        .distinct()
-    )
-    return _large_star(e)
 
 
 def connected_components(
@@ -114,6 +108,7 @@ def connected_components(
     fixpoint (tests/test_checkpoint.py)."""
     P = int(num_partitions or spark.conf.get("spark.sql.shuffle.partitions"))
     P = size_based_partitions(edges, P)  # guide §2.2, size-derived cap
+    limit = broadcast_threshold(spark)
 
     def init() -> DataFrame:
         # setup in ONE E-scale exchange (the pagerank/scc idiom):
@@ -136,9 +131,12 @@ def connected_components(
         # triangle_count idiom): small-star references it three times
         # (min-agg, neighbor probe, via_self) and only identical Exchange
         # nodes get runtime reuse — unmaterialized, the E-scale large-star
-        # join would re-execute under the probe-side exchange every round
-        ls = _large_star(e, dedup=False).localCheckpoint(eager=True)
-        return _small_star(ls, oriented=True), [ls]
+        # join would re-execute under the probe-side exchange every round.
+        # prev["c"] edges give 2c symmetrized (u, v) rows of 24 bytes each;
+        # the min tables and the large-star output have no more rows
+        small = 2 * prev["c"] * 24 <= limit
+        ls = _large_star(e, dedup=False, broadcast_mins=small).localCheckpoint(eager=True)
+        return _small_star(ls, oriented=True, broadcast_mins=small), [ls]
 
     # The round signature is (count, xor-of-hashes) of the canonical
     # undirected edge SET. Every state is canonical and distinct already:

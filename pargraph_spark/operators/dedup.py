@@ -11,7 +11,8 @@ Four tiers, all JVM-side expressions (no Python in the hot path):
   the only super-linear step and it only touches (band_sig, id) pairs.
 - SimHash (functions.text.simhash16): near-dup via hamming buckets.
 - ngram-Jaccard verify: exact Jaccard on the LSH candidate pairs only
-  (never all-pairs), one shingle-explode join per side.
+  (never all-pairs): each pair joins its two documents' shingle arrays
+  and intersects them, so no per-shingle row is ever shuffled.
 
 LSH parameters: num_hashes J and num_bands B with B | J; rows-per-band
 r = J/B gives the usual S-curve P(candidate) = 1-(1-j^r)^B.
@@ -19,7 +20,9 @@ r = J/B gives the usual S-curve P(candidate) = 1-(1-j^r)^B.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from typing import Callable
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from pargraph_spark.functions.text import fingerprint, shingles
@@ -43,6 +46,12 @@ def doc_shingles(df: DataFrame, id_col: str, text_col: str, shingle_size: int = 
     )
 
 
+def _salted_md5(j: int) -> Callable[[Column], Column]:
+    """x -> md5('j:' || x), the j-th hash of the family. A factory, since
+    F.transform hands (element, index) to ``lambda x, j=j: ...``."""
+    return lambda x: F.md5(F.concat(F.lit(f"{j}:"), x).cast("binary"))
+
+
 def minhash_signatures(
     sh: DataFrame, num_hashes: int = 8
 ) -> DataFrame:
@@ -53,10 +62,7 @@ def minhash_signatures(
     independent hash functions. md5 keeps Spark and DuckDB bit-identical.
     """
     return sh.groupBy("id").agg(
-        *[
-            F.min(F.md5(F.concat(F.lit(f"{j}:"), F.col("shingle")).cast("binary"))).alias(f"h{j}")
-            for j in range(num_hashes)
-        ]
+        *[F.min(_salted_md5(j)(F.col("shingle"))).alias(f"h{j}") for j in range(num_hashes)]
     )
 
 
@@ -123,35 +129,27 @@ def lsh_candidate_pairs(
     )
 
 
+def _array_verify(pairs: DataFrame, sets: DataFrame, threshold: float) -> DataFrame:
+    """(a, b, jaccard) of candidate pairs from distinct shingle arrays
+    sets(id, s). inter and union are exact ints, so the single division
+    is bit-identical across engines."""
+    inter = F.size(F.array_intersect("sa", "sb"))
+    jaccard = inter.cast("double") / (F.size("sa") + F.size("sb") - inter).cast("double")
+    return (
+        pairs.join(sets.select(F.col("id").alias("a"), F.col("s").alias("sa")), "a")
+        .join(sets.select(F.col("id").alias("b"), F.col("s").alias("sb")), "b")
+        .select("a", "b", jaccard.alias("jaccard"))
+        .where(F.col("jaccard") >= threshold)
+    )
+
+
 def jaccard_verify(
     pairs: DataFrame, sh: DataFrame, threshold: float = 0.0
 ) -> DataFrame:
-    """Exact shingle-set Jaccard for candidate pairs: (a, b, jaccard).
-
-    inter/union are exact ints; the single division is bit-identical across
-    engines. Pairs below threshold are dropped.
-    """
-    sizes = sh.groupBy("id").agg(F.count("*").alias("sz"))
-    inter = (
-        pairs.join(sh.select(F.col("id").alias("a"), "shingle"), "a")
-        .join(sh.select(F.col("id").alias("b"), "shingle"), ["b", "shingle"])
-        .groupBy("a", "b")
-        .agg(F.count("*").alias("inter"))
-    )
-    out = (
-        pairs.join(inter, ["a", "b"], "left")
-        .join(sizes.select(F.col("id").alias("a"), F.col("sz").alias("sza")), "a")
-        .join(sizes.select(F.col("id").alias("b"), F.col("sz").alias("szb")), "b")
-        .select(
-            "a",
-            "b",
-            (
-                F.coalesce("inter", F.lit(0)).cast("double")
-                / (F.col("sza") + F.col("szb") - F.coalesce("inter", F.lit(0))).cast("double")
-            ).alias("jaccard"),
-        )
-    )
-    return out.where(F.col("jaccard") >= threshold)
+    """Exact shingle-set Jaccard for candidate pairs: (a, b, jaccard) from
+    (id, shingle) rows. Pairs below threshold are dropped."""
+    sets = sh.groupBy("id").agg(F.collect_set("shingle").alias("s"))
+    return _array_verify(pairs, sets, threshold)
 
 
 def winnow_fingerprints(
@@ -212,8 +210,7 @@ def winnow_pairs(
     only (wfp, id) rows shuffle; grouping by pair bounds the join fan-out
     by per-fingerprint posting-list sizes.
 
-    max_postings: hot-fingerprint cap (the guard the round-2 docstring
-    promised upstream, now in the operator): fingerprints appearing in
+    max_postings: hot-fingerprint cap: fingerprints appearing in
     more than this many docs are dropped before the self-join, so a
     boilerplate string present in every doc contributes ZERO candidate
     rows instead of O(n²). Recall: a clone pair is still emitted when at
@@ -259,7 +256,8 @@ def near_dup_groups(
     implicitly canonical — at 10^12 docs the dup groups are the small
     output, never the corpus. The component step runs the engine's own
     small/large-star CC over the (tiny) verified pair graph, whose
-    component label is already the group's min id."""
+    component label is already the group's min id. ``id_col`` must be a
+    key, as in minhash_dedup_pairs."""
     from pargraph_spark.operators.components import connected_components
 
     pairs = minhash_dedup_pairs(
@@ -283,20 +281,33 @@ def minhash_dedup_pairs(
     max_postings: int | None = None,
 ) -> DataFrame:
     """End-to-end near-dup pipeline: (a, b, jaccard) above threshold.
-    max_postings caps hot band buckets (see lsh_candidate_pairs)."""
-    sh = doc_shingles(df, id_col, text_col, shingle_size).persist()
-    cands = lsh_candidate_pairs(
-        lsh_bands(minhash_signatures(sh, num_hashes), num_hashes, num_bands),
-        max_postings=max_postings,
+    max_postings caps hot band buckets (see lsh_candidate_pairs).
+    ``id_col`` must be a key: one row per id, never grouped.
+
+    One row per document (id, s, h0..h{J-1}) — the distinct shingle array
+    and its minhashes — is built with no exchange; the bands read the h_j
+    and the verify joins each pair to s twice. An empty doc's h_j are NULL,
+    so its band keys are NULL and it never pairs."""
+    docs = (
+        df.select(F.col(id_col).alias("id"), shingles(F.col(text_col), shingle_size).alias("s"))
+        .select(
+            "id", "s",
+            *[F.array_min(F.transform("s", _salted_md5(j))).alias(f"h{j}")
+              for j in range(num_hashes)],
+        )
+        .persist()
     )
-    # sh stays persisted behind the lazy result — the
-    # result-backing-cache convention (winnow/hits/near_dup_bucketed).
-    # Repeated calls on the same input in one session re-hit the previous
-    # call's identical-plan cache via the CacheManager; an
-    # eager-materialize-and-release variant made every call recompute the
-    # shingle+signature pass (measured 5.2s -> 26.5s median at sf0.1).
-    # Blocks are freed with the session.
-    return jaccard_verify(cands, sh, threshold)
+    cands = lsh_candidate_pairs(
+        lsh_bands(docs, num_hashes, num_bands), max_postings=max_postings
+    )
+    # docs, read by the band and verify scans, stays persisted behind the
+    # lazy result — the result-backing-cache convention
+    # (winnow/hits/near_dup_bucketed). Repeated calls on the same input in
+    # one session re-hit the previous call's identical-plan cache via the
+    # CacheManager; an eager-materialize-and-release variant made every
+    # call recompute the shingle+signature pass (measured 5.2s -> 26.5s
+    # median at sf0.1). Blocks are freed with the session.
+    return _array_verify(cands, docs, threshold)
 
 
 def tfidf_cosine_pairs(

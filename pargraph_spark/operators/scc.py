@@ -96,12 +96,12 @@ def strongly_connected_components(
     # whole fixpoint under no-AQE: checkpointed V-scale state keeps its
     # recorded hash partitioning (see session.no_aqe)
     with no_aqe(spark, P):
-        # setup in ONE E-scale exchange (r6): repartition on the probe key
+        # setup in ONE E-scale exchange: repartition on the probe key
         # first, then dedupe in place — hash(src) co-locates every
         # (src, dst) pair, so dropDuplicates adds no second exchange (the
         # old distinct-then-repartition shape exchanged E twice); persist,
-        # NEVER localCheckpoint (the r4 persist-discipline rule: the
-        # E-scale relation is probed in place by every inner round)
+        # NEVER localCheckpoint (the E-scale relation is probed in place
+        # by every inner round)
         active_e = (
             edges.select(F.col("src").cast("long"), F.col("dst").cast("long"))
             .where(F.col("src") != F.col("dst"))
@@ -141,7 +141,7 @@ def strongly_connected_components(
                     .join(has_in.hint("shuffle_hash"), "id", "left_semi")
                 )
                 dump_plan(keep, "scc_trim_round")
-                # lazy checkpoint (r6): the count below materializes the
+                # lazy checkpoint: the count below materializes the
                 # blocks in the SAME job — one job per trim round, not two
                 # (partitioning is recorded at the localCheckpoint call,
                 # the full-scan count computes every partition)
@@ -189,6 +189,7 @@ def strongly_connected_components(
             # rounds record hash(id) from the join output and run in place
             colors = verts.withColumn("color", F.col("id")).localCheckpoint(eager=True)
             frontier = colors
+            held = colors  # released once the next checkpoint is counted
             fix = False
             for _ in range(max_inner):
                 msgs = (
@@ -217,6 +218,8 @@ def strongly_connected_components(
                 new_colors = new_colors.localCheckpoint(eager=False)
                 frontier = new_colors.where("_chg").select("id", "color")
                 changed = frontier.count()
+                release(held)
+                held = new_colors
                 colors = new_colors.drop("_chg")
                 if not changed:
                     fix = True
@@ -238,6 +241,8 @@ def strongly_connected_components(
             state = colors.withColumn(
                 "in_scc", F.col("color") == F.col("id")
             ).localCheckpoint(eager=True)
+            release(held)
+            held = state
             frontier = state.where("in_scc").select("id", "color")
             fix = False
             for _ in range(max_inner):
@@ -271,6 +276,8 @@ def strongly_connected_components(
                 new_state = new_state.localCheckpoint(eager=False)
                 frontier = new_state.where("_chg").select("id", "color")
                 changed = frontier.count()
+                release(held)
+                held = new_state
                 state = new_state.drop("_chg")
                 if not changed:
                     fix = True
@@ -282,13 +289,15 @@ def strongly_connected_components(
                 )
 
             # ---- 4. extract the discovered SCCs, shrink the active graph
-            # (state is checkpointed, so members' lineage is shallow)
+            # (state is checkpointed, so members' lineage is shallow; the
+            # lazy frames in assigned read this state, keep and verts, so
+            # those checkpoints are never released)
             members = state.where("in_scc").select("id", F.col("color").alias("scc"))
             assigned.append(members)
             verts = (
                 verts.join(members.select("id"), "id", "left_anti")
                 .repartition(P, "id")
-                # lazy (r6): the count below materializes in the same job
+                # lazy: the count below materializes in the same job
                 .localCheckpoint(eager=False)
             )
             n_left = verts.count()
@@ -354,7 +363,7 @@ def _closure_from(
             .distinct()
             .join(visited, "id", "left_anti")
             .repartition(P, "id")
-            # lazy (r6): the count below materializes in the same job
+            # lazy: the count below materializes in the same job
             .localCheckpoint(eager=False)
         )
         if nxt.count() == 0:
@@ -420,7 +429,7 @@ def bowtie_classify(
     sizes = scc.groupBy("scc").count()
     core_row = sizes.orderBy(F.desc("count"), F.asc("scc")).first()
     if core_row is None:
-        # empty graph: release the persist the normal path would (ADVICE r5)
+        # empty graph: release the persist the normal path would
         scc.unpersist()
         return spark.createDataFrame([], "id long, region string")
     core_id = int(core_row["scc"])
@@ -466,8 +475,8 @@ def bowtie_classify(
         labeled.unionByName(rest)
         .repartition(P, "id")
         # V-scale result: materialize so every persisted input below can
-        # be released before return (ADVICE-class leak otherwise — two
-        # E-scale copies + five V-scale sets pinned for the app lifetime)
+        # be released before return (otherwise two E-scale copies + five
+        # V-scale sets stay pinned for the app lifetime)
         .localCheckpoint(eager=True)
     )
     for cached in (scc, core, e_src, e_dst, tubes):
@@ -559,7 +568,7 @@ def condensation_layers(
                 (F.greatest(F.col("layer"), F.coalesce("_nl", F.lit(0)))
                  != F.col("layer")).alias("_chg"),
             )
-            # lazy (r6): the changed aggregate materializes in the same job
+            # lazy: the changed aggregate materializes in the same job
             .localCheckpoint(eager=False)
         )
         changed = new_layers.agg(F.sum(F.col("_chg").cast("long"))).first()[0] or 0

@@ -29,8 +29,8 @@ that survives scale):
 
 Hyperplane model: plane component signs come from md5 digests — a fresh
 16-byte digest per 128 components (md5(f"plane:{t}:{p}:{i//128}")), so
-components NEVER repeat at any dim (round-1 cycled one digest, repeating
-beyond dim 128 and correlating planes). Deterministic, engine-
+components NEVER repeat at any dim (one cycled digest would repeat beyond
+dim 128 and correlate the planes). Deterministic, engine-
 independent, no stored model — the DuckDB oracles bake the identical
 sign literals.
 
@@ -248,7 +248,7 @@ def cosine_near_dup_bucketed(
     max_bucket: int | None = None,
 ) -> DataFrame:
     """Near-duplicate pairs via hyperplane-LSH banding + exact verify —
-    the scale path promised (and missing) in round 1.
+    the scale path of cosine near-dup search (never all-pairs).
 
     Plan shape (the MinHash→LSH→Jaccard shape, for embeddings):
       1. signatures: one corpus scan, (id, t, sig) rows only — 16 B/row
@@ -363,18 +363,6 @@ def lsh_ann_topk(
         .select("query_id", "neighbor_id", cosine(F.col("qv"), F.col("cv")).alias("cos"))
     )
     return _rank_topk(scored, k)
-
-
-def hyperplane_sign_bits(vec: Column, dim: int, num_planes: int = 8) -> Column:
-    """Single-table JVM-expression bucket id (kept for expression-only
-    pipelines): Σ_p [dot(vec, plane(0,p)) > 0] << p, planes from the same
-    non-cycling md5 derivation as plane_signs."""
-    bucket = F.lit(0)
-    for p in range(num_planes):
-        plane = F.array(*[F.lit(s) for s in plane_signs(0, p, dim)])
-        d = _dot(vec, plane)
-        bucket = bucket + F.when(d > 0, F.lit(1 << p)).otherwise(F.lit(0))
-    return bucket
 
 
 IVF_QUANT = 12  # decimals: cell-assignment similarity quantization

@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from pargraph_spark.operators.edges import canonical_undirected
 from pargraph_spark.plans.fixpoint import run_fixpoint
 from pargraph_spark.plans.metrics import JobMetrics
+from pargraph_spark.session import no_aqe, size_based_partitions
 
 
 @dataclass
@@ -127,12 +128,19 @@ def clustering_coefficient(edges: DataFrame) -> DataFrame:
 
 
 def triangle_count(spark: SparkSession, edges: DataFrame) -> TriangleResult:
-    tris = triangle_triples(edges).persist()
-    total = tris.count()
-    # materialize per_vertex so the E^1.5-scale triples cache can be
-    # RELEASED before return (else it stays cached for the session) —
-    # and reuse triangles_per_vertex's aggregation instead of a copy
-    per_vertex = _per_vertex_from_triples(tris).localCheckpoint(eager=True)
+    # AQE off for the whole call: under AQE the orientation and wedge joins
+    # took their build sides and query-stage order from whichever stage
+    # finished first, so one graph got a different plan, job count and set
+    # of generated classes from one call to the next. The static plan is
+    # the same on every call.
+    P = size_based_partitions(edges, int(spark.conf.get("spark.sql.shuffle.partitions")))
+    with no_aqe(spark, P):
+        tris = triangle_triples(edges).persist()
+        total = tris.count()
+        # materialize per_vertex so the E^1.5-scale triples cache can be
+        # RELEASED before return (else it stays cached for the session) —
+        # and reuse triangles_per_vertex's aggregation instead of a copy
+        per_vertex = _per_vertex_from_triples(tris).localCheckpoint(eager=True)
     tris.unpersist()
     return TriangleResult(total, per_vertex)
 

@@ -102,6 +102,23 @@ def size_based_partitions(df, cap: int) -> int:
     return max(floor, min(cap, math.ceil(size / ADVISORY_BYTES)))
 
 
+_BYTE_UNITS = {"": 1, "b": 1, "k": 1 << 10, "kb": 1 << 10, "m": 1 << 20,
+               "mb": 1 << 20, "g": 1 << 30, "gb": 1 << 30, "t": 1 << 40,
+               "tb": 1 << 40, "p": 1 << 50, "pb": 1 << 50}
+
+
+def broadcast_threshold(spark: SparkSession) -> int:
+    """The byte size under which AQE turns a join side into a broadcast
+    (its own threshold, else the static one); ``-1`` when broadcasts are
+    off. Spark byte strings: ``10485760b``, ``10MB``, ``-1``."""
+    raw = (spark.conf.get("spark.sql.adaptive.autoBroadcastJoinThreshold", None)
+           or spark.conf.get("spark.sql.autoBroadcastJoinThreshold"))
+    s = raw.strip().lower()
+    digits = s.rstrip("bkmgtp")
+    n = int(digits) * _BYTE_UNITS[s[len(digits):]]
+    return -1 if n < 0 else n
+
+
 def ckpt_state(df, P: int):
     """Partitioning-preserving eager localCheckpoint for iteration state.
 

@@ -9,6 +9,7 @@ fixture — allclose(1e-6) for PageRank, exact for components/labels/triangles.
 
 from __future__ import annotations
 
+import hashlib
 from collections import Counter, defaultdict
 
 import numpy as np
@@ -252,3 +253,46 @@ def ppr_oracle(edges: list[tuple[int, int]], vertices: list[int],
         dang_mass = r[dangling].sum()
         r = (1.0 - damping) * t + damping * (contrib + dang_mass * t)
     return {v: float(r[idx[v]]) for v in ids}
+
+
+def _md5(s: str) -> str:
+    return hashlib.md5(s.encode("utf-8")).hexdigest()
+
+
+def shingles_oracle(text: str | None, size: int) -> set[str]:
+    """Distinct word n-grams of whitespace-normalized, lowercased text;
+    fewer than ``size`` tokens give one joined shingle, none give none."""
+    toks = (text or "").lower().split()
+    if not toks:
+        return set()
+    if len(toks) < size:
+        return {" ".join(toks)}
+    return {" ".join(toks[i:i + size]) for i in range(len(toks) - size + 1)}
+
+
+def minhash_pairs_oracle(texts: dict[int, str | None], shingle_size: int, num_hashes: int,
+                         num_bands: int, threshold: float,
+                         max_postings: int | None = None) -> dict[tuple[int, int], float]:
+    """{(a, b): jaccard} of minhash_dedup_pairs: h_j = min md5('j:' || g)
+    over a doc's shingles, band key = md5 of its r concatenated minhashes,
+    candidates = a < b sharing a band bucket (buckets of more than
+    ``max_postings`` docs dropped), kept when set Jaccard ≥ threshold."""
+    sh = {i: shingles_oracle(t, shingle_size) for i, t in texts.items()}
+    r = num_hashes // num_bands
+    buckets: dict[tuple[int, str], list[int]] = defaultdict(list)
+    for i, s in sh.items():
+        if not s:
+            continue
+        sig = [min(_md5(f"{j}:{g}") for g in s) for j in range(num_hashes)]
+        for b in range(num_bands):
+            buckets[(b, _md5("".join(sig[b * r:(b + 1) * r])))].append(i)
+    cands = {(a, b) for ids in buckets.values()
+             if max_postings is None or len(ids) <= max_postings
+             for a in ids for b in ids if a < b}
+    out = {}
+    for a, b in cands:
+        inter = len(sh[a] & sh[b])
+        jac = inter / (len(sh[a]) + len(sh[b]) - inter)
+        if jac >= threshold:
+            out[(a, b)] = jac
+    return out

@@ -55,6 +55,25 @@ def test_scc_single_cycle_and_dag(spark):
     assert res.converged
 
 
+def test_scc_cache_does_not_grow_with_coloring_rounds(spark):
+    # a cycle of n vertices takes about n coloring and n sweep rounds;
+    # each superseded round checkpoint is released, so a 40-cycle leaves
+    # no more persistent RDDs behind than a 5-cycle. (Not ==: a JVM GC
+    # during a call lets the ContextCleaner drop the call's unreferenced
+    # outer-round checkpoints, in either call.)
+    jsc = spark.sparkContext._jsc
+
+    def added(n):
+        cyc = [(i, (i + 1) % n) for i in range(n)]
+        before = set(jsc.getPersistentRDDs().keys())
+        res = strongly_connected_components(spark, _edges_df(spark, cyc))
+        grew = set(jsc.getPersistentRDDs().keys()) - before
+        assert {r["id"]: r["scc"] for r in res.components.collect()} == {i: 0 for i in range(n)}
+        return len(grew)
+
+    assert added(40) <= added(5)
+
+
 @pytest.mark.parametrize("seed,n,m", [(7, 40, 90), (11, 60, 200), (13, 50, 60)])
 def test_scc_random_vs_tarjan(spark, seed, n, m):
     edges = _random_digraph(seed, n, m)

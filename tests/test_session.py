@@ -49,3 +49,17 @@ def test_codegen_cache_holds_a_repeated_pass(spark):
     second = _pass(spark, edges)
     assert _compiles(spark) - before == 0
     assert second == first
+
+
+def test_broadcast_threshold_reads_spark_byte_strings(spark):
+    from pargraph_spark.session import broadcast_threshold
+
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key)
+    try:
+        for raw, want in (("10485760b", 10 << 20), ("10MB", 10 << 20),
+                          ("512k", 512 << 10), ("4096", 4096), ("-1", -1)):
+            spark.conf.set(key, raw)
+            assert broadcast_threshold(spark) == want, raw
+    finally:
+        spark.conf.set(key, prev)

@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import hashlib
 import math
+import random
 import re
 
 import pytest
@@ -22,8 +23,11 @@ from pargraph_spark.operators.dedup import (
     jaccard_verify,
     lsh_bands,
     lsh_candidate_pairs,
+    minhash_dedup_pairs,
     minhash_signatures,
 )
+from tests.oracles import minhash_pairs_oracle
+from tests.test_fixpoint import _jobs
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -92,8 +96,8 @@ def test_shingles_semantics(spark):
     got = {r["id"]: sorted(r["s"]) for r in df.select("id", shingles(F.col("text"), 3).alias("s")).collect()}
     assert got[1] == ["a b c", "b c d"]
     assert got[2] == ["a b"]
-    # zero-token docs produce NO shingles (ADVICE r1): empty docs must not
-    # acquire minhash signatures and pair with each other in LSH
+    # zero-token docs produce NO shingles: empty docs must not acquire
+    # minhash signatures and pair with each other in LSH
     assert got[3] == []
 
 
@@ -201,6 +205,65 @@ def test_minhash_matches_python_and_finds_near_dupes(spark, docs):
     for r in rows[:20]:
         a, b = set(_toks(texts[r["a"]])), set(_toks(texts[r["b"]]))
         assert math.isclose(r["jaccard"], len(a & b) / len(a | b), rel_tol=0, abs_tol=0)
+
+
+def _corpus(seed: int) -> dict[int, str]:
+    """162 docs: 150 random texts over a shared 120-word vocabulary, ten
+    near-copies of the first ten (one to three tokens replaced), one empty
+    doc and one one-token doc. Ids are sparse and not in text order."""
+    rng = random.Random(seed)
+    vocab = [f"w{i}" for i in range(120)]
+    base = [[rng.choice(vocab) for _ in range(rng.randint(12, 30))] for _ in range(150)]
+    copies = []
+    for toks in base[:10]:
+        toks = list(toks)
+        for _ in range(rng.randint(1, 3)):
+            toks[rng.randrange(len(toks))] = rng.choice(vocab)
+        copies.append(toks)
+    texts = [" ".join(t) for t in base + copies]
+    texts[3] = texts[3].upper().replace(" ", "  ", 2)  # case and spacing normalize away
+    texts += ["", "Solo"]
+    ids = rng.sample(range(10_000), len(texts))
+    return dict(zip(ids, texts))
+
+
+@pytest.fixture(scope="module")
+def corpus(spark):
+    texts = _corpus(5)
+    return texts, spark.createDataFrame(sorted(texts.items()), "doc_id long, text string")
+
+
+@pytest.mark.parametrize("shingle_size", [1, 2, 3])
+@pytest.mark.parametrize("threshold", [0.0, 0.5])
+def test_minhash_dedup_pairs_matches_reference(spark, corpus, shingle_size, threshold):
+    texts, df = corpus
+    got = {(r["a"], r["b"]): r["jaccard"] for r in minhash_dedup_pairs(
+        df, "doc_id", "text", shingle_size=shingle_size, threshold=threshold).collect()}
+    want = minhash_pairs_oracle(texts, shingle_size, 8, 4, threshold)
+    assert got == want  # floats compared exactly
+    ids = list(texts)
+    planted = {tuple(sorted((ids[i], ids[150 + i]))) for i in range(10)}
+    assert len(planted & got.keys()) >= 7
+
+
+def test_minhash_dedup_pairs_hot_bucket_cap_matches_reference(spark, corpus):
+    texts, df = corpus
+    got = {(r["a"], r["b"]): r["jaccard"] for r in minhash_dedup_pairs(
+        df, "doc_id", "text", shingle_size=1, threshold=0.0, max_postings=3).collect()}
+    want = minhash_pairs_oracle(texts, 1, 8, 4, 0.0, max_postings=3)
+    assert got == want
+    assert len(want) < len(minhash_pairs_oracle(texts, 1, 8, 4, 0.0))
+
+
+def test_minhash_dedup_pairs_job_count(spark):
+    # one call builds a single per-document table (no exchange), bands it,
+    # and verifies against it: a handful of jobs, not one per shuffle of
+    # exploded shingle rows
+    df = spark.createDataFrame(sorted(_corpus(6).items()), "doc_id long, text string")
+    rows, jobs = _jobs(spark, lambda: minhash_dedup_pairs(
+        df, "doc_id", "text", shingle_size=2, threshold=0.5).collect())
+    assert rows
+    assert jobs <= 10, jobs
 
 
 def test_hot_fingerprint_cap_bounds_boilerplate_blowup(spark):

@@ -11,6 +11,7 @@ from pargraph_spark.sources.pages import latest_pages
 from pargraph_spark.synth import pages_df_local
 
 from .oracles import triangles_oracle
+from .test_fixpoint import _jobs
 
 EDGE_SCHEMA = "src long, dst long"
 
@@ -27,6 +28,18 @@ def test_cliques_closed_form(spark):
     assert res.total == 30
     per = {r["id"]: r["tri"] for r in res.per_vertex.collect()}
     assert all(v == 6 for v in per.values()) and len(per) == 15
+
+
+def test_triangle_count_plan_is_the_same_on_every_call(spark):
+    # the call runs without AQE, so its plan does not depend on which query
+    # stage finishes first: the same graph takes the same number of jobs
+    rng = random.Random(7)
+    edges = spark.createDataFrame(
+        sorted({(rng.randrange(90), rng.randrange(100)) for _ in range(300)}),
+        EDGE_SCHEMA)
+    runs = [_jobs(spark, lambda: triangle_count(spark, edges)) for _ in range(6)]
+    assert len({jobs for _, jobs in runs}) == 1, [jobs for _, jobs in runs]
+    assert len({res.total for res, _ in runs}) == 1
 
 
 def test_direction_and_dup_insensitive(spark):
