@@ -35,15 +35,25 @@ Every outer round extracts at least the SCC of the minimum active vertex
 giant SCC, so outer rounds are few (trim handles the chain-shaped tail
 that would otherwise force one round per chain SCC).
 
-Plan shape (the engine's iterative discipline): the active edge set is
-persisted TWICE per outer round — partitioned by src (forward coloring
-probes it in place) and by dst (backward sweep probes it in place) — the
-hits/salsa dual-copy rule, so no inner iteration ever exchanges the
-E-scale relation; only V-scale label/frontier tables shuffle. Inner loops
-localCheckpoint their V-scale state each round (lineage truncation, the
-ref-count-release analogue of /root/reference/pargraph/engine/
-engine.py:63-76). Hub skew on the min-aggregates is absorbed map-side
-(partial min/first combine) + AQE.
+Plan shape: every inner fixpoint runs on plans/fixpoint.py, one state
+table each, ONE Spark job per round (its stats aggregate materializes
+the round's checkpoint) plus one setup job; the whole call runs under
+``no_aqe(P)`` so every state records hash(id, P). The active edge set is
+persisted TWICE — partitioned by src (trim, forward coloring) and by dst
+(trim, backward sweep) — the hits/salsa dual-copy rule, so no inner round
+exchanges the E-scale relation: it is probed in place and only V-scale
+message tables shuffle (partial-combined map-side, which absorbs hub
+skew). The states are
+
+  trim     (id, color = id)           the vertices still alive
+  coloring (id, color, _chg)          stat count_if(_chg)
+  sweep    (id, color, in_scc, _chg)  stats count_if(_chg), count_if(in_scc)
+
+and a round combines messages into its state by union + aggregate or by
+semi joins, never by a join of the state with a table derived from it.
+Between outer rounds the edge copies shrink to the vertices left. The
+result is one materialized table; every checkpoint and persisted copy
+the call made is released before it returns.
 """
 
 from __future__ import annotations
@@ -54,8 +64,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pargraph_spark.plans.debug import dump_plan
-from pargraph_spark.plans.fixpoint import release
+from pargraph_spark.operators.bfs import _adjacency, _bfs
+from pargraph_spark.plans.fixpoint import release, run_fixpoint
 from pargraph_spark.plans.metrics import JobMetrics, SuperstepMetric
 from pargraph_spark.session import no_aqe, size_based_partitions
 
@@ -66,14 +76,6 @@ class SCCResult:
     outer_rounds: int
     converged: bool
     metrics: JobMetrics = field(default_factory=lambda: JobMetrics("scc"))
-
-
-def _dedup_edges(edges: DataFrame) -> DataFrame:
-    return (
-        edges.select(F.col("src").cast("long"), F.col("dst").cast("long"))
-        .where(F.col("src") != F.col("dst"))
-        .distinct()
-    )
 
 
 def strongly_connected_components(
@@ -93,244 +95,185 @@ def strongly_connected_components(
     P = size_based_partitions(edges, P)
     metrics = JobMetrics("scc")
 
-    # whole fixpoint under no-AQE: checkpointed V-scale state keeps its
-    # recorded hash partitioning (see session.no_aqe)
+    def trim(v: DataFrame, prev) -> DataFrame:
+        # a vertex with no out-edge or no in-edge inside the alive set is a
+        # singleton SCC: keep the alive vertices with an edge to an alive
+        # vertex and one from an alive vertex (both copies probed in place)
+        has_out = (
+            e_dst.join(v.select(F.col("id").alias("dst")).hint("shuffle_hash"),
+                       "dst", "left_semi")
+            .select(F.col("src").alias("id")).distinct()
+        )
+        has_in = (
+            e_src.join(v.select(F.col("id").alias("src")).hint("shuffle_hash"),
+                       "src", "left_semi")
+            .select(F.col("dst").alias("id")).distinct()
+        )
+        return (v.join(has_out.hint("shuffle_hash"), "id", "left_semi")
+                .join(has_in.hint("shuffle_hash"), "id", "left_semi"))
+
+    def color(state: DataFrame, prev) -> DataFrame:
+        # delta frontier: min-propagation is monotone, so only vertices
+        # whose color just improved re-emit; messages to vertices outside
+        # the state (trimmed or extracted) have no state row and drop
+        msgs = (
+            e_src.join(
+                state.where("_chg").select(F.col("id").alias("src"), "color")
+                .hint("shuffle_hash"),
+                "src",
+            )
+            .groupBy(F.col("dst").alias("id"))
+            .agg(F.min("color").alias("_m"))
+        )
+        return (
+            state.select("id", "color")
+            .unionByName(msgs, allowMissingColumns=True)
+            .groupBy("id")
+            .agg(F.min("color").alias("color"), F.min("_m").alias("_m"))
+            .where(F.col("color").isNotNull())
+            .select("id", F.least("color", "_m").alias("color"),
+                    F.coalesce(F.col("_m") < F.col("color"), F.lit(False)).alias("_chg"))
+        )
+
+    def sweep(state: DataFrame, prev) -> DataFrame:
+        # newly joined members notify their in-neighbors. At the coloring
+        # fixpoint color(v) >= color(w) on every edge v -> w, so a vertex
+        # joins iff the LARGEST color offered to it equals its own
+        offers = (
+            e_dst.join(
+                state.where("_chg").select(F.col("id").alias("dst"), "color")
+                .hint("shuffle_hash"),
+                "dst",
+            )
+            .groupBy(F.col("src").alias("id"))
+            .agg(F.max("color").alias("_o"))
+        )
+        return (
+            state.select("id", "color", "in_scc")
+            .unionByName(offers, allowMissingColumns=True)
+            .groupBy("id")
+            .agg(F.max("color").alias("color"), F.max("in_scc").alias("in_scc"),
+                 F.max("_o").alias("_o"))
+            .where(F.col("color").isNotNull())
+            .select("id", "color",
+                    (F.col("in_scc") | F.coalesce(F.col("_o") == F.col("color"), F.lit(False)))
+                    .alias("in_scc"),
+                    (~F.col("in_scc") & F.coalesce(F.col("_o") == F.col("color"), F.lit(False)))
+                    .alias("_chg"))
+        )
+
+    def fixpoint(init, step, stats, done, name, max_iter):
+        return run_fixpoint(spark, init, step, stats, done, name=name, P=P,
+                            max_iter=max_iter, edges=0, plan=f"{name}_round")
+
+    def truncated(phase: str) -> RuntimeError:
+        # a truncated coloring or sweep would silently FRAGMENT real SCCs
+        # (a cycle longer than max_inner would come back as singletons) —
+        # propagation depth is bounded by the longest simple path, so
+        # failing loudly is the only honest outcome
+        return RuntimeError(f"scc: {phase} did not reach fixpoint within "
+                            f"max_inner={max_inner} rounds — raise max_inner")
+
     with no_aqe(spark, P):
         # setup in ONE E-scale exchange: repartition on the probe key
         # first, then dedupe in place — hash(src) co-locates every
-        # (src, dst) pair, so dropDuplicates adds no second exchange (the
-        # old distinct-then-repartition shape exchanged E twice); persist,
-        # NEVER localCheckpoint (the E-scale relation is probed in place
-        # by every inner round)
-        active_e = (
+        # (src, dst) pair, so dropDuplicates adds no second exchange
+        e_src = (
             edges.select(F.col("src").cast("long"), F.col("dst").cast("long"))
             .where(F.col("src") != F.col("dst"))
             .repartition(P, "src")
             .dropDuplicates(["src", "dst"])
             .persist()
         )
-        active_e.count()
-        # vertex set from the (now cached) edge table — two cache scans,
-        # not two recomputations of the dedup pipeline
+        e_dst = e_src.repartition(P, "dst").persist()
+        # every vertex with its initial color, id (aliased BEFORE the
+        # exchange: a checkpoint of a projection that aliases id records
+        # hash(alias), and the first round would re-exchange the state)
         verts = (
             vertices.select(F.col("id").cast("long"))
             if vertices is not None
-            else active_e.select(F.col("src").alias("id")).unionByName(
-                active_e.select(F.col("dst").alias("id"))
-            )
-        ).distinct().repartition(P, "id").localCheckpoint(eager=False)
-        assigned: list[DataFrame] = []
+            else e_src.select(F.col("src").alias("id")).unionByName(
+                e_src.select(F.col("dst").alias("id")))
+        ).distinct().select("id", F.col("id").alias("color")).repartition(
+            P, "id").localCheckpoint(eager=True)
+        left = verts
+        # the result: one row per vertex, the minimum over its own id and
+        # the color of the round that extracted it (the minimum member id)
+        out = verts
+        swept: list[DataFrame] = []  # each round's final sweep state
         converged = False
         outer = 0
 
         while outer < max_outer:
             outer += 1
             t0 = time.monotonic()
-
-            # ---- 1. trim to fixpoint: no-in or no-out vertices are singleton SCCs
-            n_verts = verts.count()
-            while True:
-                has_out = active_e.select(F.col("src").alias("id")).distinct()
-                has_in = active_e.select(F.col("dst").alias("id")).distinct()
-                # no trailing repartition: verts is checkpointed hash(id, P)
-                # (recorded under no_aqe) and the semi joins preserve it;
-                # shuffle_hash builds on the deduped endpoint sets instead of
-                # sorting both sides (guide §3.1)
-                keep = (
-                    verts.join(has_out.hint("shuffle_hash"), "id", "left_semi")
-                    .join(has_in.hint("shuffle_hash"), "id", "left_semi")
-                )
-                dump_plan(keep, "scc_trim_round")
-                # lazy checkpoint: the count below materializes the
-                # blocks in the SAME job — one job per trim round, not two
-                # (partitioning is recorded at the localCheckpoint call,
-                # the full-scan count computes every partition)
-                keep = keep.localCheckpoint(eager=False)
-                n_keep = keep.count()
-                n_trim = n_verts - n_keep
-                if n_trim == 0:
-                    verts = keep
-                    break
-                # trimmed's lineage is shallow (checkpointed verts ⋈ keep) — no
-                # materialization needed, the final union reads it once
-                trimmed = verts.join(keep, "id", "left_anti")
-                assigned.append(trimmed.select("id", F.col("id").alias("scc")))
-                verts = keep
-                n_verts = n_keep
-                if n_keep == 0:
-                    break
-                new_e = (
-                    active_e.join(verts.select(F.col("id").alias("src")), "src", "left_semi")
-                    .join(verts.select(F.col("id").alias("dst")), "dst", "left_semi")
-                    .repartition(P, "src")
+            if swept:
+                # drop the extracted SCCs' edges: the semi join on src
+                # probes e_src in place, the one on dst lands hash(dst)
+                shrunk = (
+                    e_src.join(left.select(F.col("id").alias("src")).hint("shuffle_hash"),
+                               "src", "left_semi")
+                    .join(left.select(F.col("id").alias("dst")).hint("shuffle_hash"),
+                          "dst", "left_semi")
                     .persist()
                 )
-                new_e.count()
-                active_e.unpersist()
-                active_e = new_e
+                shrunk.count()
+                e_src.unpersist()
+                e_dst.unpersist()
+                e_dst, e_src = shrunk, shrunk.repartition(P, "src").persist()
 
-            n_active = n_verts
+            # ---- 1. trim to fixpoint (not a correctness step: a vertex
+            # it leaves is still extracted below, so max_inner may cut it)
+            tr = fixpoint(lambda: left, trim, [F.count("*").alias("n")],
+                          lambda s, prev: s["n"] in (0, prev["n"]),
+                          "scc_trim", max_inner)
+            n_active = tr.stats["n"]
             if n_active == 0:
+                release(tr.state)
                 converged = True
                 break
 
-            # ---- dual persisted copies: forward probes e_src, backward probes e_dst
-            e_src = active_e  # already repartitioned on src by the trim loop
-            e_dst = active_e.repartition(P, "dst").persist()
-            e_dst.count()
+            # ---- 2. forward min-label coloring to fixpoint
+            co = fixpoint(
+                lambda: tr.state.withColumn("_chg", F.lit(True)),
+                color, [F.count_if("_chg")], lambda s, prev: s[0] == 0,
+                "scc_color", max_inner)
+            release(tr.state)
+            if not co.converged:
+                raise truncated("forward coloring")
 
-            # ---- 2. forward min-label coloring to fixpoint — DELTA frontier:
-            # min-propagation is monotone, so only vertices whose color just
-            # improved need to re-emit; late-round cost is frontier-scale, not
-            # V-scale (AQE broadcasts the shrinking frontier side)
-            # NOTE: the init projection aliases id -> color and the recorded
-            # checkpoint partitioning latches onto the alias (hash(color)),
-            # so round 1 re-exchanges the V-scale state once; steady-state
-            # rounds record hash(id) from the join output and run in place
-            colors = verts.withColumn("color", F.col("id")).localCheckpoint(eager=True)
-            frontier = colors
-            held = colors  # released once the next checkpoint is counted
-            fix = False
-            for _ in range(max_inner):
-                msgs = (
-                    e_src.join(
-                        frontier.select(F.col("id").alias("src"), "color")
-                        .hint("shuffle_hash"),
-                        "src",
-                    )
-                    .groupBy(F.col("dst").alias("id"))
-                    .agg(F.min("color").alias("_mc"))
-                )
-                # colors (checkpointed hash(id, P)) and msgs (aggregate output,
-                # hash(id, P)) are co-partitioned: the join and the checkpoint
-                # need no exchange — the only shuffle per round is the message
-                # aggregation itself
-                new_colors = (
-                    colors.join(msgs.hint("shuffle_hash"), "id", "left")
-                    .select(
-                        "id",
-                        F.least(F.col("color"), F.coalesce("_mc", "color")).alias("color"),
-                        (F.coalesce("_mc", "color") < F.col("color")).alias("_chg"),
-                    )
-                )
-                dump_plan(new_colors, "scc_color_round")
-                # lazy: the frontier count materializes state in one job
-                new_colors = new_colors.localCheckpoint(eager=False)
-                frontier = new_colors.where("_chg").select("id", "color")
-                changed = frontier.count()
-                release(held)
-                held = new_colors
-                colors = new_colors.drop("_chg")
-                if not changed:
-                    fix = True
-                    break
-            if not fix:
-                # a truncated coloring would silently FRAGMENT real SCCs (a
-                # cycle longer than max_inner would come back as singletons,
-                # flagged converged) — propagation depth is bounded by the
-                # longest simple path, so failing loudly is the only honest
-                # outcome
-                raise RuntimeError(
-                    f"scc: forward coloring did not reach fixpoint within "
-                    f"max_inner={max_inner} rounds — raise max_inner"
-                )
+            # ---- 3. backward sweep from the roots (color == id)
+            sw = fixpoint(
+                lambda: co.state.select(
+                    "id", "color", (F.col("color") == F.col("id")).alias("in_scc"),
+                    (F.col("color") == F.col("id")).alias("_chg")),
+                sweep,
+                [F.count_if("_chg").alias("changed"),
+                 F.count_if("in_scc").alias("members")],
+                lambda s, prev: s["changed"] == 0,
+                "scc_sweep", max_inner)
+            release(co.state)
+            if not sw.converged:
+                raise truncated("backward sweep")
 
-            # ---- 3. constrained backward sweep from roots — same delta rule:
-            # membership is monotone, only NEWLY-joined members notify their
-            # in-neighbors
-            state = colors.withColumn(
-                "in_scc", F.col("color") == F.col("id")
-            ).localCheckpoint(eager=True)
-            release(held)
-            held = state
-            frontier = state.where("in_scc").select("id", "color")
-            fix = False
-            for _ in range(max_inner):
-                cand = (
-                    e_dst.join(
-                        frontier.select(
-                            F.col("id").alias("dst"), F.col("color").alias("_c")
-                        ).hint("shuffle_hash"),
-                        "dst",
-                    )
-                    .select(F.col("src").alias("_cid"), "_c")
-                    .distinct()
-                )
-                # state stays hash(id, P); only the (deduped) candidate side
-                # re-exchanges to the compatible hash(_cid, P) spec
-                new_state = (
-                    state.join(
-                        cand.hint("shuffle_hash"),
-                        (F.col("id") == F.col("_cid")) & (F.col("color") == F.col("_c")),
-                        "left",
-                    )
-                    .select(
-                        "id",
-                        "color",
-                        (F.col("in_scc") | F.col("_c").isNotNull()).alias("in_scc"),
-                        (~F.col("in_scc") & F.col("_c").isNotNull()).alias("_chg"),
-                    )
-                )
-                dump_plan(new_state, "scc_sweep_round")
-                # lazy: the frontier count materializes state in one job
-                new_state = new_state.localCheckpoint(eager=False)
-                frontier = new_state.where("_chg").select("id", "color")
-                changed = frontier.count()
-                release(held)
-                held = new_state
-                state = new_state.drop("_chg")
-                if not changed:
-                    fix = True
-                    break
-            if not fix:
-                raise RuntimeError(
-                    f"scc: backward sweep did not reach fixpoint within "
-                    f"max_inner={max_inner} rounds — raise max_inner"
-                )
-
-            # ---- 4. extract the discovered SCCs, shrink the active graph
-            # (state is checkpointed, so members' lineage is shallow; the
-            # lazy frames in assigned read this state, keep and verts, so
-            # those checkpoints are never released)
-            members = state.where("in_scc").select("id", F.col("color").alias("scc"))
-            assigned.append(members)
-            verts = (
-                verts.join(members.select("id"), "id", "left_anti")
-                .repartition(P, "id")
-                # lazy: the count below materializes in the same job
-                .localCheckpoint(eager=False)
-            )
-            n_left = verts.count()
-            e_dst.unpersist()
+            # ---- 4. the members are extracted; the rest go round again
+            swept.append(sw.state)
+            out = out.unionByName(sw.state.where("in_scc").select("id", "color"))
+            n_left = n_active - sw.stats["members"]
             metrics.supersteps.append(
                 SuperstepMetric(outer, (time.monotonic() - t0) * 1000.0, n_left, 0.0)
             )
             if n_left == 0:
                 converged = True
                 break
-            new_e = (
-                active_e.join(verts.select(F.col("id").alias("src")), "src", "left_semi")
-                .join(verts.select(F.col("id").alias("dst")), "dst", "left_semi")
-                .repartition(P, "src")
-                .persist()
-            )
-            new_e.count()
-            active_e.unpersist()
-            active_e = new_e
+            left = sw.state.where(~F.col("in_scc")).select(
+                "id", F.col("id").alias("color"))
 
-    active_e.unpersist()
-    if not converged:
-        # max_outer exhausted: the still-active vertices really do get
-        # scc=id rows (the comment's promise) so the output covers every
-        # vertex; converged=False tells the caller these are provisional
-        assigned.append(verts.select("id", F.col("id").alias("scc")))
-    if assigned:
-        out = assigned[0]
-        for a in assigned[1:]:
-            out = out.unionByName(a)
-    else:
-        out = spark.createDataFrame([], "id long, scc long")
-    out = out.repartition(P, "id")
+        out = out.groupBy("id").agg(F.min("color").alias("scc")).localCheckpoint(eager=True)
+    for df in (verts, *swept):
+        release(df)
+    e_src.unpersist()
+    e_dst.unpersist()
     return SCCResult(out, outer, converged, metrics)
 
 
@@ -339,62 +282,6 @@ def strongly_connected_components(
 # --------------------------------------------------------------------------
 
 REGIONS = ("CORE", "IN", "OUT", "TUBES", "TENDRILS", "DISCONNECTED")
-
-
-def _closure_from(
-    seed: DataFrame,
-    e: DataFrame,
-    src_col: str,
-    dst_col: str,
-    P: int,
-    max_inner: int,
-) -> DataFrame:
-    """Vertices reachable from `seed` (exclusive) following (src_col →
-    dst_col) edges; frontier BFS with visited-set anti-joins. `e` must be
-    partitioned on src_col so the frontier join probes it in place."""
-    visited = seed.select("id").localCheckpoint(eager=True)
-    frontier = visited
-    retired: list[DataFrame] = []  # superseded V-scale checkpoints
-    done = False
-    for _ in range(max_inner):
-        nxt = (
-            e.join(frontier.select(F.col("id").alias(src_col)), src_col)
-            .select(F.col(dst_col).alias("id"))
-            .distinct()
-            .join(visited, "id", "left_anti")
-            .repartition(P, "id")
-            # lazy: the count below materializes in the same job
-            .localCheckpoint(eager=False)
-        )
-        if nxt.count() == 0:
-            retired.append(nxt)
-            done = True
-            break
-        retired.append(visited)
-        visited = visited.unionByName(nxt).repartition(P, "id").localCheckpoint(
-            eager=True
-        )
-        retired.append(nxt)
-        frontier = nxt
-    if not done:
-        # an unfinished closure silently mislabels bowtie regions — fail
-        # loudly (BFS depth is bounded by the graph diameter)
-        raise RuntimeError(
-            f"closure did not terminate within max_inner={max_inner} "
-            f"BFS rounds — raise max_inner"
-        )
-    # return ONE materialized table and release every per-hop checkpoint
-    # (4 closures × rounds × V-scale tables leak otherwise); the result
-    # must be materialized BEFORE the final visited is released — a lazy
-    # anti-join over a released LogicalRDD is unrecoverable
-    out = (
-        visited.join(seed.select("id"), "id", "left_anti")
-        .localCheckpoint(eager=True)
-    )
-    retired.append(visited)
-    for df in retired:
-        release(df)
-    return out
 
 
 def bowtie_classify(
@@ -415,43 +302,52 @@ def bowtie_classify(
     TENDRILS = hangs off IN (forward) or into OUT (backward) but not both;
     DISCONNECTED = everything else.
 
-    Four BFS closures over the same dual-partitioned persisted edge table;
-    each closure shuffles only V-scale frontier/visited sets.
+    Four closures, each the multi-source BFS of bfs.py (one Spark job per
+    hop) over a forward or a reversed persisted adjacency: a closure is
+    the BFS visited set at dist > 0. ``scc`` (id, scc) is read several
+    times, so pass a materialized table (``SCCResult.components`` is one);
+    it is the caller's and is not released.
     """
     P = int(num_partitions or spark.conf.get("spark.sql.shuffle.partitions"))
-    e0 = _dedup_edges(edges)
-    if scc is None:
+    P = size_based_partitions(edges, P)
+    owned = scc is None
+    if owned:
         scc = strongly_connected_components(
             spark, edges, num_partitions=P, max_inner=max_inner
         ).components
-    scc = scc.persist()
-
-    sizes = scc.groupBy("scc").count()
-    core_row = sizes.orderBy(F.desc("count"), F.asc("scc")).first()
+    core_row = (scc.groupBy("scc").count()
+                .orderBy(F.desc("count"), F.asc("scc")).first())
     if core_row is None:
-        # empty graph: release the persist the normal path would
-        scc.unpersist()
+        if owned:
+            release(scc)
         return spark.createDataFrame([], "id long, region string")
-    core_id = int(core_row["scc"])
-    core = scc.where(F.col("scc") == F.lit(core_id)).select("id").persist()
+    core = scc.where(F.col("scc") == F.lit(core_row["scc"])).select("id")
 
-    e_src = e0.repartition(P, "src").persist()
-    e_dst = e0.repartition(P, "dst").persist()
-    e_src.count()
-    e_dst.count()
+    fwd = _adjacency(edges, False, P)
+    bwd = _adjacency(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")),
+                     False, P)
+    visited: list[DataFrame] = []
 
-    # _closure_from returns materialized localCheckpoint tables — no extra
-    # persist needed (it would only duplicate the blocks)
-    out_set = _closure_from(core, e_src, "src", "dst", P, max_inner)
-    in_set = _closure_from(core, e_dst, "dst", "src", P, max_inner)
+    def closure(adj: tuple[DataFrame, int], seeds: DataFrame) -> DataFrame:
+        state, _, exhausted, _ = _bfs(spark, *adj, seeds, (), max_inner, P, "bowtie")
+        visited.append(state)
+        if not exhausted:
+            # an unfinished closure silently mislabels bowtie regions —
+            # fail loudly (BFS depth is bounded by the graph diameter)
+            raise RuntimeError(
+                f"closure did not terminate within max_inner={max_inner} "
+                f"BFS rounds — raise max_inner"
+            )
+        return state.where(F.col("dist") > 0).select("id")
 
-    fwd_from_in = _closure_from(in_set, e_src, "src", "dst", P, max_inner)
-    bwd_from_out = _closure_from(out_set, e_dst, "dst", "src", P, max_inner)
+    out_set = closure(fwd, core)
+    in_set = closure(bwd, core)
+    fwd_from_in = closure(fwd, in_set)
+    bwd_from_out = closure(bwd, out_set)
     known = core.unionByName(in_set).unionByName(out_set)
     tubes = (
         fwd_from_in.join(bwd_from_out, "id", "left_semi")
         .join(known, "id", "left_anti")
-        .persist()
     )
     tendrils = (
         fwd_from_in.unionByName(bwd_from_out)
@@ -460,7 +356,6 @@ def bowtie_classify(
         .join(tubes, "id", "left_anti")
     )
 
-    verts = scc.select("id").distinct()
     labeled = (
         core.withColumn("region", F.lit("CORE"))
         .unionByName(in_set.withColumn("region", F.lit("IN")))
@@ -468,22 +363,15 @@ def bowtie_classify(
         .unionByName(tubes.withColumn("region", F.lit("TUBES")))
         .unionByName(tendrils.withColumn("region", F.lit("TENDRILS")))
     )
-    rest = verts.join(labeled.select("id"), "id", "left_anti").withColumn(
+    rest = scc.select("id").join(labeled.select("id"), "id", "left_anti").withColumn(
         "region", F.lit("DISCONNECTED")
     )
-    out = (
-        labeled.unionByName(rest)
-        .repartition(P, "id")
-        # V-scale result: materialize so every persisted input below can
-        # be released before return (otherwise two E-scale copies + five
-        # V-scale sets stay pinned for the app lifetime)
-        .localCheckpoint(eager=True)
-    )
-    for cached in (scc, core, e_src, e_dst, tubes):
-        cached.unpersist()
-    # the four closures are this function's own checkpoints
-    for closure in (out_set, in_set, fwd_from_in, bwd_from_out):
-        release(closure)
+    # materialized, so every table it reads can be released before return
+    out = labeled.unionByName(rest).repartition(P, "id").localCheckpoint(eager=True)
+    fwd[0].unpersist()
+    bwd[0].unpersist()
+    for df in (*visited, *([scc] if owned else [])):
+        release(df)
     return out
 
 
@@ -520,72 +408,63 @@ def condensation_layers(
 
     Plan shape: the condensation edge set is tiny relative to E (it
     shrinks by the SCC sizes and the dedupe) and is persisted partitioned
-    on its probe key csrc; each round joins the (comp, layer) state
-    against it in place and partial-combines the max per cdst — the same
-    zero-E-scale-exchange loop as the other fixpoints, at condensation
-    scale. The final join back to vertices is one V-scale co-partitioned
-    join.
+    on its probe key csrc. The layering runs on plans/fixpoint.py over
+    one state (c, layer, _chg) on hash(c), one Spark job per round: the
+    components whose layer just grew probe the edge set in place, the
+    max per cdst partial-combines, and union + aggregate folds it into
+    the state. The final join back to vertices is one V-scale join.
     """
     P = int(num_partitions or spark.conf.get("spark.sql.shuffle.partitions"))
-    comps = (
-        scc if scc is not None
-        else strongly_connected_components(
-            spark, edges, num_partitions=P
-        ).components
-    ).repartition(P, "id").persist()
-    comps.count()
-    e0 = _dedup_edges(edges)
-    ce = (
-        e0.join(comps.select(F.col("id").alias("src"),
-                             F.col("scc").alias("csrc")), "src")
-        .join(comps.select(F.col("id").alias("dst"),
-                           F.col("scc").alias("cdst")), "dst")
-        .where(F.col("csrc") != F.col("cdst"))
-        .select("csrc", "cdst")
-        .distinct()
-        .repartition(P, "csrc")
-        .persist()
-    )
-    ce.count()
-    layers = (
-        comps.select(F.col("scc").alias("c")).distinct()
-        .withColumn("layer", F.lit(0).cast("long"))
-        .repartition(P, "c")
-        .localCheckpoint(eager=True)
-    )
-    rounds, converged = 0, False
-    for r in range(1, max_rounds + 1):
-        prop = (
-            ce.join(layers, ce["csrc"] == layers["c"])
-            .groupBy(ce["cdst"].alias("c"))
-            .agg((F.max("layer") + 1).alias("_nl"))
+    owned = scc is None
+    if owned:
+        scc = strongly_connected_components(spark, edges, num_partitions=P).components
+    with no_aqe(spark, P):
+        comps = scc.repartition(P, "id").persist()
+        comps.count()
+        ce = (
+            edges.join(comps.select(F.col("id").alias("src"),
+                                    F.col("scc").alias("csrc")), "src")
+            .join(comps.select(F.col("id").alias("dst"),
+                               F.col("scc").alias("cdst")), "dst")
+            .where(F.col("csrc") != F.col("cdst"))
+            .select("csrc", "cdst")
+            .distinct()
+            .repartition(P, "csrc")
+            .persist()
         )
-        new_layers = (
-            layers.join(prop, "c", "left")
-            .select(
-                "c",
-                F.greatest(F.col("layer"), F.coalesce("_nl", F.lit(0))).alias("layer"),
-                (F.greatest(F.col("layer"), F.coalesce("_nl", F.lit(0)))
-                 != F.col("layer")).alias("_chg"),
+        ce.count()
+
+        def step(state: DataFrame, prev) -> DataFrame:
+            nl = (
+                ce.join(state.where("_chg").select(F.col("c").alias("csrc"), "layer")
+                        .hint("shuffle_hash"), "csrc")
+                .groupBy(F.col("cdst").alias("c"))
+                .agg((F.max("layer") + 1).alias("_nl"))
             )
-            # lazy: the changed aggregate materializes in the same job
-            .localCheckpoint(eager=False)
+            return (
+                state.select("c", "layer")
+                .unionByName(nl, allowMissingColumns=True)
+                .groupBy("c")
+                .agg(F.max("layer").alias("layer"), F.max("_nl").alias("_nl"))
+                .select("c", F.greatest("layer", "_nl").alias("layer"),
+                        F.coalesce(F.col("_nl") > F.col("layer"), F.lit(False)).alias("_chg"))
+            )
+
+        res = run_fixpoint(
+            spark,
+            lambda: comps.select(F.col("scc").alias("c")).distinct().select(
+                "c", F.lit(0).cast("long").alias("layer"), F.lit(True).alias("_chg")),
+            step, [F.count_if("_chg")], lambda s, prev: s[0] == 0,
+            name="condensation_layers", P=P, max_iter=max_rounds, edges=0,
         )
-        changed = new_layers.agg(F.sum(F.col("_chg").cast("long"))).first()[0] or 0
-        layers = new_layers.drop("_chg")
-        rounds = r
-        if changed == 0:
-            converged = True
-            rounds = r - 1  # terminal identity round is not a round
-            break
-    out = (
-        comps.join(layers.select(F.col("c").alias("scc"), "layer"), "scc")
-        .select("id", "scc", "layer")
-        # materialize BEFORE dropping the comps cache — unpersisting
-        # first would make every consumer action recompute the full SCC
-        # union that the persist was built to avoid
-        .localCheckpoint(eager=True)
-    )
-    ce_out = ce
+        out = (
+            comps.join(res.state.select(F.col("c").alias("scc"), "layer"), "scc")
+            .select("id", "scc", "layer")
+            .localCheckpoint(eager=True)
+        )
     comps.unpersist()
-    return CondensationResult(ce_out, out, rounds, converged)
+    release(res.state)
+    if owned:
+        release(scc)
+    # the round that changes nothing is not a round
+    return CondensationResult(ce, out, res.iterations - res.converged, res.converged)

@@ -241,12 +241,15 @@ def _truss(
 
     P = int(num_partitions or spark.conf.get("spark.sql.shuffle.partitions"))
     und = canonical_undirected(edges)
-    tri = triangle_triples(und.select(F.col("a").alias("src"),
-                                      F.col("b").alias("dst")))
-    # persist, not localCheckpoint: the scan keeps the hash(a, b)
-    # partitioning, so every round reads the melted triangles in place
-    melt = _triangle_edges(tri).repartition(P, "a", "b").persist()
-    melt.count()
+    # AQE off for the enumeration, as in triangle_count: one plan and job
+    # count per graph. persist, not localCheckpoint: the scan keeps the
+    # hash(a, b) partitioning, so every round reads the melted triangles
+    # in place
+    with no_aqe(spark, P):
+        tri = triangle_triples(und.select(F.col("a").alias("src"),
+                                          F.col("b").alias("dst")))
+        melt = _triangle_edges(tri).repartition(P, "a", "b").persist()
+        melt.count()
     edge = Window.partitionBy("a", "b")
     w = edge.orderBy(F.col("x").desc())
 

@@ -8,7 +8,10 @@ core_numbers, truss_numbers (so also ktruss), bitruss, wl_colors,
 katz_centrality, earliest_arrival, hits and salsa,
 maximal_independent_set, greedy_coloring, maximal_matching,
 betweenness (its forward levels), kmv_reach, harmonic_centrality_kmv,
-effective_diameter and hll_reach. Each keeps its state in ONE table.
+effective_diameter, hll_reach, strongly_connected_components (its trim,
+forward coloring and backward sweep, in each outer round),
+condensation_layers, and bowtie_classify's closures (through bfs).
+Each keeps its state in ONE table.
 An operator keeps its own setup (edge repartition/persist, vertex base,
 warm start) and hands ``run_fixpoint`` three pieces:
 

@@ -285,42 +285,45 @@ def test_tfidf_cosine_cap_is_broadcast_anti_join(spark):
     assert plan.count("HashAggregate") >= 2, plan
 
 
-def test_scc_inner_fixpoints_probe_copartitioned_edges(spark):
-    # scc's two inner fixpoints (forward min-coloring / constrained
-    # backward sweep) iterate against the SAME persisted active edge set —
-    # mirror one round of each and assert the E-scale relation is probed
-    # in place on its own key (the kcore/hits persist discipline; scc.py
-    # persists active_e by src and a dual copy by dst)
-    e = em._di_edges(spark, SF)
-    e0 = e.where(F.col("src") != F.col("dst")).distinct()
-    e_src = e0.repartition(8, "src").persist()
-    e_dst = e0.repartition(8, "dst").persist()
-    e_src.count()
-    e_dst.count()
-    colors = (
-        e_src.select(F.col("src").alias("id")).distinct()
-        .withColumn("color", F.col("id")).localCheckpoint(eager=True)
-    )
-    fwd_msgs = (
-        e_src.join(colors.select(F.col("id").alias("src"), "color"), "src")
-        .groupBy(F.col("dst").alias("id"))
-        .agg(F.min("color").alias("_mc"))
-    )
-    bwd_cand = (
-        e_dst.join(
-            colors.select(F.col("id").alias("dst"),
-                          F.col("color").alias("_c")), "dst")
-        .select(F.col("src").alias("_cid"), "_c")
-        .distinct()
-    )
-    for df, key in ((fwd_msgs, "src"), (bwd_cand, "dst")):
-        plan = _plan(df)
-        prefix = plan.split("InMemoryRelation", 1)[0]
-        assert "InMemoryTableScan" in prefix, plan
-        assert f"Exchange hashpartitioning({key}" not in prefix, plan
-        assert plan.count("HashAggregate") >= 2 or "Exchange hashpartitioning(_cid" in plan, plan
-    e_src.unpersist()
-    e_dst.unpersist()
+def _tree_paths(plan: str, node: str) -> list[list[str]]:
+    """For every ``node`` line of a ``formatted`` plan's tree that is not
+    inside a cached relation's plan, its ancestors, nearest first."""
+    lines = plan.split("\n\n\n(1) ", 1)[0].splitlines()[1:]
+    depth = [re.search(r"[A-Za-z]", ln).start() for ln in lines]
+    paths = []
+    for i, ln in enumerate(lines):
+        if node not in ln:
+            continue
+        up, d = [], depth[i]
+        for j in range(i - 1, -1, -1):
+            if depth[j] < d:
+                up.append(lines[j].strip(" :+-*"))
+                d = depth[j]
+        if not any(a.startswith("InMemoryRelation") for a in up):
+            paths.append(up)
+    return paths
+
+
+def test_scc_inner_fixpoints_probe_copartitioned_edges(spark, tmp_path, monkeypatch):
+    # scc's own superstep plans, as its run_fixpoint calls dump them: every
+    # inner round (trim, forward coloring, backward sweep) probes the
+    # persisted E-scale edge copies in place on their own key, and only
+    # the partial-combined V-scale messages shuffle
+    from pargraph_spark.operators.scc import strongly_connected_components
+
+    monkeypatch.setenv("SPARK_GRAFT_PLAN_DUMP", str(tmp_path))
+    res = strongly_connected_components(spark, em._di_edges(spark, SF))
+    assert res.converged
+    for name in ("scc_trim_round", "scc_color_round", "scc_sweep_round"):
+        plan = (tmp_path / f"{name}.txt").read_text()
+        scans = _tree_paths(plan, "InMemoryTableScan")
+        assert scans, plan
+        for up in scans:
+            join = next(i for i, a in enumerate(up) if "Join" in a)
+            assert not any(a.startswith("Exchange") for a in up[:join]), plan
+            # the first exchange above the probe follows a partial aggregate
+            ex = next(i for i, a in enumerate(up) if a.startswith("Exchange"))
+            assert join < ex and up[ex - 1].startswith("HashAggregate"), plan
 
 
 def test_katz_superstep_probes_copartitioned_edges(spark):

@@ -10,7 +10,9 @@ from pargraph_spark.operators.scc import (
     bowtie_classify,
     strongly_connected_components,
 )
+from pargraph_spark.session import _query_execution
 from tests.oracles import bowtie_oracle, scc_oracle
+from tests.test_fixpoint import _jobs
 
 
 def _edges_df(spark, edges):
@@ -55,23 +57,56 @@ def test_scc_single_cycle_and_dag(spark):
     assert res.converged
 
 
+def _checkpoint_rdd(df) -> int:
+    return _query_execution(df).logical().rdd().id()
+
+
+def _cycle(n):
+    return [(i, (i + 1) % n) for i in range(n)]
+
+
 def test_scc_cache_does_not_grow_with_coloring_rounds(spark):
-    # a cycle of n vertices takes about n coloring and n sweep rounds;
-    # each superseded round checkpoint is released, so a 40-cycle leaves
-    # no more persistent RDDs behind than a 5-cycle. (Not ==: a JVM GC
-    # during a call lets the ContextCleaner drop the call's unreferenced
-    # outer-round checkpoints, in either call.)
+    # a cycle of n vertices takes n coloring and n sweep rounds; each call
+    # adds ONE persistent RDD, the result's checkpoint: every round state,
+    # edge copy and vertex table it made is freed before it returns
     jsc = spark.sparkContext._jsc
-
-    def added(n):
-        cyc = [(i, (i + 1) % n) for i in range(n)]
+    for n in (5, 40):
         before = set(jsc.getPersistentRDDs().keys())
-        res = strongly_connected_components(spark, _edges_df(spark, cyc))
-        grew = set(jsc.getPersistentRDDs().keys()) - before
+        res = strongly_connected_components(spark, _edges_df(spark, _cycle(n)))
+        added = set(jsc.getPersistentRDDs().keys()) - before
+        assert added == {_checkpoint_rdd(res.components)}, n
         assert {r["id"]: r["scc"] for r in res.components.collect()} == {i: 0 for i in range(n)}
-        return len(grew)
 
-    assert added(40) <= added(5)
+
+def test_scc_inner_rounds_run_one_job_each(spark):
+    # an n-cycle takes n coloring and n sweep rounds (the last changes
+    # nothing); a path of n vertices loses both ends per trim round
+    def jobs(edges):
+        return _jobs(spark, lambda: strongly_connected_components(
+            spark, _edges_df(spark, edges), num_partitions=4))[1]
+
+    assert jobs(_cycle(9)) == jobs(_cycle(8)) + 2
+    path = [(i, i + 1) for i in range(11)]
+    assert jobs(path) == jobs(path[:-2]) + 1
+
+
+def test_condensation_round_runs_one_job(spark):
+    from pargraph_spark.operators.scc import condensation_layers
+
+    # a chain of k 2-cycles has k - 1 layering rounds (plus the one that
+    # changes nothing); the SCC table is given, so only the layering runs
+    def jobs(k):
+        edges = ([(2 * i, 2 * i + 1) for i in range(k)]
+                 + [(2 * i + 1, 2 * i) for i in range(k)]
+                 + [(2 * i + 1, 2 * i + 2) for i in range(k - 1)])
+        scc = spark.createDataFrame([(v, v - v % 2) for v in range(2 * k)],
+                                    "id long, scc long")
+        res, n = _jobs(spark, lambda: condensation_layers(
+            spark, _edges_df(spark, edges), scc=scc, num_partitions=4))
+        assert res.converged and res.rounds == k - 1
+        return n
+
+    assert jobs(5) == jobs(4) + 1
 
 
 @pytest.mark.parametrize("seed,n,m", [(7, 40, 90), (11, 60, 200), (13, 50, 60)])
@@ -119,12 +154,20 @@ def test_bowtie_random_vs_oracle(spark, seed, n, m):
 
 
 def test_bowtie_accepts_precomputed_scc(spark):
+    # bowtie adds ONE persistent RDD, its result's checkpoint, whether it
+    # runs SCC itself or is given the caller's SCC table (left cached)
     edges = [(10, 11), (11, 12), (12, 10), (1, 10), (12, 20)]
-    scc = strongly_connected_components(spark, _edges_df(spark, edges))
-    got = {r["id"]: r["region"] for r in
-           bowtie_classify(spark, _edges_df(spark, edges),
-                           scc=scc.components).collect()}
-    assert got == bowtie_oracle(edges, _verts(edges))
+    e = _edges_df(spark, edges)
+    jsc = spark.sparkContext._jsc
+    scc = strongly_connected_components(spark, e).components
+    for given in (None, scc):
+        before = set(jsc.getPersistentRDDs().keys())
+        out = bowtie_classify(spark, e, scc=given)
+        added = set(jsc.getPersistentRDDs().keys()) - before
+        assert added == {_checkpoint_rdd(out)}, given is None
+        assert _checkpoint_rdd(scc) in jsc.getPersistentRDDs()
+        got = {r["id"]: r["region"] for r in out.collect()}
+        assert got == bowtie_oracle(edges, _verts(edges))
 
 
 def test_condensation_layers_vs_oracle(spark):
