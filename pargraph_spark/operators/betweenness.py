@@ -27,7 +27,7 @@ Plan shape: the forward pass is plans/fixpoint.py over ONE state table
 so far, with its path count and distance. A level costs ONE Spark job,
 the driver's (count, max dist, sources) aggregate. Its step takes the
 frontier (dist = the last level), joins it against the persisted
-hash(src) adjacency in place (bfs._adjacency: no E-scale exchange), sums
+hash(src) adjacency in place (edges.adjacency: no E-scale exchange), sums
 the path counts per (s, v), anti-joins the state in place and unions the
 new level into it — so neither the edge table nor the visited set is
 re-shuffled per level; only the frontier and its messages move, at
@@ -45,7 +45,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pargraph_spark.operators.bfs import _adjacency
+from pargraph_spark.operators.edges import adjacency
 from pargraph_spark.plans.debug import dump_plan
 from pargraph_spark.plans.fixpoint import release, run_fixpoint
 from pargraph_spark.plans.metrics import JobMetrics
@@ -91,7 +91,7 @@ def betweenness(
         raise ValueError(f"betweenness requires max_depth >= 1, got {max_depth}")
     P = int(num_partitions or spark.conf.get("spark.sql.shuffle.partitions"))
     P = size_based_partitions(edges, P)  # guide §2.2, size-derived cap
-    adj, n_adj = _adjacency(edges, not directed, P)
+    adj, n_adj = adjacency(edges, P, symmetric=not directed)
     # the same hash(u) table under the backward chain's names (a renaming
     # projection keeps the partitioning)
     e = adj.select(F.col("u").alias("src"), F.col("v").alias("dst"))

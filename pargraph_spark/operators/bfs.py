@@ -31,6 +31,7 @@ from typing import Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pargraph_spark.operators.edges import adjacency
 from pargraph_spark.plans.fixpoint import run_fixpoint
 from pargraph_spark.plans.metrics import JobMetrics
 from pargraph_spark.session import size_based_partitions
@@ -42,26 +43,6 @@ class BfsResult:
     hops: int             # rounds actually expanded
     exhausted: bool       # True if the frontier emptied before max_hops
     metrics: JobMetrics = field(default_factory=lambda: JobMetrics("bfs"))
-
-
-def _adjacency(edges: DataFrame, symmetric: bool, P: int) -> tuple[DataFrame, int]:
-    """The (u, v) expansion table — self-loops and duplicates dropped,
-    both directions when symmetric — persisted hash(u, P)-partitioned
-    (persist, not localCheckpoint: it must keep reporting hash(u) so
-    every hop's frontier join probes it in place), and its row count."""
-    fwd = edges.select(F.col("src").alias("u"), F.col("dst").alias("v"))
-    adj = (
-        fwd.unionByName(fwd.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        if symmetric
-        else fwd
-    )
-    adj = (
-        adj.where(F.col("u") != F.col("v"))
-        .distinct()
-        .repartition(P, "u")
-        .persist()
-    )
-    return adj, adj.count()
 
 
 def _bfs(
@@ -123,7 +104,7 @@ def bfs_distances(
     False follows src→dst direction only."""
     P = int(num_partitions or spark.conf.get("spark.sql.shuffle.partitions"))
     P = size_based_partitions(edges, P)  # guide §2.2, size-derived cap
-    adj, n_adj = _adjacency(edges, symmetric, P)
+    adj, n_adj = adjacency(edges, P, symmetric=symmetric)
     dist, hops, exhausted, metrics = _bfs(
         spark, adj, n_adj, sources, (), max_hops, P, "bfs")
     adj.unpersist()

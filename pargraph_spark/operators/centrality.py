@@ -27,6 +27,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pargraph_spark.operators.edges import adjacency
 from pargraph_spark.plans.fixpoint import run_fixpoint
 from pargraph_spark.plans.metrics import JobMetrics
 from pargraph_spark.session import size_based_partitions
@@ -66,17 +67,11 @@ def katz_centrality(
         alpha = 1.0 / exact_denominator
     P = int(num_partitions or spark.conf.get("spark.sql.shuffle.partitions"))
     P = size_based_partitions(edges, P)  # guide §2.2, size-derived cap
-    e = (
-        edges.select(F.col("src").cast("long"), F.col("dst").cast("long"))
-        .where(F.col("src") != F.col("dst"))
-        .distinct()
-        .repartition(P, "src")
-        .persist()
-    )
-    n_edges = e.count()
+    e, n_edges = adjacency(
+        edges.select(F.col("src").cast("long"), F.col("dst").cast("long")), P)
     verts = (
-        e.select(F.col("src").alias("id"))
-        .unionByName(e.select(F.col("dst").alias("id")))
+        e.select(F.col("u").alias("id"))
+        .unionByName(e.select(F.col("v").alias("id")))
         .distinct()
         .repartition(P, "id")
     )
@@ -105,9 +100,9 @@ def katz_centrality(
         # union + aggregate, not a join: Spark estimates a join as a
         # product, and the checkpoint carries the estimate on
         msgs = e.join(
-            x.select(F.col("id").alias("src"), F.col(col).alias("_s"))
-            .hint("shuffle_hash"), "src",
-        ).select(F.col("dst").alias("id"), "_s")
+            x.select(F.col("id").alias("u"), F.col(col).alias("_s"))
+            .hint("shuffle_hash"), "u",
+        ).select(F.col("v").alias("id"), "_s")
         return (
             x.select("id", F.lit(None).cast(typ).alias("_s"))
             .unionByName(msgs)

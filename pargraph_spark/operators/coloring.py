@@ -41,7 +41,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pargraph_spark.operators.edges import symmetrize
+from pargraph_spark.operators.edges import adjacency
 from pargraph_spark.operators.mis import _priority
 from pargraph_spark.plans.fixpoint import run_fixpoint
 from pargraph_spark.plans.metrics import JobMetrics
@@ -82,8 +82,10 @@ def greedy_coloring(
     simply absent from `colors`."""
     P = int(num_partitions or spark.conf.get("spark.sql.shuffle.partitions"))
     P = size_based_partitions(edges, P)  # guide §2.2, size-derived cap
-    sym = symmetrize(edges).repartition(P, "v").persist()
-    n_edges = sym.count()
+    # the symmetric table keyed on the probe key v: its names swapped,
+    # which keeps the rows and the hash partitioning
+    adj, n_edges = adjacency(edges, P, symmetric=True)
+    sym = adj.select(F.col("u").alias("v"), F.col("v").alias("u"))
 
     def step(state: DataFrame, prev) -> DataFrame:
         # every vertex sends its neighbors its priority while uncolored,
@@ -127,6 +129,6 @@ def greedy_coloring(
         max_iter=fixed_rounds if fixed_rounds is not None else max_rounds,
         edges=n_edges,
     )
-    sym.unpersist()
+    adj.unpersist()
     colors = res.state.where(F.col("color").isNotNull()).select("id", "color")
     return ColoringResult(colors, res.iterations, res.converged, res.metrics)

@@ -111,12 +111,10 @@ def connected_components(
     limit = broadcast_threshold(spark)
 
     def init() -> DataFrame:
-        # setup in ONE E-scale exchange (the pagerank/scc idiom):
-        # canonicalize the orientation up front (CC is undirected — the
-        # stars symmetrize anyway, so connectivity and every subsequent
-        # round's edge SET are unchanged), repartition on u FIRST, then
-        # dedupe in place — hash(u) co-locates every (u, v) pair, so
-        # dropDuplicates adds no second exchange. Canonical form also lets
+        # edges.adjacency's one-exchange rule, kept inline: the init is a
+        # lazy plan run under AQE, and it orients each edge u > v (CC is
+        # undirected — the stars symmetrize anyway, so connectivity and
+        # every round's edge SET are unchanged). Canonical form also lets
         # the convergence signature skip a canonicalizing distinct.
         return (
             edges.where(F.col("src") != F.col("dst"))

@@ -32,6 +32,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pargraph_spark.operators.edges import adjacency
 from pargraph_spark.plans.metrics import JobMetrics
 
 
@@ -43,16 +44,6 @@ class DensestResult:
     best_density: float
     rounds: int
     metrics: JobMetrics = field(default_factory=lambda: JobMetrics("densest"))
-
-
-def _und(edges: DataFrame) -> DataFrame:
-    return (
-        edges.select(
-            F.least("src", "dst").alias("u"), F.greatest("src", "dst").alias("v")
-        )
-        .where(F.col("u") != F.col("v"))
-        .distinct()
-    )
 
 
 def _peel_round(e: DataFrame, n: int, m: int, num: int, den: int) -> DataFrame:
@@ -83,8 +74,9 @@ def densest_subgraph(
 
     def trajectory(stop_round: int | None):
         """Run the peel; returns (stats, final-vertex-set-at-stop)."""
-        e = _und(edges).repartition(P, "u").persist()
-        m = e.count()
+        # each undirected edge once as (u < v)
+        e, m = adjacency(edges.select(F.least("src", "dst").alias("src"),
+                                      F.greatest("src", "dst").alias("dst")), P)
         verts = (
             e.select(F.col("u").alias("id"))
             .unionByName(e.select(F.col("v").alias("id")))

@@ -29,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from pargraph_spark.operators.edges import symmetrize
+from pargraph_spark.operators.edges import canonical_undirected, symmetrize
 
 _GRID = 1 << 30
 
@@ -81,8 +81,8 @@ def degree_assortativity(edges: DataFrame) -> DataFrame:
     num = m * sxy - sx * sy
     den = F.sqrt(m * sxx - sx * sx) * F.sqrt(m * syy - sy * sy)
     # zero degree variance (regular graphs): r is undefined — NULL, not
-    # the silent 0.0 that floor(NaN) used to produce (review r5; the
-    # oracle SQL carries the identical CASE guard)
+    # the silent 0.0 that floor(NaN) used to produce (the oracle SQL
+    # carries the identical CASE guard)
     return agg.select(
         F.col("m").alias("n_edges_directed"),
         F.when(den > 0, _q30(num / den)).alias("rq"),
@@ -124,13 +124,7 @@ def modularity(edges: DataFrame, labels: DataFrame) -> DataFrame:
     broadcast when the label map fits), then per-community partial-combined
     aggregates over at-most-V rows. No iteration, no windows.
     """
-    und = (
-        edges.select(
-            F.least("src", "dst").alias("u"), F.greatest("src", "dst").alias("v")
-        )
-        .where(F.col("u") != F.col("v"))
-        .distinct()
-    )
+    und = canonical_undirected(edges).withColumnsRenamed({"a": "u", "b": "v"})
     sym = und.unionByName(und.select(F.col("v").alias("u"), F.col("u").alias("v")))
     deg = sym.groupBy(F.col("u").alias("id")).agg(F.count("*").alias("deg"))
     lab = labels.select("id", "label")

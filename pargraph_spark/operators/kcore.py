@@ -9,8 +9,8 @@ the result is deterministic and an unrolled round-by-round SQL oracle is
 exact (rounds past convergence are identity, the lpa_full pattern).
 
 Plan shape per peel round (kcore and score_core share one loop,
-``_peel``): the symmetrized edge table lives partitioned on the probe
-key u and is FILTERED each round by anti-joins against the round's
+``_peel``): the symmetric edge table, built by edges.adjacency on the
+probe key u, is FILTERED each round by anti-joins against the round's
 peeled set — co-partitioned on the u side, AQE-broadcast on the v side
 once peeling localizes (after round 1 the peeled set is small); the
 measure (degree or strength) is one partial-combined aggregate. Each
@@ -43,7 +43,7 @@ from pargraph_spark.plans.fixpoint import run_fixpoint
 from pargraph_spark.plans.metrics import JobMetrics, SuperstepMetric
 from pargraph_spark.session import ckpt_state, size_based_partitions
 
-from .edges import symmetrize
+from .edges import adjacency
 
 
 @dataclass
@@ -68,15 +68,13 @@ def kcore(
         raise ValueError(f"kcore requires k >= 1, got {k}")
     P = int(num_partitions or spark.conf.get("spark.sql.shuffle.partitions"))
     P = size_based_partitions(edges, P)  # guide §2.2, size-derived cap
-    # persist, NOT localCheckpoint: an ExistingRDD scan reports unknown
-    # partitioning, so every round's groupBy(u)/anti-join would
-    # re-exchange a checkpointed edge table despite the repartition
-    sym = symmetrize(edges).repartition(P, "u").persist()
-    return _peel(sym, F.count("*"), k, "deg", "kcore", max_rounds, P)
+    sym, n = adjacency(edges, P, symmetric=True)
+    return _peel(sym, n, F.count("*"), k, "deg", "kcore", max_rounds, P)
 
 
 def _peel(
     sym: DataFrame,
+    n_before: int,
     measure: Column,
     threshold: int,
     out_col: str,
@@ -84,14 +82,14 @@ def _peel(
     max_rounds: int,
     P: int,
 ) -> KCoreResult:
-    """Peel the persisted hash(u, P) edge table ``sym`` (u, v, ...) until
-    every surviving u has ``measure`` >= threshold → (id, out_col) with
-    the measure inside the result. ``sym`` is released. rounds counts
+    """Peel the persisted hash(u, P) edge table ``sym`` (u, v, ...) of
+    ``n_before`` rows until every surviving u has ``measure`` >= threshold
+    → (id, out_col) with the measure inside the result. ``sym`` is
+    released. rounds counts
     the rounds that removed an edge; converged=False means max_rounds
     was hit first, and the result is then a SUPERSET of the core."""
     metrics = JobMetrics(name)
     rounds, converged = 0, False
-    n_before = sym.count()  # each round's survivor count is the next n_before
     for r in range(1, max_rounds + 1):
         t0 = time.monotonic()
         peeled = (
@@ -207,19 +205,10 @@ def core_numbers(
 
     P = int(num_partitions or spark.conf.get("spark.sql.shuffle.partitions"))
     P = size_based_partitions(edges, P)  # guide §2.2, size-derived cap
-    fwd = edges.select(F.col("src").alias("u"), F.col("dst").alias("v"))
-    # persist, NOT localCheckpoint: the static edge table must RETAIN its
-    # hash(v) outputPartitioning so every round's join probes it in place.
-    # A localCheckpoint scan (ExistingRDD) reports unknown partitioning and
-    # Catalyst re-exchanges the E-scale side every round (plan-test-pinned).
-    sym = (
-        fwd.unionByName(fwd.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        .where(F.col("u") != F.col("v"))
-        .distinct()
-        .repartition(P, "v")
-        .persist()
-    )
-    sym.count()
+    # the symmetric table keyed on the probe key v: its names swapped,
+    # which keeps the rows and the hash partitioning
+    adj, _ = adjacency(edges, P, symmetric=True)
+    sym = adj.select(F.col("u").alias("v"), F.col("v").alias("u"))
     w = Window.partitionBy("u").orderBy(F.col("x").desc())
 
     def step(state: DataFrame, prev) -> DataFrame:
@@ -294,7 +283,7 @@ def core_numbers(
         edges=0,
     )
     out = res.state.select("id", F.col("c").alias("core"))
-    sym.unpersist()  # the state is checkpoint-materialized, lineage-free
+    adj.unpersist()  # the state is checkpoint-materialized, lineage-free
     return CoreNumbersResult(out, res.iterations, res.converged, res.metrics)
 
 
@@ -318,15 +307,5 @@ def score_core(
     if s < 1:
         raise ValueError(f"score_core requires s >= 1, got {s}")
     P = int(num_partitions or spark.conf.get("spark.sql.shuffle.partitions"))
-    fwd = wedges.select(F.col("src").alias("u"), F.col("dst").alias("v"), "w")
-    sym = (
-        fwd.unionByName(
-            fwd.select(F.col("v").alias("u"), F.col("u").alias("v"), "w")
-        )
-        .where(F.col("u") != F.col("v"))
-        .groupBy("u", "v")
-        .agg(F.max("w").alias("w"))
-        .repartition(P, "u")
-        .persist()  # persist keeps hash(u) visible per round (see kcore)
-    )
-    return _peel(sym, F.sum("w"), s, "strength", "score_core", max_rounds, P)
+    sym, n = adjacency(wedges.select("src", "dst", "w"), P, symmetric=True, weight="max")
+    return _peel(sym, n, F.sum("w"), s, "strength", "score_core", max_rounds, P)

@@ -25,9 +25,10 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pargraph_spark.operators.edges import adjacency
 from pargraph_spark.plans.fixpoint import run_fixpoint
 from pargraph_spark.plans.metrics import JobMetrics
-from pargraph_spark.session import no_aqe, size_based_partitions
+from pargraph_spark.session import size_based_partitions
 
 
 @dataclass
@@ -36,34 +37,6 @@ class LabelPropResult:
     iterations: int
     converged: bool
     metrics: JobMetrics = field(default_factory=lambda: JobMetrics("labelprop"))
-
-
-def _sym_edges(spark: SparkSession, edges: DataFrame, P: int,
-               weight_col: str | None) -> tuple[DataFrame, int]:
-    """The symmetric vote table (u, v, w) — self-loops dropped, duplicate
-    (u, v) rows combined (max of the unit weight, or summed weights) —
-    persisted hash(u, P)-partitioned, and its row count."""
-    # weight keeps its natural type (integer weights => exact vote sums)
-    w = F.col(weight_col) if weight_col is not None else F.lit(1).cast("long")
-    fwd = edges.select(F.col("src").alias("u"), F.col("dst").alias("v"), w.alias("w"))
-    sym = (
-        fwd.unionByName(fwd.select(F.col("v").alias("u"), F.col("u").alias("v"), "w"))
-        .where(F.col("u") != F.col("v"))
-        # Partition on "u" — the key every superstep's join probes, so the
-        # edge side stays put and only the (id, label) side moves per
-        # round — and do it BEFORE the dedup/weight-combine aggregation:
-        # hash(u) co-locates every (u, v) pair, so the aggregation runs in
-        # place and setup pays ONE E-scale exchange instead of two.
-        .repartition(P, "u")
-        .groupBy("u", "v")
-        .agg((F.max("w") if weight_col is None else F.sum("w")).alias("w"))
-        .persist()
-    )
-    with no_aqe(spark, P):
-        # sym materializes here: under no-AQE the cached plan reports
-        # hash(u, P) — an AQE-wrapped aggregate-on-top plan reports Unknown
-        # and every superstep would re-exchange the E-scale cache
-        return sym, sym.count()
 
 
 def _best_label(nbr: DataFrame) -> DataFrame:
@@ -111,7 +84,11 @@ def label_propagation(
     inherit summation-order sensitivity only at exact vote ties."""
     P = int(num_partitions or spark.conf.get("spark.sql.shuffle.partitions"))
     P = size_based_partitions(edges, P)  # guide §2.2, size-derived cap
-    sym, n_sym = _sym_edges(spark, edges, P, weight_col)
+    # the vote weight keeps its natural type (integer weights => exact
+    # vote sums); duplicate (u, v) rows take the unit weight once or sum
+    w = F.col(weight_col) if weight_col is not None else F.lit(1).cast("long")
+    sym, n_sym = adjacency(edges.select("src", "dst", w.alias("w")), P, symmetric=True,
+                           weight="max" if weight_col is None else "sum")
     all_vertices = (
         vertices.select("id")
         if vertices is not None
@@ -181,7 +158,9 @@ def seeded_label_propagation(
     NULL for never-reached vertices."""
     P = int(num_partitions or spark.conf.get("spark.sql.shuffle.partitions"))
     P = size_based_partitions(edges, P)
-    sym, n_sym = _sym_edges(spark, edges, P, weight_col)
+    w = F.col(weight_col) if weight_col is not None else F.lit(1).cast("long")
+    sym, n_sym = adjacency(edges.select("src", "dst", w.alias("w")), P, symmetric=True,
+                           weight="max" if weight_col is None else "sum")
     all_vertices = (
         edges.select(F.col("src").alias("id"))
         .unionByName(edges.select(F.col("dst").alias("id")))

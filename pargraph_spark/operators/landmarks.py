@@ -39,7 +39,8 @@ from pyspark.sql import functions as F
 from pargraph_spark.plans.metrics import JobMetrics
 from pargraph_spark.session import ckpt_state, size_based_partitions
 
-from .bfs import _adjacency, _bfs
+from .bfs import _bfs
+from .edges import adjacency
 
 
 @dataclass
@@ -74,7 +75,7 @@ def landmark_distances(
     output hold only REACHED (landmark, id) pairs."""
     P = int(num_partitions or spark.conf.get("spark.sql.shuffle.partitions"))
     P = size_based_partitions(edges, P)  # guide §2.2, size-derived cap
-    adj, n_adj = _adjacency(edges, symmetric, P)
+    adj, n_adj = adjacency(edges, P, symmetric=symmetric)
     verts = adj.select(F.col("u").alias("id")).distinct()
     lms = (
         verts.orderBy(_lm_priority(F.col("id"), salt).asc(), F.col("id").asc())

@@ -42,6 +42,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from pargraph_spark.operators.edges import canonical_undirected
+
 GRID = float(1 << 30)  # 2^-30 binary grid (hits.py policy)
 
 
@@ -63,13 +65,7 @@ def common_neighbors_topk(
     degree, measured before the cap."""
     if rank_by not in ("cn", "ra", "aa"):
         raise ValueError(f"rank_by must be cn|ra|aa, got {rank_by!r}")
-    und = (
-        edges.select(
-            F.least("src", "dst").alias("u"), F.greatest("src", "dst").alias("v")
-        )
-        .where(F.col("u") != F.col("v"))
-        .distinct()
-    )
+    und = canonical_undirected(edges).withColumnsRenamed({"a": "u", "b": "v"})
     sym = und.unionByName(und.select(F.col("v").alias("u"), F.col("u").alias("v")))
     deg = sym.groupBy(F.col("u").alias("w")).agg(F.count("*").alias("_d"))
     adj = sym.select(F.col("v").alias("w"), F.col("u").alias("x")).join(deg, "w")

@@ -36,6 +36,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pargraph_spark.operators.edges import canonical_undirected
 from pargraph_spark.plans.fixpoint import run_fixpoint
 from pargraph_spark.plans.metrics import JobMetrics
 
@@ -108,12 +109,8 @@ def maximal_matching(
 
     res = run_fixpoint(
         spark,
-        lambda: edges.select(
-            F.least("src", "dst").alias("u"), F.greatest("src", "dst").alias("v")
-        )
-        .where(F.col("u") != F.col("v"))
-        .distinct()
-        .select("u", "v", F.lit(False).alias("m"))
+        lambda: canonical_undirected(edges)
+        .select(F.col("a").alias("u"), F.col("b").alias("v"), F.lit(False).alias("m"))
         .repartition(P, "u"),
         step,
         [F.count_if(~F.col("m")).alias("active"),
@@ -138,13 +135,7 @@ def coarsen_graph(edges: DataFrame, matches: DataFrame) -> DataFrame:
     vmap = matches.select(
         F.col("u").alias("id"), F.col("u").alias("cid")
     ).unionByName(matches.select(F.col("v").alias("id"), F.col("u").alias("cid")))
-    und = (
-        edges.select(
-            F.least("src", "dst").alias("u"), F.greatest("src", "dst").alias("v")
-        )
-        .where(F.col("u") != F.col("v"))
-        .distinct()
-    )
+    und = canonical_undirected(edges).withColumnsRenamed({"a": "u", "b": "v"})
     mapped = (
         und.join(vmap.withColumnRenamed("id", "u").withColumnRenamed("cid", "_cu"),
                  "u", "left")

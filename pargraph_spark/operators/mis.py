@@ -34,7 +34,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pargraph_spark.operators.edges import symmetrize
+from pargraph_spark.operators.edges import adjacency
 from pargraph_spark.plans.fixpoint import run_fixpoint
 from pargraph_spark.plans.metrics import JobMetrics
 from pargraph_spark.session import size_based_partitions
@@ -79,8 +79,10 @@ def maximal_independent_set(
     exhaustion are identity and `converged` stays False)."""
     P = int(num_partitions or spark.conf.get("spark.sql.shuffle.partitions"))
     P = size_based_partitions(edges, P)  # guide §2.2, size-derived cap
-    sym = symmetrize(edges).repartition(P, "v").persist()
-    n_edges = sym.count()
+    # the symmetric table keyed on the probe key v: its names swapped,
+    # which keeps the rows and the hash partitioning
+    adj, n_edges = adjacency(edges, P, symmetric=True)
+    sym = adj.select(F.col("u").alias("v"), F.col("v").alias("u"))
     rnd = 0
 
     def step(state: DataFrame, prev) -> tuple[DataFrame, list[DataFrame]]:
@@ -133,6 +135,6 @@ def maximal_independent_set(
         max_iter=fixed_rounds if fixed_rounds is not None else max_rounds,
         edges=n_edges,
     )
-    sym.unpersist()
+    adj.unpersist()
     members = res.state.where(F.col("st") == 1).select("id")
     return MISResult(members, res.iterations, res.converged, res.metrics)

@@ -34,6 +34,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pargraph_spark.operators.edges import adjacency
 from pargraph_spark.plans.checkpoint import CheckpointManager
 from pargraph_spark.plans.fixpoint import run_fixpoint
 from pargraph_spark.plans.metrics import JobMetrics
@@ -133,27 +134,13 @@ def pagerank(
     # so AQE cannot coalesce for us)
     P = size_based_partitions(edges, int(P))
 
-    # setup in ONE E-scale exchange (the scc idiom): repartition on
-    # the probe key first — hash(src) co-locates every (src, dst) pair,
-    # so the dedup/weight-combine aggregation runs in place instead of
-    # adding its own exchange before the repartition. Materialized under
-    # no_aqe: the cached plan's reported partitioning must be the static
-    # hash(src, P) — an AQE-wrapped aggregate-on-top plan reports Unknown
-    # and every superstep would re-exchange the E-scale cache.
-    edges = edges.where(F.col("src") != F.col("dst"))
-    if weight_col is None:
-        edges = edges.repartition(P, "src").dropDuplicates(["src", "dst"])
-    else:
-        edges = (
-            edges.select("src", "dst", F.col(weight_col).cast("double").alias("w"))
-            .repartition(P, "src")
-            .groupBy("src", "dst")
-            .agg(F.sum("w").alias("w"))
-        )
-    edges = edges.persist()
+    # the persisted hash(src) edge table, under the names the superstep
+    # reads (a renaming projection keeps the partitioning)
+    w = [F.col(weight_col).cast("double").alias("w")] if weight_col is not None else []
+    adj, n_edges = adjacency(edges.select("src", "dst", *w), P,
+                             weight="sum" if weight_col is not None else None)
+    edges = adj.withColumnsRenamed({"u": "src", "v": "dst"})
     with no_aqe(spark, P):
-        n_edges = edges.count()
-
         base = _vertex_base(
             edges, vertices, weighted=weight_col is not None
         ).repartition(P, "id").persist()
@@ -185,7 +172,7 @@ def pagerank(
         )
 
     if n == 0:
-        edges.unpersist()
+        adj.unpersist()
         base.unpersist()
         empty = spark.createDataFrame([], "id long, rank double")
         return PageRankResult(empty, 0, True, JobMetrics("pagerank"))
@@ -288,7 +275,7 @@ def pagerank(
     result = res.state.select("id", "rank")
     # the state is checkpointed (independent of these lineages): release the iteration working set — the analogue of the reference's
     # ref-count release of dead intermediates (engine.py:63-76).
-    edges.unpersist()
+    adj.unpersist()
     base.unpersist()
     return PageRankResult(result, res.iterations, res.converged, res.metrics,
                           [m.delta for m in res.metrics.supersteps])

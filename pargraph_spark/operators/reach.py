@@ -20,7 +20,7 @@ are EXACT (the sketch holds the whole ball).
 
 Plan shape: the hop loop is plans/fixpoint.py over ONE state table
 (t, v, h) on hash(v), one Spark job per hop. The propagation join probes
-the persisted hash(u) adjacency (bfs._adjacency, shared with hll_reach)
+the persisted hash(u) adjacency (edges.adjacency, shared with hll_reach)
 in place; the (v, h)-keyed distinct partial-combines map-side; the
 per-vertex top-k compiles to WindowGroupLimit, whose Partial stage
 bounds what a 10^8-degree hub ships to k rows per map task. kmv_reach
@@ -34,7 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pargraph_spark.operators.bfs import _adjacency
+from pargraph_spark.operators.edges import adjacency
 from pargraph_spark.plans.fixpoint import release, run_fixpoint
 from pargraph_spark.session import size_based_partitions
 
@@ -60,7 +60,7 @@ def _propagate(spark, edges, hops: int, k: int, num_partitions: int | None,
 
     P = int(num_partitions or spark.conf.get("spark.sql.shuffle.partitions"))
     P = size_based_partitions(edges, P)  # guide §2.2, size-derived cap
-    adj, n_adj = _adjacency(edges, True, P)
+    adj, n_adj = adjacency(edges, P, symmetric=True)
     w = Window.partitionBy("v").orderBy("h")
 
     def step(state: DataFrame, prev) -> DataFrame:
@@ -227,7 +227,7 @@ def hll_reach(
     rem_bits = _HEX_BITS - b
     P = int(num_partitions or spark.conf.get("spark.sql.shuffle.partitions"))
     P = size_based_partitions(edges, P)  # guide §2.2, size-derived cap
-    adj, n_adj = _adjacency(edges, True, P)
+    adj, n_adj = adjacency(edges, P, symmetric=True)
     regs_cols = [f"r{i}" for i in range(m)]
     h = _h60(F.col("v"))
     bucket = F.shiftright(h, rem_bits)

@@ -38,9 +38,10 @@ that would otherwise force one round per chain SCC).
 Plan shape: every inner fixpoint runs on plans/fixpoint.py, one state
 table each, ONE Spark job per round (its stats aggregate materializes
 the round's checkpoint) plus one setup job; the whole call runs under
-``no_aqe(P)`` so every state records hash(id, P). The active edge set is
-persisted TWICE — partitioned by src (trim, forward coloring) and by dst
-(trim, backward sweep) — the hits/salsa dual-copy rule, so no inner round
+``no_aqe(P)`` so every state records hash(id, P). The active edge set
+(u, v) = (src, dst) is persisted TWICE — edges.adjacency's copy on u
+(trim, forward coloring) and a copy on v (trim, backward sweep) — the
+hits/salsa dual-copy rule, so no inner round
 exchanges the E-scale relation: it is probed in place and only V-scale
 message tables shuffle (partial-combined map-side, which absorbs hub
 skew). The states are
@@ -64,7 +65,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pargraph_spark.operators.bfs import _adjacency, _bfs
+from pargraph_spark.operators.bfs import _bfs
+from pargraph_spark.operators.edges import adjacency
 from pargraph_spark.plans.fixpoint import release, run_fixpoint
 from pargraph_spark.plans.metrics import JobMetrics, SuperstepMetric
 from pargraph_spark.session import no_aqe, size_based_partitions
@@ -100,14 +102,14 @@ def strongly_connected_components(
         # singleton SCC: keep the alive vertices with an edge to an alive
         # vertex and one from an alive vertex (both copies probed in place)
         has_out = (
-            e_dst.join(v.select(F.col("id").alias("dst")).hint("shuffle_hash"),
-                       "dst", "left_semi")
-            .select(F.col("src").alias("id")).distinct()
+            e_dst.join(v.select(F.col("id").alias("v")).hint("shuffle_hash"),
+                       "v", "left_semi")
+            .select(F.col("u").alias("id")).distinct()
         )
         has_in = (
-            e_src.join(v.select(F.col("id").alias("src")).hint("shuffle_hash"),
-                       "src", "left_semi")
-            .select(F.col("dst").alias("id")).distinct()
+            e_src.join(v.select(F.col("id").alias("u")).hint("shuffle_hash"),
+                       "u", "left_semi")
+            .select(F.col("v").alias("id")).distinct()
         )
         return (v.join(has_out.hint("shuffle_hash"), "id", "left_semi")
                 .join(has_in.hint("shuffle_hash"), "id", "left_semi"))
@@ -118,11 +120,11 @@ def strongly_connected_components(
         # the state (trimmed or extracted) have no state row and drop
         msgs = (
             e_src.join(
-                state.where("_chg").select(F.col("id").alias("src"), "color")
+                state.where("_chg").select(F.col("id").alias("u"), "color")
                 .hint("shuffle_hash"),
-                "src",
+                "u",
             )
-            .groupBy(F.col("dst").alias("id"))
+            .groupBy(F.col("v").alias("id"))
             .agg(F.min("color").alias("_m"))
         )
         return (
@@ -141,11 +143,11 @@ def strongly_connected_components(
         # joins iff the LARGEST color offered to it equals its own
         offers = (
             e_dst.join(
-                state.where("_chg").select(F.col("id").alias("dst"), "color")
+                state.where("_chg").select(F.col("id").alias("v"), "color")
                 .hint("shuffle_hash"),
-                "dst",
+                "v",
             )
-            .groupBy(F.col("src").alias("id"))
+            .groupBy(F.col("u").alias("id"))
             .agg(F.max("color").alias("_o"))
         )
         return (
@@ -175,25 +177,18 @@ def strongly_connected_components(
                             f"max_inner={max_inner} rounds — raise max_inner")
 
     with no_aqe(spark, P):
-        # setup in ONE E-scale exchange: repartition on the probe key
-        # first, then dedupe in place — hash(src) co-locates every
-        # (src, dst) pair, so dropDuplicates adds no second exchange
-        e_src = (
-            edges.select(F.col("src").cast("long"), F.col("dst").cast("long"))
-            .where(F.col("src") != F.col("dst"))
-            .repartition(P, "src")
-            .dropDuplicates(["src", "dst"])
-            .persist()
-        )
-        e_dst = e_src.repartition(P, "dst").persist()
+        # the active edges (u, v) = (src, dst), on hash(u) and hash(v)
+        e_src, _ = adjacency(
+            edges.select(F.col("src").cast("long"), F.col("dst").cast("long")), P)
+        e_dst = e_src.repartition(P, "v").persist()
         # every vertex with its initial color, id (aliased BEFORE the
         # exchange: a checkpoint of a projection that aliases id records
         # hash(alias), and the first round would re-exchange the state)
         verts = (
             vertices.select(F.col("id").cast("long"))
             if vertices is not None
-            else e_src.select(F.col("src").alias("id")).unionByName(
-                e_src.select(F.col("dst").alias("id")))
+            else e_src.select(F.col("u").alias("id")).unionByName(
+                e_src.select(F.col("v").alias("id")))
         ).distinct().select("id", F.col("id").alias("color")).repartition(
             P, "id").localCheckpoint(eager=True)
         left = verts
@@ -208,19 +203,19 @@ def strongly_connected_components(
             outer += 1
             t0 = time.monotonic()
             if swept:
-                # drop the extracted SCCs' edges: the semi join on src
-                # probes e_src in place, the one on dst lands hash(dst)
+                # drop the extracted SCCs' edges: the semi join on u
+                # probes e_src in place, the one on v lands hash(v)
                 shrunk = (
-                    e_src.join(left.select(F.col("id").alias("src")).hint("shuffle_hash"),
-                               "src", "left_semi")
-                    .join(left.select(F.col("id").alias("dst")).hint("shuffle_hash"),
-                          "dst", "left_semi")
+                    e_src.join(left.select(F.col("id").alias("u")).hint("shuffle_hash"),
+                               "u", "left_semi")
+                    .join(left.select(F.col("id").alias("v")).hint("shuffle_hash"),
+                          "v", "left_semi")
                     .persist()
                 )
                 shrunk.count()
                 e_src.unpersist()
                 e_dst.unpersist()
-                e_dst, e_src = shrunk, shrunk.repartition(P, "src").persist()
+                e_dst, e_src = shrunk, shrunk.repartition(P, "u").persist()
 
             # ---- 1. trim to fixpoint (not a correctness step: a vertex
             # it leaves is still extracted below, so max_inner may cut it)
@@ -323,9 +318,8 @@ def bowtie_classify(
         return spark.createDataFrame([], "id long, region string")
     core = scc.where(F.col("scc") == F.lit(core_row["scc"])).select("id")
 
-    fwd = _adjacency(edges, False, P)
-    bwd = _adjacency(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")),
-                     False, P)
+    fwd = adjacency(edges, P)
+    bwd = adjacency(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")), P)
     visited: list[DataFrame] = []
 
     def closure(adj: tuple[DataFrame, int], seeds: DataFrame) -> DataFrame:

@@ -20,9 +20,9 @@ computes. Converges when the frontier empties (≤ |V|-1 rounds for
 non-negative weights; no negative-cycle detection — link-graph weights
 are non-negative).
 
-Scale shape (the bfs.py/labelprop.py discipline): the edge table is
-symmetrized/min-deduped once, repartitioned on the join key and
-persisted — it never moves again; per round only frontier-sized
+Scale shape: the edge table is built once by edges.adjacency
+(symmetrized when asked, parallel edges min-combined, persisted on the
+join key) — it never moves again; per round only frontier-sized
 (id, dist) rows shuffle, the min-combine is a partial (map-side)
 aggregate so hub fan-in is safe, and the V-scale dist merge is one
 outer join on the id-partitioned table. Unreached vertices are absent
@@ -43,6 +43,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pargraph_spark.operators.edges import adjacency
 from pargraph_spark.plans.fixpoint import run_fixpoint
 from pargraph_spark.plans.metrics import JobMetrics
 from pargraph_spark.session import size_based_partitions
@@ -74,23 +75,8 @@ def sssp(
     integer distances (the cross-engine-exact contract configuration)."""
     P = int(num_partitions or spark.conf.get("spark.sql.shuffle.partitions"))
     P = size_based_partitions(edges, P)  # guide §2.2, size-derived cap
-    fwd = edges.select(
-        F.col("src").alias("u"), F.col("dst").alias("v"),
-        F.col(weight_col).alias("w"),
-    )
-    adj = (
-        fwd.unionByName(fwd.select(F.col("v").alias("u"), F.col("u").alias("v"), "w"))
-        if symmetric
-        else fwd
-    )
-    adj = (
-        adj.where(F.col("u") != F.col("v"))
-        .groupBy("u", "v")
-        .agg(F.min("w").alias("w"))
-        .repartition(P, "u")
-        .persist()
-    )
-    n_adj = adj.count()
+    adj, n_adj = adjacency(edges.select("src", "dst", F.col(weight_col).alias("w")), P,
+                           symmetric=symmetric, weight="min")
 
     zero = F.lit(0).cast(dict(adj.dtypes)["w"])
 

@@ -67,16 +67,32 @@ def triangle_triples(edges: DataFrame) -> DataFrame:
     and as a plain subtree the whole orientation pipeline (distinct +
     degree aggregate + two joins, ~5 exchanges) re-executed for each; only
     identical Exchange nodes get runtime reuse, which the closing side's
-    (x, y) keying defeats. Rows are unchanged — only evaluated once."""
-    o = _oriented(edges).localCheckpoint(eager=True)
+    (x, y) keying defeats. Rows are unchanged — only evaluated once.
+
+    The checkpoint is planned under ``no_aqe(P)``, P sized from the
+    session's shuffle partitions: under AQE a join took its build side
+    from whichever query stage finished first, so the job count varied
+    from call to call on one graph. For the same reason, when the caller
+    plans under AQE the wedge and closing joins are hinted sort-merge.
+    Inside triangle_count's own ``no_aqe(P)``, sized from the same edges,
+    the sizing returns that P and the static planner picks the joins."""
+    spark = edges.sparkSession
+    P = size_based_partitions(edges, int(spark.conf.get("spark.sql.shuffle.partitions")))
+    aqe = spark.conf.get("spark.sql.adaptive.enabled") == "true"
+    with no_aqe(spark, P):
+        o = _oriented(edges).localCheckpoint(eager=True)
     e1 = o.select(F.col("s"), F.col("t").alias("x"), F.col("degt").alias("degx"))
     e2 = o.select(F.col("s"), F.col("t").alias("y"), F.col("degt").alias("degy"))
     # each unordered wedge once: (x before y) in the same (deg, id) order
+    if aqe:
+        e2 = e2.hint("merge")
     wedges = e1.join(e2, "s").where(
         (F.col("degx") < F.col("degy"))
         | ((F.col("degx") == F.col("degy")) & (F.col("x") < F.col("y")))
     ).select("s", "x", "y")
     closing = o.select(F.col("s").alias("x"), F.col("t").alias("y"))
+    if aqe:
+        closing = closing.hint("merge")
     return wedges.join(closing, ["x", "y"], "inner").select("s", "x", "y")
 
 
@@ -107,7 +123,8 @@ def clustering_coefficient(edges: DataFrame) -> DataFrame:
     Cross-engine exact: T and d are exact ints, 2.0·T is exact in double,
     and the single IEEE division is bit-identical across engines (the
     jaccard_verify float policy). Plan = the triangle pipeline plus one
-    degree aggregate and a left join — no new shuffle classes."""
+    degree aggregate and a left join — no new shuffle classes; the join is
+    hinted sort-merge so AQE does not pick its strategy by stage timing."""
     und = canonical_undirected(edges)
     deg = (
         und.select(F.col("a").alias("id"))
@@ -116,7 +133,7 @@ def clustering_coefficient(edges: DataFrame) -> DataFrame:
         .agg(F.count("*").alias("deg"))
     )
     tri = triangles_per_vertex(edges)
-    return deg.join(tri, "id", "left").select(
+    return deg.join(tri.hint("merge"), "id", "left").select(
         "id",
         F.when(F.col("deg") < 2, F.lit(0.0))
         .otherwise(

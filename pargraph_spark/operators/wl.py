@@ -53,7 +53,7 @@ from pargraph_spark.plans.fixpoint import run_fixpoint
 from pargraph_spark.plans.metrics import JobMetrics
 from pargraph_spark.session import size_based_partitions
 
-from .edges import symmetrize
+from .edges import adjacency
 
 # The multiset sum runs in DECIMAL(38,0): 60-bit terms over any real
 # degree (d < 10^18) stay exact — a LONG sum would overflow at degree
@@ -103,10 +103,9 @@ def wl_colors(
     P = int(num_partitions or spark.conf.get("spark.sql.shuffle.partitions"))
     P = size_based_partitions(edges, P)  # guide §2.2, size-derived cap
 
-    # partitioned on the JOIN key u — the per-round colors join probes
-    # the persisted copy in place (a v-partitioned copy would re-exchange
-    # the E-scale table every round)
-    sym = symmetrize(edges).repartition(P, "u").persist()
+    # keyed on the JOIN key u — the per-round colors join probes it in
+    # place (a v-keyed copy would re-exchange the E-scale table every round)
+    sym, _ = adjacency(edges, P, symmetric=True)
     verts = sym.select(F.col("u").alias("id")).distinct()
     if init is not None:
         colors = verts.join(

@@ -12,8 +12,10 @@ effective_diameter, hll_reach, strongly_connected_components (its trim,
 forward coloring and backward sweep, in each outer round),
 condensation_layers, and bowtie_classify's closures (through bfs).
 Each keeps its state in ONE table.
-An operator keeps its own setup (edge repartition/persist, vertex base,
-warm start) and hands ``run_fixpoint`` three pieces:
+Most operators build their persisted edge table with
+``operators/edges.py::adjacency`` (connected components, hits/salsa and
+earliest_arrival keep their own layouts); each keeps its own vertex base
+and warm start, and hands ``run_fixpoint`` three pieces:
 
 - ``step(state, prev_stats)``: the next state as a LAZY plan. It may
   return ``(plan, intermediates)`` when it materialized something of its
@@ -93,12 +95,15 @@ class FixpointResult:
 def release(df: DataFrame) -> None:
     """Unpersist ``df`` and, when it is a checkpoint (its logical plan a
     ``LogicalRDD``), the checkpoint's own RDD, whose blocks
-    ``DataFrame.unpersist`` leaves cached. Call it only on a frame the
-    caller owns, once every plan that reads it has been materialized."""
+    ``DataFrame.unpersist`` leaves cached. The RDD is freed through the
+    SparkContext: ``RDD.unpersist`` on a local checkpoint logs a WARN that
+    its lineage cannot be recomputed, which is the point here. Call it
+    only on a frame the caller owns, once every plan that reads it has
+    been materialized."""
     df.unpersist()
     plan = _query_execution(df).logical()
     if plan.getClass().getSimpleName() == "LogicalRDD":
-        plan.rdd().unpersist(False)
+        df.sparkSession.sparkContext._jsc.sc().unpersistRDD(plan.rdd().id(), False)
 
 
 def _first_stat(stats: Row, prev: Row) -> float:

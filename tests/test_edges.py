@@ -1,10 +1,12 @@
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from pargraph_spark.functions.extract import extract_text_and_links
 from pargraph_spark.functions.urlnorm import normalize_url
 from pargraph_spark.operators.edges import (
+    adjacency,
     assert_no_id_collisions,
     build_edges,
     build_vertices,
@@ -104,13 +106,45 @@ def test_degrees_and_views(spark):
     assert und == {(min(a, b), max(a, b)) for a, b in e}
 
 
+# self-loops, parallel edges with different weights, and an edge given
+# in both directions
+WEDGES = [(1, 2, 3), (1, 2, 5), (2, 1, 4), (2, 2, 7), (2, 3, 1), (3, 4, 2),
+          (3, 4, 6), (4, 4, 9), (5, 1, 8)]
+
+
+def _adjacency_oracle(rows, symmetric, weight):
+    ws: dict[tuple[int, int], list[int]] = {}
+    for s, d, w in rows:
+        if s != d:
+            for uv in ((s, d), (d, s)) if symmetric else ((s, d),):
+                ws.setdefault(uv, []).append(w)
+    if weight is None:
+        return set(ws)
+    fold = {"sum": sum, "min": min, "max": max}[weight]
+    return {(u, v, fold(x)) for (u, v), x in ws.items()}
+
+
+@pytest.mark.parametrize("weight", [None, "sum", "min", "max"])
+@pytest.mark.parametrize("symmetric", [False, True], ids=["directed", "symmetric"])
+def test_adjacency_matches_python(spark, symmetric, weight):
+    edges = spark.createDataFrame(WEDGES, "src long, dst long, w long")
+    if weight is None:
+        edges = edges.select("src", "dst")
+    adj, n = adjacency(edges, 4, symmetric=symmetric, weight=weight)
+    rows = [tuple(r) for r in adj.collect()]
+    adj.unpersist()
+    assert adj.columns == ["u", "v"] + (["w"] if weight else [])
+    assert len(rows) == n == len(set(rows))
+    assert set(rows) == _adjacency_oracle(WEDGES, symmetric, weight)
+
+
 def _o1_to_o4(pages):
     edges = build_edges(extract_links(latest_pages(pages)))
     return {(r["src"], r["dst"]) for r in edges.collect()}
 
 
 def test_csv_json_sources_byte_identical_through_o1_o4(spark, tmp_path):
-    # VERDICT r2 #7: csv + json page drops through the full O1→O4 path.
+    # csv + json page drops through the full O1→O4 path.
     # The text interchange (html base64, warc_ts ISO) must round-trip html
     # BYTE-identically, and produce the same edge table as the in-memory
     # parquet-typed frames.

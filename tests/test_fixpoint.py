@@ -191,20 +191,20 @@ def _matching(spark, e):
     return maximal_matching(spark, e, num_partitions=P)
 
 
-# Setup jobs each operator runs before its first superstep: persisting its
-# edge tables (AQE runs one job per query stage), landmark selection, and
-# the driver's stats job that materializes the initial state (for
-# betweenness also the backward pass and its one eager scores job). Then k jobs
+# Setup jobs each operator runs before its first superstep: counting its
+# edge table (edges.adjacency builds it in one no-AQE job), landmark
+# selection, and the driver's stats job that materializes the initial state
+# (for betweenness also the backward pass and its one eager scores job). Then k jobs
 # per superstep: the stats job, plus what the step materializes itself —
 # the winners of a MIS round, matching's round matches, the raw HITS
 # authorities and their total. truss_numbers' setup enumerates triangles
 # under no-AQE: the oriented edges' eager checkpoint, the melted
 # triangles' persist, the driver's stats job.
 @pytest.mark.parametrize("op,setup_jobs,k", [
-    (_bfs, 6, 1), (_landmarks, 7, 1), (_core_numbers, 6, 1), (_bitruss, 3, 1),
-    (_wl, 3, 1), (_truss_numbers, 3, 1), (_katz, 6, 1),
-    (_temporal, 5, 1), (_hits, 16, 3), (_mis, 6, 2), (_coloring, 6, 1),
-    (_matching, 1, 2), (_betweenness, 9, 1),
+    (_bfs, 2, 1), (_landmarks, 3, 1), (_core_numbers, 2, 1), (_bitruss, 3, 1),
+    (_wl, 2, 1), (_truss_numbers, 3, 1), (_katz, 2, 1),
+    (_temporal, 5, 1), (_hits, 16, 3), (_mis, 2, 2), (_coloring, 2, 1),
+    (_matching, 1, 2), (_betweenness, 5, 1),
 ], ids=["bfs", "landmarks", "core_numbers", "bitruss", "wl", "truss_numbers",
         "katz", "temporal", "hits", "mis", "coloring", "matching",
         "betweenness"])

@@ -6,6 +6,7 @@ import pytest
 
 from pargraph_spark.operators.edges import build_edges
 from pargraph_spark.operators.extract_links import extract_links
+from pargraph_spark.operators import triangles
 from pargraph_spark.operators.triangles import triangle_count
 from pargraph_spark.sources.pages import latest_pages
 from pargraph_spark.synth import pages_df_local
@@ -30,16 +31,27 @@ def test_cliques_closed_form(spark):
     assert all(v == 6 for v in per.values()) and len(per) == 15
 
 
-def test_triangle_count_plan_is_the_same_on_every_call(spark):
-    # the call runs without AQE, so its plan does not depend on which query
-    # stage finishes first: the same graph takes the same number of jobs
+@pytest.mark.parametrize("op", ["triangle_count", "triangles_per_vertex",
+                                "triangles_global", "clustering_coefficient"])
+def test_triangle_count_plan_is_the_same_on_every_call(spark, op):
+    # the oriented edges are checkpointed without AQE (and triangle_count
+    # runs its whole call without it), so the plan does not depend on which
+    # query stage finishes first: the same graph takes the same number of
+    # jobs on every call
     rng = random.Random(7)
     edges = spark.createDataFrame(
         sorted({(rng.randrange(90), rng.randrange(100)) for _ in range(300)}),
         EDGE_SCHEMA)
-    runs = [_jobs(spark, lambda: triangle_count(spark, edges)) for _ in range(6)]
+    fn = getattr(triangles, op)
+    if op == "triangle_count":
+        def call():
+            return fn(spark, edges).total
+    else:
+        def call():
+            return sorted(map(tuple, fn(edges).collect()))
+    runs = [_jobs(spark, call) for _ in range(6)]
     assert len({jobs for _, jobs in runs}) == 1, [jobs for _, jobs in runs]
-    assert len({res.total for res, _ in runs}) == 1
+    assert all(res == runs[0][0] for res, _ in runs)
 
 
 def test_direction_and_dup_insensitive(spark):
