@@ -360,7 +360,7 @@ def _run(spark: SparkSession, args: argparse.Namespace) -> None:
         d2 = d1.join(drop_near, "did", "left_anti")
         # persist: repetition_stats scans its input several times (lines,
         # grams, token chars, ids) plus the final semi-join — unpersisted
-        # the anti-join/quality chain re-ran ~5x (review r5)
+        # the anti-join/quality chain would re-run ~5x
         q = d2.where(quality_score(F.col("text")) >= 0.35).persist()
         keep_rep = repetition_filter(q, id_col="did", text_col="text")
         curated = (

@@ -96,7 +96,7 @@ class _AnchorExtractor(HTMLParser):
     skip elements is never anchor text. Block-level boundaries (open or
     close) also close an open anchor — HTML5-recovery-style — so an
     UNCLOSED <a> (malformed page, or one opened inside <head>) cannot
-    swallow the rest of the document as its anchor text (review r5)."""
+    swallow the rest of the document as its anchor text."""
 
     def __init__(self) -> None:
         super().__init__(convert_charrefs=True)

@@ -111,7 +111,7 @@ def _get_output_names(function: Callable):
     if Ellipsis in args:
         # variadic tuple[X, ...]: the element count is unknown at trace
         # time, so this is ONE output holding a tuple — not positional
-        # outputs (ADVICE r4: the Ellipsis used to become 'result_1')
+        # outputs (the Ellipsis must not become 'result_1')
         return "result"
     names: list[str] = []
     for i, arg in enumerate(args):
@@ -124,8 +124,8 @@ def _get_output_names(function: Callable):
 
 def _iter_deps(value: Any):
     """Yield every Delayed reachable from an argument value, traversing
-    list/tuple/dict containers (dask-delayed style — ADVICE r3: a Delayed
-    nested in a container used to be silently treated as a constant)."""
+    list/tuple/dict containers (dask-delayed style: a Delayed nested in a
+    container is a dependency, never a constant)."""
     if isinstance(value, Delayed):
         yield value
     elif isinstance(value, (list, tuple, set, frozenset)):
@@ -383,8 +383,8 @@ def graph(function: Callable) -> Callable:
 def _materialize(result):
     """Compute every Delayed inside a direct-call @graph result. Handles
     the same container shapes _iter_deps traverses (list/tuple/dict/set)
-    — review r5: a body returning [d1, d2] used to leak uncomputed
-    Delayed objects to the caller, breaking the direct-call identity.
+    — a body returning [d1, d2] must not leak uncomputed Delayed
+    objects to the caller, which would break the direct-call identity.
     All found nodes go through ONE compute() call so shared subgraphs
     stay memoized across container elements."""
     if isinstance(result, Delayed):
@@ -431,7 +431,7 @@ def _walk(roots: list[Delayed]) -> list[Delayed]:
 
     # iterative post-order: deep linear chains (thousands of overload
     # nodes — fuse_sequential's own target workload) blew Python's
-    # recursion limit in the recursive form (review r5)
+    # recursion limit in the recursive form
     for r in roots:
         stack: list[tuple[Delayed, bool]] = [(r, False)]
         while stack:
@@ -537,7 +537,7 @@ def compute(
         # future completion immediately releases its ready dependents — a
         # straggler never blocks an independent ready node (the wave
         # barrier this replaces made one slow node gate the entire next
-        # wave, VERDICT r4 missing #1).
+        # wave).
         nodes = {id(n): n for n in order}
         deps = {id(n): {id(d) for d in _node_deps(n)} for n in order}
         dependents: dict[int, list[int]] = {}
@@ -757,7 +757,7 @@ class TaskGraph:
             if isinstance(v, dict):
                 # non-str keys: key/value pair list keeps node refs
                 # structural (a pickled Delayed would silently duplicate
-                # the subgraph and lose sharing, ADVICE r4)
+                # the subgraph and lose sharing)
                 return {"kvdict": [[enc_val(k), enc_val(el)] for k, el in v.items()]}
             return {"pickle": base64.b64encode(cloudpickle.dumps(v)).decode()}
 
@@ -952,7 +952,7 @@ class TaskGraph:
                 nid = parts[1]
                 node = build_node(nid)
                 # a named output of a MULTI-output node selects that
-                # element (review r5: dropping the name silently handed
+                # element (dropping the name would silently hand
                 # consumers the whole tuple); single-output nodes pass
                 # through whatever the name is
                 if len(parts) >= 4 and parts[2] == "outputs":
@@ -1063,7 +1063,7 @@ class TaskGraph:
                         # fused closure's fn is no longer _unbound_input,
                         # so compute()'s input binding would miss it and
                         # the closure would raise 'unbound' even for a
-                        # bound input (review r5)
+                        # bound input
                         and orig_parent.fn is not _unbound_input
                     ):
                         parent = cand

@@ -73,7 +73,7 @@ def kmeans_cosine(
         raise ValueError(f"kmeans_cosine requires k >= 1, got {k}")
     if iterations < 1:
         # iterations=0 would return assignments=None and crash callers
-        # far from the misuse (review r5)
+        # far from the misuse
         raise ValueError(f"kmeans_cosine requires iterations >= 1, got {iterations}")
     seed_rows = (
         corpus.orderBy(F.asc(id_col)).limit(k).select(id_col, vec_col).collect()

@@ -14,15 +14,13 @@ is an exact integer comparison (accumulated in decimal — deg·n overflows
 BIGINT at 10^12 scale), so the per-round (n, m) trajectory — and hence
 the whole run — is reproducible bit-for-bit by an unrolled SQL oracle;
 the reported density m/n is one IEEE division of exact ints. The best
-round is chosen by exact cross-multiplied fraction comparison, and the
-winning vertex set is re-materialized by replaying the deterministic
-peel to that round (two passes beat persisting every round's V-scale
-vertex set — the pass count is O(log n), the memory saved is O(V·rounds)).
+round is chosen by exact cross-multiplied fraction comparison.
 
-Plan shape per round: one partial-combined degree aggregate over the
-surviving symmetric edge set + two semi-joins to shrink it; the edge set
-is re-persisted partitioned on its probe key each round (survivor-scale,
-strictly shrinking).
+The peel is kcore's ``_peel`` on the plans/fixpoint.py driver, one
+Spark job per round: its vertex state records the round each vertex was
+peeled in, so the densest round's survivor set is a filter on that
+column (peeled after the best round, or never), read from the one peel;
+the (n, m) trajectory is the driver's per-round stats.
 """
 
 from __future__ import annotations
@@ -32,7 +30,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pargraph_spark.operators.edges import adjacency
+from pargraph_spark.operators.kcore import _peel
+from pargraph_spark.plans.fixpoint import release
 from pargraph_spark.plans.metrics import JobMetrics
 
 
@@ -44,15 +43,6 @@ class DensestResult:
     best_density: float
     rounds: int
     metrics: JobMetrics = field(default_factory=lambda: JobMetrics("densest"))
-
-
-def _peel_round(e: DataFrame, n: int, m: int, num: int, den: int) -> DataFrame:
-    """Survivor vertex set of one peel: keep v iff deg(v)·n·den > 2(den+num)·m."""
-    sym = e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    deg = sym.groupBy(F.col("u").alias("id")).agg(F.count("*").alias("deg"))
-    lhs = F.col("deg").cast("decimal(38,0)") * F.lit(n).cast("decimal(38,0)") * F.lit(den)
-    rhs = F.lit(2 * (den + num)).cast("decimal(38,0)") * F.lit(m).cast("decimal(38,0)")
-    return deg.where(lhs > rhs).select("id")
 
 
 def densest_subgraph(
@@ -67,72 +57,49 @@ def densest_subgraph(
     """edges(src, dst) treated undirected → per-round peel trajectory and
     the densest survivor set. ε = eps_num/eps_den (rational, so the
     threshold stays integer-exact); default ε = 1/2 → a 3-approximation
-    in ≤ log_{1.5} n rounds."""
+    in ≤ log_{1.5} n rounds. The trajectory holds at most max_rounds
+    rounds, round 0 the whole graph. materialize_best is accepted for
+    existing callers and changes nothing: the survivor set is a filter on
+    the peel's state either way."""
     if eps_num < 0 or eps_den <= 0:
         raise ValueError("eps must be a non-negative rational")
-    P = int(num_partitions or spark.conf.get("spark.sql.shuffle.partitions"))
+    dec = "decimal(38,0)"
 
-    def trajectory(stop_round: int | None):
-        """Run the peel; returns (stats, final-vertex-set-at-stop)."""
-        # each undirected edge once as (u < v)
-        e, m = adjacency(edges.select(F.least("src", "dst").alias("src"),
-                                      F.greatest("src", "dst").alias("dst")), P)
-        verts = (
-            e.select(F.col("u").alias("id"))
-            .unionByName(e.select(F.col("v").alias("id")))
-            .distinct()
-            .persist()
-        )
-        n = verts.count()
-        stats: list[tuple[int, int, int]] = []
-        k = 0
-        while n > 0 and k < max_rounds:
-            stats.append((k, n, m))
-            if stop_round is not None and k == stop_round:
-                e.unpersist()
-                return stats, verts
-            keep = _peel_round(e, n, m, eps_num, eps_den).persist()
-            n_new = keep.count()
-            new_e = (
-                e.join(keep.select(F.col("id").alias("u")), "u", "left_semi")
-                .join(keep.select(F.col("id").alias("v")), "v", "left_semi")
-                .repartition(P, "u")
-                .persist()
-            )
-            m = new_e.count()
-            e.unpersist()
-            verts.unpersist()
-            e, verts, n = new_e, keep, n_new
-            k += 1
-        e.unpersist()
-        return stats, verts
+    def keep(prev):
+        # keep v iff deg(v)·n·den > 2(den+num)·m, with m = e/2 the edges
+        lhs = F.col("deg").cast(dec) * F.lit(prev["n"]).cast(dec) * F.lit(eps_den)
+        rhs = F.lit(2 * (eps_den + eps_num)).cast(dec) * F.lit(prev["e"] // 2).cast(dec)
+        return lhs > rhs
 
-    stats, last = trajectory(None)
-    last.unpersist()
+    # the trajectory's last round needs no peel after it
+    res, traj = _peel(edges.select("src", "dst"), keep, lambda s, prev: s["n"] == 0,
+                      "densest", max_rounds - 1, num_partitions)
+    stats = [(k, s["n"], s["e"] // 2) for k, s in enumerate(traj[:max_rounds])
+             if s["n"] > 0]
     if not stats:
+        release(res.state)
         empty_v = spark.createDataFrame([], "id long")
         empty_s = spark.createDataFrame(
             [], "round long, n_vertices long, n_edges long, density double"
         )
-        return DensestResult(empty_s, empty_v, 0, 0.0, 0)
+        return DensestResult(empty_s, empty_v, 0, 0.0, 0, res.metrics)
     # exact fraction argmax: m/n maximal, ties → earliest round
     best_round, bn, bm = max(stats, key=lambda t: (t[2] / t[1], -t[0]))
     # (float key is for ordering only; verify exactly by cross-multiply)
     for k, nn, mm in stats:
         if mm * bn > bm * nn or (mm * bn == bm * nn and k < best_round):
             best_round, bn, bm = k, nn, mm
-    if materialize_best:
-        _, best_verts = trajectory(best_round)
-    else:  # stats-only callers skip the replay pass
-        best_verts = spark.createDataFrame([], "id long")
     stats_df = spark.createDataFrame(
         [(k, nn, mm, float(mm) / float(nn)) for k, nn, mm in stats],
         "round long, n_vertices long, n_edges long, density double",
     )
+    best_verts = res.state.where(
+        F.col("r").isNull() | (F.col("r") > best_round)).select("id")
     return DensestResult(
         stats_df,
-        best_verts.repartition(P, "id"),
+        best_verts,
         best_round,
         float(bm) / float(bn),
         len(stats),
+        res.metrics,
     )

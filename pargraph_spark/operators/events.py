@@ -76,7 +76,7 @@ def props_stats(events: DataFrame) -> DataFrame:
     aggregates: exact across engines."""
     # try_cast: a non-integral props.k ('1.5', 'n/a') must become NULL,
     # not a CAST_INVALID_INPUT that kills the whole aggregation under
-    # Spark 4's default ANSI mode (review r5); DuckDB's plain CAST of the
+    # Spark 4's default ANSI mode; DuckDB's plain CAST of the
     # oracle only ever sees the valid-integer testdata, so parity holds
     k = F.get_json_object("props", "$.k").try_cast("long")
     return (
@@ -116,7 +116,7 @@ def value_quantiles(
 
     Output: (group?, p, q) — one row per requested quantile."""
     # ceil, not floor: int(1/0.03)=33 would deliver 1/33 > 0.03 rank
-    # error — slightly WORSE than requested (review r5)
+    # error — slightly WORSE than requested
     accuracy = max(1, math.ceil(1.0 / relative_error))
     ps = list(probs)
     agg = (

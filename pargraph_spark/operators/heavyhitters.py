@@ -52,7 +52,7 @@ def frequent_items(
             for it in pdf["item"]:
                 # NaN guard: Arrow delivers NULLs of numeric item types as
                 # float NaN, and NaN != NaN would mint a FRESH dict key
-                # per null, flooding the k counters (review r5)
+                # per null, flooding the k counters
                 if it is None or it != it:
                     continue
                 if it in counters:

@@ -8,23 +8,20 @@ what survives is exactly the k-core, independent of deletion order, so
 the result is deterministic and an unrolled round-by-round SQL oracle is
 exact (rounds past convergence are identity, the lpa_full pattern).
 
-Plan shape per peel round (kcore and score_core share one loop,
-``_peel``): the symmetric edge table, built by edges.adjacency on the
-probe key u, is FILTERED each round by anti-joins against the round's
-peeled set — co-partitioned on the u side, AQE-broadcast on the v side
-once peeling localizes (after round 1 the peeled set is small); the
-measure (degree or strength) is one partial-combined aggregate. Each
-round persists its surviving edge set repartitioned on u and releases
-the superseded one (the ref-count analogue of the reference's
-engine.py:63-76). The peel stays OFF the plans/fixpoint.py
-driver on purpose: it needs AQE on for those runtime broadcasts, and
-the driver's AQE-on checkpoint (``P=None``) would record unknown
-partitioning, so every round would re-exchange the E-scale edge set
-that ``persist`` keeps hash(u)-partitioned. One action per round — the
-survivor count that materializes the persist — which AQE runs as one
-Spark job per query stage. At 10^12 edges the peel typically converges
-in tens of rounds and every round's shuffle is bounded by the CURRENT
-survivor set, which only shrinks.
+One peel, ``_peel``, serves kcore, score_core and densest_subgraph
+(densest.py), and its round loop is plans/fixpoint.py. The state is one
+vertex table (id, deg, m, r) on hash(id, P): the vertex's degree and its
+measure (degree, or strength for score_core) among the live vertices,
+and the round it was peeled in, null while it is live. A round reads
+the symmetric edge table, built by edges.adjacency on hash(u, P), in
+place: the vertices that fail the keep test send one decrement per edge
+by a join on u, which is co-partitioned with the state; the decrements
+are summed per neighbor, so the round's one exchange is at the scale of
+the peeled vertices' edges, and they fold into the state by union +
+aggregate. The E-scale edge table never moves, and each round's plan is
+the same size: the state is a checkpoint, not the previous round's
+plan. One Spark job per round, the driver's stats job (live count and
+live degree sum).
 
 core_numbers (full decomposition) is the H-index fixpoint instead, run
 by plans/fixpoint.py: ONE Spark job per round (its changed-count
@@ -33,15 +30,15 @@ aggregate materializes the round's checkpoint), plus setup jobs.
 
 from __future__ import annotations
 
-import time
 from dataclasses import dataclass, field
+from typing import Callable
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
-from pargraph_spark.plans.fixpoint import run_fixpoint
-from pargraph_spark.plans.metrics import JobMetrics, SuperstepMetric
-from pargraph_spark.session import ckpt_state, size_based_partitions
+from pargraph_spark.plans.fixpoint import FixpointResult, run_fixpoint
+from pargraph_spark.plans.metrics import JobMetrics
+from pargraph_spark.session import size_based_partitions
 
 from .edges import adjacency
 
@@ -66,69 +63,84 @@ def kcore(
     are dropped before peeling."""
     if k < 1:
         raise ValueError(f"kcore requires k >= 1, got {k}")
-    P = int(num_partitions or spark.conf.get("spark.sql.shuffle.partitions"))
-    P = size_based_partitions(edges, P)  # guide §2.2, size-derived cap
-    sym, n = adjacency(edges, P, symmetric=True)
-    return _peel(sym, n, F.count("*"), k, "deg", "kcore", max_rounds, P)
+    return _core(edges.select("src", "dst"), k, "deg", "kcore", max_rounds, num_partitions)
 
 
 def _peel(
-    sym: DataFrame,
-    n_before: int,
-    measure: Column,
-    threshold: int,
-    out_col: str,
+    edges: DataFrame,
+    keep: Callable[[Row], Column],
+    done: Callable[[Row, Row], bool],
     name: str,
     max_rounds: int,
-    P: int,
-) -> KCoreResult:
-    """Peel the persisted hash(u, P) edge table ``sym`` (u, v, ...) of
-    ``n_before`` rows until every surviving u has ``measure`` >= threshold
-    → (id, out_col) with the measure inside the result. ``sym`` is
-    released. rounds counts
-    the rounds that removed an edge; converged=False means max_rounds
-    was hit first, and the result is then a SUPERSET of the core."""
-    metrics = JobMetrics(name)
-    rounds, converged = 0, False
-    for r in range(1, max_rounds + 1):
-        t0 = time.monotonic()
-        peeled = (
-            sym.groupBy("u").agg(measure.alias("_m"))
-            .where(F.col("_m") < threshold)
-            .select("u")
+    num_partitions: int | None,
+) -> tuple[FixpointResult, list[Row]]:
+    """Peel the undirected graph ``edges(src, dst[, w])`` (self-loops
+    dropped; parallel edges keep their max w): each round removes every
+    live vertex that fails ``keep(prev_stats)``, a test on the state's
+    deg and m (the sum of w, else the degree).
+
+    → the driver's result, its state (id, deg, m, r) with r the round
+    the vertex was peeled in (null: live), and the stats of every state
+    from the initial one on: n live vertices, e their degree sum (twice
+    the live edges). A superstep's delta is the edges it removed."""
+    spark = edges.sparkSession
+    P = int(num_partitions or spark.conf.get("spark.sql.shuffle.partitions"))
+    P = size_based_partitions(edges, P)  # guide §2.2, size-derived cap
+    weighted = "w" in edges.columns
+    adj, n_rows = adjacency(edges, P, symmetric=True, weight="max" if weighted else None)
+    w = F.col("w") if weighted else F.lit(1)
+    live = F.col("r").isNull()
+    trajectory: list[Row] = []
+
+    def step(state: DataFrame, prev: Row) -> DataFrame:
+        trajectory.append(prev)
+        peel = live & ~keep(prev)
+        # the peeled vertices' edges, probed in place on hash(u), summed
+        # per neighbor: the only exchange is at the peeled edges' scale
+        lost = (
+            adj.join(state.where(peel).select(F.col("id").alias("u"))
+                     .hint("shuffle_hash"), "u")
+            .groupBy(F.col("v").alias("id"))
+            .agg((-F.count("*")).alias("deg"), (-F.sum(w)).alias("m"))
         )
-        # Drop edges touching THIS round's peeled vertices: the peeled set
-        # is the small side after the first round, so AQE turns the
-        # anti-joins into broadcasts; the u side is co-partitioned either
-        # way (peeled inherits hash(u) from the groupBy)
-        survived = (
-            sym.join(peeled, "u", "left_anti")
-            .join(peeled.select(F.col("u").alias("v")), "v", "left_anti")
-            .repartition(P, "u")
-            .persist()
+        r = F.when(peel, F.lit(len(trajectory))).otherwise(F.col("r"))  # round no.
+        return (
+            state.select("id", "deg", "m", r.alias("r"))
+            .unionByName(lost, allowMissingColumns=True)
+            .groupBy("id")
+            .agg(F.sum("deg").alias("deg"), F.sum("m").alias("m"), F.max("r").alias("r"))
         )
-        n_after = survived.count()
-        metrics.add(
-            SuperstepMetric(r, (time.monotonic() - t0) * 1000.0, n_before,
-                            float(n_before - n_after))
-        )
-        sym.unpersist()
-        sym = survived
-        if n_after == n_before:  # identity round: not counted
-            converged = True
-            break
-        rounds = r
-        n_before = n_after
-        if n_after == 0:
-            converged = True
-            break
-    core = (
-        sym.groupBy(F.col("u").alias("id"))
-        .agg(measure.alias(out_col))
-        .transform(ckpt_state, P)
+
+    res = run_fixpoint(
+        spark,
+        lambda: adj.groupBy(F.col("u").alias("id"))
+        .agg(F.count("*").alias("deg"), F.sum(w).alias("m"))
+        .select("id", "deg", "m", F.lit(None).cast("int").alias("r"))
+        .repartition(P, "id"),
+        step,
+        [F.count_if(live).alias("n"),
+         F.coalesce(F.sum(F.when(live, F.col("deg"))), F.lit(0)).alias("e")],
+        done,
+        name=name, P=P, max_iter=max_rounds, edges=n_rows, plan=f"{name}_round",
+        delta=lambda s, prev: float(prev["e"] - s["e"]),
     )
-    sym.unpersist()
-    return KCoreResult(core, rounds, converged, metrics)
+    adj.unpersist()  # the state is checkpoint-materialized, lineage-free
+    return res, trajectory + [res.stats]
+
+
+def _core(edges: DataFrame, threshold: int, out_col: str, name: str,
+          max_rounds: int, num_partitions: int | None) -> KCoreResult:
+    """Peel until every live vertex has m >= threshold → (id, out_col)
+    with m inside the result. The peel stops at the first round that
+    removes no edge, or when no edge is left; rounds counts the rounds
+    that removed an edge, and converged=False means max_rounds was hit
+    first (the result is then a SUPERSET of the core)."""
+    res, _ = _peel(edges, lambda prev: F.col("m") >= threshold,
+                   lambda s, prev: s["e"] in (prev["e"], 0), name, max_rounds, num_partitions)
+    core = res.state.where(F.col("r").isNull() & (F.col("deg") > 0))
+    rounds = sum(m.delta > 0 for m in res.metrics.supersteps)
+    return KCoreResult(core.select("id", F.col("m").alias(out_col)), rounds,
+                       res.converged, res.metrics)
 
 
 @dataclass
@@ -306,6 +318,5 @@ def score_core(
     strength."""
     if s < 1:
         raise ValueError(f"score_core requires s >= 1, got {s}")
-    P = int(num_partitions or spark.conf.get("spark.sql.shuffle.partitions"))
-    sym, n = adjacency(wedges.select("src", "dst", "w"), P, symmetric=True, weight="max")
-    return _peel(sym, n, F.sum("w"), s, "strength", "score_core", max_rounds, P)
+    return _core(wedges.select("src", "dst", "w"), s, "strength", "score_core",
+                 max_rounds, num_partitions)

@@ -157,7 +157,7 @@ def decode_image(media: DataFrame, target_size: tuple[int, int] = (64, 64)) -> D
                 if payload is None:
                     # NULL payload (failed fetch upstream): null row, not
                     # a worker TypeError that kills the whole job — the
-                    # guard the sibling kernels already have (review r5)
+                    # guard the sibling kernels have
                     rows["width"].append(None)
                     rows["height"].append(None)
                     rows["pixels"].append(None)

@@ -164,6 +164,8 @@ def pagerank(
         t = t.join(base.select("id"), "id", "left_semi")
         total = float(t.agg(F.sum("_w")).first()[0] or 0.0)
         if total <= 0:
+            adj.unpersist()
+            base.unpersist()
             raise ValueError("teleport weights must sum to a positive value")
         return (
             df.join(F.broadcast(t), "id", "left")

@@ -116,8 +116,8 @@ def pq_train(
     # `iterations` counts ASSIGNMENT passes (the oracle unrolls a0..a{N-1}
     # the same way): consecutive passes re-estimate the codebook between
     # them, so N passes = N-1 centroid updates, and the FINAL pass is the
-    # pq_encode the caller runs on the returned model — building it here
-    # too was dead code (review r5)
+    # pq_encode the caller runs on the returned model, so it is not
+    # built here
     for _ in range(max(iterations - 1, 0)):
         assign = _encode_df(corpus, model, id_col, vec_col)
         comp = (

@@ -132,7 +132,7 @@ def repetition_stats(
                 & F.col("_tc").isNotNull(),
                 # token chars only: the concat_ws separators are not
                 # document characters (with them, 'ab cd' x3 over 12
-                # token chars scored 1.25 — review r5); overlapping
+                # token chars would score 1.25); overlapping
                 # occurrences can still double-count shared tokens, so
                 # clamp at 1 (the standard impl shortcut, documented)
                 F.least(

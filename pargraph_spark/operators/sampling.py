@@ -23,15 +23,17 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from pargraph_spark.plans.fixpoint import release
+
 
 def fraction_threshold_hex(fraction: float) -> str:
     """Hex threshold t such that P[substr(md5,1,8) < t] == fraction (to
     2^-32): first 8 hex chars of md5 are uniform over [0, 16^8).
 
     fraction >= 1.0 returns 'g' — every 8-hex-digit string sorts below
-    it, so a 100% sample really keeps EVERY row (review r5: the old
-    16^8-1 clamp with a strict < deterministically dropped the ~1-in-2^32
-    keys hashing to exactly 'ffffffff' from a supposedly-whole pass)."""
+    it, so a 100% sample really keeps EVERY row (a 16^8-1 clamp with a
+    strict < would deterministically drop the ~1-in-2^32 keys hashing to
+    exactly 'ffffffff' from a supposedly-whole pass)."""
     if not 0.0 <= fraction <= 1.0:
         raise ValueError(f"fraction must be in [0,1], got {fraction}")
     if fraction >= 1.0:
@@ -280,6 +282,7 @@ def node2vec_walks(
         F.lit(None).cast("long").alias("prev"),
     )
     out = cur.select("seed_id", "walk", "step", "vertex")
+    steps = []
     w = Window.partitionBy("seed_id", "walk").orderBy("_rk", "dst", "_j")
     for t in range(1, length + 1):
         cand = (
@@ -318,12 +321,11 @@ def node2vec_walks(
                 F.col("dst").alias("vertex"),
             )
         )
-        out = out.unionByName(nxt)
         # carry the new prev for the next step's bias classification.
         # cur feeds TWO consumers per step (cand and this carry join), so
         # without an eager checkpoint the plan doubles every step and the
         # driver OOMs analyzing it near length ~30 (the wl.py/betweenness
-        # class; review r5) — walk-scale state, cheap to materialize
+        # class) — walk-scale state, cheap to materialize
         cur = (
             nxt.join(
                 cur.select("seed_id", "walk", F.col("vertex").alias("_pv")),
@@ -333,9 +335,13 @@ def node2vec_walks(
                     F.col("_pv").alias("prev"))
             .localCheckpoint(eager=True)
         )
-    # materialize the corpus, then release the two E-scale edge copies
-    # (review r5: they stayed pinned for the session behind a lazy result)
+        out = out.unionByName(cur.select("seed_id", "walk", "step", "vertex"))
+        steps.append(cur)
+    # materialize the corpus, then release the step checkpoints it reads
+    # and the two E-scale edge copies (nothing stays pinned behind it)
     out = out.localCheckpoint(eager=True)
+    for c in steps:
+        release(c)
     e.unpersist()
     e_pairs.unpersist()
     return out
@@ -443,8 +449,8 @@ def negative_samples(
     # sized by contract), so the single-partition window is safe
     w = Window.orderBy("vertex").rowsBetween(Window.unboundedPreceding, 0)
     # model-sized after the cap: materialize once — the corpus-scale
-    # sort-limit feeding it otherwise executed twice (the W/V collect and
-    # the broadcast bucket build; review r5)
+    # sort-limit feeding it would otherwise execute twice (the W/V
+    # collect and the broadcast bucket build)
     cum = top.select(
         "vertex", "cnt",
         (F.sum("cnt").over(w) - F.col("cnt")).alias("lo"),

@@ -185,8 +185,8 @@ def scan_clusters(
     out = (
         assigned.unionByName(rest_asg)
         .select("id", F.col("cluster").cast("long").alias("cluster"), "role")
-        # materialize, then release every persisted input (review r5:
-        # eps_edges/cores/assigned leaked cache for the session lifetime)
+        # materialize, then release every persisted input (otherwise
+        # eps_edges/cores/assigned stay cached for the session lifetime)
         .localCheckpoint(eager=True)
     )
     n_clusters = core_asg.select("cluster").distinct().count()

@@ -46,10 +46,10 @@ def with_salt(df: DataFrame, num_salts: int, salt_col: str = "_salt") -> DataFra
     duplicates combine cheaply in the partial aggregate anyway). For
     floating-point values even a stable grouping leaves within-partition
     accumulation order unpinned, so double sums are deterministic only to
-    ~1 ulp × log(n) — documented, not promised (ADVICE r1)."""
+    ~1 ulp × log(n) — documented, not promised."""
     if salt_col in df.columns:
         # withColumn would silently REPLACE the caller's column and
-        # corrupt downstream group keys (review r5)
+        # corrupt downstream group keys
         raise ValueError(f"input already has a {salt_col!r} column")
     return df.withColumn(
         salt_col, F.pmod(F.xxhash64(*df.columns), F.lit(num_salts)).cast("int")

@@ -42,18 +42,18 @@ class CheckpointManager:
         # Never rewrite a state dir a committed manifest may point at: each
         # save of a superstep gets a fresh attempt-suffixed dir, and the
         # manifest records which dir is live (state_path). A kill mid-save
-        # leaves the previous manifest+state fully intact (ADVICE r1:
-        # overwrite-in-place violated the no-half-written-resume guarantee
-        # when the converged save landed on a checkpoint_every multiple).
+        # leaves the previous manifest+state fully intact (overwriting in
+        # place would break the no-half-written-resume guarantee when the
+        # converged save lands on a checkpoint_every multiple).
         attempt = 0
         while os.path.exists(self._state_path(superstep, attempt)):
             attempt += 1
         path = self._state_path(superstep, attempt)
         df.write.mode("error").parquet(path)
         # count what actually HIT DISK, not a second evaluation of df
-        # (review r5: re-running the input plan doubled the checkpoint
-        # cost, and its partition ids need not match the written files —
-        # e.g. AQE may coalesce the two jobs differently)
+        # (re-running the input plan would double the checkpoint cost,
+        # and its partition ids need not match the written files — e.g.
+        # AQE may coalesce the two jobs differently)
         written = df.sparkSession.read.parquet(path)
         parts = [
             {"pid": int(r["pid"]), "rows": int(r["rows"])}
@@ -62,7 +62,7 @@ class CheckpointManager:
             .collect()
         ]
         # NaN/Inf have no JSON encoding — json.dump would emit non-standard
-        # literals that strict parsers reject; store None instead (ADVICE r2)
+        # literals that strict parsers reject; store None instead
         extra = {
             k: (None if isinstance(v, float) and not (v == v and abs(v) != float("inf")) else v)
             for k, v in (extra or {}).items()
@@ -75,7 +75,7 @@ class CheckpointManager:
         if clash:
             # **extra spreads LAST: a colliding key would silently
             # overwrite the real state pointer / row record and corrupt
-            # resume (review r5)
+            # resume
             raise ValueError(f"extra keys collide with manifest fields: {sorted(clash)}")
         manifest = {
             "job": os.path.basename(self.dir),

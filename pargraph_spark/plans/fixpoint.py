@@ -4,7 +4,8 @@ The reference runs every graph through one scheduling loop (its
 engine.py:42-129); this is the Spark counterpart for the fixpoint
 operators: pagerank, label_propagation and seeded_label_propagation,
 connected_components, sssp, bfs_distances and landmark_distances,
-core_numbers, truss_numbers (so also ktruss), bitruss, wl_colors,
+core_numbers, kcore, score_core and densest_subgraph (one shared peel),
+truss_numbers (so also ktruss), bitruss, wl_colors,
 katz_centrality, earliest_arrival, hits and salsa,
 maximal_independent_set, greedy_coloring, maximal_matching,
 betweenness (its forward levels), kmv_reach, harmonic_centrality_kmv,

@@ -43,8 +43,8 @@ def build_linkgraph(
         pages = read_pages(spark, pages, fmt=pages_format)
     P = int(num_partitions or spark.conf.get("spark.sql.shuffle.partitions"))
     # lazy persist: extraction (page dedupe + HTML parse) feeds THREE
-    # consumers (edges, vertices, the exposed .extracted field) and used
-    # to re-run once per consumer (review r5)
+    # consumers (edges, vertices, the exposed .extracted field) and
+    # would otherwise re-run once per consumer
     extracted = extract_links(latest_pages(pages)).persist()
     edges = build_edges(extracted, num_partitions=P).persist()
     vertices = build_vertices(extracted).persist()

@@ -119,7 +119,7 @@ def latest_pages(pages: DataFrame) -> DataFrame:
 
     Single wide shuffle on url; ties broken by the LEXICOGRAPHICALLY
     greatest html bytes (struct max compares html as binary, NOT by
-    payload size — review r5 doc fix), then text, then lang: any fixed
+    payload size), then text, then lang: any fixed
     total order makes the result deterministic when two crawl rows share
     a timestamp, and byte order is the one the struct-max plan gives for
     free.

@@ -48,8 +48,8 @@ def read_event_stream(spark: SparkSession, input_dir: str,
     r = spark.readStream.schema(EVENTS_SCHEMA)
     if max_files_per_trigger is not None:
         # validate here, not at query start — and never treat 0 as
-        # "unthrottled" (a falsy check silently dropped the option, the
-        # OPPOSITE of the requested throttle; review r5)
+        # "unthrottled" (a falsy check would silently drop the option,
+        # the OPPOSITE of the requested throttle)
         if int(max_files_per_trigger) < 1:
             raise ValueError(
                 f"max_files_per_trigger must be >= 1, got {max_files_per_trigger}"
@@ -163,7 +163,7 @@ def run_to_memory(stream_df: DataFrame, name: str, checkpoint_dir: str,
     )
     if not q.awaitTermination(timeout_s):
         # a silent timeout would hand the caller a PARTIAL memory table
-        # while the query keeps draining behind their back (review r5)
+        # while the query keeps draining behind their back
         q.stop()
         raise TimeoutError(
             f"stream {name!r} did not drain within {timeout_s}s"

@@ -90,7 +90,6 @@ def _page_html(i: int, url: str, num_sites: int, rng: random.Random,
                 # bounded to pages that EXIST on this page's site, so the
                 # resolution-test category never silently leaks into
                 # dangling links when num_sites does not divide n_pages
-                # (review r5)
                 s = i % num_sites
                 k_max = (n_pages - 1 - s) // num_sites
                 k2 = rng.randrange(max(1, k_max + 1))

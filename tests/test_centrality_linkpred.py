@@ -259,7 +259,7 @@ def test_densest_subgraph_vs_brute(spark, seed, n, m):
     # best round: exact max density, ties -> earliest
     bk, bn, bm = max(want, key=lambda t: (t[2] / t[1], -t[0]))
     assert (res.best_round, res.best_density) == (bk, bm / bn)
-    # replayed vertex set == oracle's survivor set at that round
+    # the best round's vertex set == oracle's survivor set at that round
     verts = {v for e2 in _und(edges) for v in e2}
     e = set(_und(edges))
     for k in range(bk):

@@ -191,6 +191,26 @@ def _matching(spark, e):
     return maximal_matching(spark, e, num_partitions=P)
 
 
+def _kcore(spark, e):
+    from pargraph_spark.operators.kcore import kcore
+
+    # the path peels its two ends every round
+    return kcore(spark, e, 2, num_partitions=P)
+
+
+def _score_core(spark, e):
+    from pargraph_spark.operators.kcore import score_core
+
+    return score_core(spark, e.withColumn("w", F.lit(1)), 2, num_partitions=P)
+
+
+def _densest(spark, e):
+    from pargraph_spark.operators.densest import densest_subgraph
+
+    # ε = 0 keeps the vertices above the mean degree: the path's interior
+    return densest_subgraph(spark, e, eps_num=0, eps_den=1, num_partitions=P)
+
+
 # Setup jobs each operator runs before its first superstep: counting its
 # edge table (edges.adjacency builds it in one no-AQE job), landmark
 # selection, and the driver's stats job that materializes the initial state
@@ -204,16 +224,31 @@ def _matching(spark, e):
     (_bfs, 2, 1), (_landmarks, 3, 1), (_core_numbers, 2, 1), (_bitruss, 3, 1),
     (_wl, 2, 1), (_truss_numbers, 3, 1), (_katz, 2, 1),
     (_temporal, 5, 1), (_hits, 16, 3), (_mis, 2, 2), (_coloring, 2, 1),
-    (_matching, 1, 2), (_betweenness, 5, 1),
+    (_matching, 1, 2), (_betweenness, 5, 1), (_kcore, 2, 1), (_score_core, 2, 1),
+    (_densest, 2, 1),
 ], ids=["bfs", "landmarks", "core_numbers", "bitruss", "wl", "truss_numbers",
         "katz", "temporal", "hits", "mis", "coloring", "matching",
-        "betweenness"])
+        "betweenness", "kcore", "score_core", "densest"])
 def test_operator_runs_one_job_per_superstep(spark, op, setup_jobs, k):
     e = spark.createDataFrame([(i, i + 1) for i in range(N - 1)], "src long, dst long")
     res, jobs = _jobs(spark, lambda: op(spark, e))
     supersteps = len(res.metrics.supersteps)
     assert supersteps > 1
     assert jobs - k * supersteps == setup_jobs, (jobs, supersteps)
+
+
+def test_kcore_peel_round_runs_one_job(spark):
+    # a path of n vertices peels its two ends per round, n/2 rounds in all:
+    # two more vertices cost exactly one more job, the driver's stats job
+    from pargraph_spark.operators.kcore import kcore
+
+    def run(n):
+        e = spark.createDataFrame([(i, i + 1) for i in range(n - 1)], "src long, dst long")
+        return _jobs(spark, lambda: kcore(spark, e, 2, num_partitions=P))
+
+    (r18, j18), (r20, j20) = run(18), run(20)
+    assert (r18.rounds, r20.rounds) == (9, 10) and r18.converged and r20.converged
+    assert j20 == j18 + 1, (j18, j20)
 
 
 @pytest.mark.parametrize("op", ["kmv_reach", "hll_reach", "effective_diameter"])

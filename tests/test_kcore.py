@@ -177,3 +177,37 @@ def test_score_core_random_vs_python(spark, seed, s):
         s, num_partitions=4)
     got = {r["id"]: r["strength"] for r in res.vertices.collect()}
     assert got == _py_score(wedges, s)
+
+
+def test_peels_stop_at_max_rounds(spark):
+    # a path of 20 vertices peels its two ends per round: cut after 3
+    # rounds, the result is the superset still standing
+    edges = [(i, i + 1) for i in range(19)]
+    got, res = _run(spark, edges, 2, max_rounds=3)
+    assert (res.rounds, res.converged) == (3, False)
+    assert got == {3: 1, 16: 1, **{v: 2 for v in range(4, 16)}}
+    # the triangle's tail goes in two rounds; the third removes nothing
+    # and is not counted
+    _, res = _run(spark, [(0, 1), (1, 2), (2, 0), (2, 3), (3, 4)], 2)
+    assert (res.rounds, res.converged) == (2, True)
+    assert len(res.metrics.supersteps) == 3
+
+
+@pytest.mark.parametrize("op", ["kcore", "score_core", "densest"])
+def test_peel_leaves_only_its_result_cached(spark, op):
+    from pargraph_spark.operators.densest import densest_subgraph
+    from pargraph_spark.operators.kcore import score_core
+
+    rng = random.Random(3)
+    edges = list({(rng.randrange(40), rng.randrange(40), 1) for _ in range(150)})
+    e = spark.createDataFrame(edges, "src long, dst long, w long")
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keys())
+    if op == "kcore":
+        out = kcore(spark, e, 4, num_partitions=4).vertices
+    elif op == "score_core":
+        out = score_core(spark, e, 4, num_partitions=4).vertices
+    else:
+        out = densest_subgraph(spark, e, num_partitions=4).vertices
+    assert len(set(jsc.getPersistentRDDs().keys()) - before) == 1
+    assert out.count() > 0

@@ -72,3 +72,21 @@ def test_node2vec_rejects_bad_params(spark):
         node2vec_walks(e, s, num_walks=0, length=2)
     with pytest.raises(ValueError):
         node2vec_walks(e, s, num_walks=1, length=2, p_num=0)
+
+
+def test_node2vec_leaves_only_its_corpus_cached(spark):
+    # every step checkpoints the walk state; a call frees those checkpoints
+    # once the corpus is materialized, so what it leaves cached does not
+    # grow with the walk length
+    rng = random.Random(5)
+    edges = list({(rng.randrange(40), rng.randrange(40)) for _ in range(160)})
+    e = spark.createDataFrame([(a, b) for a, b in edges if a != b], EDGE_SCHEMA)
+    s = spark.createDataFrame([(0,), (9,)], "id long")
+    jsc = spark.sparkContext._jsc
+    added = []
+    for length in (4, 12):
+        before = set(jsc.getPersistentRDDs().keys())
+        out = node2vec_walks(e, s, num_walks=2, length=length, num_partitions=4)
+        added.append(len(set(jsc.getPersistentRDDs().keys()) - before))
+        assert out.where("step = 0").count() == 4
+    assert added == [1, 1], added

@@ -195,3 +195,16 @@ def test_ppr_unknown_teleport_id_keeps_mass(spark):
     got2 = {r["id"]: r["rank"] for r in res2.ranks.collect()}
     for v in got:
         assert math.isclose(got[v], got2[v], abs_tol=1e-9), v
+
+
+def test_ppr_rejected_teleport_leaves_nothing_cached(spark):
+    # teleport weight only on ids absent from the graph sums to zero and
+    # raises; the edge and vertex tables persisted before that check are
+    # released first
+    edf = spark.createDataFrame([(0, 1), (1, 2)], EDGE_SCHEMA)
+    seeds = spark.createDataFrame([(999, 1.0)], "id long, w double")
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keys())
+    with pytest.raises(ValueError, match="teleport"):
+        pagerank(spark, edf, teleport=seeds, num_partitions=4)
+    assert set(jsc.getPersistentRDDs().keys()) == before

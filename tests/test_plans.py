@@ -354,6 +354,26 @@ def test_scc_inner_fixpoints_probe_copartitioned_edges(spark, tmp_path, monkeypa
             assert join < ex and up[ex - 1].startswith("HashAggregate"), plan
 
 
+def test_peel_round_probes_adjacency_in_place(spark, tmp_path, monkeypatch):
+    # the peel superstep kcore, score_core and densest_subgraph share, as
+    # the driver dumps it: the persisted symmetric adjacency is joined on
+    # u with the peeled vertices in place, and the one exchange of the
+    # round moves their partial-combined decrements
+    from pargraph_spark.operators.kcore import kcore
+
+    monkeypatch.setenv("SPARK_GRAFT_PLAN_DUMP", str(tmp_path))
+    kcore(spark, em._co_edges(spark, SF), 3)
+    plan = (tmp_path / "kcore_round.txt").read_text()
+    scans = _tree_paths(plan, "InMemoryTableScan")
+    assert len(scans) == 1, plan
+    up = scans[0]
+    join = next(i for i, a in enumerate(up) if "Join" in a)
+    assert not any(a.startswith("Exchange") for a in up[:join]), plan
+    ex = next(i for i, a in enumerate(up) if a.startswith("Exchange"))
+    assert join < ex and up[ex - 1].startswith("HashAggregate"), plan
+    assert len(_tree_paths(plan, "Exchange")) == 1, plan
+
+
 def test_katz_superstep_probes_copartitioned_edges(spark):
     e0 = em._di_edges(spark, SF).where(F.col("src") != F.col("dst")).distinct()
     e = e0.repartition(8, "src").persist()
